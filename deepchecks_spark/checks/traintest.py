@@ -19,6 +19,7 @@ from deepchecks_spark.core.checks import (
     format_percent,
     get_condition_passed_message,
 )
+from deepchecks_spark.core.parallel import run_jobs
 from deepchecks_spark.core.result import ConditionCategory, ConditionResult
 from deepchecks_spark.drift.spark import (
     calc_drift_score,
@@ -118,19 +119,16 @@ class FeatureDrift(TrainTestCheck):
         # the two persisted sides: submit them concurrently so each
         # job's ramp-up/tail back-fills the others (guide §2.6) instead
         # of serializing 4-6 scheduler round-trips
-        from concurrent.futures import ThreadPoolExecutor
-
         sk_train: set = set()
         sk_test: set = set()
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            f_ct = pool.submit(categorical_histograms, train_df, cats, self.ignore_na)
-            f_cs = pool.submit(categorical_histograms, test_df, cats, self.ignore_na)
-            f_nt = pool.submit(numeric_histograms, train_df, nums,
-                               self.numeric_hist_mode, sketched_out=sk_train)
-            f_ns = pool.submit(numeric_histograms, test_df, nums,
-                               self.numeric_hist_mode, sketched_out=sk_test)
-            cat_train, cat_test = f_ct.result(), f_cs.result()
-            num_train, num_test = f_nt.result(), f_ns.result()
+        cat_train, cat_test, num_train, num_test = run_jobs([
+            lambda: categorical_histograms(train_df, cats, self.ignore_na),
+            lambda: categorical_histograms(test_df, cats, self.ignore_na),
+            lambda: numeric_histograms(train_df, nums, self.numeric_hist_mode,
+                                       sketched_out=sk_train),
+            lambda: numeric_histograms(test_df, nums, self.numeric_hist_mode,
+                                       sketched_out=sk_test),
+        ])
         sketched = sk_train | sk_test
         fi = ctx.feature_importance or {}
         value = {}
@@ -227,23 +225,13 @@ class LabelDrift(TrainTestCheck):
         test_df = self._effective_df(ctx, "test")
         # the two sides' histogram jobs are independent: overlap them
         # (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            if is_numeric:
-                f1 = pool.submit(numeric_histograms, train_df, [label],
-                                 self.numeric_hist_mode)
-                f2 = pool.submit(numeric_histograms, test_df, [label],
-                                 self.numeric_hist_mode)
-                score, method = calc_drift_score(
-                    "numerical", f1.result()[label], f2.result()[label], **kw)
-            else:
-                f1 = pool.submit(categorical_histograms, train_df, [label],
-                                 self.ignore_na)
-                f2 = pool.submit(categorical_histograms, test_df, [label],
-                                 self.ignore_na)
-                score, method = calc_drift_score(
-                    "categorical", f1.result()[label], f2.result()[label], **kw)
+        if is_numeric:
+            kind, hist, arg = "numerical", numeric_histograms, self.numeric_hist_mode
+        else:
+            kind, hist, arg = "categorical", categorical_histograms, self.ignore_na
+        h_train, h_test = run_jobs([lambda: hist(train_df, [label], arg),
+                                    lambda: hist(test_df, [label], arg)])
+        score, method = calc_drift_score(kind, h_train[label], h_test[label], **kw)
         value = {"Drift score": None if score == "not_enough_samples" else score, "Method": method}
         return value, None
 

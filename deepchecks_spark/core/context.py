@@ -10,10 +10,9 @@ actual scan sharing instead of repeated pandas traversals.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 
+from deepchecks_spark.core.parallel import Once, spread_input
 from deepchecks_spark.dataset import Dataset
 from deepchecks_spark.stats import ColumnStats, compute_column_stats
 
@@ -29,14 +28,11 @@ class Context:
         self.test = self._cast(test, "Test") if test is not None else None
         self.feature_importance = feature_importance
         self.with_display = with_display
-        self._stats_cache: dict = {}
-        self._n_rows_cache: dict = {}
         self._cached_dfs: list = []
-        # suite checks may run from a thread pool (Suite.run): the shared
-        # passes are single-flight per cache key so concurrent checks
-        # wait for ONE computation instead of duplicating the scan
-        self._locks_guard = threading.Lock()
-        self._locks: dict = {}
+        # suite checks run concurrently (Suite.run): the shared passes
+        # are single-flight per key so concurrent checks wait for ONE
+        # computation instead of duplicating the scan
+        self._once = Once()
         if self.test is not None and require_same_schema:
             self._validate_compat()
 
@@ -73,44 +69,33 @@ class Context:
         raise ValueError(f"unknown dataset kind {kind!r}")
 
     # -- shared passes ---------------------------------------------------------
-    def _key_lock(self, key) -> threading.Lock:
-        with self._locks_guard:
-            return self._locks.setdefault(key, threading.Lock())
-
     def stats(self, kind: str, columns: tuple | None = None) -> ColumnStats:
         """Fused column stats, computed once per (dataset, column-set)."""
-        key = (kind, columns)
-        if key in self._stats_cache:
-            return self._stats_cache[key]
-        with self._key_lock(("stats", key)):
-            if key not in self._stats_cache:
-                ds = self.data(kind)
-                cols = list(columns) if columns is not None else ds.columns
-                self._stats_cache[key] = compute_column_stats(ds.df, cols)
-        return self._stats_cache[key]
+        def compute():
+            ds = self.data(kind)
+            cols = list(columns) if columns is not None else ds.columns
+            return compute_column_stats(ds.df, cols)
+
+        return self._once(("stats", kind, columns), compute)
 
     def n_rows(self, kind: str) -> int:
         """Row count, reusing the fused stats pass when already computed
         (avoids per-check df.count() round-trips — VERDICT r1 §wrong-6)."""
-        with self._locks_guard:
-            hit = next((st for (k, _cols), st in self._stats_cache.items()
-                        if k == kind), None)
+        hit = next((st for key, st in self._once.done().items()
+                    if key[:2] == ("stats", kind)), None)
         if hit is not None:
             return hit.n_rows
-        if kind not in self._n_rows_cache:
-            with self._key_lock(("n_rows", kind)):
-                if kind not in self._n_rows_cache:
-                    self._n_rows_cache[kind] = self.data(kind).df.count()
-        return self._n_rows_cache[kind]
+        return self._once(("n_rows", kind), lambda: self.data(kind).df.count())
 
     def persist(self, kind: str) -> None:
         """Cache the dataset across the suite's multiple passes.
 
-        If the source has fewer partitions than the cluster has slots
-        (common for small/compacted parquet), repartition first so every
-        downstream pass uses the full parallelism — one shuffle paid
-        once, amortized over every check. At real scale the input has
-        far more partitions than cores and this is a no-op.
+        The input first goes through ``spread_input``: a source with
+        fewer partitions than the cluster has slots (common for
+        small/compacted parquet) is repartitioned so every downstream
+        pass uses the full parallelism — one shuffle paid once,
+        amortized over every check. At real scale the input has far
+        more partitions than cores and this is a no-op.
 
         A frame the CALLER already persisted (e.g. the runner's shared
         input, cached across all its concurrent stages) is left alone
@@ -123,10 +108,7 @@ class Context:
         ds = self.data(kind)
         if ds.df.is_cached:
             return
-        spark = ds.df.sparkSession
-        slots = spark.sparkContext.defaultParallelism
-        if ds.df.rdd.getNumPartitions() < slots:
-            ds.df = ds.df.repartition(slots)
+        ds.df = spread_input(ds.df)
         ds.df.persist()
         self._cached_dfs.append(ds.df)
 

@@ -1,22 +1,26 @@
-"""Input-parallelism guard for CPU-heavy map work (guide §2.5/§6).
+"""Driver-side concurrency: one input-spread guard, one job fan-out,
+one single-flight memo.
 
-Small or compacted parquet inputs arrive as fewer scan partitions than
-the cluster has task slots (a 128 MB ``maxPartitionBytes`` split turns a
-sub-128 MB table into ONE task), so every expensive per-row expression
-downstream — shingle builds, window hashing, PQ encoding — runs on a
-single core while the rest of the cluster idles. ``spread_input``
-repartitions such inputs up to the slot count before the heavy work;
-at real corpus scale the input already carries far more partitions than
-slots and the call is a no-op (checked, never an unconditional shuffle).
-
-This is the same guard ``runner.run_job`` and ``Context.persist`` apply
-before their multi-pass workloads, shared so single-pass pipeline
-operators can use it too.
+* ``spread_input`` (guide §2.5/§6) repartitions an under-partitioned
+  input up to the slot count before CPU-heavy map work, so a sub-128 MB
+  table scanned as ONE task does not run on a single core. At real
+  scale it is a no-op (checked, never an unconditional shuffle).
+* ``run_jobs`` (guide §2.6) submits independent Spark jobs side by
+  side, so one job's scheduler ramp-up/tail back-fills the others'.
+* ``Once`` computes a shared pass (fused stats, the runner's
+  per-partition stats and flagged-string table) once per key, however
+  many concurrent jobs ask for it.
 """
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
+
+# per-call thread cap; only Suite.run's check list can be wider
+MAX_JOBS = 8
 
 
 def spread_input(df: DataFrame) -> DataFrame:
@@ -40,3 +44,53 @@ def spread_input(df: DataFrame) -> DataFrame:
     if n_parts < slots:
         return df.repartition(slots)
     return df
+
+
+def run_jobs(fns) -> list:
+    """Call the independent callables ``fns`` concurrently and return
+    their results in submission order.
+
+    Every callable finishes before the first exception (in submission
+    order) is raised, so a caller's ``finally`` cleanup — unpersisting
+    the shared input — never runs under live stages. Zero or one
+    callable runs inline; otherwise each call gets its own pool of
+    ``min(len(fns), MAX_JOBS)`` threads, so nested fan-outs (runner
+    stage -> suite -> drift legs) never wait on each other's workers.
+    """
+    fns = list(fns)
+    if len(fns) <= 1:
+        return [fn() for fn in fns]
+    with ThreadPoolExecutor(max_workers=min(len(fns), MAX_JOBS)) as pool:
+        futures = [pool.submit(fn) for fn in fns]
+    return [f.result() for f in futures]
+
+
+class Once:
+    """Keyed single-flight memo: ``once(key, fn)`` returns the value
+    computed by the first caller of ``key``; concurrent callers of the
+    same key wait for that result. A failure is not cached — the next
+    call retries."""
+
+    def __init__(self):
+        self._guard = threading.Lock()
+        self._locks: dict = {}
+        self._values: dict = {}
+
+    def __call__(self, key, fn):
+        with self._guard:
+            if key in self._values:
+                return self._values[key]
+            key_lock = self._locks.setdefault(key, threading.Lock())
+        with key_lock:
+            with self._guard:
+                if key in self._values:
+                    return self._values[key]
+            value = fn()
+            with self._guard:
+                self._values[key] = value
+            return value
+
+    def done(self) -> dict:
+        """Snapshot of the completed entries, taken under the guard."""
+        with self._guard:
+            return dict(self._values)

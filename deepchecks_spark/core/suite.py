@@ -17,11 +17,13 @@ the fused stats pass, so N stats-driven checks cost one scan, not N.
 
 from __future__ import annotations
 
+import functools
 import time
 from dataclasses import dataclass, field
 
 from deepchecks_spark.core.checks import SingleDatasetCheck, TrainTestCheck
 from deepchecks_spark.core.context import Context
+from deepchecks_spark.core.parallel import run_jobs
 from deepchecks_spark.core.result import CheckFailure, CheckResult
 
 
@@ -135,18 +137,16 @@ class Suite:
             suite.add(check)
         return suite
 
-    def run(self, train, test=None, feature_importance=None,
-            max_concurrency: int = 8) -> SuiteResult:
+    def run(self, train, test=None, feature_importance=None) -> SuiteResult:
         """Checks are independent jobs over the shared persisted Context:
-        submit them from a thread pool (one leg's scheduler ramp-down
+        submit them through ``run_jobs`` (one leg's scheduler ramp-down
         back-fills the others' ramp-up — guide §2.6) and concatenate
         results in insertion order, so the observable contract (result
-        order, values, per-check failure isolation) is unchanged. The
-        shared fused-stats pass is single-flight inside Context, so N
-        concurrent stats-driven checks still cost one scan. A
-        SingleDataset check's train/test legs stay sequential within its
-        task (same instance). ``max_concurrency<=1`` restores the fully
-        serial path."""
+        order, values, per-check failure isolation) matches a serial
+        loop. The shared fused-stats pass is single-flight inside
+        Context, so N concurrent stats-driven checks still cost one
+        scan. A SingleDataset check's train/test legs stay sequential
+        within its task (same instance)."""
         ctx = Context(train=train, test=test, feature_importance=feature_importance)
         ctx.persist("train")
         if ctx.test is not None:
@@ -172,16 +172,8 @@ class Suite:
                                  str(check))]
 
         try:
-            if max_concurrency > 1 and len(self.checks) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                    max_workers=min(len(self.checks), max_concurrency)
-                ) as pool:
-                    futures = [pool.submit(_task, c) for c in self.checks]
-                    results = [r for fut in futures for r in fut.result()]
-            else:
-                results = [r for c in self.checks for r in _task(c)]
+            tasks = [functools.partial(_task, c) for c in self.checks]
+            results = [r for rs in run_jobs(tasks) for r in rs]
         finally:
             ctx.unpersist_all()
         return SuiteResult(self.name, results)

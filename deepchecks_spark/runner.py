@@ -24,8 +24,10 @@ Run via:  spark-submit --py-files dist/deepchecks_spark.zip -m ...  or
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame
@@ -34,6 +36,7 @@ from pyspark.sql import types as T
 
 from deepchecks_spark.core.checks import get_condition_passed_message
 from deepchecks_spark.core.context import Context
+from deepchecks_spark.core.parallel import Once, run_jobs, spread_input
 from deepchecks_spark.core.result import CheckFailure
 from deepchecks_spark.dataset import Dataset
 from deepchecks_spark.functions.strings import (
@@ -619,7 +622,6 @@ def global_metric_rows(per_part: dict) -> list:
 def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
             label: str | None = None, cat_features: list | None = None,
             snapshot_id: int | None = None, resume: bool = True,
-            concurrent_stages: bool = True,
             reference_input: str | None = None,
             prediction_column: str | None = None,
             probability_columns: dict | None = None,
@@ -631,7 +633,14 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
             domain_profile_col: str | None = None,
             script_profile_col: str | None = None) -> dict:
     """Execute the integrity suite with per-partition lineage and
-    checkpointed stage outputs. Returns the manifest dict."""
+    checkpointed stage outputs. Returns the manifest dict.
+
+    The input is spread (``spread_input``) and persisted once; the
+    stages, and the sections inside ``partition_verdicts``, are
+    independent jobs over that cache submitted through ``run_jobs``.
+    Their shared passes (per-partition stats, the flagged-string table)
+    are single-flight through one ``Once``. Every stage finishes before
+    a failure propagates, and only then is the cache released."""
     os.makedirs(output_dir, exist_ok=True)
     manifest_path = os.path.join(output_dir, "_manifest.json")
     fingerprint = (
@@ -663,9 +672,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
     # one materialization shared by every stage: repartition up to the
     # cluster's slot count if the source is under-partitioned, cache the
     # decoded columns (the scan + decompress dominates repeated passes)
-    slots = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < slots:
-        df = df.repartition(slots)
+    df = spread_input(df)
     df.persist()
     ds = Dataset(df, label=label, cat_features=cat_features,
                  infer_categorical=cat_features is None)
@@ -685,13 +692,9 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         MixedDataTypes().add_condition_rare_type_ratio_not_in_range(),
     ]
 
-    import threading
-
-    per_part_cache: dict = {}
-    flagged_cache: dict = {}
-    _pp_lock = threading.Lock()
-    _fl_lock = threading.Lock()
-    _manifest_lock = threading.Lock()
+    # shared passes, single-flight across the concurrent stages
+    once = Once()
+    _manifest_lock = threading.Lock()  # serialises the manifest file writes
 
     def _flagged():
         # the KB-text melt + regex scan is the heaviest string pass:
@@ -700,12 +703,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         # MixedNulls verdicts (two full scans before)
         if not string_cols:
             return None
-        with _fl_lock:
-            if not flagged_cache:
-                fr = flagged_string_values(ds.df, string_cols)
-                fr.persist()
-                flagged_cache["v"] = fr
-            return flagged_cache["v"]
+        return once("flagged", lambda: flagged_string_values(ds.df, string_cols).persist())
 
     def _per_part():
         # one grouped stats pass shared by partition_verdicts + metrics.
@@ -714,12 +712,8 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         # the HLL sketch is mergeable per-partition state — the only
         # shape that survives 10^12 rows — and is exact at the small
         # cardinalities where the IsSingleValue verdict needs exactness.
-        with _pp_lock:
-            if not per_part_cache:
-                per_part_cache["v"] = compute_column_stats_by_partition(
-                    ds.df, ds.columns, exact_distinct=False
-                )
-            return per_part_cache["v"]
+        return once("per_part", lambda: compute_column_stats_by_partition(
+            ds.df, ds.columns, exact_distinct=False))
 
     def stage(name, fn):
         if manifest["stages"].get(name) == "done":
@@ -808,11 +802,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
                 return rows
 
             sections.append(_ref_sections)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(sections)) as pool:
-            futures = [pool.submit(fn) for fn in sections]
-            rows = [r for fut in futures for r in fut.result()]
+        rows = [r for part in run_jobs(sections) for r in part]
         out = spark.createDataFrame(
             rows, "partition_id int, check string, condition string, category string, details string"
         )
@@ -950,26 +940,18 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
     if script_profile_col:
         stages.append(("script_profile", _script_profile))
     try:
-        if concurrent_stages:
-            # the four stages are independent reads of the cached input;
-            # submitting them concurrently lets the scheduler fill each
-            # job's ramp-up/tail gaps — at high core counts the sequential
-            # version leaves most slots idle between jobs. Materialize the
-            # cache once first so the threads don't race to build it.
-            df.count()
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(stages)) as pool:
-                futures = [pool.submit(stage, n, fn) for n, fn in stages]
-                for fut in futures:
-                    fut.result()
-        else:
-            for n, fn in stages:
-                stage(n, fn)
+        # the stages are independent reads of the cached input;
+        # submitting them concurrently lets the scheduler fill each
+        # job's ramp-up/tail gaps — at high core counts the sequential
+        # version leaves most slots idle between jobs. Materialize the
+        # cache once first so the threads don't race to build it.
+        df.count()
+        run_jobs([functools.partial(stage, n, fn) for n, fn in stages])
     finally:
         df.unpersist()
-        if flagged_cache:
-            flagged_cache["v"].unpersist()
+        flagged = once.done().get("flagged")
+        if flagged is not None:
+            flagged.unpersist()
     return manifest
 
 

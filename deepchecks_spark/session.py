@@ -63,36 +63,4 @@ def get_spark(
         spark.conf.set("spark.sql.icu.caseMappings.enabled", "false")
     except Exception:  # pragma: no cover - conf absent on older Spark
         pass
-    _prewarm_python_workers(spark)
     return spark
-
-
-def _prewarm_python_workers(spark: SparkSession) -> None:
-    """Fork the Python worker pool once at session build.
-
-    With spark.python.worker.reuse (default true) every worker persists
-    for the session's lifetime, but each one pays its pandas/pyarrow
-    import (~0.5-1 s of single-core CPU) when IT first runs a task — so
-    the first Arrow/pandas-UDF operator of a fresh session is charged
-    the whole pool's startup. Running one trivial slot-per-core Arrow
-    job here moves that one-off cost into session construction, the
-    same place the JVM/codegen warm-up already lives. Skippable via
-    SPARK_GRAFT_PREWARM_WORKERS=0; no-op on an already-warmed session.
-    """
-    if os.environ.get("SPARK_GRAFT_PREWARM_WORKERS", "1") == "0":
-        return
-    try:
-        if spark.conf.get("spark.deepchecks.workersPrewarmed", None) == "true":
-            return
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("long")
-        def _identity(s: pd.Series) -> pd.Series:
-            return s
-
-        n = spark.sparkContext.defaultParallelism
-        spark.range(0, n, 1, n).select(_identity("id")).collect()
-        spark.conf.set("spark.deepchecks.workersPrewarmed", "true")
-    except Exception:  # pragma: no cover — warm-up must never fail a build
-        pass

@@ -145,20 +145,18 @@ def compute_column_stats(df: DataFrame, columns: list | None = None,
     if exact_distinct:
         # submit both jobs concurrently — they scan the same (cached)
         # input and the scheduler interleaves their tasks, hiding each
-        # job's ramp-up/tail behind the other's
-        from concurrent.futures import ThreadPoolExecutor
+        # job's ramp-up/tail behind the other's. Imported here: the core
+        # package imports this module.
+        from deepchecks_spark.core.parallel import run_jobs
 
         if df.is_cached:
             df.count()  # materialize once so the two jobs don't race to build the cache
-        with ThreadPoolExecutor(2) as pool:
-            f_main = pool.submit(
-                lambda: df.agg(
-                    *_agg_exprs(df, columns, include_approx_distinct=False)
-                ).first().asDict()
-            )
-            f_dist = pool.submit(lambda: df.agg(*_distinct_exprs(df, columns)).first().asDict())
-            row = f_main.result()
-            row.update(f_dist.result())
+        row, dist = run_jobs([
+            lambda: df.agg(*_agg_exprs(df, columns, include_approx_distinct=False))
+            .first().asDict(),
+            lambda: df.agg(*_distinct_exprs(df, columns)).first().asDict(),
+        ])
+        row.update(dist)
     else:
         row = df.agg(*_agg_exprs(df, columns)).first().asDict()
         for c in columns:

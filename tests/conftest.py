@@ -7,6 +7,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from deepchecks_spark.session import get_spark  # noqa: E402
 
+# get_spark defaults the local heap to 64g, sized for a large host; the
+# test session needs far less, and under a 64g ceiling the JVM outgrows a
+# 16 GB host's RAM before it collects (the kernel then kills it mid-suite)
+os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -191,8 +191,7 @@ def test_run_job_constraint_verdicts_table(spark, tmp_path):
             {"kind": "in_set", "column": "lang", "values": ["en", "fr"]},
             {"kind": "unique", "column": "id"},
             {"kind": "min_rows", "column": None, "n": 50}]
-    run_job(spark, src, out, constraints=cons, resume=False,
-            concurrent_stages=False)
+    run_job(spark, src, out, constraints=cons, resume=False)
     t = spark.read.parquet(f"{out}/constraint_verdicts")
     glob = {r["constraint"]: r for r in t.filter("partition_id = -1").collect()}
     assert glob["not_null"]["n_violations"] == 10
@@ -292,8 +291,7 @@ def test_run_job_big_set_goes_global_only(spark, tmp_path, monkeypatch):
     cons = [{"kind": "in_set", "column": "tag",
              "values": [f"v{i}" for i in range(5)]},   # > patched max
             {"kind": "not_null", "column": "tag"}]
-    run_job(spark, src, out, constraints=cons, resume=False,
-            concurrent_stages=False)
+    run_job(spark, src, out, constraints=cons, resume=False)
     t = spark.read.parquet(f"{out}/constraint_verdicts")
     glob = {r["constraint"]: r["n_violations"]
             for r in t.filter("partition_id = -1").collect()}
@@ -401,8 +399,7 @@ def test_run_job_suggest_constraints_stage(spark, tmp_path):
         "id long, text string, lang string, score double"
     ).repartition(4).write.parquet(src)
     out = str(tmp_path / "out")
-    run_job(spark, src, out, resume=False, concurrent_stages=False,
-            suggest=True)
+    run_job(spark, src, out, resume=False, suggest=True)
     sug = spark.read.parquet(f"{out}/suggested_constraints")
     got = {(r["column"], r["kind"]) for r in sug.collect()}
     assert ("id", "unique") in got and ("lang", "in_set") in got

@@ -91,12 +91,13 @@ def test_check_failure_isolated_in_suite(spark):
     assert not result.passed(fail_if_check_not_run=True)
 
 
-def test_suite_threaded_matches_sequential(spark):
-    """Suite.run submits checks from a thread pool; the observable
-    contract — result order, values, conditions — must be identical to
-    the serial path, and the shared fused stats pass must stay
-    single-flight (one computation despite concurrent stats users)."""
+def test_suite_threaded_matches_sequential(spark, monkeypatch):
+    """Suite.run submits checks concurrently through run_jobs; the
+    observable contract — result order, values, conditions — must be
+    identical to the serial path, and the shared fused stats pass must
+    stay single-flight (one computation despite concurrent stats users)."""
     import deepchecks_spark.core.context as ctx_mod
+    import deepchecks_spark.core.suite as suite_mod
     from deepchecks_spark.checks.integrity import MixedNulls
 
     df = spark.createDataFrame(
@@ -123,7 +124,9 @@ def test_suite_threaded_matches_sequential(spark):
         threaded = suite.run(ds)
     finally:
         ctx_mod.compute_column_stats = real
-    sequential = suite.run(ds, max_concurrency=1)
+    # the serial reference path: one check after another, in order
+    monkeypatch.setattr(suite_mod, "run_jobs", lambda fns: [fn() for fn in fns])
+    sequential = suite.run(ds)
 
     assert len(calls) == 1, f"fused stats pass ran {len(calls)}x under concurrency"
     jt, js = threaded.to_json(), sequential.to_json()

@@ -112,6 +112,10 @@ def test_numeric_like_expr_identical_to_bare_cast(spark):
               "１２３", "٣", "²", "½", "٠.٥",
               "−1", "  +.5e-2  ", "1d", "1D", "1f", "1F", "d1", "e3", "",
               "1" * 400, "x" * 400, None]
+    # Unicode whitespace above U+02FF, where JVM trimming APIs differ
+    # (String.trim vs Character.isWhitespace)
+    cands += [chr(i) + "1" for i in (0x1680, *range(0x2000, 0x200B), 0x2028,
+                                     0x2029, 0x202F, 0x205F, 0x3000)]
     df = spark.createDataFrame([(s,) for s in set(cands)], "s string")
     col = F.col("s")
     rows = df.select(

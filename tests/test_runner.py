@@ -109,7 +109,7 @@ def test_package_zip(tmp_path):
     from deepchecks_spark.package import build_zip
     import zipfile
 
-    out = build_zip("dist")
+    out = build_zip(str(tmp_path))
     assert os.path.exists(out)
     with zipfile.ZipFile(out) as zf:
         names = zf.namelist()
@@ -136,7 +136,7 @@ def test_spark_submit_py_files_end_to_end(tmp_path, corpus_parquet):
 
     from deepchecks_spark.package import build_zip
 
-    zip_path = build_zip("dist")
+    zip_path = build_zip(str(tmp_path / "dist"))
     workdir = tmp_path / "isolated"
     workdir.mkdir()
     with zipfile.ZipFile(zip_path) as zf:
@@ -374,8 +374,7 @@ def test_run_job_with_reference_emits_join_partition_verdicts(spark, tmp_path):
         [(i, "de" if i % 4 == 0 else ("en" if i % 2 else "fr"), "t%d" % (i + 500))
          for i in range(200)],
         "id long, lang string, text string").write.parquet(cur)
-    run_job(spark, cur, out, cat_features=["lang"], reference_input=ref,
-            concurrent_stages=False)
+    run_job(spark, cur, out, cat_features=["lang"], reference_input=ref)
     pv = spark.read.parquet(os.path.join(out, "partition_verdicts"))
     checks = {r["check"] for r in pv.collect()}
     assert "New Category Train Test" in checks
