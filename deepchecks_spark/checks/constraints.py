@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepchecks_spark.functions.columns import sql_str
+
 # beyond this many literal values, an isin list stops being a predicate
 # and becomes the plan (same threshold discipline as the streaming
 # reference sets and sequence-packing prefix maps)
@@ -335,14 +337,9 @@ def validate_constraints_by_partition(df: DataFrame, constraints: list) -> DataF
     for i, s in enumerate(constraints):
         aggs.append(F.sum(_violation_expr(s)).alias(f"__v{i}"))
     g = df.groupBy(F.spark_partition_id().alias("partition_id")).agg(*aggs)
-    def _sql_str(x: str) -> str:
-        # Spark's SQL parser consumes backslash escapes inside string
-        # literals (r'\w+' would melt to 'w+'), so escape those first
-        return x.replace("\\", "\\\\").replace("'", "\\'")
-
     parts = []
     for i, s in enumerate(constraints):
-        parts.append(f"'{_sql_str(_label(s))}', '{_sql_str(s['column'])}', __v{i}")
+        parts.append(f"{sql_str(_label(s))}, {sql_str(s['column'])}, __v{i}")
     melted = g.selectExpr(
         "partition_id", "__n",
         f"stack({len(constraints)}, {', '.join(parts)}) "

@@ -10,7 +10,6 @@ citations are in each docstring for parity checking.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -22,6 +21,7 @@ from deepchecks_spark.core.checks import (
     get_condition_passed_message,
 )
 from deepchecks_spark.core.result import ConditionCategory, ConditionResult
+from deepchecks_spark.functions.columns import melt
 from deepchecks_spark.functions.strings import (
     NULL_BASEFORMS,
     baseform_expr,
@@ -40,13 +40,6 @@ def _string_columns(ds, columns=None, ignore_columns=None, exclude_cat: bool = F
     if exclude_cat:
         cols = [c for c in cols if c not in set(ds.cat_features)]
     return cols
-
-
-def melt_strings(df: DataFrame, cols: list) -> DataFrame:
-    """One pass over all string columns as (column, value) rows via
-    ``stack`` — Catalyst prunes the scan to exactly these columns."""
-    pairs = ", ".join(f"'{c}', `{c}`" for c in cols)
-    return df.selectExpr(f"stack({len(cols)}, {pairs}) as (column, value)")
 
 
 class ColumnsInfo(SingleDatasetCheck):
@@ -200,7 +193,7 @@ class MixedNulls(SingleDatasetCheck):
 
         str_cols = [c for c in cols if isinstance(ds.schema_of(c), T.StringType)]
         if str_cols and n_rows:
-            melted = melt_strings(df, str_cols)
+            melted = melt(df, str_cols)
             bf = baseform_expr(F.col("value"), allow_empty_result=False)
             rows = (
                 melted.filter(F.col("value").isNotNull() & bf.isin(*self.null_string_list))
@@ -658,7 +651,7 @@ class StringMismatch(SingleDatasetCheck):
             ]
             if not cols:
                 return value, None
-        melted = melt_strings(df, cols).filter(F.col("value").isNotNull())
+        melted = melt(df, cols).filter(F.col("value").isNotNull())
         per_variant = (
             melted.withColumn("base", baseform_expr(F.col("value"), allow_empty_result=False))
             .groupBy("column", "base", "value")
@@ -801,7 +794,7 @@ class StringLengthOutOfBounds(SingleDatasetCheck):
         value = {}
         if not cols:
             return value, None
-        melted = melt_strings(self._effective_df(ctx, kind), cols).filter(F.col("value").isNotNull())
+        melted = melt(self._effective_df(ctx, kind), cols).filter(F.col("value").isNotNull())
         hist_rows = (
             melted.groupBy("column", F.length("value").alias("length")).count().collect()
         )

@@ -26,6 +26,7 @@ from deepchecks_spark.drift.spark import (
     categorical_histograms,
     numeric_histograms,
 )
+from deepchecks_spark.functions.columns import melt
 from deepchecks_spark.functions.strings import baseform_expr
 
 SUPPORTED_CATEGORICAL_METHODS = ("Cramer's V", "PSI")
@@ -607,7 +608,7 @@ class StringMismatchComparison(TrainTestCheck):
         self.max_distinct_to_check = max_distinct_to_check
 
     def compute(self, ctx):
-        from deepchecks_spark.checks.integrity import _string_columns, melt_strings
+        from deepchecks_spark.checks.integrity import _string_columns
 
         cols = _string_columns(ctx.train, self.columns, self.ignore_columns)
         value = {c: {} for c in cols}
@@ -625,7 +626,7 @@ class StringMismatchComparison(TrainTestCheck):
                 return value, None
 
         def baseform_variant_counts(df, out_name):
-            melted = melt_strings(df, cols).filter(F.col("value").isNotNull())
+            melted = melt(df, cols).filter(F.col("value").isNotNull())
             return (
                 melted.withColumn("base", baseform_expr(F.col("value"), allow_empty_result=False))
                 .groupBy("column", "base", "value")

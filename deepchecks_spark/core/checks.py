@@ -13,12 +13,7 @@ import re
 import time
 from typing import Any
 
-from deepchecks_spark.core.result import (
-    CheckResult,
-    Condition,
-    ConditionCategory,
-    ConditionResult,
-)
+from deepchecks_spark.core.result import CheckResult, Condition
 
 
 class _UseDefault:
@@ -230,12 +225,6 @@ class TrainTestCheck(BaseCheck):
 
 
 # -- shared condition helpers ---------------------------------------------
-
-def pass_fail(ok: bool, details_pass: str, details_fail: str) -> ConditionResult:
-    if ok:
-        return ConditionResult(ConditionCategory.PASS, details_pass)
-    return ConditionResult(ConditionCategory.FAIL, details_fail)
-
 
 def _truncate_zero_percent(ratio: float, floating_point: int) -> str:
     """Reference utils/strings.py:461-466 truncate_zero_percent."""

@@ -1,11 +1,11 @@
 """Context — holder of train/test Datasets + shared precomputed stats
 (reference deepchecks/tabular/context.py:161).
 
-The expensive artifacts (the fused column-stats pass, the melted string
-value counts) are computed once per dataset and shared by every check
-in a suite — the engine-level replacement for the reference's "one
-in-memory Context reused across checks" (tabular/suite.py:76), but with
-actual scan sharing instead of repeated pandas traversals.
+The expensive artifacts (the fused column-stats pass and the row count)
+are computed once per dataset and shared by every check in a suite —
+the engine-level replacement for the reference's "one in-memory Context
+reused across checks" (tabular/suite.py:76), but with actual scan
+sharing instead of repeated pandas traversals.
 """
 
 from __future__ import annotations

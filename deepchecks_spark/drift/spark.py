@@ -23,6 +23,7 @@ from deepchecks_spark.drift.kernels import (
     ks_from_hist,
     psi_from_counts,
 )
+from deepchecks_spark.functions.columns import melt
 
 # Above this many distinct values per numeric column the exact
 # distinct-value histogram stops being "small state" and we switch to
@@ -74,12 +75,6 @@ def emd_sketch_bound(emd_estimate: float | None = None) -> float:
     return (1.0 + w) / m + 2.0 * eps
 
 
-def _melt(df: DataFrame, cols: list, cast: str | None = None) -> DataFrame:
-    expr = f"`{{c}}`" if cast is None else f"cast(`{{c}}` as {cast})"
-    pairs = ", ".join(f"'{c}', " + expr.format(c=c) for c in cols)
-    return df.selectExpr(f"stack({len(cols)}, {pairs}) as (column, value)")
-
-
 # Per-column driver-side histogram cap: a user-declared cat_features=
 # ["url"] must not OOM the driver (VERDICT r1 §wrong-4). Inferred
 # categoricals (≤150 uniques) never hit this; the reference itself caps
@@ -98,7 +93,7 @@ def categorical_histograms(df: DataFrame, cols: list, ignore_na: bool = True,
     so the driver never collects an unbounded value set."""
     if not cols:
         return {}
-    melted = _melt(df, cols, cast="string")
+    melted = melt(df, cols, cast="string")
     if ignore_na:
         melted = melted.filter(F.col("value").isNotNull())
     grouped = melted.groupBy("column", "value").count()
@@ -164,7 +159,7 @@ def numeric_histograms(
             out.update(numeric_histograms(df, sketch_cols, "sketch"))
         return out
     if mode == "exact":
-        melted = _melt(df, cols, cast="double").filter(
+        melted = melt(df, cols, cast="double").filter(
             F.col("value").isNotNull() & ~F.isnan("value")
         )
         rows = melted.groupBy("column", "value").count().collect()

@@ -39,6 +39,7 @@ from deepchecks_spark.core.context import Context
 from deepchecks_spark.core.parallel import Once, run_jobs, spread_input
 from deepchecks_spark.core.result import CheckFailure
 from deepchecks_spark.dataset import Dataset
+from deepchecks_spark.functions.columns import melt, quote_ident
 from deepchecks_spark.functions.strings import (
     baseform_expr,
     is_null_string_expr,
@@ -61,13 +62,12 @@ ABS_DRIFT_COLLECT_CAP = 2_000_000
 # per-partition verdicts
 # ---------------------------------------------------------------------------
 
-def partition_verdicts(ds: Dataset, checks: list, per_part: dict | None = None) -> list:
+def partition_verdicts(ds: Dataset, checks: list, per_part: dict) -> list:
     """Evaluate each stats-driven check's conditions on every input
-    partition's own statistics (ONE grouped aggregation pass for all
-    partitions × all columns; reference parity = running deepchecks on
-    each partition's pandas slice, FIXTURES.md §F3)."""
-    if per_part is None:
-        per_part = compute_column_stats_by_partition(ds.df, ds.columns)
+    partition's own statistics (``per_part``: the ONE grouped
+    aggregation pass for all partitions × all columns; reference parity
+    = running deepchecks on each partition's pandas slice, FIXTURES.md
+    §F3)."""
     rows = []
     for pid, stats in sorted(per_part.items()):
         fake_ctx = _StatsOnlyContext(ds, stats)
@@ -86,36 +86,25 @@ def partition_verdicts(ds: Dataset, checks: list, per_part: dict | None = None) 
     return rows
 
 
-def mixed_nulls_partition_rows(df: DataFrame, string_cols: list, per_part: dict,
-                               max_allowed_null_types: int = 1,
-                               flagged: DataFrame | None = None) -> list:
-    """Per-partition MixedNulls verdicts: one melted, pre-filtered pass
-    counts distinct string null-representations per (partition, column);
-    real-null presence comes from the per-partition stats. The condition
-    (distinct null types ≤ max) is then evaluated per partition —
-    matching a per-slice reference run exactly.
+def mixed_nulls_partition_rows(per_part: dict, flagged: DataFrame | None,
+                               max_allowed_null_types: int = 1) -> list:
+    """Per-partition MixedNulls verdicts: distinct string
+    null-representations per (partition, column) come from ``flagged``,
+    real-null presence from the per-partition stats ``per_part``. The
+    condition (distinct null types ≤ max) is then evaluated per
+    partition — matching a per-slice reference run exactly.
 
-    ``flagged``: the shared :func:`flagged_string_values` frame — its
-    MixedNulls rows are one row per distinct (partition, column,
-    null-representation), so the per-(pid, col) row count IS the
-    distinct-representation count and the KB-text melt+regex scan is
-    not repeated here."""
+    ``flagged``: the shared :func:`flagged_string_values` frame (None
+    when the input has no string columns) — its MixedNulls rows are one
+    row per distinct (partition, column, null-representation), so the
+    per-(pid, col) row count IS the distinct-representation count and
+    the KB-text melt+regex scan is not repeated here."""
     rows = []
     repr_counts: dict = {}
-    if string_cols:
-        if flagged is not None:
-            grouped = (flagged.filter(F.col("check") == "MixedNulls")
-                       .groupBy("__pid", "column")
-                       .agg(F.count(F.lit(1)).alias("n_reprs")))
-        else:
-            melted = df.withColumn("__pid", F.spark_partition_id()).selectExpr(
-                "__pid",
-                f"stack({len(string_cols)}, "
-                + ", ".join(f"'{c}', `{c}`" for c in string_cols)
-                + ") as (column, value)",
-            ).filter(F.col("value").isNotNull() & is_null_string_expr(F.col("value")))
-            grouped = melted.groupBy("__pid", "column").agg(
-                F.countDistinct("value").alias("n_reprs"))
+    if flagged is not None:
+        grouped = (flagged.filter(F.col("check") == "MixedNulls")
+                   .groupBy("__pid", "column")
+                   .agg(F.count(F.lit(1)).alias("n_reprs")))
         for r in grouped.collect():
             repr_counts[(r["__pid"], r["column"])] = r["n_reprs"]
     cond_name = f"Number of different null types is less or equal to {max_allowed_null_types}"
@@ -139,40 +128,31 @@ def mixed_nulls_partition_rows(df: DataFrame, string_cols: list, per_part: dict,
     return rows
 
 
-def duplicates_partition_rows(df: DataFrame, cols: list, max_ratio: float = 0.0,
-                              approx: bool = True) -> list:
+def duplicates_partition_rows(df: DataFrame, cols: list, max_ratio: float = 0.0) -> list:
     """Per-partition DataDuplicates verdicts (ROADMAP #2): duplicate
     ratio within each input partition, condition evaluated per partition.
 
     Row identity is xxhash64 over the selected columns (the payload-hash
-    trick — KB-sized text never shuffles). ``approx=True`` (default, the
-    corpus-scale shape) counts distinct hashes with a mergeable HLL
-    sketch; exact countDistinct is available for fixture parity. Since
-    the group key contains the partition id, the heavy reduction is
-    map-side local either way.
+    trick — KB-sized text never shuffles), and the distinct hashes are
+    counted EXACTLY: an HLL sketch's ±rsd (5%) could undercount a
+    duplicate-free partition → spurious FAIL at zero tolerance, or mask
+    up to ~5% real duplicates as PASS (ADVICE r2). countDistinct stays
+    map-side local — __pid is in the group key and only 8-byte hashes
+    shuffle.
     """
     from deepchecks_spark.core.checks import format_percent
 
-    h = F.xxhash64(*[F.col(f"`{c}`") for c in cols])
-    # A zero tolerance needs an EXACT distinct count: the HLL sketch's
-    # ±rsd (5%) can undercount a duplicate-free partition → spurious
-    # FAIL, or mask up to ~5% real duplicates as PASS (ADVICE r2).
-    # countDistinct stays map-side local here — __pid is in the group
-    # key and only 16-byte hashes shuffle.
-    if max_ratio == 0.0:
-        approx = False
-    d_expr = F.approx_count_distinct("__h") if approx else F.countDistinct("__h")
+    h = F.xxhash64(*[F.col(quote_ident(c)) for c in cols])
     per = (
         df.withColumn("__pid", F.spark_partition_id()).withColumn("__h", h)
         .groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("n"), d_expr.alias("d"))
+        .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("__h").alias("d"))
         .collect()
     )
     cond_name = f"Duplicate data ratio is less or equal to {format_percent(max_ratio)}"
     rows = []
     for r in sorted(per, key=lambda row: row["__pid"]):
-        # HLL can overcount slightly → clamp the ratio at 0
-        ratio = max(0.0, 1 - r["d"] / r["n"]) if r["n"] else 0.0
+        ratio = (1 - r["d"] / r["n"]) if r["n"] else 0.0
         category = "PASS" if ratio <= max_ratio else "FAIL"
         rows.append((r["__pid"], "Data Duplicates", cond_name, category,
                      f"Found {format_percent(ratio)} duplicate data"))
@@ -188,11 +168,11 @@ def conflicting_labels_partition_rows(df: DataFrame, feature_cols: list, label_c
     map-side local; only (pid, features)-level rows shuffle."""
     from deepchecks_spark.core.checks import format_percent
 
-    fcols = [F.col(f"`{c}`") for c in feature_cols]
+    fcols = [F.col(quote_ident(c)) for c in feature_cols]
     grouped = (
         df.withColumn("__pid", F.spark_partition_id())
         .groupBy(F.col("__pid"), *fcols)
-        .agg(F.countDistinct(F.col(f"`{label_col}`")).alias("n_labels"),
+        .agg(F.countDistinct(F.col(quote_ident(label_col))).alias("n_labels"),
              F.count(F.lit(1)).alias("n_rows"))
     )
     per = (
@@ -234,20 +214,18 @@ def new_category_partition_rows(test_df: DataFrame, train_df: DataFrame, cat_col
     if not cat_cols:
         return []
     approx = train_df.agg(
-        *[F.approx_count_distinct(f"`{c}`").alias(c) for c in cat_cols]).first()
+        *[F.approx_count_distinct(quote_ident(c)).alias(c) for c in cat_cols]).first()
     cols = [c for c in cat_cols if (approx[c] or 0) <= max_categories]
     if not cols:
         return []
-    pairs = ", ".join(f"'{c}', cast(`{c}` as string)" for c in cols)
-    stack_expr = f"stack({len(cols)}, {pairs}) as (column, value)"
     train_vals = (
-        train_df.selectExpr(stack_expr)
+        melt(train_df, cols, cast="string")
         .filter(F.col("value").isNotNull()).distinct()
         .withColumn("__seen", F.lit(1))
     )
     melted = (
-        test_df.withColumn("__pid", F.spark_partition_id())
-        .selectExpr("__pid", stack_expr)
+        melt(test_df.withColumn("__pid", F.spark_partition_id()), cols,
+             cast="string", keep=("__pid",))
         .filter(F.col("value").isNotNull())
     )
     per = (
@@ -304,8 +282,8 @@ def performance_partition_rows(df: DataFrame, label_col: str, prediction_column:
     exists to catch."""
     from deepchecks_spark.core.checks import format_number
 
-    y = F.col(f"`{label_col}`")
-    p = F.col(f"`{prediction_column}`")
+    y = F.col(quote_ident(label_col))
+    p = F.col(quote_ident(prediction_column))
     usable = y.isNotNull() & p.isNotNull()
     if task == "regression":
         d = p.cast("double") - y.cast("double")
@@ -373,7 +351,7 @@ def samples_mix_partition_rows(test_df: DataFrame, train_df: DataFrame, cols: li
     """
     from deepchecks_spark.core.checks import format_percent
 
-    h = F.xxhash64(*[F.col(f"`{c}`") for c in cols])
+    h = F.xxhash64(*[F.col(quote_ident(c)) for c in cols])
     train_h = train_df.select(h.alias("__h")).distinct().withColumn("__seen", F.lit(1))
     per = (
         test_df.withColumn("__pid", F.spark_partition_id())
@@ -418,10 +396,9 @@ def drift_partition_rows(df: DataFrame, cat_cols: list, reference_hists: dict | 
 
     if not cat_cols:
         return []
-    pairs = ", ".join(f"'{c}', cast(`{c}` as string)" for c in cat_cols)
     melted = (
-        df.withColumn("__pid", F.spark_partition_id())
-        .selectExpr("__pid", f"stack({len(cat_cols)}, {pairs}) as (column, value)")
+        melt(df.withColumn("__pid", F.spark_partition_id()), cat_cols,
+             cast="string", keep=("__pid",))
         .filter(F.col("value").isNotNull())
     )
     grouped = melted.groupBy("__pid", "column", "value").count()
@@ -486,12 +463,8 @@ def flagged_string_values(df: DataFrame, string_cols: list) -> DataFrame:
     the runner can compute the KB-text melt+regex pass ONCE and share
     it between the violations table and the per-partition MixedNulls
     verdicts (it was scanned twice before)."""
-    melted = df.withColumn("__pid", F.spark_partition_id()).selectExpr(
-        "__pid",
-        f"stack({len(string_cols)}, "
-        + ", ".join(f"'{c}', `{c}`" for c in string_cols)
-        + ") as (column, value)",
-    ).filter(F.col("value").isNotNull())
+    melted = melt(df.withColumn("__pid", F.spark_partition_id()), string_cols,
+                  keep=("__pid",)).filter(F.col("value").isNotNull())
     is_null_repr = is_null_string_expr(F.col("value"))
     is_special = is_special_only_expr(F.col("value"))
     return (
@@ -526,12 +499,6 @@ def violation_rows(df: DataFrame, string_cols: list,
         return spark.createDataFrame([], VIOLATIONS_SCHEMA)
     n_rows = df.count()
 
-    def _melt_with_pid(cols):
-        return df.withColumn("__pid", F.spark_partition_id()).selectExpr(
-            "__pid",
-            f"stack({len(cols)}, " + ", ".join(f"'{c}', `{c}`" for c in cols) + ") as (column, value)",
-        )
-
     # selective filter FIRST, then the (cheap) per-partition aggregation
     if flagged is None:
         flagged = flagged_string_values(df, string_cols)
@@ -547,14 +514,15 @@ def violation_rows(df: DataFrame, string_cols: list,
 
     # StringMismatch on bounded-cardinality columns only
     approx = df.agg(
-        *[F.approx_count_distinct(f"`{c}`").alias(c) for c in string_cols]
+        *[F.approx_count_distinct(quote_ident(c)).alias(c) for c in string_cols]
     ).first()
     low_card = [c for c in string_cols if (approx[c] or 0) <= mismatch_max_distinct]
     if low_card:
         from pyspark.sql import Window
 
         counted = (
-            _melt_with_pid(low_card)
+            melt(df.withColumn("__pid", F.spark_partition_id()), low_card,
+                 keep=("__pid",))
             .filter(F.col("value").isNotNull())
             .groupBy("__pid", "column", "value")
             .count()
@@ -571,11 +539,9 @@ def violation_rows(df: DataFrame, string_cols: list,
     return out
 
 
-def metrics_rows(ds: Dataset, per_part: dict | None = None) -> list:
+def metrics_rows(per_part: dict) -> list:
     """Per-partition per-column metrics table rows:
     (partition_id, column, stat, value_double, value_string)."""
-    if per_part is None:
-        per_part = compute_column_stats_by_partition(ds.df, ds.columns)
     rows = []
     for pid, stats in sorted(per_part.items()):
         rows.append((pid, "*", "n_rows", float(stats.n_rows), None))
@@ -706,14 +672,9 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         return once("flagged", lambda: flagged_string_values(ds.df, string_cols).persist())
 
     def _per_part():
-        # one grouped stats pass shared by partition_verdicts + metrics.
-        # exact_distinct=False: per-partition exact countDistinct would
-        # shuffle every distinct payload (text/html) per partition branch;
-        # the HLL sketch is mergeable per-partition state — the only
-        # shape that survives 10^12 rows — and is exact at the small
-        # cardinalities where the IsSingleValue verdict needs exactness.
+        # one grouped stats pass shared by partition_verdicts + metrics
         return once("per_part", lambda: compute_column_stats_by_partition(
-            ds.df, ds.columns, exact_distinct=False))
+            ds.df, ds.columns))
 
     def stage(name, fn):
         if manifest["stages"].get(name) == "done":
@@ -768,9 +729,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         # order so the output table is deterministic
         sections = [
             lambda: (partition_verdicts(ds, stats_checks, _per_part())
-                     + mixed_nulls_partition_rows(ds.df, string_cols,
-                                                  _per_part(),
-                                                  flagged=_flagged())),
+                     + mixed_nulls_partition_rows(_per_part(), _flagged())),
         ]
         # key-identity duplicates per partition: web corpora key on url
         dup_cols = [c for c in ("url",) if c in ds.columns] or list(ds.columns)
@@ -813,7 +772,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         write_table(out, os.path.join(output_dir, "violations"))
 
     def _metrics():
-        rows = metrics_rows(ds, _per_part())
+        rows = metrics_rows(_per_part())
         out = spark.createDataFrame(
             rows, "partition_id int, column string, stat string, value_double double, value_string string"
         )

@@ -44,12 +44,11 @@ def _agg_exprs(df: DataFrame, columns: list,
     and both stay inside WholeStageCodegen.
 
     ``include_approx_distinct=False`` drops the per-column HLL sketches:
-    when the exact distinct aggregation runs anyway, the sketch is never
-    read (it exists only to SERVE as ``distinct`` in the
-    ``exact_distinct=False`` sketch mode), and it is the single most
-    expensive family of the fused pass (measured ~0.9 s warm / ~2 s cold
-    of the pass's time on 600k×11 — per-row HLL register updates for
-    every column)."""
+    the global pass runs the exact distinct aggregation anyway, so there
+    the sketch is never read (it exists only to SERVE as ``distinct`` in
+    the per-partition pass), and it is the single most expensive family
+    of the fused pass (measured ~0.9 s warm / ~2 s cold of the pass's
+    time on 600k×11 — per-row HLL register updates for every column)."""
     # parsed expression strings wherever the SQL form is unambiguous:
     # the ~8 aggregates per column then cost ~1 py4j round-trip each
     # instead of 4-6 (measured 0.7 s -> ~0.1 s of driver Python on a
@@ -134,60 +133,50 @@ def _rows_to_stats(row_dict: dict, columns: list) -> ColumnStats:
     return ColumnStats(n_rows=n_rows, per_column=per_col)
 
 
-def compute_column_stats(df: DataFrame, columns: list | None = None,
-                         exact_distinct: bool = True) -> ColumnStats:
-    """Fused stats pass: one non-distinct aggregation + (optionally) one
-    distinct-only aggregation. At 10^12-row scale pass
-    ``exact_distinct=False`` and the HLL sketch (approx_count_distinct,
-    already in the main agg) serves as ``distinct`` — exact per-column
-    cardinality of a trillion rows is not a single-pass-friendly ask."""
+def compute_column_stats(df: DataFrame, columns: list | None = None) -> ColumnStats:
+    """Fused stats pass: one non-distinct aggregation + one distinct-only
+    aggregation, so ``distinct`` is the exact per-column count."""
     columns = columns if columns is not None else df.columns
-    if exact_distinct:
-        # submit both jobs concurrently — they scan the same (cached)
-        # input and the scheduler interleaves their tasks, hiding each
-        # job's ramp-up/tail behind the other's. Imported here: the core
-        # package imports this module.
-        from deepchecks_spark.core.parallel import run_jobs
+    # submit both jobs concurrently — they scan the same (cached) input
+    # and the scheduler interleaves their tasks, hiding each job's
+    # ramp-up/tail behind the other's. Imported here: the core package
+    # imports this module.
+    from deepchecks_spark.core.parallel import run_jobs
 
-        if df.is_cached:
-            df.count()  # materialize once so the two jobs don't race to build the cache
-        row, dist = run_jobs([
-            lambda: df.agg(*_agg_exprs(df, columns, include_approx_distinct=False))
-            .first().asDict(),
-            lambda: df.agg(*_distinct_exprs(df, columns)).first().asDict(),
-        ])
-        row.update(dist)
-    else:
-        row = df.agg(*_agg_exprs(df, columns)).first().asDict()
-        for c in columns:
-            row[f"distinct::{c}"] = row[f"approx_distinct::{c}"]
+    if df.is_cached:
+        df.count()  # materialize once so the two jobs don't race to build the cache
+    row, dist = run_jobs([
+        lambda: df.agg(*_agg_exprs(df, columns, include_approx_distinct=False))
+        .first().asDict(),
+        lambda: df.agg(*_distinct_exprs(df, columns)).first().asDict(),
+    ])
+    row.update(dist)
     return _rows_to_stats(row, columns)
 
 
-def compute_column_stats_by_partition(df: DataFrame, columns: list | None = None,
-                                      exact_distinct: bool = True) -> dict:
+def compute_column_stats_by_partition(df: DataFrame, columns: list | None = None) -> dict:
     """Per-partition variant: groupBy(spark_partition_id()) — the lineage/
     parity surface of the north rule. Returns {partition_id: ColumnStats}.
-    Same two-job split as the global pass; the group count equals the
-    partition count, so aggregation state stays tiny regardless of data
-    volume."""
+
+    ONE job: the HLL sketch (approx_count_distinct, in the main agg)
+    serves as ``distinct``. Per-partition exact countDistinct would
+    shuffle every distinct payload (text/html) per partition branch; the
+    sketch is mergeable per-partition state — the only shape that
+    survives 10^12 rows — and is exact at the small cardinalities where
+    the IsSingleValue verdict needs exactness. The group count equals
+    the partition count, so aggregation state stays tiny regardless of
+    data volume."""
     columns = columns if columns is not None else df.columns
-    with_pid = df.withColumn("__pid", F.spark_partition_id())
     rows = {
         r["__pid"]: r.asDict()
-        for r in with_pid.groupBy("__pid")
-        .agg(*_agg_exprs(df, columns, include_approx_distinct=not exact_distinct))
+        for r in df.withColumn("__pid", F.spark_partition_id()).groupBy("__pid")
+        .agg(*_agg_exprs(df, columns))
         .collect()
     }
-    if exact_distinct:
-        for r in with_pid.groupBy("__pid").agg(*_distinct_exprs(df, columns)).collect():
-            rows[r["__pid"]].update(r.asDict())
-    else:
-        for d in rows.values():
-            for c in columns:
-                d[f"distinct::{c}"] = d[f"approx_distinct::{c}"]
     out = {}
     for pid, d in rows.items():
         d.pop("__pid", None)
+        for c in columns:
+            d[f"distinct::{c}"] = d[f"approx_distinct::{c}"]
         out[pid] = _rows_to_stats(d, columns)
     return out

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from deepchecks_spark.functions.columns import melt, quote_ident
 from deepchecks_spark.functions.strings import (
     is_null_string_expr,
     is_special_only_expr,
@@ -433,10 +434,8 @@ class StreamingNewCategoryMonitor:
               window_duration: str = "1 day", watermark: str = "30 minutes",
               checkpoint_dir: str | None = None):
         _warn_unresumable_fold(checkpoint_dir, self.state_path)
-        pairs = ", ".join(f"'{c}', cast(`{c}` as string)" for c in columns)
-        melted = stream_df.selectExpr(
-            f"`{time_col}`", f"stack({len(columns)}, {pairs}) as (column, value)"
-        ).filter(F.col("value").isNotNull())
+        melted = melt(stream_df, columns, cast="string",
+                      keep=(quote_ident(time_col),)).filter(F.col("value").isNotNull())
         total_ref = sum(len(self.reference_values.get(c, ())) for c in columns)
         if total_ref > self.ISIN_LITERAL_MAX:
             # broadcast join path: the plan stays O(1) in reference size;
@@ -1035,10 +1034,7 @@ def streaming_violations(stream_df: DataFrame, string_cols: list) -> DataFrame:
     """Stateless streaming violation detector: emits (check, column,
     offending_value) rows as data arrives — the same predicates as the
     batch violations pass, so a row flags identically in both modes."""
-    pairs = ", ".join(f"'{c}', `{c}`" for c in string_cols)
-    melted = stream_df.selectExpr(
-        f"stack({len(string_cols)}, {pairs}) as (column, value)"
-    ).filter(F.col("value").isNotNull())
+    melted = melt(stream_df, string_cols).filter(F.col("value").isNotNull())
     return melted.filter(
         is_null_string_expr(F.col("value")) | is_special_only_expr(F.col("value"))
     ).select(

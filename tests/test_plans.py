@@ -29,9 +29,9 @@ def test_fused_stats_pass_has_no_expand(lineitem):
 
 
 def test_melted_scan_prunes_to_selected_columns(lineitem):
-    from deepchecks_spark.checks.integrity import melt_strings
+    from deepchecks_spark.functions.columns import melt
 
-    melted = melt_strings(lineitem, ["l_returnflag", "l_linestatus"])
+    melted = melt(lineitem, ["l_returnflag", "l_linestatus"])
     plan = _plan(melted)
     scan = plan[plan.find("ReadSchema"):][:200]
     assert "l_returnflag" in scan and "l_linestatus" in scan

@@ -193,16 +193,13 @@ def test_duplicates_partition_rows_exact_parity(spark):
     data = [(i % 10,) for i in range(100)] + [(1000 + i,) for i in range(100)]
     rdd = spark.sparkContext.parallelize(data, 2)
     df = spark.createDataFrame(rdd, "k long")
-    rows = duplicates_partition_rows(df, ["k"], max_ratio=0.0, approx=False)
+    rows = duplicates_partition_rows(df, ["k"], max_ratio=0.0)
     assert len(rows) == 2
     by_cat = {r[0]: (r[3], r[4]) for r in rows}
     cats = sorted(v[0] for v in by_cat.values())
     assert cats == ["FAIL", "PASS"]  # the duplicate-heavy partition fails
     failing = [v for v in by_cat.values() if v[0] == "FAIL"][0]
     assert "90%" in failing[1]  # 100 rows, 10 distinct → 90% duplicates
-    # approx mode agrees at this cardinality (HLL exact at small n)
-    approx_rows = duplicates_partition_rows(df, ["k"], max_ratio=0.0, approx=True)
-    assert sorted(r[3] for r in approx_rows) == ["FAIL", "PASS"]
 
 
 def test_drift_partition_rows_flags_anomalous_shard(spark):
@@ -280,7 +277,7 @@ def test_duplicates_partition_zero_tolerance_is_exact(spark):
     from deepchecks_spark.runner import duplicates_partition_rows
 
     df = spark.range(0, 20000).selectExpr("id", "cast(id as string) as s").repartition(8)
-    rows = duplicates_partition_rows(df, ["id", "s"], max_ratio=0.0, approx=True)
+    rows = duplicates_partition_rows(df, ["id", "s"], max_ratio=0.0)
     assert rows and all(r[3] == "PASS" for r in rows)
     assert all("0%" in r[4] for r in rows)
 
