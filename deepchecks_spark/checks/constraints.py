@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deepchecks_spark.functions.columns import sql_str
+from deepchecks_spark.io import local_frame
 
 # beyond this many literal values, an isin list stops being a predicate
 # and becomes the plan (same threshold discipline as the streaming
@@ -192,7 +193,10 @@ def _big_set_violations(df: DataFrame, spec: dict) -> int:
     oversized set."""
     col = spec["column"]
     sess = df.sparkSession
-    vals = sess.createDataFrame([(v,) for v in spec["values"]], [col])
+    rows = [(v,) for v in spec["values"]]
+    # the value set's own (inferred) type, as the join always compared
+    # it; only the name comes from the column
+    vals = local_frame(sess, rows, sess._inferSchemaFromList(rows, names=[col]))
     side = df.select(col).filter(F.col(col).isNotNull())
     how = "left_anti" if spec["kind"] == "in_set" else "left_semi"
     return side.join(F.broadcast(vals), col, how).count()
@@ -283,8 +287,8 @@ def validate_constraints(df: DataFrame, constraints: list) -> DataFrame:
         frac = (nv / n_rows) if n_rows and kind in ROW_LOCAL | {"unique"} else float(nv)
         rows.append((_label(s), col, nv, round(float(frac), 6), nv == 0))
 
-    return df.sparkSession.createDataFrame(
-        rows,
+    return local_frame(
+        df.sparkSession, rows,
         "constraint string, column string, n_violations long, "
         "violation_frac double, passed boolean",
     )
@@ -575,8 +579,8 @@ def suggest_constraints(df: DataFrame, max_set_size: int = 20,
                 and int(prof[f"__int__{c}"] or 0) == n - nulls[c]:
             rows.append((c, "integral_string", None, None, None))
     rows.sort(key=lambda r: (r[0], r[1]))
-    return df.sparkSession.createDataFrame(
-        rows, "column string, kind string, lo double, hi double, values string")
+    return local_frame(df.sparkSession, rows,
+                       "column string, kind string, lo double, hi double, values string")
 
 
 def suggestions_to_specs(suggestions) -> list:
@@ -692,5 +696,5 @@ def schema_diff(old: DataFrame, new: DataFrame) -> DataFrame:
         else:
             status = "unchanged"
         rows.append((c, status, a.get(c), b.get(c)))
-    return old.sparkSession.createDataFrame(
-        rows, "column string, status string, dtype_old string, dtype_new string")
+    return local_frame(old.sparkSession, rows,
+                       "column string, status string, dtype_old string, dtype_new string")

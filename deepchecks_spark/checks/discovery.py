@@ -56,6 +56,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepchecks_spark.io import local_frame
+
 __all__ = [
     "functional_dependencies",
     "discover_keys",
@@ -233,8 +235,8 @@ def discover_keys(df: DataFrame, columns: list | None = None,
                 d = int(row[f"{a}|{b}"] or 0)
                 rows.append((f"{a},{b}", 2, d, n, d / n, False, d == n))
 
-    out = df.sparkSession.createDataFrame(
-        rows,
+    out = local_frame(
+        df.sparkSession, rows,
         "key string, size int, n_distinct bigint, n_rows bigint, "
         "distinct_ratio double, has_nulls boolean, is_key boolean",
     )

@@ -23,6 +23,7 @@ from deepchecks_spark.core.checks import (
     get_condition_passed_message,
 )
 from deepchecks_spark.core.result import ConditionCategory, ConditionResult
+from deepchecks_spark.io import local_frame
 from deepchecks_spark.ml.gbm import GradientBoostingBinary
 from deepchecks_spark.ml.metrics import roc_auc
 from deepchecks_spark.ml.outliers import gower_matrix, loop_scores
@@ -440,7 +441,7 @@ class FeatureFeatureCorrelation(SingleDatasetCheck):
                 out.append((float(r[col]), before + (cnt + 1) / 2.0))
                 before += cnt
             return F.broadcast(
-                spark.createDataFrame(out, f"{col} double, {rank_name} double")
+                local_frame(spark, out, f"{col} double, {rank_name} double")
             )
         n_b = cls.RANK_BUCKETS
         qs = [i / n_b for i in range(1, n_b)]
@@ -459,7 +460,7 @@ class FeatureFeatureCorrelation(SingleDatasetCheck):
         for r in totals:
             offsets.append((float(r["__bkt"]), float(acc)))
             acc += r["t"]
-        off_df = F.broadcast(spark.createDataFrame(offsets, "__bkt double, __off double"))
+        off_df = F.broadcast(local_frame(spark, offsets, "__bkt double, __off double"))
         return (
             cum.join(off_df, on="__bkt")
             .select(

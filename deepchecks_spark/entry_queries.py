@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deepchecks_spark.dataset import Dataset
+from deepchecks_spark.io import local_frame
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -46,7 +47,7 @@ def q_percent_of_nulls_lineitem(spark, sf_dir):
     ds = Dataset(_t(spark, sf_dir, "lineitem"), infer_categorical=False)
     value, _ = PercentOfNulls().compute(_ctx(ds), "train")
     rows = [(c, round(float(v), 6)) for c, v in sorted(value.items())]
-    return spark.createDataFrame(rows, "column string, percent_nulls double")
+    return local_frame(spark, rows, "column string, percent_nulls double")
 
 
 def o_percent_of_nulls_lineitem():
@@ -64,7 +65,7 @@ def q_is_single_value_orders(spark, sf_dir):
     ds = Dataset(_t(spark, sf_dir, "orders"), infer_categorical=False)
     value, _ = IsSingleValue().compute(_ctx(ds), "train")
     rows = [(c, int(v)) for c, v in sorted(value.items())]
-    return spark.createDataFrame(rows, "column string, n_unique long")
+    return local_frame(spark, rows, "column string, n_unique long")
 
 
 def o_is_single_value_orders():
@@ -81,7 +82,7 @@ def q_class_imbalance_embeddings(spark, sf_dir):
     ds = Dataset(_t(spark, sf_dir, "embeddings"), label="label", infer_categorical=False)
     value, _ = ClassImbalance().compute(_ctx(ds), "train")
     rows = [(int(k), float(v)) for k, v in value.items()]
-    return spark.createDataFrame(rows, "label long, ratio double")
+    return local_frame(spark, rows, "label long, ratio double")
 
 
 def o_class_imbalance_embeddings():
@@ -98,7 +99,7 @@ def q_data_duplicates_documents(spark, sf_dir):
 
     ds = Dataset(_t(spark, sf_dir, "documents"), infer_categorical=False)
     value, _ = DataDuplicates(columns=["lang", "source"]).compute(_ctx(ds), "train")
-    return spark.createDataFrame([(round(float(value), 6),)], "percent_duplicates double")
+    return local_frame(spark, [(round(float(value), 6),)], "percent_duplicates double")
 
 
 def o_data_duplicates_documents():
@@ -114,7 +115,7 @@ def q_special_characters_documents(spark, sf_dir):
     ds = Dataset(_t(spark, sf_dir, "documents"), infer_categorical=False)
     value, _ = SpecialCharacters(columns=["text", "lang", "source"]).compute(_ctx(ds), "train")
     rows = [(c, round(float(v), 6)) for c, v in sorted(value.items())]
-    return spark.createDataFrame(rows, "column string, special_ratio double")
+    return local_frame(spark, rows, "column string, special_ratio double")
 
 
 def o_special_characters_documents():
@@ -134,7 +135,7 @@ def q_text_length_quantiles_documents(spark, sf_dir):
         F.percentile(F.length("text"), qs).alias("q")
     ).first()["q"]
     rows = [(f"p{int(q * 100)}", round(float(v), 6)) for q, v in zip(qs, row)]
-    return spark.createDataFrame(rows, "quantile string, length double")
+    return local_frame(spark, rows, "quantile string, length double")
 
 
 def o_text_length_quantiles_documents():
@@ -160,7 +161,7 @@ def q_psi_orders_priority(spark, sf_dir):
     h1 = categorical_histograms(train, ["o_orderpriority"])["o_orderpriority"]
     h2 = categorical_histograms(test, ["o_orderpriority"])["o_orderpriority"]
     score = psi_from_counts(h1, h2, min_category_size_ratio=0.01)
-    return spark.createDataFrame([(round(float(score), 6),)], "psi double")
+    return local_frame(spark, [(round(float(score), 6),)], "psi double")
 
 
 def o_psi_orders_priority():
@@ -191,7 +192,7 @@ def q_cramers_v_events_type(spark, sf_dir):
     h1 = categorical_histograms(train, ["event_type"])["event_type"]
     h2 = categorical_histograms(test, ["event_type"])["event_type"]
     score = cramers_v_from_counts(h1, h2, min_category_size_ratio=0.01)
-    return spark.createDataFrame([(round(float(score), 6),)], "cramers_v double")
+    return local_frame(spark, [(round(float(score), 6),)], "cramers_v double")
 
 
 def _cramers_sql(table: str, col: str, keycol: str, out_name: str = "cramers_v",
@@ -263,7 +264,7 @@ def q_ks_lineitem_price(spark, sf_dir):
     v1, c1 = numeric_histograms(train, ["l_extendedprice"], "exact")["l_extendedprice"]
     v2, c2 = numeric_histograms(test, ["l_extendedprice"], "exact")["l_extendedprice"]
     score = ks_from_hist(v1, c1, v2, c2)
-    return spark.createDataFrame([(round(float(score), 6),)], "ks double")
+    return local_frame(spark, [(round(float(score), 6),)], "ks double")
 
 
 def o_ks_lineitem_price():
@@ -280,7 +281,7 @@ def q_emd_events_value(spark, sf_dir):
     v1, c1 = numeric_histograms(train, ["value"], "exact")["value"]
     v2, c2 = numeric_histograms(test, ["value"], "exact")["value"]
     score = emd_from_hist(v1, c1, v2, c2, margin_quantile_filter=0.0)
-    return spark.createDataFrame([(round(float(score), 6),)], "emd double")
+    return local_frame(spark, [(round(float(score), 6),)], "emd double")
 
 
 def o_emd_events_value():
@@ -326,7 +327,7 @@ def q_new_label_embeddings(spark, sf_dir):
     df = _t(spark, sf_dir, "embeddings")
     train, test = _split_ds(df, "vec_id", label="label")
     value, _ = NewLabelTrainTest().compute(Context(train=train, test=test))
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(int(value["n_new_labels_samples"]), int(value["n_samples"]))],
         "n_new_labels_samples long, n_samples long",
     )
@@ -349,7 +350,7 @@ def q_date_leakage_overlap_orders(spark, sf_dir):
     df = _t(spark, sf_dir, "orders")
     train, test = _split_ds(df, "o_orderkey", datetime_name="o_orderdate")
     value, _ = DateTrainTestLeakageOverlap().compute(Context(train=train, test=test))
-    return spark.createDataFrame([(round(float(value), 6),)], "overlap_ratio double")
+    return local_frame(spark, [(round(float(value), 6),)], "overlap_ratio double")
 
 
 def o_date_leakage_overlap_orders():
@@ -367,7 +368,7 @@ def q_date_leakage_duplicates_orders(spark, sf_dir):
     df = _t(spark, sf_dir, "orders")
     train, test = _split_ds(df, "o_orderkey", datetime_name="o_orderdate")
     value, _ = DateTrainTestLeakageDuplicates().compute(Context(train=train, test=test))
-    return spark.createDataFrame([(round(float(value), 6),)], "dup_date_ratio double")
+    return local_frame(spark, [(round(float(value), 6),)], "dup_date_ratio double")
 
 
 def o_date_leakage_duplicates_orders():
@@ -389,7 +390,7 @@ def q_index_leakage_events(spark, sf_dir):
     train = Dataset(df.filter(F.col("event_id") < t_train), index_name="event_id", infer_categorical=False)
     test = Dataset(df.filter(F.col("event_id") >= t_test), index_name="event_id", infer_categorical=False)
     value, _ = IndexTrainTestLeakage().compute(Context(train=train, test=test))
-    return spark.createDataFrame([(round(float(value), 6),)], "leak_ratio double")
+    return local_frame(spark, [(round(float(value), 6),)], "leak_ratio double")
 
 
 def o_index_leakage_events():
@@ -413,7 +414,7 @@ def q_samples_mix_customer(spark, sf_dir):
     test = Dataset(df.filter(F.col("c_custkey") % 2 == 1), features=["c_nationkey", "c_mktsegment"],
                    infer_categorical=False)
     value, _ = TrainTestSamplesMix().compute(Context(train=train, test=test))
-    return spark.createDataFrame([(round(float(value["ratio"]), 6),)], "mix_ratio double")
+    return local_frame(spark, [(round(float(value["ratio"]), 6),)], "mix_ratio double")
 
 
 def o_samples_mix_customer():
@@ -433,8 +434,8 @@ def q_datasets_size_orders(spark, sf_dir):
     df = _t(spark, sf_dir, "orders")
     train, test = _split_ds(df, "o_orderkey")
     value, _ = DatasetsSizeComparison().compute(Context(train=train, test=test))
-    return spark.createDataFrame([(int(value["Train"]), int(value["Test"]))],
-                                 "train_size long, test_size long")
+    return local_frame(spark, [(int(value["Train"]), int(value["Test"]))],
+                       "train_size long, test_size long")
 
 
 def o_datasets_size_orders():
@@ -458,7 +459,7 @@ def q_new_category_orders(spark, sf_dir):
         (c, int(info["n_new_categories"]), round(float(info["ratio_of_new_categories"]), 6))
         for c, info in sorted(value.items())
     ]
-    return spark.createDataFrame(rows, "column string, n_new_categories long, new_ratio double")
+    return local_frame(spark, rows, "column string, n_new_categories long, new_ratio double")
 
 
 def o_new_category_orders():
@@ -487,7 +488,7 @@ def q_exact_dedup_documents(spark, sf_dir):
 
     df = _t(spark, sf_dir, "documents")
     stats = exact_duplicate_stats(df, ["lang", "source"])
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(int(stats["n_dup_groups"]), int(stats["n_dup_rows"]), round(float(stats["dup_ratio"]), 6))],
         "n_dup_groups long, n_dup_rows long, dup_ratio double",
     )
@@ -804,7 +805,7 @@ def q_spearman_lineitem(spark, sf_dir):
 
     df = _t(spark, sf_dir, "lineitem")
     r = FeatureFeatureCorrelation._spearman(df, "l_quantity", "l_extendedprice")
-    return spark.createDataFrame([(round(float(r), 6),)], "spearman double")
+    return local_frame(spark, [(round(float(r), 6),)], "spearman double")
 
 
 def o_spearman_lineitem():
@@ -823,7 +824,7 @@ def q_theil_u_orders(spark, sf_dir):
 
     df = _t(spark, sf_dir, "orders")
     r = FeatureFeatureCorrelation._symmetric_theil_u(df, "o_orderpriority", "o_orderstatus")
-    return spark.createDataFrame([(round(float(r), 6),)], "theil_u double")
+    return local_frame(spark, [(round(float(r), 6),)], "theil_u double")
 
 
 def o_theil_u_orders():
@@ -855,7 +856,7 @@ def q_correlation_ratio_orders(spark, sf_dir):
 
     df = _t(spark, sf_dir, "orders")
     r = FeatureFeatureCorrelation._correlation_ratio(df, "o_orderpriority", "o_totalprice")
-    return spark.createDataFrame([(round(float(r), 6),)], "eta double")
+    return local_frame(spark, [(round(float(r), 6),)], "eta double")
 
 
 def o_correlation_ratio_orders():
@@ -907,7 +908,7 @@ def q_pps_feature_label_events(spark, sf_dir):
     ds = Dataset(df, label="event_type", infer_categorical=False)
     value, _ = FeatureLabelCorrelation().compute(Context(train=ds), "train")
     rows = [(c, round(float(v), 6)) for c, v in sorted(value.items())]
-    return spark.createDataFrame(rows, "feature string, pps double")
+    return local_frame(spark, rows, "feature string, pps double")
 
 
 def o_pps_feature_label_events():
@@ -947,7 +948,7 @@ def q_outlier_detection_events(spark, sf_dir):
     value, violations = OutlierSampleDetection(n_samples=10_000_000).compute(
         Context(train=ds), "train")
     top = violations.orderBy(F.desc("outlier_probability")).limit(1).first()
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(int(value["n_samples"]), float(top["x"]))],
         "n_samples long, top_outlier_x double",
     )
@@ -979,7 +980,7 @@ def q_multivariate_drift_orders(spark, sf_dir):
     ctx = Context(train=mk(df.filter(F.col("o_orderkey") % 2 == 0)),
                   test=mk(df.filter(F.col("o_orderkey") % 2 == 1)))
     value, _ = MultivariateDrift().compute(ctx)
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(round(float(value["domain_classifier_auc"]), 4),
           round(float(value["domain_classifier_drift_score"]), 4))],
         "auc double, drift_score double",
@@ -1424,9 +1425,7 @@ def q_string_length_outliers_documents(spark, sf_dir):
         for o in info.get("outliers", []):
             rows.append((col, float(o["range"]["min"]), float(o["range"]["max"]), int(o["n_samples"])))
     schema = "column string, range_min double, range_max double, n_samples long"
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def o_string_length_outliers_documents():
@@ -1502,7 +1501,7 @@ def q_mixed_nulls_documents(spark, sf_dir):
     for col, reprs in sorted(value["columns"].items()):
         for key, info in sorted(reprs.items()):
             rows.append((col, key, int(info["count"]), round(float(info["percent"]), 6)))
-    return spark.createDataFrame(rows, "column string, null_repr string, count long, percent double")
+    return local_frame(spark, rows, "column string, null_repr string, count long, percent double")
 
 
 def o_mixed_nulls_documents():
@@ -1535,7 +1534,7 @@ def q_mixed_data_types_orders(spark, sf_dir):
     value, _ = MixedDataTypes().compute(_ctx(ds), "train")
     rows = [(c, round(float(info["strings"]), 6), round(float(info["numbers"]), 6))
             for c, info in sorted(value.items()) if info]
-    return spark.createDataFrame(rows, "column string, strings_ratio double, numbers_ratio double")
+    return local_frame(spark, rows, "column string, strings_ratio double, numbers_ratio double")
 
 
 def o_mixed_data_types_orders():
@@ -1559,7 +1558,7 @@ def q_conflicting_labels_customer(spark, sf_dir):
         "CASE WHEN c_custkey % 7 = 0 THEN 1 ELSE 0 END AS label")
     ds = Dataset(df, label="label", infer_categorical=False)
     value, _ = ConflictingLabels().compute(_ctx(ds), "train")
-    return spark.createDataFrame([(round(float(value["percent"]), 6),)], "percent double")
+    return local_frame(spark, [(round(float(value["percent"]), 6),)], "percent double")
 
 
 def o_conflicting_labels_customer():
@@ -1589,7 +1588,7 @@ def q_string_mismatch_documents(spark, sf_dir):
             for info in variants_list:
                 rows.append((col, base, info["variant"], int(info["count"]),
                              round(float(info["percent"]), 6)))
-    return spark.createDataFrame(
+    return local_frame(spark, 
         rows, "column string, base string, variant string, count long, percent double")
 
 
@@ -1624,7 +1623,7 @@ def q_string_mismatch_comparison_documents(spark, sf_dir):
         for base, info in sorted(bases.items()):
             for variant in sorted(info["variants_only_in_test"]):
                 rows.append((col, base, variant))
-    return spark.createDataFrame(rows, "column string, base string, variant string")
+    return local_frame(spark, rows, "column string, base string, variant string")
 
 
 def o_string_mismatch_comparison_documents():
@@ -1653,7 +1652,7 @@ def q_feature_drift_orders(spark, sf_dir):
     value, _ = FeatureDrift().compute(ctx)
     rows = [(c, info["Method"], round(float(info["Drift score"]), 6))
             for c, info in sorted(value.items())]
-    return spark.createDataFrame(rows, "column string, method string, drift_score double")
+    return local_frame(spark, rows, "column string, method string, drift_score double")
 
 
 def o_feature_drift_orders():
@@ -1671,8 +1670,8 @@ def q_label_drift_embeddings(spark, sf_dir):
     df = _t(spark, sf_dir, "embeddings")
     train, test = _split_ds(df, "vec_id", label="label")
     value, _ = LabelDrift().compute(Context(train=train, test=test))
-    return spark.createDataFrame([(value["Method"], round(float(value["Drift score"]), 6))],
-                                 "method string, drift_score double")
+    return local_frame(spark, [(value["Method"], round(float(value["Drift score"]), 6))],
+                       "method string, drift_score double")
 
 
 def o_label_drift_embeddings():
@@ -1691,7 +1690,7 @@ def q_identifier_label_correlation_events(spark, sf_dir):
     ds = Dataset(df, label="event_type", index_name="ident", infer_categorical=False)
     value, _ = IdentifierLabelCorrelation().compute(_ctx(ds), "train")
     rows = [(c, round(float(v), 6)) for c, v in sorted(value.items())]
-    return spark.createDataFrame(rows, "identifier string, pps double")
+    return local_frame(spark, rows, "identifier string, pps double")
 
 
 def o_identifier_label_correlation_events():
@@ -1726,7 +1725,7 @@ def q_feature_label_corr_change_events(spark, sf_dir):
     rows = [(f, round(float(value["train"][f]), 6), round(float(value["test"][f]), 6),
              round(float(value["train-test difference"][f]), 6))
             for f in sorted(value["train"])]
-    return spark.createDataFrame(
+    return local_frame(spark, 
         rows, "feature string, train_pps double, test_pps double, pps_diff double")
 
 
@@ -1757,7 +1756,7 @@ def q_columns_info_orders(spark, sf_dir):
                  cat_features=["o_orderpriority"], infer_categorical=False)
     value, _ = ColumnsInfo().compute(_ctx(ds), "train")
     rows = sorted(value.items())
-    return spark.createDataFrame(rows, "column string, role string")
+    return local_frame(spark, rows, "column string, role string")
 
 
 def o_columns_info_orders():
@@ -1797,7 +1796,7 @@ def q_minhash_recall_documents(spark, sf_dir):
     n_true = truth.count()
     n_found_true = found.join(truth.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi").count()
     recall = n_found_true / n_true if n_true else 1.0
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(int(n_true), int(n_found_true), round(float(recall), 6))],
         "n_true long, n_found long, recall double",
     )
@@ -1898,7 +1897,7 @@ def q_streaming_psi_events(spark, sf_dir):
         (start.strftime("%Y-%m-%d"), round(float(v["psi"]), 6), int(v["n"]))
         for start, v in sorted(mon.scores.items())
     ]
-    return spark.createDataFrame(rows, "window_start string, psi double, n long")
+    return local_frame(spark, rows, "window_start string, psi double, n long")
 
 
 def o_streaming_psi_events():
@@ -1990,7 +1989,7 @@ def q_referential_integrity_orders(spark, sf_dir):
     check = ReferentialIntegrity(column="o_custkey", dim_column="c_custkey")
     value, _ = check.compute(
         Context(train=ds_fact, test=ds_dim, require_same_schema=False))
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(int(value["n_rows"]), int(value["n_orphans"]),
           round(float(value["orphan_ratio"]), 6),
           int(value["sample_orphans"][0]) if value["sample_orphans"] else -1)],
@@ -2027,7 +2026,7 @@ def q_performance_embeddings(spark, sf_dir):
     )
     ds = Dataset(df, label="label", infer_categorical=False)
     value, _ = SingleDatasetPerformance("pred").compute(_ctx(ds), "train")
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(round(float(value["accuracy"]), 6), round(float(value["f1_weighted"]), 6))],
         "accuracy double, f1_weighted double",
     )
@@ -2086,7 +2085,7 @@ def q_streaming_dedup_events(spark, sf_dir):
         (start.strftime("%Y-%m-%d"), v["n"], v["n_distinct"], v["n_dup"])
         for start, v in sorted(mon.counts.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(spark, 
         rows, "window_start string, n_rows long, n_distinct long, n_dup long")
 
 
@@ -2136,7 +2135,7 @@ def q_streaming_constraints_events(spark, sf_dir):
          v["violations"]["in_range[0.0, 50.0](value)"])
         for start, v in sorted(mon.counts.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(spark, 
         rows, "window_start string, n_rows long, n_null_props long, "
               "n_value_oob long")
 
@@ -2212,7 +2211,7 @@ def q_streaming_newcat_events(spark, sf_dir):
         (start.strftime("%Y-%m-%d"), v["event_type"]["n_new"], v["event_type"]["n_rows"])
         for start, v in sorted(mon.counts.items())
     ]
-    return spark.createDataFrame(rows, "window_start string, n_new long, n_rows long")
+    return local_frame(spark, rows, "window_start string, n_new long, n_rows long")
 
 
 def o_streaming_newcat_events():
@@ -2263,7 +2262,7 @@ def q_streaming_performance_events(spark, sf_dir):
          round(float(v["macro_f1"]), 6), int(v["n"]))
         for start, v in sorted(mon.scores.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(spark, 
         rows, "window_start string, accuracy double, macro_f1 double, n long")
 
 
@@ -2359,7 +2358,7 @@ def q_confusion_matrix_embeddings(spark, sf_dir):
     classes, matrix = value["classes"], value["matrix"]
     rows = [(int(classes[i]), int(classes[j]), int(matrix[i][j]))
             for i in range(len(classes)) for j in range(len(classes))]
-    return spark.createDataFrame(rows, "y int, p int, n long")
+    return local_frame(spark, rows, "y int, p int, n long")
 
 
 def o_confusion_matrix_embeddings():
@@ -2397,7 +2396,7 @@ def q_train_test_performance_embeddings(spark, sf_dir):
     value, _ = check.compute(Context(train=train, test=test))
     rows = [(r["Dataset"], r["Metric"], round(float(r["Value"]), 6),
              int(r["Number of samples"])) for r in value]
-    return spark.createDataFrame(rows, "dataset string, metric string, value double, n long")
+    return local_frame(spark, rows, "dataset string, metric string, value double, n long")
 
 
 def o_train_test_performance_embeddings():
@@ -2447,7 +2446,7 @@ def q_regression_performance_lineitem(spark, sf_dir):
     ds = Dataset(df, label="y", infer_categorical=False)
     check = SingleDatasetPerformance("pred", scorers=["mae", "mse", "rmse", "r2"])
     value, _ = check.compute(_ctx(ds), "train")
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(round(value["mae"], 6), round(value["mse"], 6),
           round(value["rmse"], 6), round(value["r2"], 6))],
         "mae double, mse double, rmse double, r2 double",
@@ -2546,7 +2545,7 @@ def q_lsh_autotune_recall_embeddings(spark, sf_dir):
     n_true = truth.count()
     n_hit = found.join(truth, ["id_a", "id_b"], "left_semi").count()
     recall = n_hit / n_true if n_true else 1.0
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(int(n_true), bool(recall >= 0.95), bool(params["expected_recall"] >= 0.95))],
         "n_true long, recall_ge_target boolean, model_feasible boolean",
     )
@@ -2579,7 +2578,7 @@ def q_roc_auc_embeddings(spark, sf_dir):
     )
     ds = Dataset(df, label="y", infer_categorical=False)
     value, _ = RocReport({1: "p"}).compute(_ctx(ds), "train")
-    return spark.createDataFrame([(round(float(value[1]), 6),)], "auc double")
+    return local_frame(spark, [(round(float(value[1]), 6),)], "auc double")
 
 
 def o_roc_auc_embeddings():
@@ -2616,7 +2615,7 @@ def q_calibration_embeddings(spark, sf_dir):
     )
     ds = Dataset(df, label="y", infer_categorical=False)
     value, _ = CalibrationScore({0: "p0", 1: "p1"}).compute(_ctx(ds), "train")
-    return spark.createDataFrame([(round(float(value[0]), 6),)], "brier double")
+    return local_frame(spark, [(round(float(value[0]), 6),)], "brier double")
 
 
 def o_calibration_embeddings():
@@ -2643,7 +2642,7 @@ def q_regression_error_dist_lineitem(spark, sf_dir):
     )
     ds = Dataset(df, label="y", infer_categorical=False)
     value, _ = RegressionErrorDistribution("pred").compute(_ctx(ds), "train")
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(round(value["Mean Prediction Error"], 6),
           round(value["Median Prediction Error"], 6),
           round(value["Kurtosis Value"], 6),
@@ -2694,7 +2693,7 @@ def q_simple_model_comparison_embeddings(spark, sf_dir):
         gain = get_gain(ms["Simple"], ms["Origin"], 1.0, check.max_gain)
         rows.append((int(c), round(ms["Origin"], 6), round(ms["Simple"], 6),
                      round(gain, 6)))
-    return spark.createDataFrame(
+    return local_frame(spark, 
         rows, "class int, f1_origin double, f1_simple double, gain double")
 
 
@@ -2751,7 +2750,7 @@ def q_simple_model_comparison_strategies_embeddings(spark, sf_dir):
             .compute(Context(train=train, test=test))
         for c, ms in value["scores"]["F1"].items():
             rows.append((int(c), strategy, round(ms["Simple"], 6)))
-    return spark.createDataFrame(
+    return local_frame(spark, 
         rows, "class int, strategy string, f1_simple double")
 
 
@@ -2804,7 +2803,7 @@ def q_performance_bias_orders(spark, sf_dir):
     rows = [(r["o_orderpriority"], round(float(r["_score"]), 6),
              round(float(r["_baseline"]), 6), int(r["_count"]))
             for r in value["scores_df"]]
-    return spark.createDataFrame(
+    return local_frame(spark, 
         rows, "subgroup string, score double, baseline double, n long")
 
 
@@ -2844,7 +2843,7 @@ def q_multi_model_embeddings(spark, sf_dir):
     rows = [(r["Model"], int(r["Class"]), round(float(r["Value"]), 6),
              int(r["Number of samples"]))
             for r in value if r["Metric"] == "F1"]
-    return spark.createDataFrame(rows, "model string, class int, f1 double, n long")
+    return local_frame(spark, rows, "model string, class int, f1 double, n long")
 
 
 def o_multi_model_embeddings():
@@ -2898,7 +2897,7 @@ def q_weak_segments_orders(spark, sf_dir):
         segment_minimum_size_ratio=0.03)
     value, _ = check.compute(_ctx(ds), "train")
     worst = value["weak_segments_list"][0]
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(worst["Feature1 Range"], worst["Feature2 Range"],
           round(float(worst["Score"]), 6), int(worst["n_samples"]),
           round(float(value["avg_score"]), 6))],
@@ -3899,7 +3898,7 @@ def q_streaming_neardup_documents(spark, sf_dir):
     n_rows = sum(v["n_rows"] for v in mon.counts.values())
     n_flagged = sum(v["n_flagged"] for v in mon.counts.values())
     n_fresh = sum(v["n_fresh"] for v in mon.counts.values())
-    return spark.createDataFrame(
+    return local_frame(spark, 
         [(n_rows, n_flagged, n_fresh)],
         "n_rows long, n_flagged long, n_fresh long")
 
@@ -4517,7 +4516,7 @@ def q_corpus_drift_documents(spark, sf_dir):
         ("source", "cramers_v", round(float(cramers_v_from_counts(
             ha["source"], hb["source"], min_category_size_ratio=0.0)), 6)),
     ]
-    return spark.createDataFrame(rows, "column string, metric string, score double")
+    return local_frame(spark, rows, "column string, metric string, score double")
 
 
 def o_corpus_drift_documents():
@@ -6209,7 +6208,7 @@ def q_ece_embeddings(spark, sf_dir):
         {0: "p0", 1: "p1"}, n_bins=8).compute(_ctx(ds), "train")
     rows = [(b["bin"], b["n_samples"], float(b["avg_confidence"]),
              float(b["accuracy"]), float(value["ece"])) for b in value["bins"]]
-    out = spark.createDataFrame(
+    out = local_frame(spark, 
         rows, "bin int, n bigint, avg_confidence double, accuracy double, "
               "ece double")
     # SQL-side HALF_UP rounding (Python round() is half-even — a bin
@@ -6279,7 +6278,7 @@ def q_label_noise_embeddings(spark, sf_dir):
     n_conf = value["n_confident"]
     rows = [(int(g), int(p), int(n), n / n_conf, float(value["noise_rate"]))
             for (g, p), n in sorted(value["confident_joint"].items())]
-    out = spark.createDataFrame(
+    out = local_frame(spark, 
         rows, "given_label int, predicted_label int, n bigint, frac double, "
               "noise_rate double")
     return out.select(

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from deepchecks_spark.core.parallel import spread_input
+from deepchecks_spark.io import local_frame
 
 
 def exact_duplicate_stats(df: DataFrame, cols: list) -> dict:
@@ -915,7 +916,7 @@ def _union_find_components(edges: DataFrame, rows: list) -> DataFrame:
         StructField("id", id_type, True),
         StructField("component", id_type, True),
     ])
-    return edges.sparkSession.createDataFrame(out, schema)
+    return local_frame(edges.sparkSession, out, schema)
 
 
 def deduplicate_by_pairs(df: DataFrame, pairs: DataFrame, id_col: str,

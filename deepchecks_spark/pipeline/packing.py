@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from deepchecks_spark.io import local_frame
+
 # above this many range partitions the prefix offsets ship as a
 # broadcast-joined DataFrame instead of a create_map literal — a
 # 100k-partition corpus would otherwise inline 100k map entries into
@@ -77,8 +79,8 @@ def _with_start_offsets(d: DataFrame, order_cols: list[str]) -> DataFrame:
         if len(prefix) > PREFIX_LITERAL_MAX:
             # plan stays O(1) in partition count; the prefix table is a
             # broadcast hash join on __pid
-            pdf = d.sparkSession.createDataFrame(
-                [(pid, off) for pid, off in sorted(prefix.items())],
+            pdf = local_frame(
+                d.sparkSession, [(pid, off) for pid, off in sorted(prefix.items())],
                 "__pid int, __prefix long")
             d = d.join(F.broadcast(pdf), "__pid", "left")
             start = local + F.coalesce(F.col("__prefix"), F.lit(0))

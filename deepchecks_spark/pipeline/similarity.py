@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from deepchecks_spark.core.parallel import spread_input
 from deepchecks_spark.functions.arrays import double_array_lit
+from deepchecks_spark.io import local_frame
 
 
 def _as_double(col):
@@ -583,8 +584,8 @@ def ann_recall_curve(queries: DataFrame, corpus: DataFrame, dim: int,
                          round(n_hit / n_truth, 6) if n_truth else None))
     finally:
         truth.unpersist()
-    return queries.sparkSession.createDataFrame(
-        rows, "nprobe int, n_truth long, n_hit long, recall double")
+    return local_frame(
+        queries.sparkSession, rows, "nprobe int, n_truth long, n_hit long, recall double")
 
 
 def semantic_dedup(df: DataFrame, dim: int, threshold: float = 0.95,

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from deepchecks_spark.core.parallel import spread_input
+from deepchecks_spark.io import local_frame
 
 STOPWORDS = ("a", "the", "of", "and", "to", "in", "is", "that")
 
@@ -353,8 +354,8 @@ def filter_funnel(df: DataFrame, text_col: str, **gopher_kwargs) -> DataFrame:
     out = [("input", 0, int(row["n_input"]))]
     out += [(name, int(row[f"f_{name}"]), int(row[f"s_{name}"]))
             for name in GOPHER_RULE_NAMES]
-    return df.sparkSession.createDataFrame(
-        out, "stage string, n_fail long, n_surviving long")
+    return local_frame(
+        df.sparkSession, out, "stage string, n_fail long, n_surviving long")
 
 
 def unigram_logprob(df: DataFrame, id_col: str, text_col: str,
@@ -636,8 +637,8 @@ def corpus_datacard(df: DataFrame, text_col: str,
         ent = -sum((r["n"] / total) * math.log2(r["n"] / total)
                    for r in langs if r["n"])
         rows += [("n_langs", float(len(langs))), ("lang_entropy_bits", ent)]
-    out = df.sparkSession.createDataFrame(
-        [(m, round(v, 9)) for m, v in rows], "metric string, value double")
+    out = local_frame(
+        df.sparkSession, [(m, round(v, 9)) for m, v in rows], "metric string, value double")
     return out.orderBy("metric")
 
 

@@ -32,6 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepchecks_spark.functions.columns import quote_ident
+from deepchecks_spark.io import local_frame
+
 # C4 keeps lines that end in a terminal punctuation mark (the closing
 # quote counts, matching the paper's "terminal punctuation" footnote)
 C4_TERMINAL = (".", "!", "?", '"')
@@ -365,9 +368,9 @@ def sample_to_mixture(
     whole-stage codegen, no Python. At 100 TB the cost is the scan."""
     cols = df.columns
     if len(weights) > WEIGHTS_LITERAL_MAX:
-        wdf = df.sparkSession.createDataFrame(
-            [(k, float(v)) for k, v in sorted(weights.items())],
-            f"`{domain_col}` string, __wt double")
+        wdf = local_frame(
+            df.sparkSession, [(k, float(v)) for k, v in sorted(weights.items())],
+            f"{quote_ident(domain_col)} string, __wt double")
         # re-select to keep the caller's column order (the equi-join
         # moves the join key first)
         df = df.join(F.broadcast(wdf), domain_col, "left").select(*cols, "__wt")
@@ -809,8 +812,8 @@ def filter_by_domain_blocklist(df: DataFrame, url_col: str,
             from pyspark.sql import SparkSession
 
             spark = SparkSession.getActiveSession()
-        blocked = spark.createDataFrame(
-            [(b,) for b in blocked_sorted], "domain string")
+        blocked = local_frame(
+            spark, [(b,) for b in blocked_sorted], "domain string")
     bl = F.broadcast(blocked.toDF("__bl_domain").dropDuplicates(["__bl_domain"]))
     orig_cols = df.columns
     out = df

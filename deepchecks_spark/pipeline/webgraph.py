@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from deepchecks_spark.io import local_frame
+
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              n_iterations: int = 10, damping: float = 0.85) -> DataFrame:
@@ -239,8 +241,8 @@ def link_graph_summary(edges: DataFrame, src: str = "src",
         max_out = out_deg.agg(F.coalesce(F.max("d"), F.lit(0))).first()[0]
         max_in = in_deg.agg(F.coalesce(F.max("d"), F.lit(0))).first()[0]
         spark = e.sparkSession
-        return spark.createDataFrame(
-            [(
+        return local_frame(
+            spark, [(
                 int(n_nodes), int(n_edges), int(n_dangling), int(n_self),
                 float(n_recip) / n_directed if n_directed else 0.0,
                 float(n_edges) / n_nodes if n_nodes else 0.0,

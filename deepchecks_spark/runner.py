@@ -45,7 +45,7 @@ from deepchecks_spark.functions.strings import (
     is_null_string_expr,
     is_special_only_expr,
 )
-from deepchecks_spark.io import read_table, snapshot_fingerprint, write_table
+from deepchecks_spark.io import local_frame, read_table, snapshot_fingerprint, write_table
 from deepchecks_spark.stats import compute_column_stats_by_partition
 
 VIOLATIONS_SCHEMA = (
@@ -496,7 +496,7 @@ def violation_rows(df: DataFrame, string_cols: list,
     """
     spark = df.sparkSession
     if not string_cols:
-        return spark.createDataFrame([], VIOLATIONS_SCHEMA)
+        return local_frame(spark, [], VIOLATIONS_SCHEMA)
     n_rows = df.count()
 
     # selective filter FIRST, then the (cheap) per-partition aggregation
@@ -719,7 +719,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
                 rows.append((r.header, "<computed>", "PASS", "check computed"))
             for c in r.conditions_results:
                 rows.append((r.header, c.name, c.category.value, c.details))
-        out = spark.createDataFrame(rows, "check string, condition string, category string, details string")
+        out = local_frame(spark, rows, "check string, condition string, category string, details string")
         write_table(out, os.path.join(output_dir, "verdicts"))
 
     def _partition_verdicts():
@@ -762,8 +762,8 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
 
             sections.append(_ref_sections)
         rows = [r for part in run_jobs(sections) for r in part]
-        out = spark.createDataFrame(
-            rows, "partition_id int, check string, condition string, category string, details string"
+        out = local_frame(
+            spark, rows, "partition_id int, check string, condition string, category string, details string"
         )
         write_table(out, os.path.join(output_dir, "partition_verdicts"))
 
@@ -773,8 +773,8 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
 
     def _metrics():
         rows = metrics_rows(_per_part())
-        out = spark.createDataFrame(
-            rows, "partition_id int, column string, stat string, value_double double, value_string string"
+        out = local_frame(
+            spark, rows, "partition_id int, column string, stat string, value_double double, value_string string"
         )
         write_table(out, os.path.join(output_dir, "metrics"))
 
@@ -833,8 +833,8 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
             prior.filter(F.col("run_ts") == next_ts).take(1))
         if not already:
             rows = [(m, next_ts, v) for m, v in global_metric_rows(_per_part())]
-            new = spark.createDataFrame(
-                rows, "metric string, run_ts bigint, value double")
+            new = local_frame(
+                spark, rows, "metric string, run_ts bigint, value double")
             write_table(new, metrics_history, mode="append")
         rules = anomaly_rules or {"max_relative_change": 0.5, "z_threshold": 3.0}
         out = metric_anomalies(spark.read.parquet(metrics_history), **rules)

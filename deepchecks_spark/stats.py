@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deepchecks_spark.dataset import is_numeric_type
+from deepchecks_spark.functions.columns import quote_ident
 from deepchecks_spark.functions.strings import is_special_only_expr, numeric_like_expr
 
 
@@ -56,28 +57,30 @@ def _agg_exprs(df: DataFrame, columns: list,
     # runner stage-set). The regex-bearing special_only family stays a
     # Column expression (escaping a \p{L} class through the SQL string
     # parser is fragile); parsed trees for the rest are node-identical.
+    def stat(sql, name, c):
+        return F.expr(f"{sql} AS {quote_ident(f'{name}::{c}')}")
+
     exprs = [F.expr("count(1) AS __n_rows")]
     for c in columns:
         dt = df.schema[c].dataType
-        col = F.col(f"`{c}`")
-        exprs.append(F.expr(f"count(`{c}`) AS `n::{c}`"))
+        q = quote_ident(c)
+        col = F.col(q)
+        exprs.append(stat(f"count({q})", "n", c))
         if include_approx_distinct:
             # HLL over a raw binary/long-string payload rehashes the full
             # bytes per row; hashing to 8 bytes first gives the same
             # estimate ~20× cheaper on multi-KB payload columns
-            approx_in = f"xxhash64(`{c}`)" if isinstance(dt, T.BinaryType) else f"`{c}`"
-            exprs.append(F.expr(
-                f"approx_count_distinct({approx_in}) AS `approx_distinct::{c}`"))
+            approx_in = f"xxhash64({q})" if isinstance(dt, T.BinaryType) else q
+            exprs.append(stat(f"approx_count_distinct({approx_in})", "approx_distinct", c))
         if is_numeric_type(dt):
             exprs += [
-                F.expr(f"min(`{c}`) AS `min::{c}`"),
-                F.expr(f"max(`{c}`) AS `max::{c}`"),
-                F.expr(f"avg(`{c}`) AS `avg::{c}`"),
-                F.expr(f"stddev(`{c}`) AS `stddev::{c}`"),
+                stat(f"min({q})", "min", c),
+                stat(f"max({q})", "max", c),
+                stat(f"avg({q})", "avg", c),
+                stat(f"stddev({q})", "stddev", c),
             ]
             if isinstance(dt, (T.FloatType, T.DoubleType)):
-                exprs.append(F.expr(
-                    f"sum(CAST(isnan(`{c}`) AS BIGINT)) AS `nan_count::{c}`"))
+                exprs.append(stat(f"sum(CAST(isnan({q}) AS BIGINT))", "nan_count", c))
         elif isinstance(dt, T.StringType):
             exprs += [
                 # fraction of values parseable as a number (MixedDataTypes,
@@ -86,13 +89,12 @@ def _agg_exprs(df: DataFrame, columns: list,
                 # non-empty strings made entirely of special characters
                 # (SpecialCharacters, reference special_chars.py:131-139)
                 F.sum(is_special_only_expr(col).cast("long")).alias(f"special_only::{c}"),
-                F.expr(f"min(length(`{c}`)) AS `min_len::{c}`"),
-                F.expr(f"max(length(`{c}`)) AS `max_len::{c}`"),
-                F.expr(f"avg(length(`{c}`)) AS `avg_len::{c}`"),
+                stat(f"min(length({q}))", "min_len", c),
+                stat(f"max(length({q}))", "max_len", c),
+                stat(f"avg(length({q}))", "avg_len", c),
             ]
         elif isinstance(dt, (T.TimestampType, T.DateType)):
-            exprs += [F.expr(f"min(`{c}`) AS `min::{c}`"),
-                      F.expr(f"max(`{c}`) AS `max::{c}`")]
+            exprs += [stat(f"min({q})", "min", c), stat(f"max({q})", "max", c)]
     return exprs
 
 
@@ -106,7 +108,7 @@ def _distinct_exprs(df: DataFrame, columns: list) -> list:
     timestamp columns stay raw."""
     exprs = []
     for c in columns:
-        col = F.col(f"`{c}`")
+        col = F.col(quote_ident(c))
         dt = df.schema[c].dataType
         if isinstance(dt, (T.StringType, T.BinaryType)):
             hashed = F.when(

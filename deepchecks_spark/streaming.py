@@ -24,6 +24,7 @@ from deepchecks_spark.functions.strings import (
     is_special_only_expr,
     numeric_like_expr,
 )
+from deepchecks_spark.io import local_frame
 
 
 @dataclass
@@ -444,8 +445,8 @@ class StreamingNewCategoryMonitor:
             spark = stream_df.sparkSession
             ref_rows = [(c, str(v)) for c in columns
                         for v in self.reference_values.get(c, ())]
-            ref_df = spark.createDataFrame(
-                ref_rows, "column string, value string"
+            ref_df = local_frame(
+                spark, ref_rows, "column string, value string"
             ).distinct().withColumn("__known", F.lit(1))
             flagged = melted.join(F.broadcast(ref_df), ["column", "value"], "left") \
                 .withColumn("__is_new", F.col("__known").isNull())

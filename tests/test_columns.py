@@ -92,3 +92,69 @@ def test_no_hand_written_melt_outside_columns_module():
                 if re.search(r"\(\s*column\s*,\s*value\s*\)", src[m.start():m.start() + 400]):
                     offenders.append(f"{path}:{src.count(chr(10), 0, m.start()) + 1}")
     assert not offenders, offenders
+
+
+def test_stats_passes_for_backticked_column_name(spark):
+    from deepchecks_spark.stats import compute_column_stats, compute_column_stats_by_partition
+
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1.0, "a"), (2.0, None), (None, "b")], 2),
+        "`a``b` double, `s``t` string")
+    assert df.columns == ["a`b", "s`t"]
+    st = compute_column_stats(df).per_column
+    assert st["a`b"]["n"] == 2 and st["a`b"]["max"] == 2.0 and st["a`b"]["distinct"] == 2
+    assert st["s`t"]["n"] == 2 and st["s`t"]["max_len"] == 1 and st["s`t"]["distinct"] == 2
+    parts = compute_column_stats_by_partition(df)
+    assert sum(p.per_column["a`b"]["n"] for p in parts.values()) == 2
+    assert sum(p.per_column["s`t"]["null_count"] for p in parts.values()) == 1
+
+
+def test_stats_sql_for_plain_names_matches_raw_backticks(spark):
+    # plain names keep the SQL text the fused pass always emitted: the
+    # parsed plans are identical node for node
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from deepchecks_spark.functions.strings import is_special_only_expr, numeric_like_expr
+    from deepchecks_spark.stats import _agg_exprs, _distinct_exprs
+
+    df = spark.createDataFrame([(1, 1.5, "x", datetime.date(2024, 1, 1))],
+                               "i int, d double, s string, t date")
+
+    def raw(c, stats):
+        return [F.expr(f"{fn.format(f'`{c}`')} AS `{name}::{c}`") for name, fn in stats]
+
+    moments = [("min", "min({})"), ("max", "max({})"), ("avg", "avg({})"),
+               ("stddev", "stddev({})")]
+    hand = [F.expr("count(1) AS __n_rows")]
+    hand += raw("i", [("n", "count({})"), ("approx_distinct", "approx_count_distinct({})")]
+                + moments)
+    hand += raw("d", [("n", "count({})"), ("approx_distinct", "approx_count_distinct({})")]
+                + moments + [("nan_count", "sum(CAST(isnan({}) AS BIGINT))")])
+    hand += raw("s", [("n", "count({})"), ("approx_distinct", "approx_count_distinct({})")])
+    hand += [F.sum(numeric_like_expr(F.col("`s`")).cast("long")).alias("numeric_like::s"),
+             F.sum(is_special_only_expr(F.col("`s`")).cast("long")).alias("special_only::s")]
+    hand += raw("s", [("min_len", "min(length({}))"), ("max_len", "max(length({}))"),
+                      ("avg_len", "avg(length({}))")])
+    hand += raw("t", [("n", "count({})"), ("approx_distinct", "approx_count_distinct({})"),
+                      ("min", "min({})"), ("max", "max({})")])
+
+    def logical(exprs):
+        # alias expression ids are per-call counters, not plan shape
+        return re.sub(r"#\d+", "", df.agg(*exprs)._jdf.queryExecution().logical().toString())
+
+    assert logical(_agg_exprs(df, df.columns)) == logical(hand)
+    assert logical(_distinct_exprs(df, ["i"])) == logical(
+        [F.countDistinct(F.col("`i`")).alias("distinct::i")])
+
+
+@pytest.mark.parametrize("module", ["runner.py", "stats.py"])
+def test_no_raw_backtick_interpolation(module):
+    # identifiers in SQL text go through quote_ident; a raw `{name}`
+    # breaks on a name that holds a backtick
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "deepchecks_spark", module)
+    src = open(path, encoding="utf-8").read()
+    raw = [src.count("\n", 0, m.start()) + 1 for m in re.finditer(r"`\{", src)]
+    assert not raw, raw
