@@ -21,7 +21,7 @@ from deepchecks_spark.core.checks import (
     get_condition_passed_message,
 )
 from deepchecks_spark.core.result import ConditionCategory, ConditionResult
-from deepchecks_spark.functions.columns import melt
+from deepchecks_spark.functions.columns import melt, quote_ident
 from deepchecks_spark.functions.strings import (
     NULL_BASEFORMS,
     baseform_expr,
@@ -291,7 +291,7 @@ class MixedDataTypes(SingleDatasetCheck):
             if non_null == 0 or nums in (0, non_null):
                 value[c] = {}
                 continue
-            qc = F.col(f"`{c}`")
+            qc = F.col(quote_ident(c))
             num_cond = numeric_like_expr(qc)
             numbers_examples = [
                 r[0] for r in df.filter(qc.isNotNull() & num_cond).select(qc).limit(3).collect()
@@ -369,7 +369,7 @@ class SpecialCharacters(SingleDatasetCheck):
     def most_common_special_samples(self, ds, column: str, k: int | None = None) -> list:
         """Deterministic top-k offending samples (orderBy(count desc, value))."""
         k = k or self.n_most_common
-        qc = F.col(f"`{column}`")
+        qc = F.col(quote_ident(column))
         flagged = ds.df.filter(
             is_special_only_expr(qc)
         )
@@ -422,7 +422,7 @@ class ClassImbalance(SingleDatasetCheck):
         ds = ctx.data(kind)
         if ds.label_name is None:
             raise ValueError("ClassImbalance requires a dataset with a label")
-        label = F.col(f"`{ds.label_name}`")
+        label = F.col(quote_ident(ds.label_name))
         df = self._effective_df(ctx, kind)
         if self.ignore_nan:
             df = df.filter(label.isNotNull())
@@ -490,7 +490,7 @@ class DataDuplicates(SingleDatasetCheck):
         if not cols:
             raise ValueError("no columns to check")
         df = self._effective_df(ctx, kind)
-        grouped = df.groupBy(*[F.col(f"`{c}`") for c in cols]).count()
+        grouped = df.groupBy(*[F.col(quote_ident(c)) for c in cols]).count()
         agg = grouped.agg(
             F.count(F.lit(1)).alias("n_unique"), F.coalesce(F.sum("count"), F.lit(0)).alias("n_samples")
         ).first()
@@ -500,7 +500,7 @@ class DataDuplicates(SingleDatasetCheck):
         percent_duplicate = 1 - (1.0 * int(n_unique)) / (1.0 * int(n_samples))
         violations = (
             grouped.filter(F.col("count") > 1)
-            .orderBy(F.desc("count"), *[F.asc(f"`{c}`") for c in cols])
+            .orderBy(F.desc("count"), *[F.asc(quote_ident(c)) for c in cols])
             .limit(self.n_to_show)
         )
         return percent_duplicate, violations
@@ -554,8 +554,8 @@ class ConflictingLabels(SingleDatasetCheck):
         features = [c for c in _select_cols(ds, self.columns, self.ignore_columns) if c != ds.label_name]
         if not features:
             raise ValueError("no feature columns to check")
-        label = F.col(f"`{ds.label_name}`")
-        fcols = [F.col(f"`{c}`") for c in features]
+        label = F.col(quote_ident(ds.label_name))
+        fcols = [F.col(quote_ident(c)) for c in features]
         df = self._effective_df(ctx, kind)
         if self.salt_buckets:
             salted = (
@@ -585,7 +585,7 @@ class ConflictingLabels(SingleDatasetCheck):
         percent = (agg["ambiguous_rows"] / agg["total"]) if agg["total"] else 0.0
         violations = (
             grouped.filter(F.col("n_labels") > 1)
-            .orderBy(F.desc("n_rows"), *[F.asc(f"`{c}`") for c in features])
+            .orderBy(F.desc("n_rows"), *[F.asc(quote_ident(c)) for c in features])
             .limit(self.n_to_show)
         )
         return {"percent": percent}, violations

@@ -14,10 +14,13 @@ one single-flight memo.
 
 from __future__ import annotations
 
+import logging
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
+
+logger = logging.getLogger(__name__)
 
 # per-call thread cap; only Suite.run's check list can be wider
 MAX_JOBS = 8
@@ -39,7 +42,8 @@ def spread_input(df: DataFrame) -> DataFrame:
     slots = sc.defaultParallelism
     try:
         n_parts = df.rdd.getNumPartitions()
-    except Exception:  # exotic plans that refuse RDD conversion: leave as-is
+    except Exception as exc:  # exotic plans that refuse RDD conversion: leave as-is
+        logger.debug("spread_input: partition probe failed, input left as is: %r", exc)
         return df
     if n_parts < slots:
         return df.repartition(slots)

@@ -223,31 +223,25 @@ class Dataset:
 
 
 def infer_categorical_features(df: DataFrame, columns: list) -> list:
-    """One fused agg implementing reference type_inference.py:107-151.
+    """One job implementing reference type_inference.py:107-151.
 
     Computes per column: non-null count, exact distinct count (cheap at
     test scale; swap in approx_count_distinct + exact-confirm at 10^12
     rows — both are single-pass partial aggregations, no raw shuffle),
-    and for float columns whether all values are whole numbers.
+    and for float columns whether all values are whole numbers. All
+    three come from ``stats.column_counts``' distinct aggregation, whose
+    plan, unlike N countDistincts beside the other aggregates, does not
+    recompile on every fresh read of the input.
     """
+    from deepchecks_spark.stats import column_counts  # stats imports this module
+
     if not columns:
         return []
-    aggs = []
-    for c in columns:
-        dt = df.schema[c].dataType
-        qc = f"`{c}`"
-        aggs.append(F.count(F.col(qc)).alias(f"__n_{c}"))
-        aggs.append(F.countDistinct(F.col(qc)).alias(f"__d_{c}"))
-        if isinstance(dt, (T.FloatType, T.DoubleType, T.DecimalType)):
-            aggs.append(
-                F.min(F.col(qc).cast("double") == F.floor(F.col(qc)).cast("double")).alias(f"__w_{c}")
-            )
-    row = df.agg(*aggs).first().asDict()
+    counts = column_counts(df, columns)
     cats = []
     for c in columns:
         dt = df.schema[c].dataType
-        n_non_null = row[f"__n_{c}"] or 0
-        n_unique = row[f"__d_{c}"] or 0
+        n_non_null, n_unique, whole = counts[c]
         if n_unique == 0:
             continue
         if isinstance(dt, T.StringType):
@@ -255,7 +249,7 @@ def infer_categorical_features(df: DataFrame, columns: list) -> list:
         elif isinstance(dt, _INT_TYPES) or isinstance(dt, T.BooleanType):
             cap = CAT_CAP_INT
         elif isinstance(dt, (T.FloatType, T.DoubleType, T.DecimalType)):
-            cap = CAT_CAP_INT if row.get(f"__w_{c}") else CAT_CAP_FLOAT
+            cap = CAT_CAP_INT if whole else CAT_CAP_FLOAT
         else:  # datetime & everything else
             cap = CAT_CAP_FLOAT
         if n_unique / max(n_non_null, 1000) < MAX_CATEGORICAL_RATIO and n_unique <= cap:

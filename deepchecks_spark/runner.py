@@ -46,7 +46,11 @@ from deepchecks_spark.functions.strings import (
     is_special_only_expr,
 )
 from deepchecks_spark.io import local_frame, read_table, snapshot_fingerprint, write_table
-from deepchecks_spark.stats import compute_column_stats_by_partition
+from deepchecks_spark.stats import (
+    compute_column_stats_by_partition,
+    distinct_counts,
+    merge_column_stats,
+)
 
 VIOLATIONS_SCHEMA = (
     "check string, column string, offending_value string, count long, "
@@ -557,27 +561,19 @@ def metrics_rows(per_part: dict) -> list:
 
 
 def global_metric_rows(per_part: dict) -> list:
-    """Run-level metric set for the metrics-history table, derived
+    """Run-level metric set for the metrics-history table, merged
     driver-side from the per-partition stats (no extra scan) using only
     exactly-mergeable statistics: row count, per-column null fraction,
-    numeric min/max. Non-mergeable stats (stddev, HLL estimates) stay in
+    numeric min/max. Floating-point moments and HLL estimates stay in
     the per-run metrics table and out of the history."""
-    total = sum(s.n_rows for s in per_part.values())
-    out = [("rows", float(total))]
-    cols: dict = {}
-    for s in per_part.values():
-        for c, st in s.per_column.items():
-            agg = cols.setdefault(c, {"nulls": 0, "min": None, "max": None})
-            agg["nulls"] += st.get("null_count", 0)
-            for k, f in (("min", min), ("max", max)):
-                v = st.get(k)
-                if isinstance(v, (int, float)) and not isinstance(v, bool):
-                    agg[k] = v if agg[k] is None else f(agg[k], v)
-    for c, agg in sorted(cols.items()):
-        out.append((f"{c}.null_frac", (agg["nulls"] / total) if total else 0.0))
-        if agg["min"] is not None:
-            out.append((f"{c}.min", float(agg["min"])))
-            out.append((f"{c}.max", float(agg["max"])))
+    merged = merge_column_stats(per_part)
+    out = [("rows", float(merged.n_rows))]
+    for c, st in sorted(merged.per_column.items()):
+        out.append((f"{c}.null_frac", st["percent_null"]))
+        lo, hi = st.get("min"), st.get("max")
+        if isinstance(lo, (int, float)) and not isinstance(lo, bool):
+            out.append((f"{c}.min", float(lo)))
+            out.append((f"{c}.max", float(hi)))
     return out
 
 
@@ -672,9 +668,16 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         return once("flagged", lambda: flagged_string_values(ds.df, string_cols).persist())
 
     def _per_part():
-        # one grouped stats pass shared by partition_verdicts + metrics
+        # one grouped stats pass shared by partition_verdicts, metrics
+        # and the suite's global stats
         return once("per_part", lambda: compute_column_stats_by_partition(
             ds.df, ds.columns))
+
+    def _global_stats():
+        # the suite's whole-input stats, merged from the shared
+        # per-partition pass: only the exact distinct counts scan again
+        parts, distinct = run_jobs([_per_part, lambda: distinct_counts(ds.df, ds.columns)])
+        return merge_column_stats(parts, ds.columns, distinct, ds.df.schema)
 
     def stage(name, fn):
         if manifest["stages"].get(name) == "done":
@@ -706,7 +709,9 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         from deepchecks_spark.core.suite import Suite
 
         suite = Suite("runner integrity", *stats_checks, *perf_checks)
-        result = suite.run(ds)
+        ctx = Context(train=ds)
+        ctx.seed_stats("train", _global_stats)
+        result = suite.run(ctx)
         rows = []
         for r in result.results:
             if isinstance(r, CheckFailure):

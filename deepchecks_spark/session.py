@@ -7,9 +7,19 @@ coalescing, Arrow UDFs, UTC timestamps for oracle parity).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+logger = logging.getLogger(__name__)
+
+# Janino classes the codegen cache keeps. Spark's default of 100 is
+# below the runner's working set (~99 generated classes per pass), and
+# the cache is a segmented Guava cache that starts evicting before the
+# cap is reached: every warm pass then recompiles what the last one
+# evicted.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -22,6 +32,10 @@ def get_spark(
     cores=None → local[*]. Shuffle partitions default to the core count:
     at local scale 200 partitions just adds scheduling overhead; on a
     real cluster the caller passes an explicit value sized to the data.
+
+    The codegen cache cap (``spark.sql.codegen.cache.maxEntries``) is a
+    static conf, read once when the JVM first generates code: a session
+    that already exists when this is called keeps its own cap.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -38,6 +52,7 @@ def get_spark(
         # the engine's fused stats pass aggregates ~8 expressions per
         # column; keep wide plans inside WholeStageCodegen
         .config("spark.sql.codegen.maxFields", "500")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         # local mode = driver-only: the heap is the whole cluster's memory.
@@ -61,6 +76,6 @@ def get_spark(
     # returned (builder configs are ignored then); it's runtime-settable
     try:
         spark.conf.set("spark.sql.icu.caseMappings.enabled", "false")
-    except Exception:  # pragma: no cover - conf absent on older Spark
-        pass
+    except Exception as exc:  # pragma: no cover - conf absent on older Spark
+        logger.debug("get_spark: could not set spark.sql.icu.caseMappings.enabled: %r", exc)
     return spark

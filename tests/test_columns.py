@@ -117,7 +117,7 @@ def test_stats_sql_for_plain_names_matches_raw_backticks(spark):
     from pyspark.sql import functions as F
 
     from deepchecks_spark.functions.strings import is_special_only_expr, numeric_like_expr
-    from deepchecks_spark.stats import _agg_exprs, _distinct_exprs
+    from deepchecks_spark.stats import _agg_exprs, _distinct_key
 
     df = spark.createDataFrame([(1, 1.5, "x", datetime.date(2024, 1, 1))],
                                "i int, d double, s string, t date")
@@ -145,11 +145,15 @@ def test_stats_sql_for_plain_names_matches_raw_backticks(spark):
         return re.sub(r"#\d+", "", df.agg(*exprs)._jdf.queryExecution().logical().toString())
 
     assert logical(_agg_exprs(df, df.columns)) == logical(hand)
-    assert logical(_distinct_exprs(df, ["i"])) == logical(
-        [F.countDistinct(F.col("`i`")).alias("distinct::i")])
+    key = df.select(_distinct_key(df.schema["i"].dataType, "i"))
+    hand_key = df.selectExpr(
+        "CASE WHEN `i` IS NOT NULL THEN cast(named_struct('a', `i`, 'b', null, 'd', null, "
+        "'s', null, 'w', null) as struct<a:bigint,b:bigint,d:double,s:string,w:boolean>) END")
+    assert key._jdf.queryExecution().logical().toString() == \
+        hand_key._jdf.queryExecution().logical().toString()
 
 
-@pytest.mark.parametrize("module", ["runner.py", "stats.py"])
+@pytest.mark.parametrize("module", ["runner.py", "stats.py", "checks/integrity.py", "dataset.py"])
 def test_no_raw_backtick_interpolation(module):
     # identifiers in SQL text go through quote_ident; a raw `{name}`
     # breaks on a name that holds a backtick
