@@ -52,8 +52,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from deepchecks_spark.functions.columns import sql_str
+from deepchecks_spark.functions.columns import quote_ident, sql_str
 from deepchecks_spark.io import local_frame
+from deepchecks_spark.stats import distinct_counts
 
 # beyond this many literal values, an isin list stops being a predicate
 # and becomes the plan (same threshold discipline as the streaming
@@ -487,10 +488,10 @@ def suggest_constraints(df: DataFrame, max_set_size: int = 20,
     atomic column (HLL is an ObjectHashAggregate — still a single scan,
     no Expand). The HLL estimates are used ONLY as triage: columns with
     estimated distinctness ≥ ``unique_triage`` (and zero NULLs) get an
-    exact ``count_distinct`` confirmation in pass 2 (k candidates ⇒
-    Expand factor k+1 over a k-column projection — the same documented
-    trade as the unique-constraint validator; candidates are typically
-    the handful of id-like columns). String columns with estimated
+    exact confirmation in pass 2 (:func:`~deepchecks_spark.stats.distinct_counts`:
+    one distinct group over a (column, key) melt, whose generated code
+    is the same on every fresh read; candidates are typically the
+    handful of id-like columns). String columns with estimated
     cardinality ≤ ``max_set_size × set_triage_factor`` get pass 3: one
     melted distinct over the pruned string projection, counted per
     column, and ONLY columns whose exact count ≤ ``max_set_size``
@@ -514,16 +515,17 @@ def suggest_constraints(df: DataFrame, max_set_size: int = 20,
 
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in df.columns:
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
+        aggs.append(F.sum(F.when(F.col(quote_ident(c)).isNull(), 1).otherwise(0))
                     .alias(f"__nulls__{c}"))
     for c, t in atomic.items():
-        aggs.append(F.approx_count_distinct(c, rsd=0.05).alias(f"__apx__{c}"))
+        col = F.col(quote_ident(c))
+        aggs.append(F.approx_count_distinct(col, rsd=0.05).alias(f"__apx__{c}"))
         if t in _NUMERIC_TYPES or t.startswith("decimal"):
-            aggs.append(F.min(F.col(c).cast("double")).alias(f"__min__{c}"))
-            aggs.append(F.max(F.col(c).cast("double")).alias(f"__max__{c}"))
+            aggs.append(F.min(col.cast("double")).alias(f"__min__{c}"))
+            aggs.append(F.max(col.cast("double")).alias(f"__max__{c}"))
         elif t == "string":
             aggs.append(F.sum(
-                F.when(F.col(c).rlike(f"^(?:{INTEGRAL_STRING_PATTERN})$"), 1)
+                F.when(col.rlike(f"^(?:{INTEGRAL_STRING_PATTERN})$"), 1)
                 .otherwise(0)).alias(f"__int__{c}"))
     prof = df.agg(*aggs).collect()[0]
     n = prof["__n"]
@@ -532,11 +534,7 @@ def suggest_constraints(df: DataFrame, max_set_size: int = 20,
     uniq_cand = [c for c in atomic
                  if n > 0 and nulls[c] == 0
                  and prof[f"__apx__{c}"] / n >= unique_triage]
-    exact_distinct = {}
-    if uniq_cand:
-        row = df.select(*uniq_cand).agg(
-            *[F.count_distinct(F.col(c)).alias(c) for c in uniq_cand]).collect()[0]
-        exact_distinct = {c: row[c] for c in uniq_cand}
+    exact_distinct = distinct_counts(df, uniq_cand) if uniq_cand else {}
 
     set_cand = [c for c, t in atomic.items()
                 if t == "string" and n > 0 and nulls[c] < n
@@ -544,7 +542,7 @@ def suggest_constraints(df: DataFrame, max_set_size: int = 20,
     set_values = {}
     if set_cand:
         melted = df.select(F.explode(F.array(*[
-            F.struct(F.lit(c).alias("c"), F.col(c).alias("v"))
+            F.struct(F.lit(c).alias("c"), F.col(quote_ident(c)).alias("v"))
             for c in set_cand])).alias("s")) \
             .select("s.c", "s.v").filter(F.col("v").isNotNull()).distinct()
         # persist: the counts pass and the value collect below otherwise

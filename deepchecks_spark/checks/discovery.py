@@ -37,9 +37,11 @@ Scale shape (what must survive 10^12 rows):
   when the HLL PRODUCT bound ``est(dA)·est(dB) ≥ n`` holds (distinct
   of a pair never exceeds the product of the marginals, so a failing
   bound disproves the key without touching the data) and neither side
-  is already a key (minimality). Every exact confirmation is a
-  projection-pruned count_distinct — the documented Expand-factor
-  trade from constraints.py, bounded by the candidate count.
+  is already a key (minimality). Singles are confirmed by
+  ``stats.distinct_counts`` (one distinct group over a (column, key)
+  melt); pairs by a projection-pruned count_distinct — the documented
+  Expand-factor trade from constraints.py, bounded by the candidate
+  count.
 - ``benford_first_digit`` reduces each value to its first significant
   digit JVM-side (integer/string arithmetic, no float log — bit-stable
   across engines) and aggregates to ≤9 rows.
@@ -56,7 +58,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepchecks_spark.functions.columns import quote_ident
 from deepchecks_spark.io import local_frame
+from deepchecks_spark.stats import distinct_counts
 
 __all__ = [
     "functional_dependencies",
@@ -179,9 +183,9 @@ def discover_keys(df: DataFrame, columns: list | None = None,
 
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
-                    .alias(f"__nulls__{c}"))
-        aggs.append(F.approx_count_distinct(c, rsd=rsd).alias(f"__apx__{c}"))
+        col = F.col(quote_ident(c))
+        aggs.append(F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"__nulls__{c}"))
+        aggs.append(F.approx_count_distinct(col, rsd=rsd).alias(f"__apx__{c}"))
     prof = df.agg(*aggs).collect()[0]
     n = prof["__n"]
     nulls = {c: int(prof[f"__nulls__{c}"] or 0) for c in cols}
@@ -192,12 +196,7 @@ def discover_keys(df: DataFrame, columns: list | None = None,
     else:
         single_cand = [c for c in cols
                        if n == 0 or apx[c] / n >= unique_triage]
-    exact = {}
-    if single_cand and n > 0:
-        row = df.select(*single_cand).agg(
-            *[F.count_distinct(F.col(c)).alias(c) for c in single_cand]
-        ).collect()[0]
-        exact = {c: int(row[c] or 0) for c in single_cand}
+    exact = distinct_counts(df, single_cand) if single_cand and n > 0 else {}
 
     rows = []
     single_key = {}

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 from deepchecks_spark.core.checks import (
     USE_DEFAULT,
     SingleDatasetCheck,
+    StatsCheck,
     format_number,
     format_percent,
     get_condition_passed_message,
@@ -67,7 +68,7 @@ class ColumnsInfo(SingleDatasetCheck):
         return info, None
 
 
-class IsSingleValue(SingleDatasetCheck):
+class IsSingleValue(StatsCheck):
     """Per-column unique-value count; flags constant columns.
 
     Reference: data_integrity/is_single_value.py:60-104. value =
@@ -86,12 +87,9 @@ class IsSingleValue(SingleDatasetCheck):
         self.ignore_columns = ignore_columns
         self.ignore_nan = ignore_nan
 
-    def compute(self, ctx, kind):
-        ds = ctx.data(kind)
-        cols = _select_cols(ds, self.columns, self.ignore_columns)
-        _, stats = self._effective_data(ctx, kind)
+    def value_from_stats(self, ds, stats):
         value = {}
-        for c in cols:
+        for c in _select_cols(ds, self.columns, self.ignore_columns):
             st = stats.per_column[c]
             n_unique = st["distinct"]
             # Spark countDistinct excludes NULL but counts float NaN as a
@@ -101,7 +99,7 @@ class IsSingleValue(SingleDatasetCheck):
             elif not self.ignore_nan and st["null_count"] > 0:
                 n_unique += 1
             value[c] = int(n_unique)
-        return value, None
+        return value
 
     def add_condition_not_single_value(self):
         def condition(result):
@@ -116,7 +114,7 @@ class IsSingleValue(SingleDatasetCheck):
         return self.add_condition("Does not contain only a single value", condition)
 
 
-class PercentOfNulls(SingleDatasetCheck):
+class PercentOfNulls(StatsCheck):
     """Per-column null ratio (reference data_integrity/percent_of_nulls.py:72-103).
 
     value = {column: ratio}; Spark: fused stats pass (one scan for the
@@ -130,12 +128,9 @@ class PercentOfNulls(SingleDatasetCheck):
         self.columns = columns
         self.ignore_columns = ignore_columns
 
-    def compute(self, ctx, kind):
-        ds = ctx.data(kind)
-        cols = _select_cols(ds, self.columns, self.ignore_columns)
-        _, stats = self._effective_data(ctx, kind)
-        value = {c: float(stats.per_column[c]["percent_null"]) for c in cols}
-        return value, None
+    def value_from_stats(self, ds, stats):
+        return {c: float(stats.per_column[c]["percent_null"])
+                for c in _select_cols(ds, self.columns, self.ignore_columns)}
 
     def add_condition_percent_of_nulls_not_greater_than(self, threshold: float = 0.05):
         def condition(result):
@@ -256,7 +251,7 @@ class MixedNulls(SingleDatasetCheck):
         return _reduce(pct, None, aggregation_method, "Percent Mixed Nulls")
 
 
-class MixedDataTypes(SingleDatasetCheck):
+class MixedDataTypes(StatsCheck):
     """Fraction of number-like vs string-like values in string columns.
 
     Reference: data_integrity/mixed_data_types.py:105-174. value =
@@ -265,8 +260,11 @@ class MixedDataTypes(SingleDatasetCheck):
     with all-or-none parseable values yields {}.
 
     Spark: the number-like count (``try_cast(double) IS NOT NULL``) is
-    in the fused stats pass; example values are fetched lazily with
-    limit(3) scans only for the (rare) columns that actually mix.
+    in the fused stats pass, so the ratios (all the condition reads)
+    come from the stats alone. Only ``compute`` fetches the example
+    values, with limit(3) scans for the (rare) columns that actually
+    mix; the runner's per-partition verdicts call
+    :meth:`value_from_stats` and never fetch them.
     """
 
     DEFAULT_N_SAMPLES = 10_000_000
@@ -276,35 +274,30 @@ class MixedDataTypes(SingleDatasetCheck):
         self.columns = columns
         self.ignore_columns = ignore_columns
 
-    def compute(self, ctx, kind):
-        ds = ctx.data(kind)
-        cols = _select_cols(ds, self.columns, self.ignore_columns)
-        df, stats = self._effective_data(ctx, kind)
+    def value_from_stats(self, ds, stats):
         value = {}
-        for c in cols:
-            if not isinstance(ds.schema_of(c), T.StringType):
-                value[c] = {}
-                continue
+        for c in _select_cols(ds, self.columns, self.ignore_columns):
             st = stats.per_column[c]
             non_null = st["n"] or 0
             nums = st.get("numeric_like") or 0
-            if non_null == 0 or nums in (0, non_null):
+            if not isinstance(ds.schema_of(c), T.StringType) or non_null == 0 \
+                    or nums in (0, non_null):
                 value[c] = {}
+                continue
+            value[c] = {"strings": (non_null - nums) / non_null, "numbers": nums / non_null}
+        return value
+
+    def compute(self, ctx, kind):
+        df, stats = self._effective_data(ctx, kind)
+        value = self.value_from_stats(ctx.data(kind), stats)
+        for c, ratios in value.items():
+            if not ratios:
                 continue
             qc = F.col(quote_ident(c))
             num_cond = numeric_like_expr(qc)
-            numbers_examples = [
-                r[0] for r in df.filter(qc.isNotNull() & num_cond).select(qc).limit(3).collect()
-            ]
-            strings_examples = [
-                r[0] for r in df.filter(qc.isNotNull() & ~num_cond).select(qc).limit(3).collect()
-            ]
-            value[c] = {
-                "strings": (non_null - nums) / non_null,
-                "numbers": nums / non_null,
-                "strings_examples": strings_examples,
-                "numbers_examples": numbers_examples,
-            }
+            for key, cond in (("strings_examples", ~num_cond), ("numbers_examples", num_cond)):
+                ratios[key] = [r[0] for r in
+                               df.filter(qc.isNotNull() & cond).select(qc).limit(3).collect()]
         return value, None
 
     def add_condition_rare_type_ratio_not_in_range(self, ratio_range=(0.01, 0.1)):
@@ -333,7 +326,7 @@ class MixedDataTypes(SingleDatasetCheck):
         )
 
 
-class SpecialCharacters(SingleDatasetCheck):
+class SpecialCharacters(StatsCheck):
     """Ratio of samples that are entirely special characters.
 
     Reference: data_integrity/special_chars.py:80-143 — a sample is
@@ -352,19 +345,16 @@ class SpecialCharacters(SingleDatasetCheck):
         self.ignore_columns = ignore_columns
         self.n_most_common = n_most_common
 
-    def compute(self, ctx, kind):
-        ds = ctx.data(kind)
-        cols = _select_cols(ds, self.columns, self.ignore_columns)
-        _, stats = self._effective_data(ctx, kind)
+    def value_from_stats(self, ds, stats):
         value = {}
-        for c in cols:
+        for c in _select_cols(ds, self.columns, self.ignore_columns):
             st = stats.per_column[c]
             if "special_only" not in st:  # non-string columns never flag
                 value[c] = 0.0
                 continue
             denom = st["n"] or 0
             value[c] = (st["special_only"] / denom) if denom else 0.0
-        return value, None
+        return value
 
     def most_common_special_samples(self, ds, column: str, k: int | None = None) -> list:
         """Deterministic top-k offending samples (orderBy(count desc, value))."""

@@ -26,8 +26,9 @@ from deepchecks_spark.drift.spark import (
     categorical_histograms,
     numeric_histograms,
 )
-from deepchecks_spark.functions.columns import melt
+from deepchecks_spark.functions.columns import melt, quote_ident
 from deepchecks_spark.functions.strings import baseform_expr
+from deepchecks_spark.stats import column_counts
 
 SUPPORTED_CATEGORICAL_METHODS = ("Cramer's V", "PSI")
 SUPPORTED_NUMERIC_METHODS = ("Earth Mover's Distance", "Kolmogorov-Smirnov")
@@ -250,16 +251,9 @@ class LabelDrift(TrainTestCheck):
         if not isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                                T.FloatType, T.DoubleType, T.DecimalType)):
             return False
-        col = F.col(f"`{label}`")
-        aggs = [F.count(col).alias("n"), F.countDistinct(col).alias("d")]
-        whole = None
-        if isinstance(dt, (T.FloatType, T.DoubleType, T.DecimalType)):
-            aggs.append(F.min(col.cast("double") == F.floor(col).cast("double")).alias("w"))
-        row = ctx.train.df.agg(*aggs).first()
-        n, d = row["n"] or 0, row["d"] or 0
+        n, d, whole = column_counts(ctx.train.df, [label])[label]
         if d == 0:
             return True
-        whole = row["w"] if "w" in row.asDict() else True
         cap = 30 if (not isinstance(dt, (T.FloatType, T.DoubleType, T.DecimalType)) or whole) else 5
         is_cat = d / max(n, 1000) < 0.05 and d <= cap
         return not is_cat
@@ -369,9 +363,9 @@ class ReferentialIntegrity(TrainTestCheck):
     def compute(self, ctx):
         fact_df = self._effective_df(ctx, "train")
         dim_df = self._effective_df(ctx, "test")
-        fk = F.col(f"`{self.column}`")
+        fk = F.col(quote_ident(self.column))
         dim_keys = (
-            dim_df.select(F.col(f"`{self.dim_column}`").alias(self.column))
+            dim_df.select(F.col(quote_ident(self.dim_column)).alias(self.column))
             .filter(F.col(self.column).isNotNull()).distinct()
         )
         # NULL FKs are not orphans (SQL referential semantics)
@@ -617,7 +611,7 @@ class StringMismatchComparison(TrainTestCheck):
         train_df = self._effective_df(ctx, "train")  # honors explicit n_samples (ADVICE r2)
         test_df = self._effective_df(ctx, "test")
         if self.max_distinct_to_check is not None:
-            aggs = [F.approx_count_distinct(f"`{c}`").alias(c) for c in cols]
+            aggs = [F.approx_count_distinct(quote_ident(c)).alias(c) for c in cols]
             tr = train_df.agg(*aggs).first()
             te = test_df.agg(*aggs).first()
             cols = [c for c in cols

@@ -209,6 +209,22 @@ class SingleDatasetCheck(BaseCheck):
         raise NotImplementedError
 
 
+class StatsCheck(SingleDatasetCheck):
+    """A check whose value is a function of the dataset's column stats
+    alone. The runner evaluates it per input partition by calling
+    :meth:`value_from_stats` on each partition's stats, so that method
+    must not touch the DataFrame."""
+
+    def compute(self, context, kind: str):
+        _, stats = self._effective_data(context, kind)
+        return self.value_from_stats(context.data(kind), stats), None
+
+    def value_from_stats(self, ds, stats) -> Any:
+        """The check's value from ``ds``'s metadata and ``stats``
+        (a :class:`~deepchecks_spark.stats.ColumnStats`); no Spark job."""
+        raise NotImplementedError
+
+
 class TrainTestCheck(BaseCheck):
     """Runs on a (train, test) pair (reference tabular/base_checks.py:121-165)."""
 

@@ -23,7 +23,7 @@ from deepchecks_spark.drift.kernels import (
     ks_from_hist,
     psi_from_counts,
 )
-from deepchecks_spark.functions.columns import melt
+from deepchecks_spark.functions.columns import melt, quote_ident
 
 # Above this many distinct values per numeric column the exact
 # distinct-value histogram stops being "small state" and we switch to
@@ -147,7 +147,7 @@ def numeric_histograms(
     if mode == "auto":
         if distinct_counts is None:
             row = df.agg(
-                *[F.approx_count_distinct(f"`{c}`").alias(c) for c in cols]
+                *[F.approx_count_distinct(quote_ident(c)).alias(c) for c in cols]
             ).first()
             distinct_counts = row.asDict()
         exact_cols = [c for c in cols if (distinct_counts.get(c) or 0) <= EXACT_HIST_MAX_DISTINCT]
@@ -178,7 +178,7 @@ def numeric_histograms(
         qs = [i / SKETCH_POINTS for i in range(SKETCH_POINTS + 1)]
         aggs = []
         for c in cols:
-            col = F.col(f"`{c}`").cast("double")
+            col = F.col(quote_ident(c)).cast("double")
             clean = F.when(~F.isnan(col), col)
             aggs.append(F.percentile_approx(clean, qs, SKETCH_ACCURACY).alias(f"q::{c}"))
             aggs.append(F.count(clean).alias(f"n::{c}"))

@@ -17,6 +17,11 @@ with snapshot-pinned checkpoint/resume: a manifest records the input
 fingerprint and completed stages; re-running with the same input skips
 completed stages, a changed input invalidates them.
 
+The per-partition verdicts are a function of the per-partition stats
+pass alone (no Spark job); the global stats merge that pass with the
+exact distinct counts and serve both the suite and the violations
+table (its row count and StringMismatch cardinality gate).
+
 Run via:  spark-submit --py-files dist/deepchecks_spark.zip -m ...  or
           python -m deepchecks_spark.runner --input ... --output ...
 """
@@ -71,13 +76,14 @@ def partition_verdicts(ds: Dataset, checks: list, per_part: dict) -> list:
     partition's own statistics (``per_part``: the ONE grouped
     aggregation pass for all partitions × all columns; reference parity
     = running deepchecks on each partition's pandas slice, FIXTURES.md
-    §F3)."""
+    §F3). ``checks`` are :class:`~deepchecks_spark.core.checks.StatsCheck`
+    instances: each value is ``value_from_stats`` over the partition's
+    stats, so this submits no Spark job."""
     rows = []
     for pid, stats in sorted(per_part.items()):
-        fake_ctx = _StatsOnlyContext(ds, stats)
         for check in checks:
             try:
-                value, _ = check.compute(fake_ctx, "train")
+                value = check.value_from_stats(ds, stats)
             except Exception as exc:  # noqa: BLE001 — per-check isolation
                 rows.append((pid, check.header(), "<error>", "ERROR", repr(exc)))
                 continue
@@ -199,7 +205,7 @@ def conflicting_labels_partition_rows(df: DataFrame, feature_cols: list, label_c
 
 
 def new_category_partition_rows(test_df: DataFrame, train_df: DataFrame, cat_cols: list,
-                                max_ratio: float = 0.0,
+                                per_part: dict, max_ratio: float = 0.0,
                                 max_categories: int = 10_000) -> list:
     """Per-partition NewCategoryTrainTest verdicts (VERDICT r3 next-8):
     within each TEST partition, the ratio of rows whose category value
@@ -211,7 +217,9 @@ def new_category_partition_rows(test_df: DataFrame, train_df: DataFrame, cat_col
     batch check (columns above ``max_categories`` approx-distinct are
     skipped) and broadcast; the test side is ONE melted pass with the
     partition id in the group key, so the heavy reduction is map-side
-    local and only (pid, column) counter rows reach the driver.
+    local and only (pid, column) counter rows reach the driver. Each
+    partition's row count comes from ``per_part``, the test side's
+    :func:`compute_column_stats_by_partition` rows.
     """
     from deepchecks_spark.core.checks import format_percent
 
@@ -238,9 +246,7 @@ def new_category_partition_rows(test_df: DataFrame, train_df: DataFrame, cat_col
         .agg(F.sum(F.when(F.col("__seen").isNull(), 1).otherwise(0)).alias("n_new"))
         .collect()
     )
-    totals = {r["__pid"]: r["count"] for r in
-              test_df.withColumn("__pid", F.spark_partition_id())
-              .groupBy("__pid").count().collect()}
+    totals = {pid: st.n_rows for pid, st in per_part.items()}
     new_by_pid: dict = {pid: {} for pid in totals}
     for r in per:
         new_by_pid.setdefault(r["__pid"], {})[r["column"]] = r["n_new"]
@@ -440,21 +446,6 @@ def drift_partition_rows(df: DataFrame, cat_cols: list, reference_hists: dict | 
     return out
 
 
-class _StatsOnlyContext:
-    """Context facade that serves one partition's precomputed stats to the
-    stats-driven checks (their compute() only touches ctx.data/ctx.stats)."""
-
-    def __init__(self, ds: Dataset, stats):
-        self._ds = ds
-        self._stats = stats
-
-    def data(self, kind):
-        return self._ds
-
-    def stats(self, kind, columns=None):
-        return self._stats
-
-
 # ---------------------------------------------------------------------------
 # violation rows with partition lineage
 # ---------------------------------------------------------------------------
@@ -484,24 +475,28 @@ def flagged_string_values(df: DataFrame, string_cols: list) -> DataFrame:
     )
 
 
-def violation_rows(df: DataFrame, string_cols: list,
-                   mismatch_max_distinct: int = 10_000,
-                   flagged: DataFrame | None = None) -> DataFrame:
+def violation_rows(df: DataFrame, string_cols: list, stats,
+                   flagged: DataFrame | None = None,
+                   mismatch_max_distinct: int = 10_000) -> DataFrame:
     """(check, column, offending_value, count, percent, partition_id).
+
+    ``stats`` is the whole input's ``ColumnStats`` (``compute_column_stats``,
+    or the runner's merged stats): ``percent``'s denominator is its row
+    count, so no count job runs here.
 
     Scale design: the MixedNulls/SpecialCharacters predicates are applied
     BEFORE any aggregation — the melted scan emits only offending values,
     so the shuffle carries a tiny fraction of the input no matter how big
     the corpus is. StringMismatch needs per-distinct-value counts, which
     is unbounded for free-text columns — so it is restricted to columns
-    whose approx distinct count is ≤ ``mismatch_max_distinct`` (the
-    reference caps the whole check at 1M sampled rows instead,
+    whose exact distinct count in ``stats`` is ≤ ``mismatch_max_distinct``
+    (the reference caps the whole check at 1M sampled rows instead,
     string_mismatch.py:64; a cardinality cap is the shuffle-safe analogue).
     """
     spark = df.sparkSession
     if not string_cols:
         return local_frame(spark, [], VIOLATIONS_SCHEMA)
-    n_rows = df.count()
+    n_rows = stats.n_rows
 
     # selective filter FIRST, then the (cheap) per-partition aggregation
     if flagged is None:
@@ -517,10 +512,8 @@ def violation_rows(df: DataFrame, string_cols: list,
     out = flagged.select(*base_cols)
 
     # StringMismatch on bounded-cardinality columns only
-    approx = df.agg(
-        *[F.approx_count_distinct(quote_ident(c)).alias(c) for c in string_cols]
-    ).first()
-    low_card = [c for c in string_cols if (approx[c] or 0) <= mismatch_max_distinct]
+    low_card = [c for c in string_cols
+                if stats.per_column[c]["distinct"] <= mismatch_max_distinct]
     if low_card:
         from pyspark.sql import Window
 
@@ -600,9 +593,10 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
     The input is spread (``spread_input``) and persisted once; the
     stages, and the sections inside ``partition_verdicts``, are
     independent jobs over that cache submitted through ``run_jobs``.
-    Their shared passes (per-partition stats, the flagged-string table)
-    are single-flight through one ``Once``. Every stage finishes before
-    a failure propagates, and only then is the cache released."""
+    Their shared passes (per-partition stats, the merged global stats,
+    the flagged-string table) are single-flight through one ``Once``.
+    Every stage finishes before a failure propagates, and only then is
+    the cache released."""
     os.makedirs(output_dir, exist_ok=True)
     manifest_path = os.path.join(output_dir, "_manifest.json")
     fingerprint = (
@@ -674,10 +668,14 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
             ds.df, ds.columns))
 
     def _global_stats():
-        # the suite's whole-input stats, merged from the shared
-        # per-partition pass: only the exact distinct counts scan again
-        parts, distinct = run_jobs([_per_part, lambda: distinct_counts(ds.df, ds.columns)])
-        return merge_column_stats(parts, ds.columns, distinct, ds.df.schema)
+        # the whole-input stats shared by the suite and the violations
+        # table, merged from the per-partition pass: only the exact
+        # distinct counts scan again
+        def merged():
+            parts, distinct = run_jobs([_per_part, lambda: distinct_counts(ds.df, ds.columns)])
+            return merge_column_stats(parts, ds.columns, distinct, ds.df.schema)
+
+        return once("global", merged)
 
     def stage(name, fn):
         if manifest["stages"].get(name) == "done":
@@ -761,7 +759,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
                 rows = []
                 if ds.cat_features:
                     rows += new_category_partition_rows(
-                        ds.df, ref_df, list(ds.cat_features))
+                        ds.df, ref_df, list(ds.cat_features), _per_part())
                 rows += samples_mix_partition_rows(ds.df, ref_df, list(ds.columns))
                 return rows
 
@@ -773,7 +771,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         write_table(out, os.path.join(output_dir, "partition_verdicts"))
 
     def _violations():
-        out = violation_rows(ds.df, string_cols, flagged=_flagged())
+        out = violation_rows(ds.df, string_cols, _global_stats(), flagged=_flagged())
         write_table(out, os.path.join(output_dir, "violations"))
 
     def _metrics():

@@ -46,6 +46,7 @@ def test_melt_callers_round_trip_adversarial_column_names(spark, name):
         new_category_partition_rows,
         violation_rows,
     )
+    from deepchecks_spark.stats import compute_column_stats, compute_column_stats_by_partition
     from deepchecks_spark.streaming import streaming_violations
 
     values = ["a", "a", "b", "N/A", "!!", None]
@@ -57,7 +58,8 @@ def test_melt_callers_round_trip_adversarial_column_names(spark, name):
     assert {r["column"] for r in melt(df, [name]).collect()} == {name}
     assert set(categorical_histograms(df, [name])) == {name}
     assert {r["column"] for r in flagged_string_values(df, [name]).collect()} == {name}
-    assert {r["column"] for r in violation_rows(df, [name]).collect()} == {name}
+    assert {r["column"] for r in violation_rows(
+        df, [name], compute_column_stats(df, [name])).collect()} == {name}
     assert {r["column"] for r in streaming_violations(df, [name]).collect()} == {name}
 
     drift = drift_partition_rows(df, [name])
@@ -65,7 +67,8 @@ def test_melt_callers_round_trip_adversarial_column_names(spark, name):
     # a wrong label on both sides would still join, then be read back
     # under the real name as zero new values: the FAIL proves the label
     ref = spark.createDataFrame([("a",)], f"{quote_ident(name)} string")
-    new_cat = new_category_partition_rows(df, ref, [name])
+    new_cat = new_category_partition_rows(
+        df, ref, [name], compute_column_stats_by_partition(df, [name]))
     assert new_cat and {r[3] for r in new_cat} == {"FAIL"}
     # partition 0 repeats "a"; partition 1 holds distinct values only
     dups = duplicates_partition_rows(df, [name])
@@ -153,7 +156,8 @@ def test_stats_sql_for_plain_names_matches_raw_backticks(spark):
         hand_key._jdf.queryExecution().logical().toString()
 
 
-@pytest.mark.parametrize("module", ["runner.py", "stats.py", "checks/integrity.py", "dataset.py"])
+@pytest.mark.parametrize("module", ["runner.py", "stats.py", "checks/integrity.py", "dataset.py",
+                                    "checks/traintest.py", "drift/spark.py"])
 def test_no_raw_backtick_interpolation(module):
     # identifiers in SQL text go through quote_ident; a raw `{name}`
     # breaks on a name that holds a backtick

@@ -251,3 +251,25 @@ def test_freshness_validates(spark):
     df = spark.createDataFrame([(1,)], "a int")
     with pytest.raises(ValueError, match="group column"):
         freshness(df, "a", [])
+
+
+def test_single_column_counts_match_count_distinct(spark):
+    # discover_keys and suggest_constraints count single columns through
+    # stats.distinct_counts: NULL, NaN, -0.0 and a dotted name must give
+    # countDistinct's numbers
+    from deepchecks_spark.checks.constraints import suggest_constraints
+    from deepchecks_spark.functions.columns import quote_ident
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(1, 1.0, "a"), (2, nan, "b"), (3, None, "a"), (4, nan, None),
+         (5, 0.0, "c"), (6, -0.0, "c")],
+        "id long, `x.y` double, s string")
+    want = df.agg(*[F.countDistinct(F.col(quote_ident(c))).alias(c)
+                    for c in df.columns]).first().asDict()
+    got = {r["key"]: r["n_distinct"]
+           for r in discover_keys(df, max_size=1, triage="exact").collect()}
+    assert got == want == {"id": 6, "x.y": 3, "s": 3}
+    kinds = {(r["column"], r["kind"]) for r in suggest_constraints(df).collect()}
+    assert ("id", "unique") in kinds
+    assert not {k for k in kinds if k[1] == "unique" and k[0] != "id"}

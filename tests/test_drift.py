@@ -252,3 +252,23 @@ def test_emd_sketch_error_bound_at_10m_rows(spark):
     # data-dependent envelope certificate (r5): tighter, still holds
     assert emd_sketch_bound(sketch) < emd_sketch_bound()
     assert abs(sketch - exact) <= emd_sketch_bound(sketch)
+
+
+@pytest.mark.parametrize("exact_max", [None, 10])  # the exact path; the sketch path
+def test_feature_drift_auto_histograms_backticked_numeric_column(spark, monkeypatch, exact_max):
+    import deepchecks_spark.drift.spark as dspark
+    from deepchecks_spark.functions.columns import quote_ident
+
+    if exact_max is not None:
+        monkeypatch.setattr(dspark, "EXACT_HIST_MAX_DISTINCT", exact_max)
+    name = "a`b"
+    ddl = f"{quote_ident(name)} double"
+    train = Dataset(spark.createDataFrame([(float(i % 50),) for i in range(1000)], ddl),
+                    infer_categorical=False)
+    test = Dataset(spark.createDataFrame([(float(i % 50) + 25,) for i in range(1000)], ddl),
+                   infer_categorical=False)
+    info = FeatureDrift().run(train, test).value[name]
+    assert info["Method"] == "Kolmogorov-Smirnov"
+    # half of the test mass lies above the train maximum
+    assert info["Drift score"] == pytest.approx(0.5, abs=0.02)
+    assert ("Drift score error bound" in info) == (exact_max is not None)

@@ -51,11 +51,25 @@ def test_run_job_outputs(spark, tmp_path, corpus_parquet):
     assert {r["stat"] for r in mrows} >= {"n_rows", "null_count", "percent_null", "distinct"}
 
 
+def _with_mixed_column(spark, corpus_parquet, path):
+    """The corpus plus a ``code`` column: one input partition mixes 5%
+    number-like values into it (a MixedDataTypes WARN), another 2%
+    special-character-only values (a SpecialCharacters WARN), and the
+    rest hold a single value."""
+    pid, row = F.spark_partition_id(), F.monotonically_increasing_id()
+    code = (F.when((pid == 0) & (row % 20 == 0), F.lit("42"))
+            .when((pid == 1) & (row % 50 == 0), F.lit("!!"))
+            .otherwise(F.lit("x")))
+    spark.read.parquet(corpus_parquet).withColumn("code", code).write.parquet(path)
+    return path
+
+
 def test_partition_verdicts_parity(spark, tmp_path, corpus_parquet):
     """North-rule parity: each partition's verdict equals the verdict of
     running the check on that partition's slice alone."""
+    src = _with_mixed_column(spark, corpus_parquet, str(tmp_path / "mixed"))
     out = str(tmp_path / "out2")
-    run_job(spark, corpus_parquet, out, cat_features=["lang"])
+    run_job(spark, src, out, cat_features=["lang"])
     pv = spark.read.parquet(os.path.join(out, "partition_verdicts"))
     got = {
         (r["partition_id"], r["check"], r["condition"]): r["category"]
@@ -65,22 +79,119 @@ def test_partition_verdicts_parity(spark, tmp_path, corpus_parquet):
     # recompute independently: slice by spark_partition_id, run the same
     # checks per slice through the normal (non-partition) path
     from deepchecks_spark import Dataset
-    from deepchecks_spark.checks.integrity import IsSingleValue, PercentOfNulls
+    from deepchecks_spark.checks.integrity import (
+        IsSingleValue,
+        MixedDataTypes,
+        PercentOfNulls,
+        SpecialCharacters,
+    )
 
-    df = spark.read.parquet(corpus_parquet).withColumn("__pid", F.spark_partition_id())
+    df = spark.read.parquet(src).withColumn("__pid", F.spark_partition_id())
     pids = sorted(r["__pid"] for r in df.select("__pid").distinct().collect())
+    seen = set()
     for pid in pids:
         part = df.filter(F.col("__pid") == pid).drop("__pid")
         ds = Dataset(part, cat_features=["lang"], infer_categorical=False)
         for check in (
             IsSingleValue().add_condition_not_single_value(),
             PercentOfNulls().add_condition_percent_of_nulls_not_greater_than(0.05),
+            SpecialCharacters().add_condition_ratio_of_special_characters_less_or_equal(0.001),
+            MixedDataTypes().add_condition_rare_type_ratio_not_in_range(),
         ):
             result = check.run(ds)
+            seen.update((check.header(), c.category.value) for c in result.conditions_results)
             for c in result.conditions_results:
                 key = (pid, check.header(), c.name)
                 assert key in got
                 assert got[key] == c.category.value, f"partition {pid}: {key}"
+    # the fixture reaches both checks' non-passing verdicts
+    assert {("Mixed Data Types", "WARN"), ("Special Characters", "WARN")} <= seen
+
+
+def test_partition_verdicts_submit_no_spark_job(spark, tmp_path, corpus_parquet):
+    # per-partition values come from the held per-partition stats alone,
+    # even where MixedDataTypes' compute would fetch example values
+    from deepchecks_spark import Dataset
+    from deepchecks_spark.checks.integrity import (
+        IsSingleValue,
+        MixedDataTypes,
+        PercentOfNulls,
+        SpecialCharacters,
+    )
+    from deepchecks_spark.runner import partition_verdicts
+    from deepchecks_spark.stats import compute_column_stats_by_partition
+
+    src = _with_mixed_column(spark, corpus_parquet, str(tmp_path / "mixed"))
+    ds = Dataset(spark.read.parquet(src), cat_features=["lang"], infer_categorical=False)
+    per_part = compute_column_stats_by_partition(ds.df, ds.columns)
+    checks = [
+        IsSingleValue().add_condition_not_single_value(),
+        PercentOfNulls().add_condition_percent_of_nulls_not_greater_than(0.05),
+        SpecialCharacters().add_condition_ratio_of_special_characters_less_or_equal(0.001),
+        MixedDataTypes().add_condition_rare_type_ratio_not_in_range(),
+    ]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    rows = partition_verdicts(ds, checks, per_part)
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert len(rows) == len(per_part) * len(checks)
+    assert {r[3] for r in rows if r[1] == "Mixed Data Types"} == {"PASS", "WARN"}
+
+
+def _violation_rows_before_held_stats(df, string_cols, mismatch_max_distinct=10_000):
+    """violation_rows as it was when it counted the rows and gated
+    StringMismatch on an HLL estimate itself: the oracle for the version
+    that reads both from the held whole-input stats."""
+    from pyspark.sql import Window
+
+    from deepchecks_spark.functions.columns import melt, quote_ident
+    from deepchecks_spark.functions.strings import baseform_expr
+    from deepchecks_spark.runner import flagged_string_values
+
+    n_rows = df.count()
+    flagged = flagged_string_values(df, string_cols)
+    base_cols = [
+        F.col("check"),
+        F.col("column"),
+        F.col("value").alias("offending_value"),
+        F.col("count"),
+        (F.col("count") / F.lit(n_rows)).alias("percent"),
+        F.col("__pid").alias("partition_id"),
+    ]
+    out = flagged.select(*base_cols)
+    approx = df.agg(
+        *[F.approx_count_distinct(quote_ident(c)).alias(c) for c in string_cols]
+    ).first()
+    low_card = [c for c in string_cols if (approx[c] or 0) <= mismatch_max_distinct]
+    if low_card:
+        counted = (
+            melt(df.withColumn("__pid", F.spark_partition_id()), low_card,
+                 keep=("__pid",))
+            .filter(F.col("value").isNotNull())
+            .groupBy("__pid", "column", "value")
+            .count()
+        )
+        w = Window.partitionBy("column", "base")
+        mismatched = (
+            counted.withColumn("base", baseform_expr(F.col("value"), allow_empty_result=False))
+            .withColumn("n_variants", F.size(F.collect_set("value").over(w)))
+            .filter(F.col("n_variants") > 1)
+            .withColumn("check", F.lit("StringMismatch"))
+            .select(*base_cols)
+        )
+        out = out.unionByName(mismatched)
+    return out
+
+
+def test_violation_rows_from_held_stats_match_own_counts(spark, corpus_parquet):
+    from deepchecks_spark.stats import compute_column_stats
+
+    df = spark.read.parquet(corpus_parquet)
+    cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
+    got = violation_rows(df, cols, compute_column_stats(df, cols)).collect()
+    want = _violation_rows_before_held_stats(df, cols).collect()
+    assert {r["check"] for r in got} >= {"MixedNulls", "StringMismatch"}
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_resume_skips_completed_stages(spark, tmp_path, corpus_parquet):
@@ -296,6 +407,7 @@ def test_drift_partition_rows_absolute_collect_cap(spark, monkeypatch):
 
 def test_new_category_partition_rows_sliced_parity(spark):
     from deepchecks_spark.runner import new_category_partition_rows
+    from deepchecks_spark.stats import compute_column_stats_by_partition
 
     # test side: 2 partitions — partition 0 only train-known categories,
     # partition 1 has 20% novel categories in column 'cat'
@@ -304,7 +416,8 @@ def test_new_category_partition_rows_sliced_parity(spark):
     part1 = [("a",)] * 80 + [("zz%d" % i,) for i in range(20)]
     rdd = spark.sparkContext.parallelize(part0 + part1, 2)
     test = spark.createDataFrame(rdd, "cat string")
-    rows = new_category_partition_rows(test, train, ["cat"], max_ratio=0.1)
+    rows = new_category_partition_rows(
+        test, train, ["cat"], compute_column_stats_by_partition(test, ["cat"]), max_ratio=0.1)
     assert len(rows) == 2
     by_pid = {r[0]: r for r in rows}
     # sliced oracle: recompute each partition's ratio from its slice
@@ -327,11 +440,14 @@ def test_new_category_partition_rows_sliced_parity(spark):
 
 def test_new_category_partition_rows_respects_cardinality_gate(spark):
     from deepchecks_spark.runner import new_category_partition_rows
+    from deepchecks_spark.stats import compute_column_stats_by_partition
 
     train = spark.range(0, 50_000).selectExpr("cast(id as string) AS cat")
     test = spark.range(0, 100).selectExpr("cast(id + 1000000 as string) AS cat")
     # train cardinality above the gate → column skipped, no rows emitted
-    rows = new_category_partition_rows(test, train, ["cat"], max_categories=1000)
+    rows = new_category_partition_rows(
+        test, train, ["cat"], compute_column_stats_by_partition(test, ["cat"]),
+        max_categories=1000)
     assert rows == []
 
 

@@ -311,6 +311,19 @@ def test_stats_pass_compiles_nothing_on_a_fresh_read(spark, corpus_path):
     assert _compiles(spark) - before == 0
 
 
+def test_suggest_constraints_compiles_nothing_on_a_fresh_read(spark, corpus_path):
+    # its exact single-column counts are the stats module's one distinct
+    # group, whose generated code does not follow per-read expression ids
+    from deepchecks_spark.checks.constraints import suggest_constraints
+
+    want = suggest_constraints(spark.read.parquet(corpus_path)).collect()
+    assert any(r["kind"] == "unique" for r in want)
+    before = _compiles(spark)
+    got = suggest_constraints(spark.read.parquet(corpus_path)).collect()
+    assert _compiles(spark) - before == 0
+    assert got == want
+
+
 def test_inferring_categorical_features_compiles_nothing_on_a_fresh_read(spark, corpus_path):
     from deepchecks_spark.dataset import infer_categorical_features
 

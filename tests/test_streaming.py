@@ -55,8 +55,10 @@ def test_streaming_violations_match_batch(spark, stream_dir):
     got = spark.sql("SELECT * FROM violations_out").collect()
     # batch twin over the same data
     from deepchecks_spark.runner import violation_rows
+    from deepchecks_spark.stats import compute_column_stats
 
-    want = violation_rows(batch, ["lang", "url"]).collect()
+    want = violation_rows(batch, ["lang", "url"],
+                          compute_column_stats(batch, ["lang", "url"])).collect()
     want_total = sum(r["count"] for r in want if r["check"] == "MixedNulls")
     got_total = sum(1 for r in got if r["check"] == "MixedNulls")
     assert got_total == want_total > 0
