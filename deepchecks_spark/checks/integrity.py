@@ -261,10 +261,10 @@ class MixedDataTypes(StatsCheck):
 
     Spark: the number-like count (``try_cast(double) IS NOT NULL``) is
     in the fused stats pass, so the ratios (all the condition reads)
-    come from the stats alone. Only ``compute`` fetches the example
-    values, with limit(3) scans for the (rare) columns that actually
-    mix; the runner's per-partition verdicts call
-    :meth:`value_from_stats` and never fetch them.
+    come from the stats alone. Only ``compute`` (a suite or ``run``)
+    fetches the example values, with limit(3) scans for the (rare)
+    columns that actually mix. The runner never fetches them: its global
+    and per-partition verdicts both call :meth:`value_from_stats`.
     """
 
     DEFAULT_N_SAMPLES = 10_000_000

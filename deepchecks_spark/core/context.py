@@ -33,7 +33,6 @@ class Context:
         # are single-flight per key so concurrent checks wait for ONE
         # computation instead of duplicating the scan
         self._once = Once()
-        self._stats_sources: dict = {}
         if self.test is not None and require_same_schema:
             self._validate_compat()
 
@@ -77,15 +76,7 @@ class Context:
             cols = list(columns) if columns is not None else ds.columns
             return compute_column_stats(ds.df, cols)
 
-        key = ("stats", kind, columns)
-        return self._once(key, self._stats_sources.get(key, compute))
-
-    def seed_stats(self, kind: str, compute) -> None:
-        """Serve ``kind``'s all-column stats — what every stats-driven
-        check reads — from ``compute()`` (called once, on first use)
-        instead of a fresh fused scan: for a caller that already holds
-        the dataset's mergeable per-partition statistics."""
-        self._stats_sources[("stats", kind, tuple(self.data(kind).columns))] = compute
+        return self._once(("stats", kind, columns), compute)
 
     def n_rows(self, kind: str) -> int:
         """Row count, reusing the fused stats pass when already computed

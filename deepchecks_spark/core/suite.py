@@ -148,16 +148,9 @@ class Suite:
         scan. A SingleDataset check's train/test legs stay sequential
         within its task (same instance).
 
-        ``train`` may also be a prepared :class:`Context` (the runner's,
-        seeded with its merged stats), which already holds ``test`` and
-        ``feature_importance``: passing them too is a ValueError."""
-        if isinstance(train, Context):
-            if test is not None or feature_importance is not None:
-                raise ValueError("pass test and feature_importance to the Context, "
-                                 "not beside it")
-            ctx = train
-        else:
-            ctx = Context(train=train, test=test, feature_importance=feature_importance)
+        ``train`` and ``test`` are Datasets or bare DataFrames (see
+        :class:`Context`); the suite builds its own Context over them."""
+        ctx = Context(train=train, test=test, feature_importance=feature_importance)
         ctx.persist("train")
         if ctx.test is not None:
             ctx.persist("test")

@@ -89,6 +89,16 @@ def is_special_only_expr(col: Column | str) -> Column:
     return (F.length(c) > 0) & ~c.rlike(r"[\p{L}\p{N}]")
 
 
+def string_flag_expr(col: Column | str) -> Column:
+    """The violation a string value is flagged under: ``'MixedNulls'``
+    for a null representation, else ``'SpecialCharacters'`` for a
+    special-characters-only value, else null. The one taxonomy behind
+    the batch and the streaming violation tables."""
+    c = F.col(col) if isinstance(col, str) else col
+    return (F.when(is_null_string_expr(c), F.lit("MixedNulls"))
+            .when(is_special_only_expr(c), F.lit("SpecialCharacters")))
+
+
 def numeric_like_expr(col: Column | str) -> Column:
     """``try_cast(col AS double) IS NOT NULL``, guarded by a constant-
     time necessary condition on the RAW first character so multi-KB

@@ -17,10 +17,15 @@ with snapshot-pinned checkpoint/resume: a manifest records the input
 fingerprint and completed stages; re-running with the same input skips
 completed stages, a changed input invalidates them.
 
-The per-partition verdicts are a function of the per-partition stats
-pass alone (no Spark job); the global stats merge that pass with the
-exact distinct counts and serve both the suite and the violations
-table (its row count and StringMismatch cardinality gate).
+Stats checks have one evaluator, :func:`stats_verdicts`: the global
+verdicts apply it to the global stats, the per-partition verdicts to
+each partition's stats, so neither submits a Spark job. The global
+stats merge the one per-partition stats pass with the exact distinct
+counts, and also serve the violations table (its row count and
+StringMismatch cardinality gate). The melted (partition, column, value)
+counts are one table too, :func:`partition_value_counts`: the flagged
+view, StringMismatch, partition drift and the new-category test side
+all read it, so no section melts the input itself.
 
 Run via:  spark-submit --py-files dist/deepchecks_spark.zip -m ...  or
           python -m deepchecks_spark.runner --input ... --output ...
@@ -40,16 +45,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deepchecks_spark.core.checks import get_condition_passed_message
-from deepchecks_spark.core.context import Context
 from deepchecks_spark.core.parallel import Once, run_jobs, spread_input
-from deepchecks_spark.core.result import CheckFailure
+from deepchecks_spark.core.result import CheckFailure, CheckResult
 from deepchecks_spark.dataset import Dataset
 from deepchecks_spark.functions.columns import melt, quote_ident
-from deepchecks_spark.functions.strings import (
-    baseform_expr,
-    is_null_string_expr,
-    is_special_only_expr,
-)
+from deepchecks_spark.functions.strings import baseform_expr, string_flag_expr
 from deepchecks_spark.io import local_frame, read_table, snapshot_fingerprint, write_table
 from deepchecks_spark.stats import (
     compute_column_stats_by_partition,
@@ -57,10 +57,7 @@ from deepchecks_spark.stats import (
     merge_column_stats,
 )
 
-VIOLATIONS_SCHEMA = (
-    "check string, column string, offending_value string, count long, "
-    "percent double, partition_id int"
-)
+VALUE_COUNTS_SCHEMA = "__pid int, column string, value string, count long, check string"
 
 # Hard ceiling on rows any per-partition histogram pass may collect to
 # the driver, regardless of partition count (ADVICE r2, runner.py:216).
@@ -68,35 +65,55 @@ ABS_DRIFT_COLLECT_CAP = 2_000_000
 
 
 # ---------------------------------------------------------------------------
-# per-partition verdicts
+# global and per-partition verdicts
 # ---------------------------------------------------------------------------
 
-def partition_verdicts(ds: Dataset, checks: list, per_part: dict) -> list:
-    """Evaluate each stats-driven check's conditions on every input
-    partition's own statistics (``per_part``: the ONE grouped
-    aggregation pass for all partitions × all columns; reference parity
-    = running deepchecks on each partition's pandas slice, FIXTURES.md
-    §F3). ``checks`` are :class:`~deepchecks_spark.core.checks.StatsCheck`
-    instances: each value is ``value_from_stats`` over the partition's
-    stats, so this submits no Spark job."""
+def verdict_rows(results: list) -> list:
+    """(check, condition, category, details) rows of suite results: a
+    :class:`CheckFailure` is one ``<failure>`` ERROR row, and a check
+    with no condition still gets a ``<computed>`` row, so the table
+    records that it ran."""
     rows = []
-    for pid, stats in sorted(per_part.items()):
-        for check in checks:
-            try:
-                value = check.value_from_stats(ds, stats)
-            except Exception as exc:  # noqa: BLE001 — per-check isolation
-                rows.append((pid, check.header(), "<error>", "ERROR", repr(exc)))
-                continue
-            for cond in check.conditions:
-                try:
-                    res = cond(value)
-                    rows.append((pid, check.header(), cond.name, res.category.value, res.details))
-                except Exception as exc:  # noqa: BLE001
-                    rows.append((pid, check.header(), cond.name, "ERROR", repr(exc)))
+    for r in results:
+        if isinstance(r, CheckFailure):
+            rows.append((r.header, "<failure>", "ERROR", repr(r.exception)))
+            continue
+        if not r.conditions_results:
+            rows.append((r.header, "<computed>", "PASS", "check computed"))
+        rows.extend((r.header, c.name, c.category.value, c.details)
+                    for c in r.conditions_results)
     return rows
 
 
-def mixed_nulls_partition_rows(per_part: dict, flagged: DataFrame | None,
+def stats_verdicts(ds: Dataset, checks: list, stats) -> list:
+    """:func:`verdict_rows` of each stats-driven check over ``stats`` (a
+    ``ColumnStats``): the value is ``value_from_stats(ds, stats)``
+    (``checks`` are :class:`~deepchecks_spark.core.checks.StatsCheck`
+    instances) and the conditions run through
+    ``CheckResult.process_conditions``, as in a suite. No Spark job."""
+    results = []
+    for check in checks:
+        try:
+            result = CheckResult(check.value_from_stats(ds, stats), check.header(), check)
+        except Exception as exc:  # noqa: BLE001 — per-check isolation, as in Suite.run
+            results.append(CheckFailure(check, exc, check.header()))
+            continue
+        result.process_conditions()
+        results.append(result)
+    return verdict_rows(results)
+
+
+def partition_verdicts(ds: Dataset, checks: list, per_part: dict) -> list:
+    """:func:`stats_verdicts` on every input partition's own statistics
+    (``per_part``: the ONE grouped aggregation pass for all partitions ×
+    all columns; reference parity = running deepchecks on each
+    partition's pandas slice, FIXTURES.md §F3), each row prefixed with
+    its partition id. Submits no Spark job."""
+    return [(pid, *row) for pid, stats in sorted(per_part.items())
+            for row in stats_verdicts(ds, checks, stats)]
+
+
+def mixed_nulls_partition_rows(per_part: dict, flagged: DataFrame,
                                max_allowed_null_types: int = 1) -> list:
     """Per-partition MixedNulls verdicts: distinct string
     null-representations per (partition, column) come from ``flagged``,
@@ -104,19 +121,15 @@ def mixed_nulls_partition_rows(per_part: dict, flagged: DataFrame | None,
     condition (distinct null types ≤ max) is then evaluated per
     partition — matching a per-slice reference run exactly.
 
-    ``flagged``: the shared :func:`flagged_string_values` frame (None
-    when the input has no string columns) — its MixedNulls rows are one
-    row per distinct (partition, column, null-representation), so the
-    per-(pid, col) row count IS the distinct-representation count and
-    the KB-text melt+regex scan is not repeated here."""
+    ``flagged``: :func:`flagged_string_values` of the shared value-count
+    table — its MixedNulls rows are one row per distinct (partition,
+    column, null-representation), so the per-(pid, col) row count IS the
+    distinct-representation count and the input is not melted again."""
     rows = []
-    repr_counts: dict = {}
-    if flagged is not None:
-        grouped = (flagged.filter(F.col("check") == "MixedNulls")
-                   .groupBy("__pid", "column")
-                   .agg(F.count(F.lit(1)).alias("n_reprs")))
-        for r in grouped.collect():
-            repr_counts[(r["__pid"], r["column"])] = r["n_reprs"]
+    grouped = (flagged.filter(F.col("check") == "MixedNulls")
+               .groupBy("__pid", "column")
+               .agg(F.count(F.lit(1)).alias("n_reprs")))
+    repr_counts = {(r["__pid"], r["column"]): r["n_reprs"] for r in grouped.collect()}
     cond_name = f"Number of different null types is less or equal to {max_allowed_null_types}"
     for pid, stats in sorted(per_part.items()):
         failing = {}
@@ -204,7 +217,7 @@ def conflicting_labels_partition_rows(df: DataFrame, feature_cols: list, label_c
     return rows
 
 
-def new_category_partition_rows(test_df: DataFrame, train_df: DataFrame, cat_cols: list,
+def new_category_partition_rows(counts: DataFrame, train_df: DataFrame, cat_cols: list,
                                 per_part: dict, max_ratio: float = 0.0,
                                 max_categories: int = 10_000) -> list:
     """Per-partition NewCategoryTrainTest verdicts (VERDICT r3 next-8):
@@ -215,10 +228,11 @@ def new_category_partition_rows(test_df: DataFrame, train_df: DataFrame, cat_col
     Scale shape: the train side reduces to its DISTINCT melted
     (column, value) pairs — bounded by the same cardinality gate as the
     batch check (columns above ``max_categories`` approx-distinct are
-    skipped) and broadcast; the test side is ONE melted pass with the
-    partition id in the group key, so the heavy reduction is map-side
-    local and only (pid, column) counter rows reach the driver. Each
-    partition's row count comes from ``per_part``, the test side's
+    skipped) and broadcast. The test side is its
+    :func:`partition_value_counts` table ``counts`` (every value of
+    ``cat_cols`` counted): no scan of the test rows here, and only
+    (pid, column) counter rows reach the driver. Each partition's row
+    count comes from ``per_part``, the test side's
     :func:`compute_column_stats_by_partition` rows.
     """
     from deepchecks_spark.core.checks import format_percent
@@ -235,15 +249,12 @@ def new_category_partition_rows(test_df: DataFrame, train_df: DataFrame, cat_col
         .filter(F.col("value").isNotNull()).distinct()
         .withColumn("__seen", F.lit(1))
     )
-    melted = (
-        melt(test_df.withColumn("__pid", F.spark_partition_id()), cols,
-             cast="string", keep=("__pid",))
-        .filter(F.col("value").isNotNull())
-    )
     per = (
-        melted.join(F.broadcast(train_vals), ["column", "value"], "left")
+        counts.filter(F.col("column").isin(*cols))
+        .join(F.broadcast(train_vals), ["column", "value"], "left")
         .groupBy("__pid", "column")
-        .agg(F.sum(F.when(F.col("__seen").isNull(), 1).otherwise(0)).alias("n_new"))
+        .agg(F.sum(F.when(F.col("__seen").isNull(), F.col("count")).otherwise(0))
+             .alias("n_new"))
         .collect()
     )
     totals = {pid: st.n_rows for pid, st in per_part.items()}
@@ -384,35 +395,34 @@ def samples_mix_partition_rows(test_df: DataFrame, train_df: DataFrame, cols: li
     return rows
 
 
-def drift_partition_rows(df: DataFrame, cat_cols: list, reference_hists: dict | None = None,
+def drift_partition_rows(counts: DataFrame, cat_cols: list, per_part: dict,
+                         reference_hists: dict | None = None,
                          max_psi: float = 0.2, max_categories: int = 10_000) -> list:
-    """Per-partition categorical drift verdicts (ROADMAP #2): ONE melted
-    pass aggregates (partition, column, value) counts, then each
-    partition's histogram is PSI-scored against a reference histogram —
-    by default the GLOBAL histogram of the same data (derived driver-side
-    from the per-partition counts, no second scan), which flags
-    anomalous shards: a partition whose distribution diverges from the
-    corpus (bad crawl segment, mis-partitioned ingest) FAILs while
-    healthy partitions PASS. Pass ``reference_hists`` (e.g. the previous
-    snapshot's histograms) for drift-against-history semantics.
+    """Per-partition categorical drift verdicts (ROADMAP #2): the
+    (partition, column, value) counts of ``cat_cols`` come from
+    ``counts``, the input's :func:`partition_value_counts` table, then
+    each partition's histogram is PSI-scored against a reference
+    histogram — by default the GLOBAL histogram of the same data
+    (derived driver-side from the per-partition counts, no second scan),
+    which flags anomalous shards: a partition whose distribution
+    diverges from the corpus (bad crawl segment, mis-partitioned ingest)
+    FAILs while healthy partitions PASS. Pass ``reference_hists`` (e.g.
+    the previous snapshot's histograms) for drift-against-history
+    semantics.
 
-    Scale shape: identical to the batch categorical-histogram pass plus
-    the partition id in the group key — mergeable partial counts, output
-    bounded by partitions × category cardinality (collect guarded by
-    ``max_categories`` per column like categorical_histograms).
+    Scale shape: mergeable partial counts, output bounded by partitions
+    × category cardinality (collect guarded by ``max_categories`` per
+    column like categorical_histograms; the partition count is that of
+    ``per_part``, the input's per-partition stats).
     """
     from deepchecks_spark.core.checks import format_number
     from deepchecks_spark.drift.kernels import psi_from_counts
 
     if not cat_cols:
         return []
-    melted = (
-        melt(df.withColumn("__pid", F.spark_partition_id()), cat_cols,
-             cast="string", keep=("__pid",))
-        .filter(F.col("value").isNotNull())
-    )
-    grouped = melted.groupBy("__pid", "column", "value").count()
-    n_parts = df.rdd.getNumPartitions()
+    grouped = (counts.filter(F.col("column").isin(*cat_cols))
+               .select("__pid", "column", "value", "count"))
+    n_parts = len(per_part)
     # Absolute driver-memory bound: the per-partition formula grows
     # linearly with partition count, so at corpus scale (thousands of
     # partitions) it would itself permit a multi-GB collect before the
@@ -450,83 +460,92 @@ def drift_partition_rows(df: DataFrame, cat_cols: list, reference_hists: dict | 
 # violation rows with partition lineage
 # ---------------------------------------------------------------------------
 
-def flagged_string_values(df: DataFrame, string_cols: list) -> DataFrame:
-    """(__pid, column, value, count, check) — every flagged string
-    value (MixedNulls null-representations / SpecialCharacters-only
-    values) per input partition, selective-filter-first so the melted
-    scan emits only offenders. Split out of :func:`violation_rows` so
-    the runner can compute the KB-text melt+regex pass ONCE and share
-    it between the violations table and the per-partition MixedNulls
-    verdicts (it was scanned twice before)."""
-    melted = melt(df.withColumn("__pid", F.spark_partition_id()), string_cols,
-                  keep=("__pid",)).filter(F.col("value").isNotNull())
-    is_null_repr = is_null_string_expr(F.col("value"))
-    is_special = is_special_only_expr(F.col("value"))
-    return (
-        melted.filter(is_null_repr | is_special)
-        .groupBy("__pid", "column", "value")
-        .count()
-        .withColumn(
-            "check",
-            F.when(is_null_string_expr(F.col("value")), F.lit("MixedNulls")).otherwise(
-                F.lit("SpecialCharacters")
-            ),
-        )
-    )
+def low_cardinality(cols: list, stats, max_distinct: int = 10_000) -> list:
+    """The columns of ``cols`` with at most ``max_distinct`` distinct
+    values, read from the exact ``distinct`` counts of ``stats`` (whole-
+    input ``ColumnStats``): the string columns StringMismatch covers,
+    whose every value :func:`partition_value_counts` must count."""
+    return [c for c in cols if stats.per_column[c]["distinct"] <= max_distinct]
 
 
-def violation_rows(df: DataFrame, string_cols: list, stats,
-                   flagged: DataFrame | None = None,
+def partition_value_counts(df: DataFrame, count_cols: list, flag_cols: list) -> DataFrame:
+    """(__pid, column, value, count, check) from ONE melted pass over
+    ``df``: per input partition, the count of every non-null value of
+    ``count_cols``, plus the flagged values only of the other
+    ``flag_cols`` (the string columns). ``check`` is the value's
+    :func:`~deepchecks_spark.functions.strings.string_flag_expr` flag in
+    a ``flag_cols`` column (MixedNulls, SpecialCharacters or null), and
+    null in any other column. Values are cast to string.
+
+    Scale design: a free-text column outside ``count_cols`` is filtered
+    to its offenders BEFORE the aggregation, so its shuffle carries a
+    tiny fraction of the input; the flag is evaluated per group, not per
+    row, for the counted columns. The runner persists this table once and
+    every per-value reader takes its rows from it: the flagged view
+    (:func:`flagged_string_values`), StringMismatch
+    (:func:`violation_rows`), the partition-drift histograms and the
+    new-category test side."""
+    cols = list(dict.fromkeys([*count_cols, *flag_cols]))
+    if not cols:
+        return local_frame(df.sparkSession, [], VALUE_COUNTS_SCHEMA)
+    melted = melt(df.withColumn("__pid", F.spark_partition_id()), cols,
+                  cast="string", keep=("__pid",)).filter(F.col("value").isNotNull())
+    flag = string_flag_expr(F.col("value"))
+    flag_only = [c for c in flag_cols if c not in count_cols]
+    if flag_only:
+        melted = melted.filter(~F.col("column").isin(*flag_only) | flag.isNotNull())
+    in_flag_cols = F.col("column").isin(*flag_cols) if flag_cols else F.lit(False)
+    return (melted.groupBy("__pid", "column", "value").count()
+            .withColumn("check", F.when(in_flag_cols, flag)))
+
+
+def flagged_string_values(counts: DataFrame) -> DataFrame:
+    """(__pid, column, value, count, check) — every flagged string value
+    (MixedNulls null-representations / SpecialCharacters-only values)
+    per input partition: the flagged rows of the
+    :func:`partition_value_counts` table ``counts``. Read by the
+    violations table and the per-partition MixedNulls verdicts."""
+    return counts.filter(F.col("check").isNotNull())
+
+
+def violation_rows(counts: DataFrame, string_cols: list, stats,
                    mismatch_max_distinct: int = 10_000) -> DataFrame:
     """(check, column, offending_value, count, percent, partition_id).
 
-    ``stats`` is the whole input's ``ColumnStats`` (``compute_column_stats``,
-    or the runner's merged stats): ``percent``'s denominator is its row
-    count, so no count job runs here.
+    ``counts`` is the input's :func:`partition_value_counts` table, with
+    ``string_cols`` flagged and every value of their
+    :func:`low_cardinality` columns counted; ``stats`` is the whole
+    input's ``ColumnStats`` (``compute_column_stats``, or the runner's
+    merged stats): ``percent``'s denominator is its row count, so no job
+    runs here until the frame is read.
 
-    Scale design: the MixedNulls/SpecialCharacters predicates are applied
-    BEFORE any aggregation — the melted scan emits only offending values,
-    so the shuffle carries a tiny fraction of the input no matter how big
-    the corpus is. StringMismatch needs per-distinct-value counts, which
-    is unbounded for free-text columns — so it is restricted to columns
-    whose exact distinct count in ``stats`` is ≤ ``mismatch_max_distinct``
-    (the reference caps the whole check at 1M sampled rows instead,
-    string_mismatch.py:64; a cardinality cap is the shuffle-safe analogue).
+    Scale design: the MixedNulls/SpecialCharacters rows are the flagged
+    view of ``counts``. StringMismatch needs per-distinct-value counts,
+    which is unbounded for free-text columns — so it is restricted to
+    columns whose exact distinct count in ``stats`` is ≤
+    ``mismatch_max_distinct`` (the reference caps the whole check at 1M
+    sampled rows instead, string_mismatch.py:64; a cardinality cap is
+    the shuffle-safe analogue).
     """
-    spark = df.sparkSession
-    if not string_cols:
-        return local_frame(spark, [], VIOLATIONS_SCHEMA)
-    n_rows = stats.n_rows
-
-    # selective filter FIRST, then the (cheap) per-partition aggregation
-    if flagged is None:
-        flagged = flagged_string_values(df, string_cols)
     base_cols = [
         F.col("check"),
         F.col("column"),
         F.col("value").alias("offending_value"),
         F.col("count"),
-        (F.col("count") / F.lit(n_rows)).alias("percent"),
+        (F.col("count") / F.lit(stats.n_rows)).alias("percent"),
         F.col("__pid").alias("partition_id"),
     ]
-    out = flagged.select(*base_cols)
+    out = flagged_string_values(counts).select(*base_cols)
 
     # StringMismatch on bounded-cardinality columns only
-    low_card = [c for c in string_cols
-                if stats.per_column[c]["distinct"] <= mismatch_max_distinct]
+    low_card = low_cardinality(string_cols, stats, mismatch_max_distinct)
     if low_card:
         from pyspark.sql import Window
 
-        counted = (
-            melt(df.withColumn("__pid", F.spark_partition_id()), low_card,
-                 keep=("__pid",))
-            .filter(F.col("value").isNotNull())
-            .groupBy("__pid", "column", "value")
-            .count()
-        )
         w = Window.partitionBy("column", "base")
         mismatched = (
-            counted.withColumn("base", baseform_expr(F.col("value"), allow_empty_result=False))
+            counts.filter(F.col("column").isin(*low_card))
+            .withColumn("base", baseform_expr(F.col("value"), allow_empty_result=False))
             .withColumn("n_variants", F.size(F.collect_set("value").over(w)))
             .filter(F.col("n_variants") > 1)
             .withColumn("check", F.lit("StringMismatch"))
@@ -594,7 +613,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
     stages, and the sections inside ``partition_verdicts``, are
     independent jobs over that cache submitted through ``run_jobs``.
     Their shared passes (per-partition stats, the merged global stats,
-    the flagged-string table) are single-flight through one ``Once``.
+    the value-count table) are single-flight through one ``Once``.
     Every stage finishes before a failure propagates, and only then is
     the cache released."""
     os.makedirs(output_dir, exist_ok=True)
@@ -633,6 +652,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
     ds = Dataset(df, label=label, cat_features=cat_features,
                  infer_categorical=cat_features is None)
     string_cols = [c for c in ds.columns if isinstance(ds.schema_of(c), T.StringType)]
+    cat_cols = list(ds.cat_features)
 
     from deepchecks_spark.checks.integrity import (
         IsSingleValue,
@@ -652,30 +672,36 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
     once = Once()
     _manifest_lock = threading.Lock()  # serialises the manifest file writes
 
-    def _flagged():
-        # the KB-text melt + regex scan is the heaviest string pass:
-        # compute its grouped offender table once, persisted, and share
-        # it between the violations table and the per-partition
-        # MixedNulls verdicts (two full scans before)
-        if not string_cols:
-            return None
-        return once("flagged", lambda: flagged_string_values(ds.df, string_cols).persist())
-
     def _per_part():
         # one grouped stats pass shared by partition_verdicts, metrics
-        # and the suite's global stats
+        # and the global stats
         return once("per_part", lambda: compute_column_stats_by_partition(
             ds.df, ds.columns))
 
     def _global_stats():
-        # the whole-input stats shared by the suite and the violations
-        # table, merged from the per-partition pass: only the exact
-        # distinct counts scan again
+        # the whole-input stats shared by the global verdicts, the
+        # StringMismatch gate and the violations table, merged from the
+        # per-partition pass: only the exact distinct counts scan again
         def merged():
             parts, distinct = run_jobs([_per_part, lambda: distinct_counts(ds.df, ds.columns)])
             return merge_column_stats(parts, ds.columns, distinct, ds.df.schema)
 
         return once("global", merged)
+
+    def _value_counts():
+        # the one melted (partition, column, value) pass: every value of
+        # the low-cardinality string columns and the categorical
+        # features, plus the other string columns' offenders. Persisted
+        # and materialised here, so the stages reading it concurrently
+        # never race to build the cache.
+        def build():
+            counts = partition_value_counts(
+                ds.df, low_cardinality(string_cols, _global_stats()) + cat_cols,
+                string_cols).persist()
+            counts.count()
+            return counts
+
+        return once("value_counts", build)
 
     def stage(name, fn):
         if manifest["stages"].get(name) == "done":
@@ -704,24 +730,11 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
                        if c.__class__.__module__.endswith("checks.performance")]
 
     def _global_verdicts():
-        from deepchecks_spark.core.suite import Suite
+        rows = stats_verdicts(ds, stats_checks, _global_stats())
+        if perf_checks:
+            from deepchecks_spark.core.suite import Suite
 
-        suite = Suite("runner integrity", *stats_checks, *perf_checks)
-        ctx = Context(train=ds)
-        ctx.seed_stats("train", _global_stats)
-        result = suite.run(ctx)
-        rows = []
-        for r in result.results:
-            if isinstance(r, CheckFailure):
-                rows.append((r.header, "<failure>", "ERROR", repr(r.exception)))
-                continue
-            if not r.conditions_results:
-                # condition-less checks (e.g. ConfusionMatrixReport,
-                # CalibrationScore without an added condition) still get a
-                # lineage row so the verdicts table records they computed
-                rows.append((r.header, "<computed>", "PASS", "check computed"))
-            for c in r.conditions_results:
-                rows.append((r.header, c.name, c.category.value, c.details))
+            rows += verdict_rows(Suite("runner model eval", *perf_checks).run(ds).results)
         out = local_frame(spark, rows, "check string, condition string, category string, details string")
         write_table(out, os.path.join(output_dir, "verdicts"))
 
@@ -732,7 +745,8 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         # order so the output table is deterministic
         sections = [
             lambda: (partition_verdicts(ds, stats_checks, _per_part())
-                     + mixed_nulls_partition_rows(_per_part(), _flagged())),
+                     + mixed_nulls_partition_rows(
+                         _per_part(), flagged_string_values(_value_counts()))),
         ]
         # key-identity duplicates per partition: web corpora key on url
         dup_cols = [c for c in ("url",) if c in ds.columns] or list(ds.columns)
@@ -740,9 +754,9 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
             ds.df, dup_cols, max_ratio=0.0))
         # per-partition categorical drift vs the global distribution
         # (flags anomalous shards); cat features only — bounded output
-        if ds.cat_features:
+        if cat_cols:
             sections.append(lambda: drift_partition_rows(
-                ds.df, list(ds.cat_features)))
+                _value_counts(), cat_cols, _per_part()))
         if ds.label_name:
             sections.append(lambda: conflicting_labels_partition_rows(
                 ds.df, [c for c in ds.features if c != ds.label_name],
@@ -757,9 +771,9 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
 
             def _ref_sections():
                 rows = []
-                if ds.cat_features:
+                if cat_cols:
                     rows += new_category_partition_rows(
-                        ds.df, ref_df, list(ds.cat_features), _per_part())
+                        _value_counts(), ref_df, cat_cols, _per_part())
                 rows += samples_mix_partition_rows(ds.df, ref_df, list(ds.columns))
                 return rows
 
@@ -771,7 +785,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         write_table(out, os.path.join(output_dir, "partition_verdicts"))
 
     def _violations():
-        out = violation_rows(ds.df, string_cols, _global_stats(), flagged=_flagged())
+        out = violation_rows(_value_counts(), string_cols, _global_stats())
         write_table(out, os.path.join(output_dir, "violations"))
 
     def _metrics():
@@ -911,9 +925,9 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         run_jobs([functools.partial(stage, n, fn) for n, fn in stages])
     finally:
         df.unpersist()
-        flagged = once.done().get("flagged")
-        if flagged is not None:
-            flagged.unpersist()
+        counts = once.done().get("value_counts")
+        if counts is not None:
+            counts.unpersist()
     return manifest
 
 

@@ -16,74 +16,39 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from deepchecks_spark.functions.columns import melt, quote_ident
-from deepchecks_spark.functions.strings import (
-    is_null_string_expr,
-    is_special_only_expr,
-    numeric_like_expr,
-)
+from deepchecks_spark.functions.strings import string_flag_expr
 from deepchecks_spark.io import local_frame
+from deepchecks_spark.stats import ColumnStats, _agg_exprs, _rows_to_stats, merge_column_stats
 
 
 @dataclass
 class IncrementalStats:
     """Mergeable per-column statistics accumulated across micro-batches.
 
-    Only algebraic statistics (count/null/sum/min/max/special/numeric-
-    like) are tracked — exactly the per-partition mergeable state the
-    batch pass tree-aggregates; distinct counts would need an HLL sketch
-    carried across batches, which Spark exposes via
-    ``approx_count_distinct`` per batch but not as a mergeable python
-    value, so they are intentionally absent here.
+    Each micro-batch runs the batch pass's fused aggregation
+    (``stats._agg_exprs``) and is folded in with
+    :func:`~deepchecks_spark.stats.merge_column_stats`, the rules that
+    merge the runner's per-partition stats: counts and the number-like /
+    special-only counters add, extremes and string-length bounds merge
+    exactly, avg / stddev / avg_len combine as moments. Distinct counts
+    are absent: the per-batch HLL sketch is not a mergeable python value
+    (the aggregation drops it).
     """
 
     n_rows: int = 0
     per_column: dict = field(default_factory=dict)
 
-    def merge_batch(self, batch: dict) -> None:
-        self.n_rows += batch.pop("__n_rows")
-        for key, v in batch.items():
-            stat, _, col = key.partition("::")
-            st = self.per_column.setdefault(col, {})
-            if v is None:
-                continue
-            if stat in ("n", "special_only", "numeric_like", "nan_count"):
-                st[stat] = st.get(stat, 0) + v
-            elif stat in ("min", "min_len"):
-                st[stat] = v if stat not in st else min(st[stat], v)
-            elif stat in ("max", "max_len"):
-                st[stat] = v if stat not in st else max(st[stat], v)
-            elif stat == "sum":
-                st[stat] = st.get(stat, 0.0) + v
+    def merge(self, batch: ColumnStats) -> None:
+        """Fold one micro-batch's :class:`ColumnStats` into the totals."""
+        parts = [batch] if not self.per_column else [
+            ColumnStats(self.n_rows, self.per_column), batch]
+        merged = merge_column_stats(dict(enumerate(parts)), list(batch.per_column))
+        self.n_rows, self.per_column = merged.n_rows, merged.per_column
 
     def percent_null(self, col: str) -> float:
-        n = self.per_column.get(col, {}).get("n", 0)
-        return (self.n_rows - n) / self.n_rows if self.n_rows else 0.0
-
-
-def _batch_exprs(df: DataFrame, columns: list) -> list:
-    exprs = [F.count(F.lit(1)).alias("__n_rows")]
-    for c in columns:
-        dt = df.schema[c].dataType
-        col = F.col(f"`{c}`")
-        exprs.append(F.count(col).alias(f"n::{c}"))
-        if isinstance(dt, T.StringType):
-            exprs += [
-                F.sum(is_special_only_expr(col).cast("long")).alias(f"special_only::{c}"),
-                F.sum(numeric_like_expr(col).cast("long")).alias(f"numeric_like::{c}"),
-                F.min(F.length(col)).alias(f"min_len::{c}"),
-                F.max(F.length(col)).alias(f"max_len::{c}"),
-            ]
-        elif isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                             T.FloatType, T.DoubleType)):
-            exprs += [
-                F.min(col).alias(f"min::{c}"),
-                F.max(col).alias(f"max::{c}"),
-                F.sum(col.cast("double")).alias(f"sum::{c}"),
-            ]
-    return exprs
+        return self.per_column.get(col, {}).get("percent_null", 0.0)
 
 
 def incremental_stats_query(stream_df: DataFrame, stats: IncrementalStats,
@@ -94,8 +59,8 @@ def incremental_stats_query(stream_df: DataFrame, stats: IncrementalStats,
     columns = columns or stream_df.columns
 
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
-        row = batch_df.agg(*_batch_exprs(batch_df, columns)).first()
-        stats.merge_batch(row.asDict())
+        row = batch_df.agg(*_agg_exprs(batch_df, columns, include_approx_distinct=False)).first()
+        stats.merge(_rows_to_stats(row.asDict(), columns))
 
     writer = stream_df.writeStream.outputMode("update").foreachBatch(_fold)
     if trigger_once:
@@ -158,7 +123,7 @@ class StreamingPsiMonitor:
             stream_df.withWatermark(time_col, watermark)
             .groupBy(
                 F.window(F.col(time_col), window_duration).alias("w"),
-                F.col(f"`{col}`").cast("string").alias("value"),
+                F.col(quote_ident(col)).cast("string").alias("value"),
             )
             .count()
         )
@@ -357,7 +322,7 @@ class StreamingDedupMonitor:
             stream_df.withWatermark(time_col, watermark)
             .groupBy(
                 F.window(F.col(time_col), window_duration).alias("w"),
-                *[F.col(f"`{c}`") for c in key_cols],
+                *[F.col(quote_ident(c)) for c in key_cols],
             )
             .count()
         )
@@ -367,7 +332,7 @@ class StreamingDedupMonitor:
             out = batch_df.select(
                 F.col("w.start").alias("w_start"),
                 F.date_format("w.start", "yyyy-MM-dd-HH-mm").alias("w_part"),
-                *[F.col(f"`{c}`") for c in key_cols],
+                *[F.col(quote_ident(c)) for c in key_cols],
                 F.col("count"),
                 F.lit(int(epoch_id)).alias("epoch"),
             )
@@ -597,8 +562,8 @@ class StreamingPerformanceMonitor:
         _warn_unresumable_fold(checkpoint_dir, self.state_path)
         for start in list(self._cells) + list(self._sums):  # restored state
             self._rescore(start)
-        y = F.col(f"`{self.label_col}`")
-        p = F.col(f"`{self.prediction_column}`")
+        y = F.col(quote_ident(self.label_col))
+        p = F.col(quote_ident(self.prediction_column))
         base = stream_df.filter(y.isNotNull() & p.isNotNull())
         win = F.window(F.col(time_col), window_duration).alias("w")
         if self.task == "regression":
@@ -1000,7 +965,7 @@ def stateful_column_monitor(stream_df: DataFrame, key_col: str, value_col: str):
 
     from deepchecks_spark.functions.strings import NULL_BASEFORMS, python_baseform
 
-    out_schema = f"{key_col} string, n_rows long, n_null_reprs long, n_special long"
+    out_schema = f"{quote_ident(key_col)} string, n_rows long, n_null_reprs long, n_special long"
     state_schema = "n_rows long, n_null_reprs long, n_special long"
 
     def _fn(key, pdf_iter, state: GroupState):
@@ -1023,8 +988,9 @@ def stateful_column_monitor(stream_df: DataFrame, key_col: str, value_col: str):
         )
 
     return (
-        stream_df.select(F.col(f"`{key_col}`").cast("string").alias(key_col), f"`{value_col}`")
-        .groupBy(key_col)
+        stream_df.select(F.col(quote_ident(key_col)).cast("string").alias(key_col),
+                          quote_ident(value_col))
+        .groupBy(F.col(quote_ident(key_col)))
         .applyInPandasWithState(
             _fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
@@ -1033,15 +999,12 @@ def stateful_column_monitor(stream_df: DataFrame, key_col: str, value_col: str):
 
 def streaming_violations(stream_df: DataFrame, string_cols: list) -> DataFrame:
     """Stateless streaming violation detector: emits (check, column,
-    offending_value) rows as data arrives — the same predicates as the
-    batch violations pass, so a row flags identically in both modes."""
-    melted = melt(stream_df, string_cols).filter(F.col("value").isNotNull())
-    return melted.filter(
-        is_null_string_expr(F.col("value")) | is_special_only_expr(F.col("value"))
-    ).select(
-        F.when(is_null_string_expr(F.col("value")), F.lit("MixedNulls"))
-        .otherwise(F.lit("SpecialCharacters"))
-        .alias("check"),
-        "column",
-        F.col("value").alias("offending_value"),
+    offending_value) rows as data arrives — the flag is the batch
+    violations table's expression (``string_flag_expr``), so a row flags
+    identically in both modes."""
+    flag = string_flag_expr(F.col("value"))
+    return (
+        melt(stream_df, string_cols)
+        .select(flag.alias("check"), "column", F.col("value").alias("offending_value"))
+        .filter(F.col("check").isNotNull())
     )

@@ -44,6 +44,7 @@ def test_melt_callers_round_trip_adversarial_column_names(spark, name):
         duplicates_partition_rows,
         flagged_string_values,
         new_category_partition_rows,
+        partition_value_counts,
         violation_rows,
     )
     from deepchecks_spark.stats import compute_column_stats, compute_column_stats_by_partition
@@ -57,18 +58,19 @@ def test_melt_callers_round_trip_adversarial_column_names(spark, name):
 
     assert {r["column"] for r in melt(df, [name]).collect()} == {name}
     assert set(categorical_histograms(df, [name])) == {name}
-    assert {r["column"] for r in flagged_string_values(df, [name]).collect()} == {name}
+    counts = partition_value_counts(df, [name], [name])
+    per_part = compute_column_stats_by_partition(df, [name])
+    assert {r["column"] for r in flagged_string_values(counts).collect()} == {name}
     assert {r["column"] for r in violation_rows(
-        df, [name], compute_column_stats(df, [name])).collect()} == {name}
+        counts, [name], compute_column_stats(df, [name])).collect()} == {name}
     assert {r["column"] for r in streaming_violations(df, [name]).collect()} == {name}
 
-    drift = drift_partition_rows(df, [name])
+    drift = drift_partition_rows(counts, [name], per_part)
     assert drift and all(r[2].startswith(f"PSI of {name} ") for r in drift)
     # a wrong label on both sides would still join, then be read back
     # under the real name as zero new values: the FAIL proves the label
     ref = spark.createDataFrame([("a",)], f"{quote_ident(name)} string")
-    new_cat = new_category_partition_rows(
-        df, ref, [name], compute_column_stats_by_partition(df, [name]))
+    new_cat = new_category_partition_rows(counts, ref, [name], per_part)
     assert new_cat and {r[3] for r in new_cat} == {"FAIL"}
     # partition 0 repeats "a"; partition 1 holds distinct values only
     dups = duplicates_partition_rows(df, [name])
@@ -157,7 +159,7 @@ def test_stats_sql_for_plain_names_matches_raw_backticks(spark):
 
 
 @pytest.mark.parametrize("module", ["runner.py", "stats.py", "checks/integrity.py", "dataset.py",
-                                    "checks/traintest.py", "drift/spark.py"])
+                                    "checks/traintest.py", "drift/spark.py", "streaming.py"])
 def test_no_raw_backtick_interpolation(module):
     # identifiers in SQL text go through quote_ident; a raw `{name}`
     # breaks on a name that holds a backtick

@@ -7,7 +7,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from deepchecks_spark.runner import run_job, violation_rows
+from deepchecks_spark.runner import (
+    low_cardinality,
+    partition_value_counts,
+    run_job,
+    violation_rows,
+)
+from deepchecks_spark.stats import compute_column_stats_by_partition
 
 
 @pytest.fixture(scope="module")
@@ -119,7 +125,6 @@ def test_partition_verdicts_submit_no_spark_job(spark, tmp_path, corpus_parquet)
         SpecialCharacters,
     )
     from deepchecks_spark.runner import partition_verdicts
-    from deepchecks_spark.stats import compute_column_stats_by_partition
 
     src = _with_mixed_column(spark, corpus_parquet, str(tmp_path / "mixed"))
     ds = Dataset(spark.read.parquet(src), cat_features=["lang"], infer_categorical=False)
@@ -138,6 +143,30 @@ def test_partition_verdicts_submit_no_spark_job(spark, tmp_path, corpus_parquet)
     assert {r[3] for r in rows if r[1] == "Mixed Data Types"} == {"PASS", "WARN"}
 
 
+def _flagged_string_values_scan(df, string_cols):
+    """flagged_string_values as it was when it melted the input itself:
+    (__pid, column, value, count, check) of every MixedNulls /
+    SpecialCharacters value per partition."""
+    from deepchecks_spark.functions.columns import melt
+    from deepchecks_spark.functions.strings import is_null_string_expr, is_special_only_expr
+
+    melted = melt(df.withColumn("__pid", F.spark_partition_id()), string_cols,
+                  keep=("__pid",)).filter(F.col("value").isNotNull())
+    is_null_repr = is_null_string_expr(F.col("value"))
+    is_special = is_special_only_expr(F.col("value"))
+    return (
+        melted.filter(is_null_repr | is_special)
+        .groupBy("__pid", "column", "value")
+        .count()
+        .withColumn(
+            "check",
+            F.when(is_null_string_expr(F.col("value")), F.lit("MixedNulls")).otherwise(
+                F.lit("SpecialCharacters")
+            ),
+        )
+    )
+
+
 def _violation_rows_before_held_stats(df, string_cols, mismatch_max_distinct=10_000):
     """violation_rows as it was when it counted the rows and gated
     StringMismatch on an HLL estimate itself: the oracle for the version
@@ -146,10 +175,9 @@ def _violation_rows_before_held_stats(df, string_cols, mismatch_max_distinct=10_
 
     from deepchecks_spark.functions.columns import melt, quote_ident
     from deepchecks_spark.functions.strings import baseform_expr
-    from deepchecks_spark.runner import flagged_string_values
 
     n_rows = df.count()
-    flagged = flagged_string_values(df, string_cols)
+    flagged = _flagged_string_values_scan(df, string_cols)
     base_cols = [
         F.col("check"),
         F.col("column"),
@@ -188,10 +216,104 @@ def test_violation_rows_from_held_stats_match_own_counts(spark, corpus_parquet):
 
     df = spark.read.parquet(corpus_parquet)
     cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
-    got = violation_rows(df, cols, compute_column_stats(df, cols)).collect()
+    stats = compute_column_stats(df, cols)
+    counts = partition_value_counts(df, low_cardinality(cols, stats), cols)
+    got = violation_rows(counts, cols, stats).collect()
     want = _violation_rows_before_held_stats(df, cols).collect()
     assert {r["check"] for r in got} >= {"MixedNulls", "StringMismatch"}
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def _value_counts_fixture(spark):
+    """3 partitions: an integer categorical column with nulls, a double
+    categorical column holding NaN (its string form reads as a null
+    representation, but it is no string column), a low-cardinality
+    string column with null representations, special-only values and
+    case/space variants, and a high-cardinality string column whose
+    offenders are a few of its values."""
+    rows = []
+    for i in range(600):
+        s = ["N/A", "null", "!!", "", "a", "A", "a ", "b%d" % (i % 3)][i % 8]
+        t = ["none", "??", "NULL"][i % 3] if i % 10 == 0 else "t%d" % i
+        rows.append((i % 7 if i % 11 else None, float("nan") if i % 13 == 0 else float(i % 3),
+                     s, t))
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+                                 "k int, d double, s string, t string")
+
+
+def _partition_value_scan(df, cols, counted=True):
+    """The melted (__pid, column, value[, count]) scan each reader ran
+    before the shared table: grouped counts (StringMismatch, drift), or
+    one row per value (the new-category test side, count 1 each)."""
+    from deepchecks_spark.functions.columns import melt
+
+    melted = (melt(df.withColumn("__pid", F.spark_partition_id()), cols,
+                   cast="string", keep=("__pid",))
+              .filter(F.col("value").isNotNull()))
+    if counted:
+        return melted.groupBy("__pid", "column", "value").count()
+    return melted.withColumn("count", F.lit(1).cast("long"))
+
+
+def test_shared_value_counts_match_per_reader_scans(spark):
+    # every reader of the one value-count table gets what its own melted
+    # scan gave: the flagged view, StringMismatch, drift and new categories
+    from deepchecks_spark.runner import (
+        drift_partition_rows,
+        flagged_string_values,
+        new_category_partition_rows,
+    )
+    from deepchecks_spark.stats import compute_column_stats
+
+    df = _value_counts_fixture(spark)
+    string_cols, cat_cols = ["s", "t"], ["k", "d", "s"]
+    stats = compute_column_stats(df)
+    per_part = compute_column_stats_by_partition(df)
+    low_card = low_cardinality(string_cols, stats, 20)
+    assert low_card == ["s"]
+    counts = partition_value_counts(df, low_card + cat_cols, string_cols)
+
+    def rows(frame):
+        return sorted((tuple(r) for r in frame.collect()), key=repr)
+
+    flagged = rows(flagged_string_values(counts))
+    assert flagged == rows(_flagged_string_values_scan(df, string_cols))
+    assert {(r[1], r[4]) for r in flagged} == {
+        ("s", "MixedNulls"), ("s", "SpecialCharacters"), ("t", "MixedNulls"),
+        ("t", "SpecialCharacters")}
+
+    got = rows(violation_rows(counts, string_cols, stats, mismatch_max_distinct=20))
+    assert got == rows(_violation_rows_before_held_stats(df, string_cols, 20))
+    assert {r[1] for r in got if r[0] == "StringMismatch"} == {"s"}
+
+    hists = _partition_value_scan(df, cat_cols)
+    assert rows(counts.filter(F.col("column").isin(*cat_cols))
+                .select("__pid", "column", "value", "count")) == rows(hists)
+    drift = drift_partition_rows(counts, cat_cols, per_part)
+    assert drift == drift_partition_rows(hists, cat_cols, per_part)
+    assert {r[2].split(" ")[2] for r in drift} == set(cat_cols)
+
+    ref = spark.createDataFrame([(1, 1.0, "a"), (2, 2.0, "A")], "k int, d double, s string")
+    new_cat = new_category_partition_rows(counts, ref, cat_cols, per_part)
+    assert new_cat == new_category_partition_rows(
+        _partition_value_scan(df, cat_cols, counted=False), ref, cat_cols, per_part)
+    assert len(new_cat) == 3 and {r[3] for r in new_cat} == {"FAIL"}
+
+
+def test_run_job_fetches_no_mixed_type_examples(spark, tmp_path, corpus_parquet):
+    # the global verdicts read MixedDataTypes' ratios from the merged
+    # stats; its example scans (checks/integrity.py) never run
+    src = _with_mixed_column(spark, corpus_parquet, str(tmp_path / "mixed"))
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    before = set(tracker.getJobIdsForGroup())
+    out = str(tmp_path / "out")
+    run_job(spark, src, out, cat_features=["lang"], resume=False)
+    names = [store.job(j).name() for j in set(tracker.getJobIdsForGroup()) - before]
+    assert names
+    assert not [n for n in names if "checks/integrity.py" in n], names
+    verdicts = spark.read.parquet(os.path.join(out, "verdicts")).collect()
+    assert [r["category"] for r in verdicts if r["check"] == "Mixed Data Types"] == ["WARN"]
 
 
 def test_resume_skips_completed_stages(spark, tmp_path, corpus_parquet):
@@ -322,7 +444,8 @@ def test_drift_partition_rows_flags_anomalous_shard(spark):
     data = healthy[:100] + healthy[100:] + [("b",)] * 100
     rdd = spark.sparkContext.parallelize(data, 3)
     df = spark.createDataFrame(rdd, "lang string")
-    rows = drift_partition_rows(df, ["lang"], max_psi=0.2)
+    rows = drift_partition_rows(partition_value_counts(df, ["lang"], []), ["lang"],
+                                compute_column_stats_by_partition(df, ["lang"]), max_psi=0.2)
     assert len(rows) == 3
     cats = [r[3] for r in sorted(rows)]
     assert cats.count("FAIL") == 1 and cats.count("PASS") == 2
@@ -352,8 +475,9 @@ def test_drift_partition_rows_external_reference(spark):
     df = spark.createDataFrame(rdd, "lang string")
     # vs a reference where 'a' dominates: the all-'a' partition matches
     # it (PASS), the all-'b' partition drifts hard (FAIL)
-    rows = drift_partition_rows(df, ["lang"], reference_hists={"lang": {"a": 99, "b": 1}},
-                                max_psi=0.2)
+    rows = drift_partition_rows(partition_value_counts(df, ["lang"], []), ["lang"],
+                                compute_column_stats_by_partition(df, ["lang"]),
+                                reference_hists={"lang": {"a": 99, "b": 1}}, max_psi=0.2)
     assert [r[3] for r in sorted(rows)] == ["PASS", "FAIL"]
 
 
@@ -400,14 +524,14 @@ def test_drift_partition_rows_absolute_collect_cap(spark, monkeypatch):
 
     monkeypatch.setattr(runner_mod, "ABS_DRIFT_COLLECT_CAP", 10)
     df = spark.range(0, 5000).selectExpr("cast(id % 97 as string) as c").repartition(4)
-    rows = runner_mod.drift_partition_rows(df, ["c"])
+    rows = runner_mod.drift_partition_rows(partition_value_counts(df, ["c"], []), ["c"],
+                                           compute_column_stats_by_partition(df, ["c"]))
     assert len(rows) == 1 and rows[0][3] == "ERROR"
     assert "cardinality gate" in rows[0][2]
 
 
 def test_new_category_partition_rows_sliced_parity(spark):
     from deepchecks_spark.runner import new_category_partition_rows
-    from deepchecks_spark.stats import compute_column_stats_by_partition
 
     # test side: 2 partitions — partition 0 only train-known categories,
     # partition 1 has 20% novel categories in column 'cat'
@@ -417,7 +541,8 @@ def test_new_category_partition_rows_sliced_parity(spark):
     rdd = spark.sparkContext.parallelize(part0 + part1, 2)
     test = spark.createDataFrame(rdd, "cat string")
     rows = new_category_partition_rows(
-        test, train, ["cat"], compute_column_stats_by_partition(test, ["cat"]), max_ratio=0.1)
+        partition_value_counts(test, ["cat"], []), train, ["cat"],
+        compute_column_stats_by_partition(test, ["cat"]), max_ratio=0.1)
     assert len(rows) == 2
     by_pid = {r[0]: r for r in rows}
     # sliced oracle: recompute each partition's ratio from its slice
@@ -440,14 +565,13 @@ def test_new_category_partition_rows_sliced_parity(spark):
 
 def test_new_category_partition_rows_respects_cardinality_gate(spark):
     from deepchecks_spark.runner import new_category_partition_rows
-    from deepchecks_spark.stats import compute_column_stats_by_partition
 
     train = spark.range(0, 50_000).selectExpr("cast(id as string) AS cat")
     test = spark.range(0, 100).selectExpr("cast(id + 1000000 as string) AS cat")
     # train cardinality above the gate → column skipped, no rows emitted
     rows = new_category_partition_rows(
-        test, train, ["cat"], compute_column_stats_by_partition(test, ["cat"]),
-        max_categories=1000)
+        partition_value_counts(test, ["cat"], []), train, ["cat"],
+        compute_column_stats_by_partition(test, ["cat"]), max_categories=1000)
     assert rows == []
 
 

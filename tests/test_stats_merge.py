@@ -253,21 +253,9 @@ def test_runner_suite_reads_merged_stats(spark, tmp_path, monkeypatch, n):
     assert len(expect) == 4
 
 
-def test_suite_run_rejects_arguments_beside_a_context(spark):
-    from deepchecks_spark.core.context import Context
-    from deepchecks_spark.core.suite import Suite
-    from deepchecks_spark.dataset import Dataset
-
-    ds = Dataset(spark.createDataFrame([(1,)], "x int"), cat_features=[])
-    with pytest.raises(ValueError, match="Context"):
-        Suite("s").run(Context(train=ds), test=ds)
-    with pytest.raises(ValueError, match="Context"):
-        Suite("s").run(Context(train=ds), feature_importance={"x": 1.0})
-
-
 def test_run_job_backticked_mixed_type_column(spark, tmp_path):
-    # MixedDataTypes fetches example values with a scan that names the
-    # column: a backtick in the name must not break its SQL
+    # MixedDataTypes' example scans name the column: a backtick in the
+    # name must not break their SQL
     from deepchecks_spark.runner import run_job
 
     name = "a`b"
@@ -281,6 +269,16 @@ def test_run_job_backticked_mixed_type_column(spark, tmp_path):
     assert {r[2] for r in rows} <= {"PASS", "WARN", "FAIL"}, rows
     mixed = [r for r in rows if r[0] == "Mixed Data Types"]
     assert mixed and mixed[0][2] == "WARN" and name in mixed[0][3]
+    # the runner reads no examples; a suite run fetches them by that name
+    from deepchecks_spark.checks.integrity import MixedDataTypes
+    from deepchecks_spark.core.suite import Suite
+    from deepchecks_spark.dataset import Dataset
+
+    result = Suite("s", MixedDataTypes()).run(Dataset(spark.read.parquet(path))).results[0]
+    examples = result.value[name]
+    assert len(examples["numbers_examples"]) == len(examples["strings_examples"]) == 3
+    assert set(examples["numbers_examples"]) <= set(values[95:])
+    assert set(examples["strings_examples"]) <= set(values[:95])
 
 
 # -- plan stability ------------------------------------------------------------

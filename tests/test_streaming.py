@@ -21,25 +21,46 @@ def stream_dir(tmp_path_factory, spark):
     return path
 
 
-def test_incremental_stats_match_batch(spark, stream_dir):
-    batch = spark.read.parquet(stream_dir)
+def test_incremental_stats_match_batch(spark, stream_dir, tmp_path):
+    from pyspark.sql import functions as F
+
+    from deepchecks_spark.stats import compute_column_stats
+
+    # a numeric column whose name holds a dot and a backtick rides along
+    num = "text.len`n"
+    src = str(tmp_path / "in")
+    spark.read.parquet(stream_dir).withColumn(num, F.length("text") / 7) \
+        .write.parquet(src)
+    batch = spark.read.parquet(src)
     stream = (
         spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
-        .parquet(stream_dir)
+        .parquet(src)
     )
+    columns = ["url", "lang", "text", num]
     stats = IncrementalStats()
-    q = incremental_stats_query(stream, stats, columns=["url", "lang", "text"])
+    q = incremental_stats_query(stream, stats, columns=columns)
     q.processAllAvailable()
+    n_batches = len(q.recentProgress)
     q.stop()
+    assert n_batches > 1
     assert stats.n_rows == batch.count()
     # incremental fold equals the batch aggregate
-    from pyspark.sql import functions as F
-
     want_n_lang = batch.filter(F.col("lang").isNotNull()).count()
     assert stats.per_column["lang"]["n"] == want_n_lang
     assert stats.per_column["text"]["max_len"] == batch.agg(F.max(F.length("text"))).first()[0]
     assert stats.percent_null("lang") == pytest.approx(1 - want_n_lang / stats.n_rows)
+    # ... and every statistic equals the batch pass over the same rows
+    want = compute_column_stats(batch, columns)
+    for c in columns:
+        got_c, want_c = stats.per_column[c], want.per_column[c]
+        assert set(got_c) == set(want_c) - {"distinct"}, c
+        for stat in ("n", "min", "max", "min_len", "max_len"):
+            assert got_c.get(stat) == want_c.get(stat), (c, stat)
+        for stat in ("avg", "avg_len"):
+            if stat in want_c:
+                assert got_c[stat] == pytest.approx(want_c[stat], rel=1e-9, abs=1e-9), (c, stat)
+    assert stats.per_column[num]["max"] > stats.per_column[num]["min"] >= 0
 
 
 def test_streaming_violations_match_batch(spark, stream_dir):
@@ -54,11 +75,13 @@ def test_streaming_violations_match_batch(spark, stream_dir):
     q.stop()
     got = spark.sql("SELECT * FROM violations_out").collect()
     # batch twin over the same data
-    from deepchecks_spark.runner import violation_rows
+    from deepchecks_spark.runner import low_cardinality, partition_value_counts, violation_rows
     from deepchecks_spark.stats import compute_column_stats
 
-    want = violation_rows(batch, ["lang", "url"],
-                          compute_column_stats(batch, ["lang", "url"])).collect()
+    cols = ["lang", "url"]
+    batch_stats = compute_column_stats(batch, cols)
+    counts = partition_value_counts(batch, low_cardinality(cols, batch_stats), cols)
+    want = violation_rows(counts, cols, batch_stats).collect()
     want_total = sum(r["count"] for r in want if r["check"] == "MixedNulls")
     got_total = sum(1 for r in got if r["check"] == "MixedNulls")
     assert got_total == want_total > 0
