@@ -308,7 +308,7 @@ def validate_constraints_by_partition(df: DataFrame, constraints: list) -> DataF
     can still collide across partitions — so asking for them per
     partition would silently change their meaning; use
     :func:`validate_constraints` (global) or the runner's
-    ``duplicates_partition_rows`` (per-partition key identity) instead.
+    ``duplicates_partition_values`` (per-partition key identity) instead.
 
     Scale shape: ONE fused ``groupBy(spark_partition_id())`` over one
     scan — map-side the group key is constant per task, so the partial

@@ -26,7 +26,6 @@ from deepchecks_spark.functions.columns import melt, quote_ident
 from deepchecks_spark.functions.strings import (
     NULL_BASEFORMS,
     baseform_expr,
-    is_null_string_expr,
     is_special_only_expr,
     numeric_like_expr,
 )
@@ -183,11 +182,9 @@ class MixedNulls(SingleDatasetCheck):
         ds = ctx.data(kind)
         cols = _select_cols(ds, self.columns, self.ignore_columns)
         df, stats = self._effective_data(ctx, kind)
-        n_rows = stats.n_rows
-        value = {"n_samples": n_rows, "columns": {c: {} for c in cols}}
-
+        rows = []
         str_cols = [c for c in cols if isinstance(ds.schema_of(c), T.StringType)]
-        if str_cols and n_rows:
+        if str_cols and stats.n_rows:
             melted = melt(df, str_cols)
             bf = baseform_expr(F.col("value"), allow_empty_result=False)
             rows = (
@@ -196,12 +193,21 @@ class MixedNulls(SingleDatasetCheck):
                 .count()
                 .collect()
             )
-            for r in rows:
-                key = '"%s"' % r["value"]  # repr with double quotes, reference :126
-                value["columns"][r["column"]][key] = {
-                    "count": r["count"],
-                    "percent": r["count"] / n_rows,
-                }
+        return self.value_from_counts(cols, stats, rows), None
+
+    @staticmethod
+    def value_from_counts(cols, stats, null_strings) -> dict:
+        """The value over ``cols`` from each distinct null-representation
+        string's count (``null_strings``: rows of column, value, count)
+        and the null / NaN counts of ``stats``. No Spark job."""
+        n_rows = stats.n_rows
+        value = {"n_samples": n_rows, "columns": {c: {} for c in cols}}
+        for r in null_strings:
+            key = '"%s"' % r["value"]  # repr with double quotes, reference :126
+            value["columns"][r["column"]][key] = {
+                "count": r["count"],
+                "percent": r["count"] / n_rows,
+            }
         for c in cols:
             st = stats.per_column[c]
             if st["null_count"] > 0:
@@ -214,7 +220,7 @@ class MixedNulls(SingleDatasetCheck):
                     "count": st["nan_count"],
                     "percent": st["nan_count"] / n_rows,
                 }
-        return value, None
+        return value
 
     def add_condition_different_nulls_less_equal_to(self, max_allowed_null_types: int = 1):
         def condition(result):

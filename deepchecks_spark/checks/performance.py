@@ -19,9 +19,9 @@ from deepchecks_spark.core.checks import (
     SingleDatasetCheck,
     TrainTestCheck,
     format_number,
-    get_condition_passed_message,
 )
 from deepchecks_spark.core.result import ConditionCategory, ConditionResult
+from deepchecks_spark.functions.columns import quote_ident
 
 SUPPORTED_SCORERS = ("accuracy", "f1_weighted", "precision_macro", "recall_macro")
 REGRESSION_SCORERS = ("mae", "mse", "rmse", "r2")
@@ -163,11 +163,11 @@ def roc_score_histogram(df, label_col: str, probability_columns: dict,
     """(class, score) → (n_pos, n) histogram for every class in one
     melted pass: explode each row into per-class (cls, score, is_pos)
     triples, single groupBy (plan-pinned: one scan, one Exchange)."""
-    y = F.col(f"`{label_col}`")
+    y = F.col(quote_ident(label_col))
     classes = [c for c in probability_columns if c not in excluded_classes]
     entries = []
     for i, c in enumerate(classes):
-        score = F.col(f"`{probability_columns[c]}`").cast("double")
+        score = F.col(quote_ident(probability_columns[c])).cast("double")
         if n_bins:
             score = F.round(score * n_bins) / n_bins
         entries.append(F.struct(
@@ -221,8 +221,8 @@ class SingleDatasetPerformance(SingleDatasetCheck):
         if ds.label_name is None:
             raise ValueError("SingleDatasetPerformance requires a label column")
         df = self._effective_df(ctx, kind)
-        y = F.col(f"`{ds.label_name}`")
-        p = F.col(f"`{self.prediction_column}`")
+        y = F.col(quote_ident(ds.label_name))
+        p = F.col(quote_ident(self.prediction_column))
         pairs = df.filter(y.isNotNull() & p.isNotNull()).select(
             y.alias("__y"), p.alias("__p"))
         if self._task == "regression":
@@ -315,8 +315,8 @@ class ConfusionMatrixReport(SingleDatasetCheck):
         if ds.label_name is None:
             raise ValueError("ConfusionMatrixReport requires a label column")
         df = self._effective_df(ctx, kind)
-        y = F.col(f"`{ds.label_name}`")
-        p = F.col(f"`{self.prediction_column}`")
+        y = F.col(quote_ident(ds.label_name))
+        p = F.col(quote_ident(self.prediction_column))
         pairs = df.filter(y.isNotNull() & p.isNotNull()).select(
             y.alias("__y"), p.alias("__p"))
         cells = collect_confusion_cells(pairs, self.MAX_CONFUSION_CELLS, self.name())
@@ -413,8 +413,8 @@ class TrainTestPerformance(TrainTestCheck):
         sides = []
         for kind, tag in (("train", "Train"), ("test", "Test")):
             df = self._effective_df(ctx, kind)
-            y = F.col(f"`{label}`")
-            p = F.col(f"`{self.prediction_column}`")
+            y = F.col(quote_ident(label))
+            p = F.col(quote_ident(self.prediction_column))
             sides.append(
                 df.filter(y.isNotNull() & p.isNotNull())
                 .select(F.lit(tag).alias("__ds"), y.alias("__y"), p.alias("__p"))
@@ -555,7 +555,7 @@ def quantile_bin_exprs(df, cols: list, n_bins: int,
             edges_by_col[c] = sorted(set(qs))
 
     def bin_expr(c):
-        col = F.col(f"`{c}`")
+        col = F.col(quote_ident(c))
         if c in numeric_cols:
             edges = edges_by_col.get(c, [])
             if not edges:
@@ -623,8 +623,8 @@ class PerformanceBias(SingleDatasetCheck):
         bin_cols = [self.protected_feature] + (
             [self.control_feature] if self.control_feature else [])
         exprs = quantile_bin_exprs(df, bin_cols, self.max_bins)
-        y = F.col(f"`{ds.label_name}`")
-        p = F.col(f"`{self.prediction_column}`")
+        y = F.col(quote_ident(ds.label_name))
+        p = F.col(quote_ident(self.prediction_column))
         grouped = (
             df.filter(y.isNotNull() & p.isNotNull())
             .groupBy(*[exprs[c].alias(f"__g_{i}") for i, c in enumerate(bin_cols)],
@@ -754,11 +754,11 @@ class MultiModelPerformanceReport(SingleDatasetCheck):
         if ds.label_name is None:
             raise ValueError("MultiModelPerformanceReport requires a label column")
         df = self._effective_df(ctx, kind)
-        y = F.col(f"`{ds.label_name}`")
+        y = F.col(quote_ident(ds.label_name))
         models = sorted(self.prediction_columns, key=str)
         entries = [
             F.struct(F.lit(str(m)).alias("mdl"),
-                     F.col(f"`{self.prediction_columns[m]}`").alias("p"))
+                     F.col(quote_ident(self.prediction_columns[m])).alias("p"))
             for m in models
         ]
         grouped = (
@@ -823,8 +823,8 @@ class RegressionErrorDistribution(SingleDatasetCheck):
         if ds.label_name is None:
             raise ValueError("RegressionErrorDistribution requires a label column")
         df = self._effective_df(ctx, kind)
-        y = F.col(f"`{ds.label_name}`").cast("double")
-        p = F.col(f"`{self.prediction_column}`").cast("double")
+        y = F.col(quote_ident(ds.label_name)).cast("double")
+        p = F.col(quote_ident(self.prediction_column)).cast("double")
         d = (y - p).alias("__d")
         pairs = df.filter(y.isNotNull() & p.isNotNull()).select(d)
         dd = F.col("__d")
@@ -971,8 +971,8 @@ class SimpleModelComparison(TrainTestCheck):
             raise ValueError("SimpleModelComparison requires a label column")
         train_df = self._effective_df(ctx, "train")
         test_df = self._effective_df(ctx, "test")
-        y = F.col(f"`{label}`")
-        p = F.col(f"`{self.prediction_column}`")
+        y = F.col(quote_ident(label))
+        p = F.col(quote_ident(self.prediction_column))
         # majority class from the TRAIN label histogram (the reference
         # fits the dummy on train), scored on TEST
         hist_rows = (train_df.filter(y.isNotNull())
@@ -1076,9 +1076,9 @@ class SimpleModelComparison(TrainTestCheck):
                 f"{self.name()}: strategy 'tree' needs at least one numeric "
                 "feature column (categorical encoding is not supported in the "
                 "predictions-column engine)")
-        y = F.col(f"`{label}`")
+        y = F.col(quote_ident(label))
         fit_df = train_df.filter(y.isNotNull()).select(
-            *[F.col(f"`{c}`").cast("double").alias(c) for c in feats],
+            *[F.col(quote_ident(c)).cast("double").alias(c) for c in feats],
             y.alias("__y"))
         total = fit_df.count()
         if total > self.tree_fit_samples:
@@ -1105,7 +1105,7 @@ class SimpleModelComparison(TrainTestCheck):
             if node.left is None:
                 return F.lit(classes[int(np.argmax(node.value))])
             name = feats[node.feature]
-            raw = F.col(f"`{name}`").cast("double")
+            raw = F.col(quote_ident(name)).cast("double")
             # NULL **and NaN** route to the mean (the fit's fillna sees
             # both as missing; Spark's NaN > everything would otherwise
             # send NaN rows down the right branch unconditionally)
@@ -1289,14 +1289,14 @@ class CalibrationScore(SingleDatasetCheck):
         if ds.label_name is None:
             raise ValueError("CalibrationScore requires a label column")
         df = self._effective_df(ctx, kind)
-        y = F.col(f"`{ds.label_name}`")
+        y = F.col(quote_ident(ds.label_name))
         try:
             classes = sorted(self.probability_columns)
         except TypeError:
             classes = sorted(self.probability_columns, key=str)
         exprs = []
         for i, c in enumerate(classes):
-            p = F.col(f"`{self.probability_columns[c]}`").cast("double")
+            p = F.col(quote_ident(self.probability_columns[c])).cast("double")
             ind = (y == F.lit(c)).cast("double")
             exprs.append(F.avg(F.pow(p - ind, F.lit(2))).alias(f"__b_{i}"))
         row = df.filter(y.isNotNull()).agg(*exprs).first()
@@ -1410,8 +1410,8 @@ class WeakSegmentsPerformance(SingleDatasetCheck):
                 cat_top_values[c] = vals[: self.max_categories]
         exprs = quantile_bin_exprs(df, cands, self.n_bins, cat_top_values)
         bin_cols = [f"__b_{i}" for i in range(len(cands))]
-        y = F.col(f"`{ds.label_name}`")
-        p = F.col(f"`{self.prediction_column}`")
+        y = F.col(quote_ident(ds.label_name))
+        p = F.col(quote_ident(self.prediction_column))
         prep = df.filter(y.isNotNull() & p.isNotNull()).select(
             *[exprs[c].alias(b) for c, b in zip(cands, bin_cols)],
             (y == p).cast("long").alias("__correct"),
@@ -1510,12 +1510,12 @@ def ece_bin_frame(df, label_col: str, probability_columns: dict,
     """The ONE bounded aggregation behind ExpectedCalibrationError:
     n_bins rows of (bin, n, avg_confidence, accuracy), map-side
     combinable. Exposed for the physical-plan pins."""
-    y = F.col(f"`{label_col}`")
+    y = F.col(quote_ident(label_col))
     try:
         classes = sorted(probability_columns)
     except TypeError:
         classes = sorted(probability_columns, key=str)
-    probs = [F.col(f"`{probability_columns[c]}`").cast("double")
+    probs = [F.col(quote_ident(probability_columns[c])).cast("double")
              for c in classes]
     conf = probs[0] if len(probs) == 1 else F.greatest(*probs)
     # argmax with deterministic tie-break: first class in sorted order
@@ -1542,12 +1542,12 @@ def confident_joint_frame(df, label_col: str, probability_columns: dict,
     """LabelNoiseEstimate's pass 2: the ≤ n_classes² confident-joint
     cell aggregation (thresholds baked in as plan literals). Exposed
     for the physical-plan pins."""
-    y = F.col(f"`{label_col}`")
+    y = F.col(quote_ident(label_col))
     try:
         classes = sorted(probability_columns)
     except TypeError:
         classes = sorted(probability_columns, key=str)
-    probs = {c: F.col(f"`{probability_columns[c]}`").cast("double")
+    probs = {c: F.col(quote_ident(probability_columns[c])).cast("double")
              for c in classes}
     masked = [F.when(probs[c] >= F.lit(thresholds[c]), probs[c])
               for c in classes if thresholds[c] is not None]
@@ -1671,12 +1671,12 @@ class LabelNoiseEstimate(SingleDatasetCheck):
         if ds.label_name is None:
             raise ValueError("LabelNoiseEstimate requires a label column")
         df = self._effective_df(ctx, kind)
-        y = F.col(f"`{ds.label_name}`")
+        y = F.col(quote_ident(ds.label_name))
         try:
             classes = sorted(self.probability_columns)
         except TypeError:
             classes = sorted(self.probability_columns, key=str)
-        probs = {c: F.col(f"`{self.probability_columns[c]}`").cast("double")
+        probs = {c: F.col(quote_ident(self.probability_columns[c])).cast("double")
                  for c in classes}
         labeled = df.filter(y.isNotNull())
         if self.thresholds is None:

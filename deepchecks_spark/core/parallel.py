@@ -6,7 +6,8 @@ one single-flight memo.
   table scanned as ONE task does not run on a single core. At real
   scale it is a no-op (checked, never an unconditional shuffle).
 * ``run_jobs`` (guide §2.6) submits independent Spark jobs side by
-  side, so one job's scheduler ramp-up/tail back-fills the others'.
+  side, so one job's scheduler ramp-up/tail back-fills the others';
+  each carries its caller's job tags (``job_tag``) and job group.
 * ``Once`` computes a shared pass (fused stats, the runner's
   per-partition stats and flagged-string table) once per key, however
   many concurrent jobs ask for it.
@@ -17,8 +18,11 @@ from __future__ import annotations
 import logging
 import threading
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 logger = logging.getLogger(__name__)
 
@@ -65,8 +69,37 @@ def run_jobs(fns) -> list:
     if len(fns) <= 1:
         return [fn() for fn in fns]
     with ThreadPoolExecutor(max_workers=min(len(fns), MAX_JOBS)) as pool:
-        futures = [pool.submit(fn) for fn in fns]
+        futures = [pool.submit(_inheriting(fn)) for fn in fns]
     return [f.result() for f in futures]
+
+
+def _inheriting(fn):
+    """``fn`` under its own copy of the caller's Spark local properties
+    (job tags), which a pool thread lacks. Only the copy runs inside
+    ``inheritable_thread_target``: PySpark names a job after the caller
+    of the outermost pyspark frame, which would otherwise be the pool."""
+    if not SparkContext._active_spark_context:
+        return fn
+    inherit = inheritable_thread_target(SparkSession.active())(lambda: None)
+
+    def run():
+        inherit()
+        return fn()
+
+    return run
+
+
+@contextmanager
+def job_tag(sc, tag: str):
+    """Tag the block's Spark jobs (AQE's stage jobs too) with ``tag``,
+    then drop it: run_jobs runs a lone callable in its caller's thread.
+    The caller's job group is left alone, so its ``cancelJobGroup``
+    still reaches these jobs."""
+    sc.addJobTag(tag)
+    try:
+        yield
+    finally:
+        sc.removeJobTag(tag)
 
 
 class Once:

@@ -17,15 +17,24 @@ with snapshot-pinned checkpoint/resume: a manifest records the input
 fingerprint and completed stages; re-running with the same input skips
 completed stages, a changed input invalidates them.
 
-Stats checks have one evaluator, :func:`stats_verdicts`: the global
-verdicts apply it to the global stats, the per-partition verdicts to
-each partition's stats, so neither submits a Spark job. The global
-stats merge the one per-partition stats pass with the exact distinct
-counts, and also serve the violations table (its row count and
-StringMismatch cardinality gate). The melted (partition, column, value)
-counts are one table too, :func:`partition_value_counts`: the flagged
-view, StringMismatch, partition drift and the new-category test side
-all read it, so no section melts the input itself.
+Every verdict row but partition drift's comes from one evaluator,
+:func:`evaluate`: a check's conditions run over its value through
+``CheckResult.process_conditions``, as in a suite, and
+:func:`verdict_rows` formats the results. ``run_job`` declares every
+check and condition the runner applies in one place (the runner-only
+policies through :func:`duplicates_check` and
+:func:`performance_check`), so its thresholds and verdict text are the
+checks' own. The stats checks' values come from the merged global
+stats and from each partition's stats (``value_from_stats``, no Spark
+job); each other per-partition section computes only each partition's
+value, in its check's value shape, and :func:`partition_rows` turns
+those values into rows. The global stats merge the one per-partition
+stats pass with the exact distinct counts, and also serve the
+violations table (its row count and StringMismatch cardinality gate). The melted (partition, column, value) counts are one
+table too, :func:`partition_value_counts`: the flagged view,
+MixedNulls, StringMismatch, partition drift and the new-category test
+side all read it, so no section melts the input itself. Every Spark
+job carries a ``runner.<stage>[.<section>]`` job tag.
 
 Run via:  spark-submit --py-files dist/deepchecks_spark.zip -m ...  or
           python -m deepchecks_spark.runner --input ... --output ...
@@ -44,9 +53,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from deepchecks_spark.core.checks import get_condition_passed_message
-from deepchecks_spark.core.parallel import Once, run_jobs, spread_input
-from deepchecks_spark.core.result import CheckFailure, CheckResult
+from deepchecks_spark.core.checks import format_number, format_percent
+from deepchecks_spark.core.parallel import Once, job_tag, run_jobs, spread_input
+from deepchecks_spark.core.result import (
+    CheckFailure,
+    CheckResult,
+    ConditionCategory,
+    ConditionResult,
+)
 from deepchecks_spark.dataset import Dataset
 from deepchecks_spark.functions.columns import melt, quote_ident
 from deepchecks_spark.functions.strings import baseform_expr, string_flag_expr
@@ -85,75 +99,96 @@ def verdict_rows(results: list) -> list:
     return rows
 
 
-def stats_verdicts(ds: Dataset, checks: list, stats) -> list:
-    """:func:`verdict_rows` of each stats-driven check over ``stats`` (a
-    ``ColumnStats``): the value is ``value_from_stats(ds, stats)``
-    (``checks`` are :class:`~deepchecks_spark.core.checks.StatsCheck`
-    instances) and the conditions run through
-    ``CheckResult.process_conditions``, as in a suite. No Spark job."""
-    results = []
-    for check in checks:
-        try:
-            result = CheckResult(check.value_from_stats(ds, stats), check.header(), check)
-        except Exception as exc:  # noqa: BLE001 — per-check isolation, as in Suite.run
-            results.append(CheckFailure(check, exc, check.header()))
-            continue
-        result.process_conditions()
-        results.append(result)
-    return verdict_rows(results)
+def evaluate(check, value_step, *args):
+    """The runner's one evaluator: ``check``'s conditions over the value
+    ``value_step(*args)``, as in a suite; a raising step is a
+    :class:`CheckFailure`."""
+    try:
+        result = CheckResult(value_step(*args), check.header(), check)
+    except Exception as exc:  # noqa: BLE001 — per-check isolation, as in Suite.run
+        return CheckFailure(check, exc, check.header())
+    result.process_conditions()
+    return result
 
 
-def partition_verdicts(ds: Dataset, checks: list, per_part: dict) -> list:
-    """:func:`stats_verdicts` on every input partition's own statistics
-    (``per_part``: the ONE grouped aggregation pass for all partitions ×
-    all columns; reference parity = running deepchecks on each
-    partition's pandas slice, FIXTURES.md §F3), each row prefixed with
-    its partition id. Submits no Spark job."""
-    return [(pid, *row) for pid, stats in sorted(per_part.items())
-            for row in stats_verdicts(ds, checks, stats)]
+def partition_rows(check, values: dict, value_step=None) -> list:
+    """(partition_id, check, condition, category, details) rows of
+    ``check`` on every input partition: ``values`` maps each partition
+    id to the check's value there, or to what ``value_step`` turns into
+    it (for a stats check: its stats, and ``value_from_stats``). Parity:
+    each partition's rows equal the check's run on that partition's
+    slice alone (FIXTURES.md §F3). A partition whose step raises gets
+    the ``<failure>`` row."""
+    step = value_step or (lambda value: value)
+    return [(pid, *row) for pid, value in sorted(values.items())
+            for row in verdict_rows([evaluate(check, step, value)])]
 
 
-def mixed_nulls_partition_rows(per_part: dict, flagged: DataFrame,
-                               max_allowed_null_types: int = 1) -> list:
-    """Per-partition MixedNulls verdicts: distinct string
-    null-representations per (partition, column) come from ``flagged``,
-    real-null presence from the per-partition stats ``per_part``. The
-    condition (distinct null types ≤ max) is then evaluated per
-    partition — matching a per-slice reference run exactly.
-
-    ``flagged``: :func:`flagged_string_values` of the shared value-count
-    table — its MixedNulls rows are one row per distinct (partition,
-    column, null-representation), so the per-(pid, col) row count IS the
-    distinct-representation count and the input is not melted again."""
-    rows = []
-    grouped = (flagged.filter(F.col("check") == "MixedNulls")
-               .groupBy("__pid", "column")
-               .agg(F.count(F.lit(1)).alias("n_reprs")))
-    repr_counts = {(r["__pid"], r["column"]): r["n_reprs"] for r in grouped.collect()}
-    cond_name = f"Number of different null types is less or equal to {max_allowed_null_types}"
-    for pid, stats in sorted(per_part.items()):
-        failing = {}
-        for col, st in stats.per_column.items():
-            n_types = repr_counts.get((pid, col), 0)
-            if st.get("null_count", 0) > 0:
-                n_types += 1
-            if st.get("nan_count"):
-                n_types += 1
-            if n_types > max_allowed_null_types:
-                failing[col] = n_types
-        if failing:
-            rows.append((pid, "Mixed Nulls", cond_name, "FAIL",
-                         f"Found {len(failing)} out of {len(stats.per_column)} columns with amount of "
-                         f"null types above threshold: {failing}"))
-        else:
-            rows.append((pid, "Mixed Nulls", cond_name, "PASS",
-                         get_condition_passed_message(stats.per_column)))
-    return rows
+def duplicate_ratio_at_most(ratio: float, max_ratio: float) -> ConditionResult:
+    """DataDuplicates' ratio condition, but FAIL (the builder's is WARN)
+    above ``max_ratio``: a partition that breaks key identity fails."""
+    category = ConditionCategory.FAIL if ratio > max_ratio else ConditionCategory.PASS
+    return ConditionResult(category, f"Found {format_percent(ratio)} duplicate data")
 
 
-def duplicates_partition_rows(df: DataFrame, cols: list, max_ratio: float = 0.0) -> list:
-    """Per-partition DataDuplicates verdicts (ROADMAP #2): duplicate
-    ratio within each input partition, condition evaluated per partition.
+def mae_within(value: dict, factor: float) -> ConditionResult:
+    """FAIL when the partition's MAE exceeds ``factor`` × the global MAE:
+    regression errors have no natural absolute threshold."""
+    mae, global_mae = value["mae"], value["global_mae"]
+    if global_mae and mae > factor * global_mae:
+        return ConditionResult(ConditionCategory.FAIL,
+                               f"partition MAE {format_number(mae)} vs global "
+                               f"{format_number(global_mae)}")
+    return ConditionResult(ConditionCategory.PASS, f"partition MAE {format_number(mae)}")
+
+
+def duplicates_check(columns):
+    """The runner's Data Duplicates check: rows are identified by the
+    ``url`` key (web corpora key on it) when ``columns`` has one, else by
+    every column, and any duplicate FAILs."""
+    from deepchecks_spark.checks.integrity import DataDuplicates
+
+    keys = [c for c in ("url",) if c in columns] or list(columns)
+    return DataDuplicates(columns=keys).add_condition(
+        "Duplicate data ratio is less or equal to 0%", duplicate_ratio_at_most, max_ratio=0.0)
+
+
+def performance_check(prediction_column: str, task_type: str | None = None):
+    """The runner's model-performance check: accuracy above 0.5, or for
+    ``task_type="regression"`` an MAE within 2x the global MAE."""
+    from deepchecks_spark.checks.performance import SingleDatasetPerformance
+
+    if task_type == "regression":
+        return SingleDatasetPerformance(prediction_column, scorers=["mae"]).add_condition(
+            "Partition MAE not greater than 2.0x the global MAE", mae_within, factor=2.0)
+    return (SingleDatasetPerformance(prediction_column, scorers=["accuracy"])
+            .add_condition_greater_than(0.5))
+
+
+def mixed_nulls_partition_values(per_part: dict, counts: DataFrame) -> dict:
+    """{partition_id: MixedNulls value} from each partition's stats
+    ``per_part`` and the MixedNulls rows of the
+    :func:`partition_value_counts` table ``counts``: one row per distinct
+    null-representation string per (partition, column). Their collect
+    materialises every partition of a persisted ``counts``."""
+    from deepchecks_spark.checks.integrity import MixedNulls
+
+    by_pid: dict = {}
+    for r in flagged_string_values(counts).filter(F.col("check") == "MixedNulls").collect():
+        by_pid.setdefault(r["__pid"], []).append(r)
+    return {pid: MixedNulls.value_from_counts(list(stats.per_column), stats, by_pid.get(pid, []))
+            for pid, stats in per_part.items()}
+
+
+def _by_partition(df: DataFrame, *aggs) -> dict:
+    """{partition_id: Row of ``aggs``} over ``df``'s input partitions."""
+    per = df.withColumn("__pid", F.spark_partition_id()).groupBy("__pid").agg(*aggs).collect()
+    return {r["__pid"]: r for r in per}
+
+
+def duplicates_partition_values(df: DataFrame, cols: list) -> dict:
+    """{partition_id: DataDuplicates value}: the duplicate ratio over
+    ``cols`` within each input partition (ROADMAP #2).
 
     Row identity is xxhash64 over the selected columns (the payload-hash
     trick — KB-sized text never shuffles), and the distinct hashes are
@@ -163,34 +198,18 @@ def duplicates_partition_rows(df: DataFrame, cols: list, max_ratio: float = 0.0)
     map-side local — __pid is in the group key and only 8-byte hashes
     shuffle.
     """
-    from deepchecks_spark.core.checks import format_percent
-
     h = F.xxhash64(*[F.col(quote_ident(c)) for c in cols])
-    per = (
-        df.withColumn("__pid", F.spark_partition_id()).withColumn("__h", h)
-        .groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("__h").alias("d"))
-        .collect()
-    )
-    cond_name = f"Duplicate data ratio is less or equal to {format_percent(max_ratio)}"
-    rows = []
-    for r in sorted(per, key=lambda row: row["__pid"]):
-        ratio = (1 - r["d"] / r["n"]) if r["n"] else 0.0
-        category = "PASS" if ratio <= max_ratio else "FAIL"
-        rows.append((r["__pid"], "Data Duplicates", cond_name, category,
-                     f"Found {format_percent(ratio)} duplicate data"))
-    return rows
+    per = _by_partition(df, F.count(F.lit(1)).alias("n"), F.countDistinct(h).alias("d"))
+    return {pid: (1 - r["d"] / r["n"]) if r["n"] else 0.0 for pid, r in per.items()}
 
 
-def conflicting_labels_partition_rows(df: DataFrame, feature_cols: list, label_col: str,
-                                      max_ratio: float = 0.0) -> list:
-    """Per-partition ConflictingLabels verdicts (ROADMAP #2, last item):
-    within each input partition, the fraction of rows in feature-groups
-    carrying more than one distinct label. The group key contains the
-    partition id, so the two-stage aggregation's heavy reduction is
+def conflicting_labels_partition_values(df: DataFrame, feature_cols: list,
+                                        label_col: str) -> dict:
+    """{partition_id: ConflictingLabels value}: within each input
+    partition, the fraction of rows in feature-groups carrying more than
+    one distinct label (ROADMAP #2, last item). The group key contains
+    the partition id, so the two-stage aggregation's heavy reduction is
     map-side local; only (pid, features)-level rows shuffle."""
-    from deepchecks_spark.core.checks import format_percent
-
     fcols = [F.col(quote_ident(c)) for c in feature_cols]
     grouped = (
         df.withColumn("__pid", F.spark_partition_id())
@@ -207,43 +226,31 @@ def conflicting_labels_partition_rows(df: DataFrame, feature_cols: list, label_c
         )
         .collect()
     )
-    cond_name = f"Ambiguous sample ratio is less or equal to {format_percent(max_ratio)}"
-    rows = []
-    for r in sorted(per, key=lambda row: row["__pid"]):
-        ratio = (r["ambiguous"] / r["total"]) if r["total"] else 0.0
-        category = "PASS" if ratio <= max_ratio else "FAIL"
-        rows.append((r["__pid"], "Conflicting Labels", cond_name, category,
-                     f"Ratio of samples with conflicting labels: {format_percent(ratio)}"))
-    return rows
+    return {r["__pid"]: {"percent": (r["ambiguous"] / r["total"]) if r["total"] else 0.0}
+            for r in per}
 
 
-def new_category_partition_rows(counts: DataFrame, train_df: DataFrame, cat_cols: list,
-                                per_part: dict, max_ratio: float = 0.0,
-                                max_categories: int = 10_000) -> list:
-    """Per-partition NewCategoryTrainTest verdicts (VERDICT r3 next-8):
-    within each TEST partition, the ratio of rows whose category value
-    (per column) never occurs in the reference/train side — the batch
-    check's condition (checks/traintest.py:542) evaluated per partition.
+def new_category_partition_values(counts: DataFrame, train_df: DataFrame, cat_cols: list,
+                                  per_part: dict, max_categories: int = 10_000) -> dict:
+    """{partition_id: NewCategoryTrainTest value, holding the
+    ``ratio_of_new_categories`` its condition reads} (VERDICT r3 next-8):
+    per TEST partition and column, the share of rows whose value the
+    reference/train side never holds.
 
     Scale shape: the train side reduces to its DISTINCT melted
-    (column, value) pairs — bounded by the same cardinality gate as the
-    batch check (columns above ``max_categories`` approx-distinct are
-    skipped) and broadcast. The test side is its
-    :func:`partition_value_counts` table ``counts`` (every value of
-    ``cat_cols`` counted): no scan of the test rows here, and only
-    (pid, column) counter rows reach the driver. Each partition's row
-    count comes from ``per_part``, the test side's
-    :func:`compute_column_stats_by_partition` rows.
+    (column, value) pairs — bounded by the batch check's cardinality gate
+    (columns above ``max_categories`` approx-distinct are skipped) and
+    broadcast. The test side is its :func:`partition_value_counts` table
+    ``counts`` and its per-partition stats ``per_part``: no scan of the
+    test rows, and only (pid, column) counter rows reach the driver.
     """
-    from deepchecks_spark.core.checks import format_percent
-
     if not cat_cols:
-        return []
+        return {}
     approx = train_df.agg(
         *[F.approx_count_distinct(quote_ident(c)).alias(c) for c in cat_cols]).first()
     cols = [c for c in cat_cols if (approx[c] or 0) <= max_categories]
     if not cols:
-        return []
+        return {}
     train_vals = (
         melt(train_df, cols, cast="string")
         .filter(F.col("value").isNotNull()).distinct()
@@ -257,52 +264,25 @@ def new_category_partition_rows(counts: DataFrame, train_df: DataFrame, cat_cols
              .alias("n_new"))
         .collect()
     )
-    totals = {pid: st.n_rows for pid, st in per_part.items()}
-    new_by_pid: dict = {pid: {} for pid in totals}
+    values = {pid: {c: {"ratio_of_new_categories": 0.0} for c in cols}
+              for pid in per_part.keys() | {r["__pid"] for r in per}}
     for r in per:
-        new_by_pid.setdefault(r["__pid"], {})[r["column"]] = r["n_new"]
-    cond_name = (f"Ratio of samples with a new category is less or equal to "
-                 f"{format_percent(max_ratio)}")
-    rows = []
-    for pid in sorted(new_by_pid):
-        n_rows = totals.get(pid, 0)
-        failing = {}
-        for col in cols:
-            ratio = (new_by_pid[pid].get(col, 0) / n_rows) if n_rows else 0.0
-            if ratio > max_ratio:
-                failing[col] = format_percent(ratio)
-        if failing:
-            rows.append((pid, "New Category Train Test", cond_name, "FAIL",
-                         f"Found {len(failing)} out of {len(cols)} columns with ratio "
-                         f"of new category samples above threshold: {failing}"))
-        else:
-            rows.append((pid, "New Category Train Test", cond_name, "PASS",
-                         get_condition_passed_message(cols)))
-    return rows
+        n = per_part[r["__pid"]].n_rows if r["__pid"] in per_part else 0
+        values[r["__pid"]][r["column"]]["ratio_of_new_categories"] = r["n_new"] / n if n else 0.0
+    return values
 
 
-def performance_partition_rows(df: DataFrame, label_col: str, prediction_column: str,
-                               threshold: float = 0.5,
-                               task: str = "classification",
-                               mae_factor: float = 2.0) -> list:
-    """Per-partition SingleDatasetPerformance verdicts (VERDICT r4
-    next-5): classification = the batch accuracy condition evaluated on
-    every input partition's own rows; regression = each partition's MAE
-    compared against ``mae_factor`` × the global MAE (anomalous-shard
-    detection, the drift_partition_rows convention — regression errors
-    have no natural absolute threshold).
+def performance_partition_counts(df: DataFrame, label_col: str, prediction_column: str,
+                                 task: str = "classification") -> dict:
+    """{partition_id: Row(n_total, n, s)}: each input partition's rows,
+    scored rows (label and prediction non-null) and their correct
+    predictions or, for regression, summed absolute error; the input of
+    :func:`performance_value_step` (VERDICT r4 next-5).
 
-    Scale shape: ONE extra group key (spark_partition_id) on the
-    correctness pass — a single scan reducing to one counter row per
-    partition map-side, so driver state is O(partitions) regardless of
-    row count or label cardinality (no confusion cells needed: accuracy
-    and MAE are distributive pairs). The group keys come from the
-    UNFILTERED frame, so a partition whose every row has a null
-    label/prediction still gets a row — an ERROR verdict, since a fully
-    unscored shard is exactly the corrupt-partition case this surface
-    exists to catch."""
-    from deepchecks_spark.core.checks import format_number
-
+    Scale shape: one counter row per partition, map-side (accuracy and
+    MAE are distributive pairs). The group keys come from the UNFILTERED
+    frame, so a fully unscored partition — the corrupt-shard case this
+    surface exists to catch — still gets a Row, and a ``<failure>`` row."""
     y = F.col(quote_ident(label_col))
     p = F.col(quote_ident(prediction_column))
     usable = y.isNotNull() & p.isNotNull()
@@ -312,57 +292,33 @@ def performance_partition_rows(df: DataFrame, label_col: str, prediction_column:
     else:
         score_agg = F.sum(F.when(usable & (y == p), 1).otherwise(0)
                           .cast("long")).alias("s")
-    per = (
-        df.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("n_total"),
-             F.sum(usable.cast("long")).alias("n"),
-             score_agg)
-        .collect()
-    )
-    rows = []
-    if task == "regression":
-        tot_n = sum(r["n"] for r in per)
-        global_mae = (sum(r["s"] for r in per) / tot_n) if tot_n else 0.0
-        cond_name = (f"Partition MAE not greater than {mae_factor}x "
-                     "the global MAE")
-    else:
-        cond_name = f"Selected metrics are greater than {threshold}"
-    for r in sorted(per, key=lambda r: r["__pid"]):
+    return _by_partition(df, F.count(F.lit(1)).alias("n_total"),
+                         F.sum(usable.cast("long")).alias("n"), score_agg)
+
+
+def performance_value_step(counts: dict, task: str = "classification"):
+    """The step from a :func:`performance_partition_counts` Row to the
+    partition's SingleDatasetPerformance value: its ``accuracy``, or its
+    ``mae`` beside the ``global_mae`` of all ``counts``. It raises for a
+    partition with no scored rows."""
+    n = sum(r["n"] for r in counts.values())
+    global_mae = (sum(r["s"] for r in counts.values()) / n) if n else 0.0
+
+    def step(r):
         if not r["n"]:
-            rows.append((r["__pid"], "Single Dataset Performance", cond_name,
-                         "ERROR",
-                         f"no scored rows: all {r['n_total']} rows have null "
-                         "label or prediction"))
-            continue
+            raise ValueError(f"no scored rows: all {r['n_total']} rows have null "
+                             "label or prediction")
         if task == "regression":
-            mae = r["s"] / r["n"]
-            if global_mae and mae > mae_factor * global_mae:
-                rows.append((r["__pid"], "Single Dataset Performance", cond_name,
-                             "FAIL",
-                             f"partition MAE {format_number(mae)} vs global "
-                             f"{format_number(global_mae)}"))
-            else:
-                rows.append((r["__pid"], "Single Dataset Performance", cond_name,
-                             "PASS", f"partition MAE {format_number(mae)}"))
-            continue
-        acc = r["s"] / r["n"]
-        if acc <= threshold:
-            failing = {"accuracy": format_number(acc)}  # batch dict-repr parity
-            rows.append((r["__pid"], "Single Dataset Performance", cond_name, "FAIL",
-                         f"Found 1 scores below threshold: {failing}"))
-        else:
-            rows.append((r["__pid"], "Single Dataset Performance", cond_name, "PASS",
-                         "Passed for 1 of 1 scores"))
-    return rows
+            return {"mae": r["s"] / r["n"], "global_mae": global_mae}
+        return {"accuracy": r["s"] / r["n"]}
+
+    return step
 
 
-def samples_mix_partition_rows(test_df: DataFrame, train_df: DataFrame, cols: list,
-                               max_ratio: float = 0.05) -> list:
-    """Per-partition TrainTestSamplesMix verdicts (VERDICT r3 next-8):
+def samples_mix_partition_values(test_df: DataFrame, train_df: DataFrame, cols: list) -> dict:
+    """{partition_id: TrainTestSamplesMix value} (VERDICT r3 next-8):
     the fraction of each TEST partition's rows that also occur in the
-    reference/train data — the batch condition
-    (checks/traintest.py:823) per partition.
+    reference/train data.
 
     Scale shape: row identity is xxhash64 over the selected columns
     (the payload-hash trick — KB text never shuffles); the train side
@@ -370,8 +326,6 @@ def samples_mix_partition_rows(test_df: DataFrame, train_df: DataFrame, cols: li
     with its partition id, and the equi-join + groupBy(pid) keep the
     shuffle at hash width. AQE skew-join splits Zipf-duplicated keys.
     """
-    from deepchecks_spark.core.checks import format_percent
-
     h = F.xxhash64(*[F.col(quote_ident(c)) for c in cols])
     train_h = train_df.select(h.alias("__h")).distinct().withColumn("__seen", F.lit(1))
     per = (
@@ -383,22 +337,14 @@ def samples_mix_partition_rows(test_df: DataFrame, train_df: DataFrame, cols: li
              F.sum(F.when(F.col("__seen").isNotNull(), 1).otherwise(0)).alias("n_mixed"))
         .collect()
     )
-    cond_name = (f"Percentage of test data samples that appear in train data is less "
-                 f"or equal to {format_percent(max_ratio)}")
-    rows = []
-    for r in sorted(per, key=lambda row: row["__pid"]):
-        ratio = (r["n_mixed"] / r["n"]) if r["n"] else 0.0
-        details = (f"Percent of test data samples that appear in train data: "
-                   f"{format_percent(ratio)}" if ratio else "No samples mix found")
-        category = "PASS" if ratio <= max_ratio else "FAIL"
-        rows.append((r["__pid"], "Train Test Samples Mix", cond_name, category, details))
-    return rows
+    return {r["__pid"]: {"ratio": (r["n_mixed"] / r["n"]) if r["n"] else 0.0} for r in per}
 
 
 def drift_partition_rows(counts: DataFrame, cat_cols: list, per_part: dict,
                          reference_hists: dict | None = None,
                          max_psi: float = 0.2, max_categories: int = 10_000) -> list:
-    """Per-partition categorical drift verdicts (ROADMAP #2): the
+    """Per-partition categorical drift verdicts (ROADMAP #2), the one
+    section with no check class: the
     (partition, column, value) counts of ``cat_cols`` come from
     ``counts``, the input's :func:`partition_value_counts` table, then
     each partition's histogram is PSI-scored against a reference
@@ -415,7 +361,6 @@ def drift_partition_rows(counts: DataFrame, cat_cols: list, per_part: dict,
     column like categorical_histograms; the partition count is that of
     ``per_part``, the input's per-partition stats).
     """
-    from deepchecks_spark.core.checks import format_number
     from deepchecks_spark.drift.kernels import psi_from_counts
 
     if not cat_cols:
@@ -482,7 +427,7 @@ def partition_value_counts(df: DataFrame, count_cols: list, flag_cols: list) -> 
     tiny fraction of the input; the flag is evaluated per group, not per
     row, for the counted columns. The runner persists this table once and
     every per-value reader takes its rows from it: the flagged view
-    (:func:`flagged_string_values`), StringMismatch
+    (:func:`flagged_string_values`), MixedNulls, StringMismatch
     (:func:`violation_rows`), the partition-drift histograms and the
     new-category test side."""
     cols = list(dict.fromkeys([*count_cols, *flag_cols]))
@@ -643,30 +588,44 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         # different fingerprint or params → fresh manifest, stale stages
         # recompute
 
-    df = read_table(spark, input_path, fmt, snapshot_id)
-    # one materialization shared by every stage: repartition up to the
-    # cluster's slot count if the source is under-partitioned, cache the
-    # decoded columns (the scan + decompress dominates repeated passes)
-    df = spread_input(df)
-    df.persist()
-    ds = Dataset(df, label=label, cat_features=cat_features,
-                 infer_categorical=cat_features is None)
+    with job_tag(spark.sparkContext, "runner.input"):
+        df = read_table(spark, input_path, fmt, snapshot_id)
+        # one materialization shared by every stage: repartition up to the
+        # cluster's slot count if the source is under-partitioned, cache the
+        # decoded columns (the scan + decompress dominates repeated passes)
+        df = spread_input(df)
+        df.persist()
+        ds = Dataset(df, label=label, cat_features=cat_features,
+                     infer_categorical=cat_features is None)
     string_cols = [c for c in ds.columns if isinstance(ds.schema_of(c), T.StringType)]
     cat_cols = list(ds.cat_features)
 
     from deepchecks_spark.checks.integrity import (
+        ConflictingLabels,
         IsSingleValue,
         MixedDataTypes,
+        MixedNulls,
         PercentOfNulls,
         SpecialCharacters,
     )
+    from deepchecks_spark.checks.traintest import NewCategoryTrainTest, TrainTestSamplesMix
 
+    # every condition the runner applies, and so all its thresholds: the
+    # stats checks run on the global and on each partition's stats, the
+    # others on each partition's value from their section below
     stats_checks = [
         IsSingleValue().add_condition_not_single_value(),
         PercentOfNulls().add_condition_percent_of_nulls_not_greater_than(0.05),
         SpecialCharacters().add_condition_ratio_of_special_characters_less_or_equal(0.001),
         MixedDataTypes().add_condition_rare_type_ratio_not_in_range(),
     ]
+    mixed_nulls = MixedNulls().add_condition_different_nulls_less_equal_to(1)
+    duplicates = duplicates_check(ds.columns)
+    conflicting_labels = (ConflictingLabels()
+                          .add_condition_ratio_of_conflicting_labels_less_or_equal(0))
+    new_category = NewCategoryTrainTest().add_condition_new_category_ratio_less_or_equal(0)
+    samples_mix = TrainTestSamplesMix().add_condition_duplicates_ratio_less_or_equal(0.05)
+    performance = performance_check(prediction_column, task_type)
 
     # shared passes, single-flight across the concurrent stages
     once = Once()
@@ -689,17 +648,17 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         return once("global", merged)
 
     def _value_counts():
-        # the one melted (partition, column, value) pass: every value of
-        # the low-cardinality string columns and the categorical
-        # features, plus the other string columns' offenders. Persisted
-        # and materialised here, so the stages reading it concurrently
-        # never race to build the cache.
+        # (table, per-partition MixedNulls values) of the one melted
+        # (partition, column, value) pass: every value of the
+        # low-cardinality string columns and the categorical features,
+        # plus the other string columns' offenders. Persisted, and
+        # materialised here by the collect of its MixedNulls rows, so the
+        # stages reading it concurrently never race to build the cache
         def build():
             counts = partition_value_counts(
                 ds.df, low_cardinality(string_cols, _global_stats()) + cat_cols,
                 string_cols).persist()
-            counts.count()
-            return counts
+            return counts, mixed_nulls_partition_values(_per_part(), counts)
 
         return once("value_counts", build)
 
@@ -707,7 +666,8 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         if manifest["stages"].get(name) == "done":
             return
         t0 = time.time()
-        fn()
+        with job_tag(spark.sparkContext, f"runner.{name}"):
+            fn()
         with _manifest_lock:
             manifest["stages"][name] = "done"
             manifest.setdefault("stage_seconds", {})[name] = round(time.time() - t0, 3)
@@ -730,7 +690,8 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
                        if c.__class__.__module__.endswith("checks.performance")]
 
     def _global_verdicts():
-        rows = stats_verdicts(ds, stats_checks, _global_stats())
+        stats = _global_stats()
+        rows = verdict_rows([evaluate(c, c.value_from_stats, ds, stats) for c in stats_checks])
         if perf_checks:
             from deepchecks_spark.core.suite import Suite
 
@@ -738,54 +699,59 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         out = local_frame(spark, rows, "check string, condition string, category string, details string")
         write_table(out, os.path.join(output_dir, "verdicts"))
 
+    def _performance_rows():
+        counts = performance_partition_counts(ds.df, ds.label_name, prediction_column,
+                                              task_type)
+        return partition_rows(performance, counts, performance_value_step(counts, task_type))
+
     def _partition_verdicts():
         # the sections are independent Spark jobs over the shared cache:
         # submit them concurrently (each leg's tail back-fills the
         # others' ramp-up — guide §2.6) and concatenate in a FIXED
-        # order so the output table is deterministic
-        sections = [
-            lambda: (partition_verdicts(ds, stats_checks, _per_part())
-                     + mixed_nulls_partition_rows(
-                         _per_part(), flagged_string_values(_value_counts()))),
-        ]
-        # key-identity duplicates per partition: web corpora key on url
-        dup_cols = [c for c in ("url",) if c in ds.columns] or list(ds.columns)
-        sections.append(lambda: duplicates_partition_rows(
-            ds.df, dup_cols, max_ratio=0.0))
+        # order so the output table is deterministic. Each computes its
+        # check's value per partition; partition_rows makes the rows.
+        sections = {
+            "stats": lambda: [r for c in stats_checks for r in partition_rows(
+                c, _per_part(), functools.partial(c.value_from_stats, ds))],
+            "mixed_nulls": lambda: partition_rows(mixed_nulls, _value_counts()[1]),
+            "duplicates": lambda: partition_rows(duplicates, duplicates_partition_values(
+                ds.df, duplicates.columns)),
+        }
         # per-partition categorical drift vs the global distribution
         # (flags anomalous shards); cat features only — bounded output
         if cat_cols:
-            sections.append(lambda: drift_partition_rows(
-                _value_counts(), cat_cols, _per_part()))
+            sections["drift"] = lambda: drift_partition_rows(
+                _value_counts()[0], cat_cols, _per_part())
         if ds.label_name:
-            sections.append(lambda: conflicting_labels_partition_rows(
-                ds.df, [c for c in ds.features if c != ds.label_name],
-                ds.label_name))
+            sections["conflicting_labels"] = lambda: partition_rows(
+                conflicting_labels, conflicting_labels_partition_values(
+                    ds.df, [c for c in ds.features if c != ds.label_name], ds.label_name))
         if prediction_column and ds.label_name:
-            sections.append(lambda: performance_partition_rows(
-                ds.df, ds.label_name, prediction_column, task=task_type))
+            sections["performance"] = _performance_rows
         if reference_input:
             # join checks vs a reference snapshot, per partition: new
             # categories and train/test samples mix (VERDICT r3 next-8)
             ref_df = read_table(spark, reference_input, fmt)
+            if cat_cols:
+                sections["new_category"] = lambda: partition_rows(
+                    new_category, new_category_partition_values(
+                        _value_counts()[0], ref_df, cat_cols, _per_part()))
+            sections["samples_mix"] = lambda: partition_rows(
+                samples_mix, samples_mix_partition_values(ds.df, ref_df, list(ds.columns)))
 
-            def _ref_sections():
-                rows = []
-                if cat_cols:
-                    rows += new_category_partition_rows(
-                        _value_counts(), ref_df, cat_cols, _per_part())
-                rows += samples_mix_partition_rows(ds.df, ref_df, list(ds.columns))
-                return rows
+        def grouped(name, fn):
+            with job_tag(spark.sparkContext, f"runner.partition_verdicts.{name}"):
+                return fn()
 
-            sections.append(_ref_sections)
-        rows = [r for part in run_jobs(sections) for r in part]
+        parts = run_jobs([functools.partial(grouped, n, fn) for n, fn in sections.items()])
+        rows = [r for part in parts for r in part]
         out = local_frame(
             spark, rows, "partition_id int, check string, condition string, category string, details string"
         )
         write_table(out, os.path.join(output_dir, "partition_verdicts"))
 
     def _violations():
-        out = violation_rows(_value_counts(), string_cols, _global_stats())
+        out = violation_rows(_value_counts()[0], string_cols, _global_stats())
         write_table(out, os.path.join(output_dir, "violations"))
 
     def _metrics():
@@ -921,13 +887,14 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
         # job's ramp-up/tail gaps — at high core counts the sequential
         # version leaves most slots idle between jobs. Materialize the
         # cache once first so the threads don't race to build it.
-        df.count()
+        with job_tag(spark.sparkContext, "runner.input"):
+            df.count()
         run_jobs([functools.partial(stage, n, fn) for n, fn in stages])
     finally:
         df.unpersist()
-        counts = once.done().get("value_counts")
-        if counts is not None:
-            counts.unpersist()
+        value_counts = once.done().get("value_counts")
+        if value_counts is not None:
+            value_counts[0].unpersist()
     return manifest
 
 

@@ -39,11 +39,14 @@ def test_melt_sql_for_plain_names_matches_hand_written_stack(spark):
 @pytest.mark.parametrize("name", ADVERSARIAL_NAMES)
 def test_melt_callers_round_trip_adversarial_column_names(spark, name):
     from deepchecks_spark.drift.spark import categorical_histograms
+    from deepchecks_spark.checks.traintest import NewCategoryTrainTest
     from deepchecks_spark.runner import (
         drift_partition_rows,
-        duplicates_partition_rows,
+        duplicates_check,
+        duplicates_partition_values,
         flagged_string_values,
-        new_category_partition_rows,
+        new_category_partition_values,
+        partition_rows,
         partition_value_counts,
         violation_rows,
     )
@@ -70,10 +73,12 @@ def test_melt_callers_round_trip_adversarial_column_names(spark, name):
     # a wrong label on both sides would still join, then be read back
     # under the real name as zero new values: the FAIL proves the label
     ref = spark.createDataFrame([("a",)], f"{quote_ident(name)} string")
-    new_cat = new_category_partition_rows(counts, ref, [name], per_part)
+    new_cat = partition_rows(
+        NewCategoryTrainTest().add_condition_new_category_ratio_less_or_equal(0),
+        new_category_partition_values(counts, ref, [name], per_part))
     assert new_cat and {r[3] for r in new_cat} == {"FAIL"}
     # partition 0 repeats "a"; partition 1 holds distinct values only
-    dups = duplicates_partition_rows(df, [name])
+    dups = partition_rows(duplicates_check([name]), duplicates_partition_values(df, [name]))
     assert [r[3] for r in sorted(dups)] == ["FAIL", "PASS"]
 
 
@@ -159,7 +164,8 @@ def test_stats_sql_for_plain_names_matches_raw_backticks(spark):
 
 
 @pytest.mark.parametrize("module", ["runner.py", "stats.py", "checks/integrity.py", "dataset.py",
-                                    "checks/traintest.py", "drift/spark.py", "streaming.py"])
+                                    "checks/traintest.py", "drift/spark.py", "streaming.py",
+                                    "checks/performance.py"])
 def test_no_raw_backtick_interpolation(module):
     # identifiers in SQL text go through quote_ident; a raw `{name}`
     # breaks on a name that holds a backtick

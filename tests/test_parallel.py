@@ -1,6 +1,7 @@
 """core/parallel.py: the run_jobs fan-out, the Once single-flight memo,
 and the serial-vs-concurrent parity of the paths built on them."""
 
+import functools
 import itertools
 import os
 import sys
@@ -9,7 +10,7 @@ import time
 
 import pytest
 
-from deepchecks_spark.core.parallel import Once, run_jobs
+from deepchecks_spark.core.parallel import Once, job_tag, run_jobs
 
 
 def test_run_jobs_returns_results_in_submission_order():
@@ -34,6 +35,40 @@ def test_run_jobs_waits_for_every_callable_before_raising():
     with pytest.raises(ValueError, match="boom"):
         run_jobs([fails_fast, sleeper])
     assert finished.is_set(), "exception surfaced while a job was still running"
+
+
+def test_run_jobs_legs_keep_their_own_job_tags(spark):
+    # each leg inherits the caller's tag and adds its own; a leg's tag
+    # never reaches a concurrent leg's job, and the caller's group stays
+    sc = spark.sparkContext
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+    def leg(name):
+        with job_tag(sc, name):
+            spark.range(10).collect()
+        return set(sc.getJobTags())
+
+    sc.setJobGroup("legs-caller", "legs-caller")
+    try:
+        with job_tag(sc, "outer"):
+            left = run_jobs([functools.partial(leg, "a"), functools.partial(leg, "b")])
+            assert set(sc.getJobTags()) == {"outer"}
+    finally:
+        sc._jsc.clearJobGroup()
+    assert left == [{"outer"}, {"outer"}] and set(sc.getJobTags()) == set()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = [store.job(j) for j in sc.statusTracker().getJobIdsForGroup("legs-caller")]
+    # Spark SQL adds its own spark-session-* tags
+    tags = {tuple(sorted(t for t in conv(j.jobTags()) if not t.startswith("spark-")))
+            for j in jobs}
+    assert tags == {("a", "outer"), ("b", "outer")}
+    # a leg's job is named after the code that ran it, not after the
+    # pool thread's wrapper
+    names = [str(j.name()) for j in jobs]
+    assert not any(n.startswith("wrapped at ") for n in names), names
+    assert any(os.path.basename(n.split(" at ")[-1]).startswith("test_parallel.py:")
+               for n in names), names
 
 
 def test_once_is_single_flight():

@@ -1,6 +1,7 @@
 """Runner job: per-partition verdicts, violations with partition
 lineage, metrics table, checkpoint/resume (FIXTURES.md §F3 parity)."""
 
+import functools
 import json
 import os
 
@@ -8,12 +9,28 @@ import pytest
 from pyspark.sql import functions as F
 
 from deepchecks_spark.runner import (
+    duplicates_check,
     low_cardinality,
+    partition_rows,
     partition_value_counts,
     run_job,
     violation_rows,
 )
 from deepchecks_spark.stats import compute_column_stats_by_partition
+
+
+def _new_category(max_ratio=0.0):
+    from deepchecks_spark.checks.traintest import NewCategoryTrainTest
+
+    return NewCategoryTrainTest().add_condition_new_category_ratio_less_or_equal(max_ratio)
+
+
+def _job_ids(sc):
+    """Every job id the status store holds, whatever its group."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        sc._jsc.sc().statusStore().jobsList(None))
+    return {j.jobId() for j in jobs}
 
 
 @pytest.fixture(scope="module")
@@ -88,6 +105,7 @@ def test_partition_verdicts_parity(spark, tmp_path, corpus_parquet):
     from deepchecks_spark.checks.integrity import (
         IsSingleValue,
         MixedDataTypes,
+        MixedNulls,
         PercentOfNulls,
         SpecialCharacters,
     )
@@ -103,6 +121,7 @@ def test_partition_verdicts_parity(spark, tmp_path, corpus_parquet):
             PercentOfNulls().add_condition_percent_of_nulls_not_greater_than(0.05),
             SpecialCharacters().add_condition_ratio_of_special_characters_less_or_equal(0.001),
             MixedDataTypes().add_condition_rare_type_ratio_not_in_range(),
+            MixedNulls().add_condition_different_nulls_less_equal_to(1),
         ):
             result = check.run(ds)
             seen.update((check.header(), c.category.value) for c in result.conditions_results)
@@ -124,8 +143,6 @@ def test_partition_verdicts_submit_no_spark_job(spark, tmp_path, corpus_parquet)
         PercentOfNulls,
         SpecialCharacters,
     )
-    from deepchecks_spark.runner import partition_verdicts
-
     src = _with_mixed_column(spark, corpus_parquet, str(tmp_path / "mixed"))
     ds = Dataset(spark.read.parquet(src), cat_features=["lang"], infer_categorical=False)
     per_part = compute_column_stats_by_partition(ds.df, ds.columns)
@@ -137,7 +154,8 @@ def test_partition_verdicts_submit_no_spark_job(spark, tmp_path, corpus_parquet)
     ]
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup())
-    rows = partition_verdicts(ds, checks, per_part)
+    rows = [r for c in checks
+            for r in partition_rows(c, per_part, functools.partial(c.value_from_stats, ds))]
     assert set(tracker.getJobIdsForGroup()) == before
     assert len(rows) == len(per_part) * len(checks)
     assert {r[3] for r in rows if r[1] == "Mixed Data Types"} == {"PASS", "WARN"}
@@ -261,7 +279,7 @@ def test_shared_value_counts_match_per_reader_scans(spark):
     from deepchecks_spark.runner import (
         drift_partition_rows,
         flagged_string_values,
-        new_category_partition_rows,
+        new_category_partition_values,
     )
     from deepchecks_spark.stats import compute_column_stats
 
@@ -294,9 +312,10 @@ def test_shared_value_counts_match_per_reader_scans(spark):
     assert {r[2].split(" ")[2] for r in drift} == set(cat_cols)
 
     ref = spark.createDataFrame([(1, 1.0, "a"), (2, 2.0, "A")], "k int, d double, s string")
-    new_cat = new_category_partition_rows(counts, ref, cat_cols, per_part)
-    assert new_cat == new_category_partition_rows(
-        _partition_value_scan(df, cat_cols, counted=False), ref, cat_cols, per_part)
+    new_cat = partition_rows(_new_category(), new_category_partition_values(
+        counts, ref, cat_cols, per_part))
+    assert new_cat == partition_rows(_new_category(), new_category_partition_values(
+        _partition_value_scan(df, cat_cols, counted=False), ref, cat_cols, per_part))
     assert len(new_cat) == 3 and {r[3] for r in new_cat} == {"FAIL"}
 
 
@@ -305,11 +324,11 @@ def test_run_job_fetches_no_mixed_type_examples(spark, tmp_path, corpus_parquet)
     # stats; its example scans (checks/integrity.py) never run
     src = _with_mixed_column(spark, corpus_parquet, str(tmp_path / "mixed"))
     sc = spark.sparkContext
-    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-    before = set(tracker.getJobIdsForGroup())
+    store = sc._jsc.sc().statusStore()
+    before = _job_ids(sc)
     out = str(tmp_path / "out")
     run_job(spark, src, out, cat_features=["lang"], resume=False)
-    names = [store.job(j).name() for j in set(tracker.getJobIdsForGroup()) - before]
+    names = [store.job(j).name() for j in _job_ids(sc) - before]
     assert names
     assert not [n for n in names if "checks/integrity.py" in n], names
     verdicts = spark.read.parquet(os.path.join(out, "verdicts")).collect()
@@ -418,7 +437,7 @@ def test_mixed_nulls_partition_parity(spark, tmp_path, corpus_parquet):
 
 
 def test_duplicates_partition_rows_exact_parity(spark):
-    from deepchecks_spark.runner import duplicates_partition_rows
+    from deepchecks_spark.runner import duplicates_partition_values
 
     # 2 real partitions via parallelize slices: first half gets planted
     # duplicates, second half is all-distinct (LocalRelation unions get
@@ -426,7 +445,7 @@ def test_duplicates_partition_rows_exact_parity(spark):
     data = [(i % 10,) for i in range(100)] + [(1000 + i,) for i in range(100)]
     rdd = spark.sparkContext.parallelize(data, 2)
     df = spark.createDataFrame(rdd, "k long")
-    rows = duplicates_partition_rows(df, ["k"], max_ratio=0.0)
+    rows = partition_rows(duplicates_check(["k"]), duplicates_partition_values(df, ["k"]))
     assert len(rows) == 2
     by_cat = {r[0]: (r[3], r[4]) for r in rows}
     cats = sorted(v[0] for v in by_cat.values())
@@ -481,16 +500,30 @@ def test_drift_partition_rows_external_reference(spark):
     assert [r[3] for r in sorted(rows)] == ["PASS", "FAIL"]
 
 
+def test_duplicates_partition_zero_tolerance_is_exact(spark):
+    # ADVICE r2 (medium): with max_ratio=0 the distinct count must be
+    # EXACT — HLL ±5% on a duplicate-free partition would fabricate a
+    # FAIL. 20k distinct rows across partitions: every verdict PASS.
+    from deepchecks_spark.runner import duplicates_partition_values
+
+    df = spark.range(0, 20000).selectExpr("id", "cast(id as string) as s").repartition(8)
+    rows = partition_rows(duplicates_check(["id", "s"]),
+                          duplicates_partition_values(df, ["id", "s"]))
+    assert rows and all(r[3] == "PASS" for r in rows)
+    assert all("0%" in r[4] for r in rows)
+
+
 def test_conflicting_labels_partition_rows_parity(spark):
     from deepchecks_spark import Dataset
     from deepchecks_spark.checks.integrity import ConflictingLabels
-    from deepchecks_spark.runner import conflicting_labels_partition_rows
+    from deepchecks_spark.runner import conflicting_labels_partition_values
 
     # partition 0: feature-key 1 carries two labels; partition 1 clean
     data = ([(1, "a")] * 30 + [(1, "b")] * 10 + [(2, "a")] * 10) + [(i + 10, "a") for i in range(50)]
     rdd = spark.sparkContext.parallelize(data, 2)
     df = spark.createDataFrame(rdd, "f long, label string")
-    rows = conflicting_labels_partition_rows(df, ["f"], "label")
+    check = ConflictingLabels().add_condition_ratio_of_conflicting_labels_less_or_equal(0)
+    rows = partition_rows(check, conflicting_labels_partition_values(df, ["f"], "label"))
     assert [r[3] for r in sorted(rows)] == ["FAIL", "PASS"]
     # per-partition value equals running the check on each slice
     from pyspark.sql import functions as F
@@ -503,18 +536,6 @@ def test_conflicting_labels_partition_rows_parity(spark):
         want = res.value["percent"]
         got_category = "PASS" if want <= 0.0 else "FAIL"
         assert category == got_category
-
-
-def test_duplicates_partition_zero_tolerance_is_exact(spark):
-    # ADVICE r2 (medium): with max_ratio=0 the distinct count must be
-    # EXACT — HLL ±5% on a duplicate-free partition would fabricate a
-    # FAIL. 20k distinct rows across partitions: every verdict PASS.
-    from deepchecks_spark.runner import duplicates_partition_rows
-
-    df = spark.range(0, 20000).selectExpr("id", "cast(id as string) as s").repartition(8)
-    rows = duplicates_partition_rows(df, ["id", "s"], max_ratio=0.0)
-    assert rows and all(r[3] == "PASS" for r in rows)
-    assert all("0%" in r[4] for r in rows)
 
 
 def test_drift_partition_rows_absolute_collect_cap(spark, monkeypatch):
@@ -531,7 +552,7 @@ def test_drift_partition_rows_absolute_collect_cap(spark, monkeypatch):
 
 
 def test_new_category_partition_rows_sliced_parity(spark):
-    from deepchecks_spark.runner import new_category_partition_rows
+    from deepchecks_spark.runner import new_category_partition_values
 
     # test side: 2 partitions — partition 0 only train-known categories,
     # partition 1 has 20% novel categories in column 'cat'
@@ -540,9 +561,9 @@ def test_new_category_partition_rows_sliced_parity(spark):
     part1 = [("a",)] * 80 + [("zz%d" % i,) for i in range(20)]
     rdd = spark.sparkContext.parallelize(part0 + part1, 2)
     test = spark.createDataFrame(rdd, "cat string")
-    rows = new_category_partition_rows(
+    rows = partition_rows(_new_category(0.1), new_category_partition_values(
         partition_value_counts(test, ["cat"], []), train, ["cat"],
-        compute_column_stats_by_partition(test, ["cat"]), max_ratio=0.1)
+        compute_column_stats_by_partition(test, ["cat"])))
     assert len(rows) == 2
     by_pid = {r[0]: r for r in rows}
     # sliced oracle: recompute each partition's ratio from its slice
@@ -564,19 +585,20 @@ def test_new_category_partition_rows_sliced_parity(spark):
 
 
 def test_new_category_partition_rows_respects_cardinality_gate(spark):
-    from deepchecks_spark.runner import new_category_partition_rows
+    from deepchecks_spark.runner import new_category_partition_values
 
     train = spark.range(0, 50_000).selectExpr("cast(id as string) AS cat")
     test = spark.range(0, 100).selectExpr("cast(id + 1000000 as string) AS cat")
     # train cardinality above the gate → column skipped, no rows emitted
-    rows = new_category_partition_rows(
+    rows = partition_rows(_new_category(), new_category_partition_values(
         partition_value_counts(test, ["cat"], []), train, ["cat"],
-        compute_column_stats_by_partition(test, ["cat"]), max_categories=1000)
+        compute_column_stats_by_partition(test, ["cat"]), max_categories=1000))
     assert rows == []
 
 
 def test_samples_mix_partition_rows_sliced_parity(spark):
-    from deepchecks_spark.runner import samples_mix_partition_rows
+    from deepchecks_spark.checks.traintest import TrainTestSamplesMix
+    from deepchecks_spark.runner import samples_mix_partition_values
 
     train = spark.createDataFrame([(i, "u%d" % i) for i in range(100)],
                                   "k long, s string")
@@ -585,7 +607,9 @@ def test_samples_mix_partition_rows_sliced_parity(spark):
     part1 = [(20_000 + i, "y%d" % i) for i in range(100)]
     rdd = spark.sparkContext.parallelize(part0 + part1, 2)
     test = spark.createDataFrame(rdd, "k long, s string")
-    rows = samples_mix_partition_rows(test, train, ["k", "s"], max_ratio=0.05)
+    rows = partition_rows(
+        TrainTestSamplesMix().add_condition_duplicates_ratio_less_or_equal(0.05),
+        samples_mix_partition_values(test, train, ["k", "s"]))
     assert len(rows) == 2
     cats = {r[0]: r[3] for r in rows}
     assert sorted(cats.values()) == ["FAIL", "PASS"]
@@ -774,36 +798,6 @@ def test_run_job_model_eval_surface(spark, tmp_path, modeled_corpus_parquet):
     assert {r["category"] for r in perf_rows} == {"PASS"}  # accuracy ≈ 7/8
 
 
-def test_performance_partition_rows_sliced_oracle_parity(spark):
-    # per-partition verdicts == running the batch check on each
-    # partition's own slice (the sliced-oracle parity convention)
-    from pyspark.sql import functions as F
-
-    from deepchecks_spark.checks.performance import SingleDatasetPerformance
-    from deepchecks_spark.dataset import Dataset
-    from deepchecks_spark.runner import performance_partition_rows
-
-    data = [(i, i % 2, (1 - i % 2) if i % (3 + p) == 0 else i % 2, p)
-            for p in range(3) for i in range(120)]
-    df = spark.sparkContext.parallelize(
-        [tuple(r) for r in data], 3).toDF("id long, lbl int, pred int, part int")
-    df.persist(); df.count()
-    got = performance_partition_rows(df, "lbl", "pred", threshold=0.8)
-    pids = [r[0] for r in got]
-    with_pid = df.withColumn("__pid", F.spark_partition_id())
-    for pid, _, cond_name, category, details in got:
-        part = with_pid.filter(F.col("__pid") == pid).drop("__pid")
-        check = SingleDatasetPerformance("pred", scorers=["accuracy"])
-        check.add_condition_greater_than(0.8)
-        res = check.run(Dataset(part, label="lbl", infer_categorical=False))
-        cr = res.conditions_results[0]
-        assert cr.name == cond_name
-        assert cr.category.value == category
-        assert cr.details == details
-    assert len(set(pids)) == 3
-    df.unpersist()
-
-
 def test_resume_invalidated_by_param_change(spark, tmp_path):
     """Adding --prediction-column to a completed output dir must re-run
     the done stages: the resume identity includes the parameterization,
@@ -825,11 +819,54 @@ def test_resume_invalidated_by_param_change(spark, tmp_path):
     assert all(v == "done" for v in m3["stages"].values())
 
 
+def test_performance_partition_rows_sliced_oracle_parity(spark):
+    # per-partition verdicts == running the batch check on each
+    # partition's own slice (the sliced-oracle parity convention)
+    from pyspark.sql import functions as F
+
+    from deepchecks_spark.checks.performance import SingleDatasetPerformance
+    from deepchecks_spark.dataset import Dataset
+    from deepchecks_spark.runner import performance_partition_counts, performance_value_step
+
+    data = [(i, i % 2, (1 - i % 2) if i % (3 + p) == 0 else i % 2, p)
+            for p in range(3) for i in range(120)]
+    df = spark.sparkContext.parallelize(
+        [tuple(r) for r in data], 3).toDF("id long, lbl int, pred int, part int")
+    df.persist(); df.count()
+    batch = (SingleDatasetPerformance("pred", scorers=["accuracy"])
+             .add_condition_greater_than(0.8))
+    counts = performance_partition_counts(df, "lbl", "pred")
+    got = partition_rows(batch, counts, performance_value_step(counts))
+    pids = [r[0] for r in got]
+    with_pid = df.withColumn("__pid", F.spark_partition_id())
+    for pid, _, cond_name, category, details in got:
+        part = with_pid.filter(F.col("__pid") == pid).drop("__pid")
+        check = SingleDatasetPerformance("pred", scorers=["accuracy"])
+        check.add_condition_greater_than(0.8)
+        res = check.run(Dataset(part, label="lbl", infer_categorical=False))
+        cr = res.conditions_results[0]
+        assert cr.name == cond_name
+        assert cr.category.value == category
+        assert cr.details == details
+    assert len(set(pids)) == 3
+    df.unpersist()
+
+
 def test_performance_partition_rows_regression_and_unscored(spark, tmp_path):
     """Regression verdicts flag a partition whose MAE exceeds 2x global;
     a partition with zero scored rows gets an ERROR row instead of
     silently vanishing from the table."""
-    from deepchecks_spark.runner import performance_partition_rows
+    from deepchecks_spark.runner import (
+        performance_check,
+        performance_partition_counts,
+        performance_value_step,
+    )
+
+    def performance_partition_rows(df, label_col, prediction_column, task=None):
+        # run_job's performance section on its own
+        counts = performance_partition_counts(df, label_col, prediction_column, task)
+        return partition_rows(performance_check(prediction_column, task), counts,
+                              performance_value_step(counts, task))
 
     src = str(tmp_path / "ppr_in")
     a = spark.createDataFrame([(0.0, 0.1)] * 150, "y double, pred double").coalesce(1)
@@ -918,3 +955,197 @@ def test_run_job_script_profile_stage(spark, tmp_path, corpus_parquet):
         assert 0 <= r["n_mixed"] <= r["n_docs"]
     manifest2 = run_job(spark, corpus_parquet, out, cat_features=["lang"])
     assert "script_profile" not in manifest2["stages"]
+
+
+def _sections_fixture(spark):
+    """3 partitions of (url, lang, s, lbl, pred) and a reference table:
+    partition 0 repeats urls, mixes two null representations into
+    ``s``, has rows that differ only in their label and rows copied into
+    the reference; partition 1 has a ``lang`` the reference lacks, real
+    nulls in ``s`` and mostly wrong predictions; partition 2 is clean."""
+    rows = []
+    for i in range(120):
+        p0 = (f"u{i % 30}", ["en", "fr"][i % 2], ["N/A", "null", "x"][i % 3] if i % 5 else "y",
+              i % 2 if i % 4 else 1 - i % 2, i % 2)
+        p1 = (f"v{i}", ["en", "de"][i % 2], None if i % 7 == 0 else "z", i % 2,
+              i % 2 if i % 3 == 0 else 1 - i % 2)
+        p2 = (f"w{i}", "en", "w", 1, 1)
+        rows.append((0, p0))
+        rows.append((1, p1))
+        rows.append((2, p2))
+    ordered = [r for k in range(3) for p, r in rows if p == k]
+    ddl = "url string, lang string, s string, lbl int, pred int"
+    df = spark.createDataFrame(spark.sparkContext.parallelize(ordered, 3), ddl)
+    ref = spark.createDataFrame(
+        [r for p, r in rows if p == 0][:24] + [(f"r{i}", "en", "q", 0, 0) for i in range(10)]
+        + [("r-fr", "fr", "q", 1, 1)], ddl)
+    return df, ref
+
+
+def test_partition_sections_sliced_oracle_parity(spark):
+    """Every check-backed per-partition section gives, on each input
+    partition, the (condition, category, details) rows of running the
+    same configured check on that partition's slice alone."""
+    from deepchecks_spark import Dataset
+    from deepchecks_spark.checks.integrity import ConflictingLabels, MixedNulls
+    from deepchecks_spark.checks.traintest import TrainTestSamplesMix
+    from deepchecks_spark.runner import (
+        conflicting_labels_partition_values,
+        duplicates_partition_values,
+        mixed_nulls_partition_values,
+        new_category_partition_values,
+        performance_check,
+        performance_partition_counts,
+        performance_value_step,
+        samples_mix_partition_values,
+    )
+
+    df, ref = _sections_fixture(spark)
+    df.persist()
+    string_cols = ["url", "lang", "s"]
+    per_part = compute_column_stats_by_partition(df, df.columns)
+    counts = partition_value_counts(df, ["lang"], string_cols)
+
+    def ds(frame):
+        return Dataset(frame, label="lbl", cat_features=["lang"], infer_categorical=False)
+
+    features = [c for c in ds(df).features if c != "lbl"]
+    mixed_nulls = MixedNulls().add_condition_different_nulls_less_equal_to(1)
+    duplicates = duplicates_check(df.columns)
+    conflicting = ConflictingLabels().add_condition_ratio_of_conflicting_labels_less_or_equal(0)
+    new_category = _new_category()
+    samples_mix = TrainTestSamplesMix().add_condition_duplicates_ratio_less_or_equal(0.05)
+    performance = performance_check("pred")
+    perf_counts = performance_partition_counts(df, "lbl", "pred")
+    sections = [
+        (mixed_nulls, partition_rows(mixed_nulls, mixed_nulls_partition_values(
+            per_part, counts)), lambda part: mixed_nulls.run(ds(part))),
+        (duplicates, partition_rows(duplicates, duplicates_partition_values(
+            df, duplicates.columns)),
+         lambda part: duplicates.run(ds(part))),
+        (conflicting, partition_rows(conflicting, conflicting_labels_partition_values(
+            df, features, "lbl")), lambda part: conflicting.run(ds(part))),
+        (new_category, partition_rows(new_category, new_category_partition_values(
+            counts, ref, ["lang"], per_part)),
+         lambda part: new_category.run(ds(ref), ds(part))),
+        (samples_mix, partition_rows(samples_mix, samples_mix_partition_values(
+            df, ref, df.columns)), lambda part: samples_mix.run(ds(ref), ds(part))),
+        (performance, partition_rows(performance, perf_counts,
+                                     performance_value_step(perf_counts)),
+         lambda part: performance.run(ds(part))),
+    ]
+    with_pid = df.withColumn("__pid", F.spark_partition_id())
+    for check, rows, run_on in sections:
+        assert sorted(r[0] for r in rows) == [0, 1, 2], check.header()
+        for pid, header, *verdict in rows:
+            part = with_pid.filter(F.col("__pid") == pid).drop("__pid")
+            want = [(c.name, c.category.value, c.details)
+                    for c in run_on(part).conditions_results]
+            assert header == check.header()
+            assert [tuple(verdict)] == want, (check.header(), pid)
+        # the fixture reaches both verdicts of every section
+        assert {r[3] for r in rows} == {"PASS", "FAIL"}, check.header()
+    df.unpersist()
+
+
+def test_mixed_nulls_collect_caches_every_partition(spark):
+    # run_job materialises the persisted value-count table with the
+    # collect of its MixedNulls rows, not a count(): the filtered collect
+    # must still cache every partition of the table
+    from deepchecks_spark.runner import mixed_nulls_partition_values
+
+    df, _ = _sections_fixture(spark)
+    sc = spark.sparkContext
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+        counts = partition_value_counts(df, ["lang"], ["url", "lang", "s"]).persist()
+        values = mixed_nulls_partition_values(compute_column_stats_by_partition(df), counts)
+        cached = [i for i in sc._jsc.sc().getRDDStorageInfo() if i.id() not in before]
+        assert set(values[0]["columns"]["s"]) == {'"N/A"', '"null"'}
+        assert len(cached) == 1
+        assert cached[0].numPartitions() > 1
+        assert cached[0].numCachedPartitions() == cached[0].numPartitions()
+        counts.unpersist()
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def _job_tags(sc, job_id):
+    store = sc._jsc.sc().statusStore()
+    return set(sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        store.job(job_id).jobTags()))
+
+
+def test_run_job_tags_every_job_and_keeps_the_callers_group(spark, tmp_path, corpus_parquet):
+    # every job of a pass, the AQE stage jobs and the nested run_jobs
+    # legs too, carries the job tag of its runner stage or section. The
+    # caller's job group stays on every job (its cancelJobGroup reaches
+    # them), and without one they stay ungrouped
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    before = _job_ids(sc)
+    sc.setJobGroup("runner-caller", "runner-caller")
+    try:
+        run_job(spark, corpus_parquet, str(tmp_path / "out"), cat_features=["lang"],
+                resume=False)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "runner-caller"
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = _job_ids(sc) - before
+    by_tag = {}
+    for j in jobs:
+        assert store.job(j).jobGroup().get() == "runner-caller", j
+        tags = {t for t in _job_tags(sc, j) if t.startswith("runner.")}
+        assert tags, j
+        # a section leg's tag never reaches a concurrent leg's jobs
+        assert len({t for t in tags if t.startswith("runner.partition_verdicts.")}) <= 1, tags
+        by_tag.setdefault(max(tags, key=len), []).append(j)
+    assert {"runner.input", "runner.global_verdicts", "runner.violations",
+            "runner.partition_verdicts.duplicates"} <= set(by_tag), by_tag
+    # a stage's tag does not outlive it on the caller's thread
+    assert set(sc.getJobTags()) == set()
+
+
+def test_run_job_backticked_label_and_prediction(spark, tmp_path):
+    # label and prediction names that need quoting give verdicts, not
+    # analysis errors, in the global suite and the partition sections
+    src = str(tmp_path / "in_quoted")
+    spark.range(0, 400).selectExpr(
+        "id", "CAST(id % 2 AS INT) AS `y.true`",
+        "CAST(CASE WHEN id % 10 = 0 THEN 1 - id % 2 ELSE id % 2 END AS INT) AS `p``red`",
+    ).repartition(4).write.parquet(src)
+    out = str(tmp_path / "out_quoted")
+    run_job(spark, src, out, label="y.true", prediction_column="p`red")
+    v = spark.read.parquet(os.path.join(out, "verdicts")).collect()
+    assert [r for r in v if r["check"] == "Single Dataset Performance"]
+    assert not [r for r in v if r["category"] == "ERROR"], v
+    pv = spark.read.parquet(os.path.join(out, "partition_verdicts")).collect()
+    perf = [r for r in pv if r["check"] == "Single Dataset Performance"]
+    assert perf and {r["category"] for r in perf} == {"PASS"}
+
+
+def test_runner_verdict_literals_only_in_drift_rows():
+    # verdict rows come from the checks' own conditions through one
+    # evaluator; only partition drift (no check class) and verdict_rows'
+    # fixed <computed>/<failure> rows spell a category out
+    import ast
+
+    import deepchecks_spark.runner as runner_mod
+
+    tree = ast.parse(open(runner_mod.__file__, encoding="utf-8").read())
+    allowed = {"drift_partition_rows", "verdict_rows"}
+    found = []
+
+    def visit(node, owner):
+        if isinstance(node, ast.FunctionDef) and owner is None:
+            owner = node.name
+        if isinstance(node, ast.Constant) and node.value in ("PASS", "FAIL", "ERROR"):
+            found.append((owner, node.value, node.lineno))
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner)
+
+    visit(tree, None)
+    assert found and not [f for f in found if f[0] not in allowed], found
