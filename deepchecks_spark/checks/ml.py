@@ -23,6 +23,7 @@ from deepchecks_spark.core.checks import (
     get_condition_passed_message,
 )
 from deepchecks_spark.core.result import ConditionCategory, ConditionResult
+from deepchecks_spark.functions.columns import quote_ident
 from deepchecks_spark.io import local_frame
 from deepchecks_spark.ml.gbm import GradientBoostingBinary
 from deepchecks_spark.ml.metrics import roc_auc
@@ -64,7 +65,7 @@ class FeatureLabelCorrelation(SingleDatasetCheck):
         if ds.label_name is None:
             raise ValueError("FeatureLabelCorrelation requires a label")
         cols = list(ds.features) + [ds.label_name]
-        pdf = sample_to_pandas(ds.df.select(*[f"`{c}`" for c in cols]), self.n_samples or 10**9,
+        pdf = sample_to_pandas(ds.df.select(*[quote_ident(c) for c in cols]), self.n_samples or 10**9,
                                self.random_state, total=ctx.n_rows(kind))
         value = {
             f: pps_score(pdf, f, ds.label_name, random_seed=self.random_state,
@@ -106,7 +107,7 @@ class IdentifierLabelCorrelation(SingleDatasetCheck):
         if not identifiers:
             raise ValueError("check requires an index or datetime column")
         pdf = sample_to_pandas(
-            ds.df.select(*[f"`{c}`" for c in identifiers + [ds.label_name]]),
+            ds.df.select(*[quote_ident(c) for c in identifiers + [ds.label_name]]),
             self.n_samples or 10**9, self.random_state, total=ctx.n_rows(kind),
         )
         value = {
@@ -149,7 +150,7 @@ class FeatureLabelCorrelationChange(TrainTestCheck):
         features = list(ctx.train.features)
         out = {"train": {}, "test": {}, "train-test difference": {}}
         for kind, ds in (("train", ctx.train), ("test", ctx.test)):
-            pdf = sample_to_pandas(ds.df.select(*[f"`{c}`" for c in features + [label]]),
+            pdf = sample_to_pandas(ds.df.select(*[quote_ident(c) for c in features + [label]]),
                                    self.n_samples or 10**9, self.random_state,
                                    total=ctx.n_rows(kind))
             for f in features:
@@ -212,7 +213,7 @@ class OutlierSampleDetection(SingleDatasetCheck):
     def compute(self, ctx, kind):
         ds = ctx.data(kind)
         cols = list(ds.features) or ds.columns
-        pdf = sample_to_pandas(ds.df.select(*[f"`{c}`" for c in cols]),
+        pdf = sample_to_pandas(ds.df.select(*[quote_ident(c) for c in cols]),
                                self.n_samples or 5_000, self.random_state,
                                total=ctx.n_rows(kind))
         if len(pdf) < 10:
@@ -265,10 +266,10 @@ class MultivariateDrift(TrainTestCheck):
     def compute(self, ctx):
         features = list(ctx.train.features)
         cats = set(ctx.train.cat_features)
-        train_pdf = sample_to_pandas(ctx.train.df.select(*[f"`{c}`" for c in features]),
+        train_pdf = sample_to_pandas(ctx.train.df.select(*[quote_ident(c) for c in features]),
                                      self.sample_size, self.random_state,
                                      total=ctx.n_rows("train"))
-        test_pdf = sample_to_pandas(ctx.test.df.select(*[f"`{c}`" for c in features]),
+        test_pdf = sample_to_pandas(ctx.test.df.select(*[quote_ident(c) for c in features]),
                                     self.sample_size, self.random_state + 1,
                                     total=ctx.n_rows("test"))
         combined = pd.concat([train_pdf, test_pdf], ignore_index=True)
@@ -381,7 +382,7 @@ class FeatureFeatureCorrelation(SingleDatasetCheck):
                 df = df.sample(False, frac, self.random_state)
         cat_ndv = {}
         if cats:
-            row = df.agg(*[F.approx_count_distinct(f"`{c}`").alias(c) for c in cats]).first()
+            row = df.agg(*[F.approx_count_distinct(quote_ident(c)).alias(c) for c in cats]).first()
             cat_ndv = {c: row[c] or 0 for c in cats}
         for c in all_feats:
             value[c][c] = 1.0
@@ -477,8 +478,8 @@ class FeatureFeatureCorrelation(SingleDatasetCheck):
         back onto the pair — groupBy shuffles on compressed state only,
         and the final corr is a single algebraic aggregation."""
         sub = (
-            df.select(F.col(f"`{a}`").cast("double").alias("x"),
-                      F.col(f"`{b}`").cast("double").alias("y"))
+            df.select(F.col(quote_ident(a)).cast("double").alias("x"),
+                      F.col(quote_ident(b)).cast("double").alias("y"))
             .dropna()
             .filter(~F.isnan("x") & ~F.isnan("y"))  # pandas dropna drops NaN too
         )
@@ -503,7 +504,7 @@ class FeatureFeatureCorrelation(SingleDatasetCheck):
         H(X|Y) = H(X,Y) − H(Y) and U(X|Y) = (H(X) − H(X|Y)) / H(X).
         """
         joint = (
-            df.select(F.col(f"`{a}`").alias("x"), F.col(f"`{b}`").alias("y"))
+            df.select(F.col(quote_ident(a)).alias("x"), F.col(quote_ident(b)).alias("y"))
             .dropna().groupBy("x", "y").agg(F.count(F.lit(1)).alias("n"))
         )
         # Marginal counts via partitioned windows over the (small)
@@ -542,7 +543,8 @@ class FeatureFeatureCorrelation(SingleDatasetCheck):
     def _correlation_ratio(df, cat, num) -> float:
         """η from per-category (n, mean) + global Σ(y−ȳ)² (reference
         correlation_methods.py:106-148) — single aggregation pass."""
-        sub = df.select(F.col(f"`{cat}`").alias("c"), F.col(f"`{num}`").cast("double").alias("v")).dropna()
+        sub = df.select(F.col(quote_ident(cat)).alias("c"),
+                        F.col(quote_ident(num)).cast("double").alias("v")).dropna()
         groups = sub.groupBy("c").agg(F.count("v").alias("n"), F.avg("v").alias("m")).collect()
         if not groups:
             return 0.0

@@ -3,14 +3,14 @@
 
 The reference does set ops with python ``set``; here they are Spark
 semi/anti joins with the small distinct side broadcast, and the drift
-checks share fused histogram passes (see drift/spark.py). Reference
+checks read one shared histogram pass per side (``Context.histograms``,
+see drift/spark.py). Reference
 file:line citations per check.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from deepchecks_spark.core.checks import (
     USE_DEFAULT,
@@ -19,19 +19,32 @@ from deepchecks_spark.core.checks import (
     format_percent,
     get_condition_passed_message,
 )
-from deepchecks_spark.core.parallel import run_jobs
 from deepchecks_spark.core.result import ConditionCategory, ConditionResult
-from deepchecks_spark.drift.spark import (
-    calc_drift_score,
-    categorical_histograms,
-    numeric_histograms,
-)
+from deepchecks_spark.dataset import is_numeric_type
+from deepchecks_spark.drift.spark import calc_drift_score, emd_sketch_bound, ks_sketch_bound
 from deepchecks_spark.functions.columns import melt, quote_ident
 from deepchecks_spark.functions.strings import baseform_expr
-from deepchecks_spark.stats import column_counts
 
 SUPPORTED_CATEGORICAL_METHODS = ("Cramer's V", "PSI")
 SUPPORTED_NUMERIC_METHODS = ("Earth Mover's Distance", "Kolmogorov-Smirnov")
+# calc_drift_score's parameters that a drift check holds as attributes
+_DRIFT_PARAMS = ("margin_quantile_filter", "max_num_categories_for_drift",
+                "min_category_size_ratio", "numerical_drift_method", "categorical_drift_method",
+                "balance_classes", "show_categories_by", "min_samples")
+
+
+def _selected(cols, columns, ignore_columns) -> list:
+    """``cols`` within ``columns`` and outside ``ignore_columns`` (None: all)."""
+    return [c for c in cols if (columns is None or c in columns)
+            and (ignore_columns is None or c not in ignore_columns)]
+
+
+def _drift_score(check, kind: str, train_hist, test_hist) -> tuple:
+    """(score or None when a side has too few samples, method name)
+    under ``check``'s drift parameters."""
+    params = {p: getattr(check, p) for p in _DRIFT_PARAMS if hasattr(check, p)}
+    score, method = calc_drift_score(kind, train_hist, test_hist, **params)
+    return (None if score == "not_enough_samples" else score), method
 
 
 def drift_condition(max_cat: float, max_num: float, unit: str, unit_plural: str,
@@ -69,9 +82,10 @@ class FeatureDrift(TrainTestCheck):
     samples per side; value = {col: {'Drift score', 'Method',
     'Importance'}}.
 
-    Spark: one melted categorical-histogram pass per dataset + one
-    numeric-histogram pass per dataset — 4 aggregation jobs total,
-    independent of the number of features.
+    Spark: the histograms come from the suite's shared drift pass
+    (``Context.histograms``: one categorical and one numeric pass per
+    side, whatever the number of features or drift checks); ``columns``
+    and ``ignore_columns`` only filter what this check reads.
     """
 
     DEFAULT_N_SAMPLES = 100_000
@@ -80,8 +94,7 @@ class FeatureDrift(TrainTestCheck):
                  margin_quantile_filter: float = 0.025, max_num_categories_for_drift: int | None = None,
                  min_category_size_ratio: float = 0.01, show_categories_by: str = "largest_difference",
                  numerical_drift_method: str = "KS", categorical_drift_method: str = "cramers_v",
-                 ignore_na: bool = True, min_samples: int = 10, n_samples=USE_DEFAULT,
-                 numeric_hist_mode: str = "auto", **kw):
+                 ignore_na: bool = True, min_samples: int = 10, n_samples=USE_DEFAULT, **kw):
         super().__init__(n_samples=n_samples, **kw)
         self.columns = columns
         self.ignore_columns = ignore_columns
@@ -94,66 +107,23 @@ class FeatureDrift(TrainTestCheck):
         self.categorical_drift_method = categorical_drift_method
         self.ignore_na = ignore_na
         self.min_samples = min_samples
-        self.numeric_hist_mode = numeric_hist_mode
-
-    def _common_columns(self, ctx):
-        train = ctx.train
-        cats = [c for c in train.cat_features]
-        nums = [
-            c
-            for c in train.numerical_features
-            if isinstance(train.schema_of(c), (T.ByteType, T.ShortType, T.IntegerType,
-                                               T.LongType, T.FloatType, T.DoubleType, T.DecimalType))
-        ]
-        if self.columns is not None:
-            cats = [c for c in cats if c in set(self.columns)]
-            nums = [c for c in nums if c in set(self.columns)]
-        if self.ignore_columns is not None:
-            cats = [c for c in cats if c not in set(self.ignore_columns)]
-            nums = [c for c in nums if c not in set(self.ignore_columns)]
-        return cats, nums
 
     def compute(self, ctx):
-        cats, nums = self._common_columns(ctx)
-        train_df = self._effective_df(ctx, "train")
-        test_df = self._effective_df(ctx, "test")
-        # the four histogram passes are independent collect jobs over
-        # the two persisted sides: submit them concurrently so each
-        # job's ramp-up/tail back-fills the others (guide §2.6) instead
-        # of serializing 4-6 scheduler round-trips
-        sk_train: set = set()
-        sk_test: set = set()
-        cat_train, cat_test, num_train, num_test = run_jobs([
-            lambda: categorical_histograms(train_df, cats, self.ignore_na),
-            lambda: categorical_histograms(test_df, cats, self.ignore_na),
-            lambda: numeric_histograms(train_df, nums, self.numeric_hist_mode,
-                                       sketched_out=sk_train),
-            lambda: numeric_histograms(test_df, nums, self.numeric_hist_mode,
-                                       sketched_out=sk_test),
-        ])
-        sketched = sk_train | sk_test
+        train = ctx.train
+        cats = _selected(train.cat_features, self.columns, self.ignore_columns)
+        nums = _selected([c for c in train.numerical_features
+                          if is_numeric_type(train.schema_of(c))], self.columns, self.ignore_columns)
+        train_h, test_h = self._effective_histograms(ctx, cats, nums)
+        sketched = train_h.sketched | test_h.sketched
         fi = ctx.feature_importance or {}
+        hists = {c: ("categorical", train_h.category_counts(c, self.ignore_na),
+                     test_h.category_counts(c, self.ignore_na)) for c in cats}
+        hists.update({c: ("numerical", train_h.numerical[c], test_h.numerical[c]) for c in nums})
         value = {}
-        kw = dict(
-            margin_quantile_filter=self.margin_quantile_filter,
-            max_num_categories_for_drift=self.max_num_categories_for_drift,
-            min_category_size_ratio=self.min_category_size_ratio,
-            numerical_drift_method=self.numerical_drift_method,
-            categorical_drift_method=self.categorical_drift_method,
-            show_categories_by=self.show_categories_by,
-            min_samples=self.min_samples,
-        )
-        for c in cats:
-            score, method = calc_drift_score("categorical", cat_train[c], cat_test[c], **kw)
-            value[c] = {"Drift score": None if score == "not_enough_samples" else score,
-                        "Method": method, "Importance": fi.get(c)}
-        for c in nums:
-            score, method = calc_drift_score("numerical", num_train[c], num_test[c], **kw)
-            value[c] = {"Drift score": None if score == "not_enough_samples" else score,
-                        "Method": method, "Importance": fi.get(c)}
+        for c, hist in hists.items():
+            score, method = _drift_score(self, *hist)
+            value[c] = {"Drift score": score, "Method": method, "Importance": fi.get(c)}
             if c in sketched and method is not None:
-                from deepchecks_spark.drift.spark import emd_sketch_bound, ks_sketch_bound
-
                 # sketch-mode score is score ± ε (ROADMAP #4): report ε so
                 # threshold conditions near the bound can be flagged; KS
                 # gets the data-dependent envelope-intersection bound
@@ -196,8 +166,7 @@ class LabelDrift(TrainTestCheck):
     def __init__(self, margin_quantile_filter: float = 0.025, max_num_categories_for_drift: int | None = None,
                  min_category_size_ratio: float = 0.01, numerical_drift_method: str = "KS",
                  categorical_drift_method: str = "cramers_v", balance_classes: bool = False,
-                 ignore_na: bool = True, min_samples: int = 10, n_samples=USE_DEFAULT,
-                 numeric_hist_mode: str = "auto", **kw):
+                 ignore_na: bool = True, min_samples: int = 10, n_samples=USE_DEFAULT, **kw):
         super().__init__(n_samples=n_samples, **kw)
         self.margin_quantile_filter = margin_quantile_filter
         self.max_num_categories_for_drift = max_num_categories_for_drift
@@ -207,56 +176,26 @@ class LabelDrift(TrainTestCheck):
         self.balance_classes = balance_classes
         self.ignore_na = ignore_na
         self.min_samples = min_samples
-        self.numeric_hist_mode = numeric_hist_mode
 
     def compute(self, ctx):
         label = ctx.train.label_name
         if label is None:
             raise ValueError("LabelDrift requires a label column")
-        is_numeric = self._label_is_numeric(ctx)
-        kw = dict(
-            margin_quantile_filter=self.margin_quantile_filter,
-            max_num_categories_for_drift=self.max_num_categories_for_drift,
-            min_category_size_ratio=self.min_category_size_ratio,
-            numerical_drift_method=self.numerical_drift_method,
-            categorical_drift_method=self.categorical_drift_method,
-            balance_classes=self.balance_classes,
-            min_samples=self.min_samples,
-        )
-        train_df = self._effective_df(ctx, "train")
-        test_df = self._effective_df(ctx, "test")
-        # the two sides' histogram jobs are independent: overlap them
-        # (guide §2.6)
-        if is_numeric:
-            kind, hist, arg = "numerical", numeric_histograms, self.numeric_hist_mode
-        else:
-            kind, hist, arg = "categorical", categorical_histograms, self.ignore_na
-        h_train, h_test = run_jobs([lambda: hist(train_df, [label], arg),
-                                    lambda: hist(test_df, [label], arg)])
-        score, method = calc_drift_score(kind, h_train[label], h_test[label], **kw)
-        value = {"Drift score": None if score == "not_enough_samples" else score, "Method": method}
-        return value, None
+        return self._column_drift(ctx, label), None
 
-    @staticmethod
-    def _label_is_numeric(ctx) -> bool:
-        """Task-type inference for the label (reference tabular/utils/
-        task_inference.py:55-82): a numeric label with few distinct
-        observed values is a classification label → categorical drift.
-        Categorical iff n_unique/max(n_non_null,1000) < 0.05 AND
-        n_unique ≤ cap (30 for ints/whole floats, 5 otherwise)."""
-        label = ctx.train.label_name
-        dt = ctx.train.schema_of(label)
-        if label in set(ctx.train.cat_features):
-            return False
-        if not isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                               T.FloatType, T.DoubleType, T.DecimalType)):
-            return False
-        n, d, whole = column_counts(ctx.train.df, [label])[label]
-        if d == 0:
-            return True
-        cap = 30 if (not isinstance(dt, (T.FloatType, T.DoubleType, T.DecimalType)) or whole) else 5
-        is_cat = d / max(n, 1000) < 0.05 and d <= cap
-        return not is_cat
+    def _column_drift(self, ctx, col: str) -> dict:
+        """Drift of one label-like column, categorical or numerical as
+        task inference names it (``Context.target_is_numeric``)."""
+        if ctx.target_is_numeric(col):
+            train_h, test_h = self._effective_histograms(ctx, [], [col])
+            score, method = _drift_score(self, "numerical", train_h.numerical[col],
+                                        test_h.numerical[col])
+        else:
+            train_h, test_h = self._effective_histograms(ctx, [col], [])
+            score, method = _drift_score(self, "categorical",
+                                        train_h.category_counts(col, self.ignore_na),
+                                        test_h.category_counts(col, self.ignore_na))
+        return {"Drift score": score, "Method": method}
 
     def add_condition_drift_score_less_than(self, max_allowed_drift_score: float = 0.15):
         def condition(result):
@@ -272,29 +211,20 @@ class LabelDrift(TrainTestCheck):
         """reference label_drift.py:139-141."""
         return {"Label Drift Score": check_result.value["Drift score"]}
 
-    def greater_is_better(self) -> bool:
-        return False
-
 
 class PredictionDrift(LabelDrift):
     """Drift of a model-prediction column (reference tabular/.../
     prediction_drift.py shares the LabelDrift kernels via
     utils/abstracts/label_drift.py): identical computation, applied to a
-    named prediction column instead of the label."""
+    named prediction column instead of the label, which is read like a
+    label — task inference picks categorical or numerical drift."""
 
     def __init__(self, prediction_column: str, **kw):
         super().__init__(**kw)
         self.prediction_column = prediction_column
 
     def compute(self, ctx):
-        from deepchecks_spark.dataset import Dataset as _DS
-        from deepchecks_spark.core.context import Context as _Ctx
-
-        col = self.prediction_column
-        mk = lambda ds: _DS(ds.df.select(col), label=col, infer_categorical=False,  # noqa: E731
-                            cat_features=[c for c in ds.cat_features if c == col])
-        sub_ctx = _Ctx(train=mk(ctx.train), test=mk(ctx.test))
-        return LabelDrift.compute(self, sub_ctx)
+        return self._column_drift(ctx, self.prediction_column), None
 
     def reduce_output(self, check_result) -> dict:
         """reference prediction_drift.py:197-200."""
@@ -499,9 +429,9 @@ class NewCategoryTrainTest(TrainTestCheck):
 
     Reference: train_test_validation/new_category_train_test.py. value =
     {col: {'n_new_categories', 'ratio_of_new_categories', 'new_categories'}}.
-    Spark: reuses the fused categorical-histogram pass (one melted agg
-    per dataset for ALL cat features); the set difference runs on the
-    tiny collected histograms.
+    Spark: reads the suite's shared categorical histograms
+    (``Context.histograms``: one melted agg per dataset for ALL cat
+    features); the set difference runs on the tiny collected histograms.
     """
 
     DEFAULT_N_SAMPLES = 10_000_000
@@ -512,17 +442,12 @@ class NewCategoryTrainTest(TrainTestCheck):
         self.ignore_columns = ignore_columns
 
     def compute(self, ctx):
-        cats = list(ctx.train.cat_features)
-        if self.columns is not None:
-            cats = [c for c in cats if c in set(self.columns)]
-        if self.ignore_columns is not None:
-            cats = [c for c in cats if c not in set(self.ignore_columns)]
-        train_h = categorical_histograms(self._effective_df(ctx, "train"), cats, ignore_na=True)
-        test_h = categorical_histograms(self._effective_df(ctx, "test"), cats, ignore_na=True)
+        cats = _selected(ctx.train.cat_features, self.columns, self.ignore_columns)
+        train_h, test_h = self._effective_histograms(ctx, cats, [])
         value = {}
         for c in cats:
-            train_cats = set(train_h.get(c, {}))
-            test_counts = test_h.get(c, {})
+            train_cats = set(train_h.category_counts(c, ignore_na=True))
+            test_counts = test_h.category_counts(c, ignore_na=True)
             new = {k: v for k, v in test_counts.items() if k not in train_cats}
             n_test = sum(test_counts.values())
             value[c] = {

@@ -184,6 +184,20 @@ class BaseCheck:
 
         return df, compute_column_stats(df, ds.columns)
 
+    def _effective_histograms(self, ctx, cat_cols: list, num_cols: list) -> list:
+        """[train, test] drift histograms: the shared full-data pass
+        (``Context.histograms``), or a one-off pass over the columns when
+        an explicit n_samples cap applies or a column is outside it."""
+        from deepchecks_spark.core.context import drift_histograms
+
+        kinds = ("train", "test")
+        dfs = [self._effective_df(ctx, k) for k in kinds]
+        if (cat_cols or num_cols) and all(df is ctx.data(k).df for df, k in zip(dfs, kinds)):
+            cats, nums = ctx.drift_columns()
+            if set(cat_cols) <= set(cats) and set(num_cols) <= set(nums):
+                return [ctx.histograms(k) for k in kinds]
+        return drift_histograms(dfs, cat_cols, num_cols)
+
     def _finalize(self, ctx, value, violations=None, t0: float | None = None) -> CheckResult:
         result = CheckResult(value=value, header=self.header(), check=self, violations=violations)
         result.process_conditions()

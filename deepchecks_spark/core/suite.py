@@ -143,17 +143,16 @@ class Suite:
         back-fills the others' ramp-up — guide §2.6) and concatenate
         results in insertion order, so the observable contract (result
         order, values, per-check failure isolation) matches a serial
-        loop. The shared fused-stats pass is single-flight inside
-        Context, so N concurrent stats-driven checks still cost one
-        scan. A SingleDataset check's train/test legs stay sequential
-        within its task (same instance).
+        loop. Each side is persisted and materialised before the checks
+        start, and the shared passes (fused stats, drift histograms) are
+        single-flight inside Context, so N concurrent checks reading one
+        of them still cost one scan. A SingleDataset check's train/test
+        legs stay sequential within its task (same instance).
 
         ``train`` and ``test`` are Datasets or bare DataFrames (see
         :class:`Context`); the suite builds its own Context over them."""
         ctx = Context(train=train, test=test, feature_importance=feature_importance)
-        ctx.persist("train")
-        if ctx.test is not None:
-            ctx.persist("test")
+        ctx.persist("train", *(["test"] if ctx.test is not None else []))
 
         def _task(check):
             if isinstance(check, TrainTestCheck):

@@ -3,14 +3,18 @@
 ALL categorical columns share one melted ``groupBy(column, value)``
 pass per dataset, and ALL numeric columns share one melted pass (exact
 distinct-value histogram) or one fused ``percentile_approx`` agg (GK
-sketch, the 10^12-row path) — so FeatureDrift over k columns costs a
-constant number of scans, not k (SURVEY.md §2.5 "fused" rows).
+sketch, the 10^12-row path) — so drift over k columns costs a constant
+number of scans, not k (SURVEY.md §2.5 "fused" rows). A suite runs them
+once per side for all its drift checks (``Context.histograms``).
 
 Both shapes reduce to mergeable per-partition state (hash-agg partials
 / GK sketches) → tree aggregation, no raw-data shuffle.
 """
 
 from __future__ import annotations
+
+from collections import Counter
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -82,82 +86,82 @@ def emd_sketch_bound(emd_estimate: float | None = None) -> float:
 MAX_COLLECTED_CATEGORIES = 10_000
 
 
-def categorical_histograms(df: DataFrame, cols: list, ignore_na: bool = True,
-                           max_categories: int = MAX_COLLECTED_CATEGORIES) -> dict:
-    """{col: {category(str): count}} in ONE melted aggregation pass.
+def categorical_counts(df: DataFrame, cols: list,
+                       max_categories: int = MAX_COLLECTED_CATEGORIES) -> dict:
+    """{col: {category(str): count}} in ONE melted aggregation pass, the
+    null count under the ``None`` key.
 
-    Per-column output is capped at ``max_categories``: the top-N
-    categories by (count desc, value asc) are kept exactly and the tail
-    is rolled into OTHER_CATEGORY_NAME *inside the aggregation* — a
-    partitioned window over the already-reduced (column, value) counts,
-    so the driver never collects an unbounded value set."""
+    Per column, the top ``max_categories`` non-null categories by (count
+    desc, value asc) are kept exactly and the tail is rolled into
+    OTHER_CATEGORY_NAME *inside the aggregation* — a partitioned window
+    over the already-reduced (column, value) counts, so the driver never
+    collects an unbounded value set. Nulls stay outside that ranking."""
     if not cols:
         return {}
-    melted = melt(df, cols, cast="string")
-    if ignore_na:
-        melted = melted.filter(F.col("value").isNotNull())
-    grouped = melted.groupBy("column", "value").count()
-    if max_categories is None:
-        rows = grouped.collect()
-    else:
-        # Fast path: a guarded limit on the aggregated output. If the
-        # limit is NOT hit (every real categorical), this costs nothing
-        # beyond the plain collect; only a pathological high-cardinality
-        # column pays for the exact top-N window fallback.
-        cap_total = len(cols) * max_categories + 1
-        rows = grouped.limit(cap_total).collect()
-        if len(rows) >= cap_total:
-            from pyspark.sql import Window
+    grouped = melt(df, cols, cast="string").groupBy("column", "value").count()
+    # Fast path: a guarded limit on the aggregated output. If no column
+    # holds more than max_categories values (every real categorical),
+    # this costs nothing beyond the plain collect; only a pathological
+    # high-cardinality column pays for the exact top-N window fallback.
+    cap_total = len(cols) * (max_categories + 1) + 1
+    rows = grouped.limit(cap_total).collect()
+    per_column = Counter(r["column"] for r in rows if r["value"] is not None)
+    if len(rows) >= cap_total or max(per_column.values(), default=0) > max_categories:
+        from pyspark.sql import Window
 
-            w = Window.partitionBy("column").orderBy(F.desc("count"), F.asc("value"))
-            ranked = grouped.withColumn("__rn", F.row_number().over(w))
-            kept = ranked.filter(F.col("__rn") <= max_categories).drop("__rn")
-            other = (
-                ranked.filter(F.col("__rn") > max_categories)
-                .groupBy("column")
-                .agg(F.sum("count").alias("count"))
-                .select("column", F.lit(OTHER_CATEGORY_NAME).alias("value"), "count")
-            )
-            rows = kept.unionByName(other).collect()
+        w = Window.partitionBy("column").orderBy(F.desc("count"), F.asc("value"))
+        ranked = grouped.filter(F.col("value").isNotNull()) \
+            .withColumn("__rn", F.row_number().over(w))
+        other = (
+            ranked.filter(F.col("__rn") > max_categories)
+            .groupBy("column")
+            .agg(F.sum("count").alias("count"))
+            .select("column", F.lit(OTHER_CATEGORY_NAME).alias("value"), "count")
+        )
+        rows = (ranked.filter(F.col("__rn") <= max_categories).drop("__rn")
+                .unionByName(other).unionByName(grouped.filter(F.col("value").isNull()))
+                .collect())
     out: dict = {c: {} for c in cols}
     for r in rows:
-        key = r["value"] if r["value"] is not None else None
-        out[r["column"]][key] = out[r["column"]].get(key, 0) + r["count"]
+        out[r["column"]][r["value"]] = out[r["column"]].get(r["value"], 0) + r["count"]
     return out
 
 
-def numeric_histograms(
-    df: DataFrame,
-    cols: list,
-    mode: str = "auto",
-    distinct_counts: dict | None = None,
-    sketched_out: set | None = None,
-) -> dict:
+def place_null_bucket(hist: dict, ignore_na: bool,
+                      max_categories: int = MAX_COLLECTED_CATEGORIES) -> dict:
+    """One column of :func:`categorical_counts` without its nulls, or
+    with them ranked as one more category (first among equal counts, as
+    Spark orders NULL) under the same ``max_categories`` cap."""
+    if None not in hist:
+        return hist
+    if ignore_na:
+        return {k: v for k, v in hist.items() if k is not None}
+    tail = hist.get(OTHER_CATEGORY_NAME, 0)
+    ranked = sorted((k for k in hist if k != OTHER_CATEGORY_NAME),
+                    key=lambda k: (-hist[k], k is not None, k or ""))
+    if len(ranked) <= max_categories and not tail:
+        return hist
+    out = {k: hist[k] for k in ranked[:max_categories]}
+    out[OTHER_CATEGORY_NAME] = tail + sum(hist[k] for k in ranked[max_categories:])
+    return out
+
+
+def categorical_histograms(df: DataFrame, cols: list, ignore_na: bool = True,
+                           max_categories: int = MAX_COLLECTED_CATEGORIES) -> dict:
+    """:func:`categorical_counts` with the nulls placed per ``ignore_na``."""
+    return {c: place_null_bucket(h, ignore_na, max_categories)
+            for c, h in categorical_counts(df, cols, max_categories).items()}
+
+
+def numeric_histograms(df: DataFrame, cols: list, mode: str) -> dict:
     """{col: (values ndarray, counts ndarray)}.
 
     mode='exact': melted groupBy(column, value).count() — exact ECDF.
     mode='sketch': fused percentile_approx (GK, mergeable) — 1001
     equal-weight quantile samples per column.
-    mode='auto': exact when the approx distinct count is small enough.
-    ``sketched_out``: pass a set to learn which columns took the sketch
-    path (so callers can attach ks_sketch_bound to their scores).
     """
     if not cols:
         return {}
-    if mode == "auto":
-        if distinct_counts is None:
-            row = df.agg(
-                *[F.approx_count_distinct(quote_ident(c)).alias(c) for c in cols]
-            ).first()
-            distinct_counts = row.asDict()
-        exact_cols = [c for c in cols if (distinct_counts.get(c) or 0) <= EXACT_HIST_MAX_DISTINCT]
-        sketch_cols = [c for c in cols if c not in set(exact_cols)]
-        if sketched_out is not None:
-            sketched_out.update(sketch_cols)
-        out = numeric_histograms(df, exact_cols, "exact") if exact_cols else {}
-        if sketch_cols:
-            out.update(numeric_histograms(df, sketch_cols, "sketch"))
-        return out
     if mode == "exact":
         melted = melt(df, cols, cast="double").filter(
             F.col("value").isNotNull() & ~F.isnan("value")
@@ -199,6 +203,30 @@ def numeric_histograms(
             out[c] = (vals, weights)
         return out
     raise ValueError(f"unknown mode {mode!r}")
+
+
+def numeric_drift_histograms(df: DataFrame, cols: list) -> tuple:
+    """(histograms, sketched columns): exact while a column's approx
+    distinct count is at most EXACT_HIST_MAX_DISTINCT, else the sketch."""
+    if not cols:
+        return {}, frozenset()
+    row = df.agg(*[F.approx_count_distinct(quote_ident(c)).alias(c) for c in cols]).first()
+    sketched = frozenset(c for c in cols if (row[c] or 0) > EXACT_HIST_MAX_DISTINCT)
+    out = numeric_histograms(df, [c for c in cols if c not in sketched], "exact")
+    out.update(numeric_histograms(df, [c for c in cols if c in sketched], "sketch"))
+    return out, sketched
+
+
+class DriftHistograms(NamedTuple):
+    """One side's :func:`categorical_counts` and
+    :func:`numeric_drift_histograms`."""
+
+    categorical: dict
+    numerical: dict
+    sketched: frozenset
+
+    def category_counts(self, col: str, ignore_na: bool) -> dict:
+        return place_null_bucket(self.categorical[col], ignore_na)
 
 
 def calc_drift_score(

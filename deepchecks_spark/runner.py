@@ -234,8 +234,8 @@ def new_category_partition_values(counts: DataFrame, train_df: DataFrame, cat_co
                                   per_part: dict, max_categories: int = 10_000) -> dict:
     """{partition_id: NewCategoryTrainTest value, holding the
     ``ratio_of_new_categories`` its condition reads} (VERDICT r3 next-8):
-    per TEST partition and column, the share of rows whose value the
-    reference/train side never holds.
+    per TEST partition and column, the share of the non-null values that
+    the reference/train side never holds.
 
     Scale shape: the train side reduces to its DISTINCT melted
     (column, value) pairs — bounded by the batch check's cardinality gate
@@ -267,7 +267,9 @@ def new_category_partition_values(counts: DataFrame, train_df: DataFrame, cat_co
     values = {pid: {c: {"ratio_of_new_categories": 0.0} for c in cols}
               for pid in per_part.keys() | {r["__pid"] for r in per}}
     for r in per:
-        n = per_part[r["__pid"]].n_rows if r["__pid"] in per_part else 0
+        # the check's denominator: the column's non-null values
+        st = per_part.get(r["__pid"])
+        n = st.per_column[r["column"]]["n"] if st is not None else 0
         values[r["__pid"]][r["column"]]["ratio_of_new_categories"] = r["n_new"] / n if n else 0.0
     return values
 
@@ -631,10 +633,20 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
     once = Once()
     _manifest_lock = threading.Lock()  # serialises the manifest file writes
 
+    def shared(name, fn):
+        # an entry's jobs carry runner.shared.<name> in place of the tags
+        # of whichever stage asked first, so each tag counts the same
+        # jobs on every pass
+        def tagged():
+            with job_tag(spark.sparkContext, f"runner.shared.{name}", replacing="runner."):
+                return fn()
+
+        return once(name, tagged)
+
     def _per_part():
         # one grouped stats pass shared by partition_verdicts, metrics
         # and the global stats
-        return once("per_part", lambda: compute_column_stats_by_partition(
+        return shared("per_part", lambda: compute_column_stats_by_partition(
             ds.df, ds.columns))
 
     def _global_stats():
@@ -645,7 +657,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
             parts, distinct = run_jobs([_per_part, lambda: distinct_counts(ds.df, ds.columns)])
             return merge_column_stats(parts, ds.columns, distinct, ds.df.schema)
 
-        return once("global", merged)
+        return shared("global", merged)
 
     def _value_counts():
         # (table, per-partition MixedNulls values) of the one melted
@@ -660,7 +672,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
                 string_cols).persist()
             return counts, mixed_nulls_partition_values(_per_part(), counts)
 
-        return once("value_counts", build)
+        return shared("value_counts", build)
 
     def stage(name, fn):
         if manifest["stages"].get(name) == "done":

@@ -229,14 +229,12 @@ def compute_column_stats(df: DataFrame, columns: list | None = None) -> ColumnSt
     """Fused stats pass: one non-distinct aggregation + one distinct-only
     aggregation, so ``distinct`` is the exact per-column count."""
     columns = columns if columns is not None else df.columns
-    # submit both jobs concurrently — they scan the same (cached) input
-    # and the scheduler interleaves their tasks, hiding each job's
-    # ramp-up/tail behind the other's. Imported here: the core package
-    # imports this module.
+    # submit both jobs concurrently — they scan the same input (which
+    # Suite.run has cached and materialised) and the scheduler
+    # interleaves their tasks, hiding each job's ramp-up/tail behind
+    # the other's. Imported here: the core package imports this module.
     from deepchecks_spark.core.parallel import run_jobs
 
-    if df.is_cached:
-        df.count()  # materialize once so the two jobs don't race to build the cache
     row, dist = run_jobs([
         lambda: df.agg(*_agg_exprs(df, columns, include_approx_distinct=False))
         .first().asDict(),

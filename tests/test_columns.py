@@ -165,7 +165,7 @@ def test_stats_sql_for_plain_names_matches_raw_backticks(spark):
 
 @pytest.mark.parametrize("module", ["runner.py", "stats.py", "checks/integrity.py", "dataset.py",
                                     "checks/traintest.py", "drift/spark.py", "streaming.py",
-                                    "checks/performance.py"])
+                                    "checks/performance.py", "checks/ml.py"])
 def test_no_raw_backtick_interpolation(module):
     # identifiers in SQL text go through quote_ident; a raw `{name}`
     # breaks on a name that holds a backtick

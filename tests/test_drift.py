@@ -146,14 +146,20 @@ def test_feature_drift_no_drift_passes(spark):
     assert result.conditions_results[0].category == ConditionCategory.PASS
 
 
-def test_feature_drift_sketch_mode_close_to_exact(spark):
+def test_feature_drift_sketch_mode_close_to_exact(spark, monkeypatch):
+    import deepchecks_spark.drift.spark as dspark
+
     r = np.random.default_rng(5)
     train_rows = [(float(x),) for x in r.normal(0, 1, 4000)]
     test_rows = [(float(x),) for x in r.normal(0.5, 1, 4000)]
     train = Dataset(spark.createDataFrame(train_rows, "num double"), infer_categorical=False)
     test = Dataset(spark.createDataFrame(test_rows, "num double"), infer_categorical=False)
-    exact = FeatureDrift(numeric_hist_mode="exact").run(train, test).value["num"]["Drift score"]
-    sketch = FeatureDrift(numeric_hist_mode="sketch").run(train, test).value["num"]["Drift score"]
+    exact_info = FeatureDrift().run(train, test).value["num"]
+    # 4000 distinct values: above this gate the column takes the sketch path
+    monkeypatch.setattr(dspark, "EXACT_HIST_MAX_DISTINCT", 10)
+    sketch_info = FeatureDrift().run(train, test).value["num"]
+    assert "Drift score error bound" not in exact_info and "Drift score error bound" in sketch_info
+    exact, sketch = exact_info["Drift score"], sketch_info["Drift score"]
     assert sketch == pytest.approx(exact, abs=0.02)
 
 
@@ -272,3 +278,127 @@ def test_feature_drift_auto_histograms_backticked_numeric_column(spark, monkeypa
     # half of the test mass lies above the train maximum
     assert info["Drift score"] == pytest.approx(0.5, abs=0.02)
     assert ("Drift score error bound" in info) == (exact_max is not None)
+
+
+# -- one shared histogram pass per suite --------------------------------------
+
+def _four_drift_checks(**kw):
+    from deepchecks_spark.checks.traintest import NewCategoryTrainTest, PredictionDrift
+
+    cap = {k: v for k, v in kw.items() if k == "n_samples"}
+    return [FeatureDrift(**kw), LabelDrift(**kw), NewCategoryTrainTest(**cap),
+            PredictionDrift("p", **kw)]
+
+
+def _drift_sides(spark):
+    """Train and test holding a categorical column with nulls (and a
+    category new in test), a many-valued and a few-valued numeric
+    column, a string label with nulls and a prediction column. Each
+    side has as many partitions as the session has slots, so the copy a
+    suite persists samples the same rows as a lone check.run."""
+    slots = spark.sparkContext.defaultParallelism
+
+    def side(s):
+        rows = [(None if i % 7 == 0 else ("z" if s and i % 11 == 0 else "abcd"[i * (1 + s) % 4]),
+                 i * 0.37 + 50.0 * s, float(i % 9 + s),
+                 None if i % 13 == 0 else ("pos" if (i + s * (i // 3)) % 3 == 0 else "neg"),
+                 ["pos", "neg", "pos"][i % (2 + s)])
+                for i in range(3000)]
+        df = spark.createDataFrame(spark.sparkContext.parallelize(rows, slots),
+                                   "c string, x double, k double, y string, p string")
+        return Dataset(df, label="y", cat_features=["c", "p"], infer_categorical=False)
+
+    return side(0), side(1)
+
+
+@pytest.mark.parametrize("kw", [{}, {"ignore_na": False}, {"n_samples": 1000}],
+                         ids=["default", "keep_nulls", "n_samples"])
+def test_suite_drift_checks_match_their_own_runs(spark, monkeypatch, kw):
+    # inside one suite the four histogram checks read one shared pass
+    # (an explicit n_samples cap reads a one-off pass over the sample);
+    # each gives the value of its own check.run
+    import deepchecks_spark.drift.spark as dspark
+    from deepchecks_spark.core.suite import Suite
+
+    monkeypatch.setattr(dspark, "EXACT_HIST_MAX_DISTINCT", 100)  # x sketched, k exact
+    train, test = _drift_sides(spark)
+    solo = [check.run(train, test).value for check in _four_drift_checks(**kw)]
+    suite = [r.value for r in Suite("drift", *_four_drift_checks(**kw)).run(train, test).results]
+    assert suite == solo
+    features = suite[0]
+    assert set(features) == {"c", "p", "x", "k"}
+    assert features["x"]["Drift score error bound"] == dspark.ks_sketch_bound(
+        features["x"]["Drift score"])
+    assert "Drift score error bound" not in features["k"]
+    assert suite[2]["c"]["new_categories"] == ["z"]
+    assert {suite[1]["Method"], suite[3]["Method"]} == {"Cramer's V"}
+
+
+def test_suite_runs_one_drift_histogram_pass_per_side(spark, monkeypatch):
+    import deepchecks_spark.core.context as ctx_mod
+    from deepchecks_spark.core.result import CheckResult
+    from deepchecks_spark.core.suite import Suite
+
+    calls = {"categorical": [], "numeric": []}
+
+    def counted(name, fn):
+        def wrapper(df, cols):
+            calls[name].append(sorted(cols))
+            return fn(df, cols)
+        return wrapper
+
+    monkeypatch.setattr(ctx_mod, "categorical_counts",
+                        counted("categorical", ctx_mod.categorical_counts))
+    monkeypatch.setattr(ctx_mod, "numeric_drift_histograms",
+                        counted("numeric", ctx_mod.numeric_drift_histograms))
+    train, test = _drift_sides(spark)
+    results = Suite("drift", *_four_drift_checks()).run(train, test).results
+    assert all(isinstance(r, CheckResult) for r in results), results
+    # the label joins the categorical pass (task inference: a string)
+    assert calls == {"categorical": [["c", "p", "y"]] * 2, "numeric": [["k", "x"]] * 2}
+
+
+def test_prediction_drift_reads_a_numeric_prediction_like_a_label(spark):
+    # a numeric prediction that task inference calls categorical is in
+    # the shared numeric pass only: its check reads a one-off
+    # categorical pass, and gives the label-drift value of that column
+    from deepchecks_spark.checks.traintest import PredictionDrift
+
+    def side(s):
+        rows = [(float(i % 4 if s == 0 else i % 3), float(i % 4)) for i in range(400)]
+        return Dataset(spark.createDataFrame(rows, "p double, y double"), label="y",
+                       cat_features=[], infer_categorical=False)
+
+    train, test = side(0), side(1)
+    value = PredictionDrift("p").run(train, test).value
+    relabelled = [Dataset(d.df, label="p", cat_features=[], infer_categorical=False)
+                  for d in (train, test)]
+    assert value["Method"] == "Cramer's V"
+    assert value == LabelDrift().run(*relabelled).value
+
+
+@pytest.mark.parametrize("max_categories", [1, 3, 6, 50])
+def test_categorical_histograms_rank_nulls_as_a_category(spark, max_categories):
+    # the shared pass keeps nulls apart from the capped categories; a
+    # reader that keeps them ranks them as one more category, so both
+    # settings equal a capped histogram over the plain values
+    from deepchecks_spark.drift.spark import OTHER_CATEGORY_NAME, categorical_histograms
+
+    rows = [(None if i % 4 == 0 else f"v{0 if i % 3 == 0 else i % 9}", f"w{i % 2}")
+            for i in range(200)]
+    df = spark.createDataFrame(rows, "c string, d string")
+
+    def oracle(values, ignore_na):
+        counts = Counter(v for v in values if v is not None or not ignore_na)
+        ranked = sorted(counts, key=lambda k: (-counts[k], k is not None, k or ""))
+        if len(ranked) <= max_categories:
+            return dict(counts)
+        out = {k: counts[k] for k in ranked[:max_categories]}
+        out[OTHER_CATEGORY_NAME] = sum(counts[k] for k in ranked[max_categories:])
+        return out
+
+    for ignore_na in (True, False):
+        both = categorical_histograms(df, ["c", "d"], ignore_na, max_categories)
+        assert both["c"] == oracle([r[0] for r in rows], ignore_na)
+        # a column is capped alone, whatever columns share its pass
+        assert both["c"] == categorical_histograms(df, ["c"], ignore_na, max_categories)["c"]

@@ -377,3 +377,26 @@ def test_pps_case_detection_parity_with_reference():
     assert case("cat", "y_num")["case"] == "regression"
     r = case("num", "y_dt")
     assert r["case"] == "target_is_datetime" and not r["is_valid_score"]
+
+
+def test_quoted_column_names_give_values(spark):
+    # names holding a backtick or a dot reach every SQL expression
+    # quoted: values, not AnalysisException
+    from deepchecks_spark.functions.columns import quote_ident
+
+    rng = np.random.default_rng(8)
+    names = ["a`b", "c.d", "e`f", "g.h"]
+    ddl = ", ".join(f"{quote_ident(n)} {t}" for n, t in
+                    zip(names, ["double", "double", "string", "string"]))
+
+    def ds(shift):
+        rows = [(float(x) + shift, float(x) * 2, f"k{i % 3}", f"m{i % 3}")
+                for i, x in enumerate(rng.normal(0, 1, 300))]
+        return Dataset(spark.createDataFrame(rows, ddl), cat_features=["e`f", "g.h"],
+                       infer_categorical=False)
+
+    corr = FeatureFeatureCorrelation().run(ds(0)).value
+    assert corr["a`b"]["c.d"] > 0.99
+    assert corr["e`f"]["g.h"] > 0.99
+    drift = MultivariateDrift().run(ds(0), ds(3.0)).value
+    assert drift["domain_classifier_drift_score"] > 0.5

@@ -175,7 +175,7 @@ def test_context_n_rows_concurrent_with_stats(spark, monkeypatch):
 def test_run_job_concurrent_matches_serial(spark, tmp_path, monkeypatch):
     """run_job's stages and sections run through run_jobs; every output
     table must equal the serial reference's, row for row."""
-    import deepchecks_spark.checks.traintest as traintest_mod
+    import deepchecks_spark.core.context as context_mod
     import deepchecks_spark.core.parallel as parallel_mod
     import deepchecks_spark.core.suite as suite_mod
     import deepchecks_spark.runner as runner_mod
@@ -193,7 +193,7 @@ def test_run_job_concurrent_matches_serial(spark, tmp_path, monkeypatch):
 
     concurrent = run(str(tmp_path / "concurrent"))
     serial = lambda fns: [fn() for fn in fns]  # noqa: E731 — the serial reference path
-    for mod in (parallel_mod, suite_mod, runner_mod, traintest_mod):
+    for mod in (parallel_mod, suite_mod, runner_mod, context_mod):
         monkeypatch.setattr(mod, "run_jobs", serial)
     sequential = run(str(tmp_path / "serial"))
     for t in tables:

@@ -958,27 +958,29 @@ def test_run_job_script_profile_stage(spark, tmp_path, corpus_parquet):
 
 
 def _sections_fixture(spark):
-    """3 partitions of (url, lang, s, lbl, pred) and a reference table:
-    partition 0 repeats urls, mixes two null representations into
+    """3 partitions of (url, lang, s, lbl, pred, c) and a reference
+    table: partition 0 repeats urls, mixes two null representations into
     ``s``, has rows that differ only in their label and rows copied into
     the reference; partition 1 has a ``lang`` the reference lacks, real
-    nulls in ``s`` and mostly wrong predictions; partition 2 is clean."""
+    nulls in ``s`` and mostly wrong predictions; partition 2 is clean
+    but for category ``c``: per 10 rows, 4 ``en``, 2 ``zz`` the
+    reference lacks, and 4 nulls."""
     rows = []
     for i in range(120):
         p0 = (f"u{i % 30}", ["en", "fr"][i % 2], ["N/A", "null", "x"][i % 3] if i % 5 else "y",
-              i % 2 if i % 4 else 1 - i % 2, i % 2)
+              i % 2 if i % 4 else 1 - i % 2, i % 2, "en")
         p1 = (f"v{i}", ["en", "de"][i % 2], None if i % 7 == 0 else "z", i % 2,
-              i % 2 if i % 3 == 0 else 1 - i % 2)
-        p2 = (f"w{i}", "en", "w", 1, 1)
+              i % 2 if i % 3 == 0 else 1 - i % 2, "en")
+        p2 = (f"w{i}", "en", "w", 1, 1, (["en"] * 4 + ["zz"] * 2 + [None] * 4)[i % 10])
         rows.append((0, p0))
         rows.append((1, p1))
         rows.append((2, p2))
     ordered = [r for k in range(3) for p, r in rows if p == k]
-    ddl = "url string, lang string, s string, lbl int, pred int"
+    ddl = "url string, lang string, s string, lbl int, pred int, c string"
     df = spark.createDataFrame(spark.sparkContext.parallelize(ordered, 3), ddl)
     ref = spark.createDataFrame(
-        [r for p, r in rows if p == 0][:24] + [(f"r{i}", "en", "q", 0, 0) for i in range(10)]
-        + [("r-fr", "fr", "q", 1, 1)], ddl)
+        [r for p, r in rows if p == 0][:24] + [(f"r{i}", "en", "q", 0, 0, "en") for i in range(10)]
+        + [("r-fr", "fr", "q", 1, 1, "en")], ddl)
     return df, ref
 
 
@@ -1002,12 +1004,12 @@ def test_partition_sections_sliced_oracle_parity(spark):
 
     df, ref = _sections_fixture(spark)
     df.persist()
-    string_cols = ["url", "lang", "s"]
+    string_cols = ["url", "lang", "s", "c"]
     per_part = compute_column_stats_by_partition(df, df.columns)
-    counts = partition_value_counts(df, ["lang"], string_cols)
+    counts = partition_value_counts(df, ["lang", "c"], string_cols)
 
     def ds(frame):
-        return Dataset(frame, label="lbl", cat_features=["lang"], infer_categorical=False)
+        return Dataset(frame, label="lbl", cat_features=["lang", "c"], infer_categorical=False)
 
     features = [c for c in ds(df).features if c != "lbl"]
     mixed_nulls = MixedNulls().add_condition_different_nulls_less_equal_to(1)
@@ -1026,7 +1028,7 @@ def test_partition_sections_sliced_oracle_parity(spark):
         (conflicting, partition_rows(conflicting, conflicting_labels_partition_values(
             df, features, "lbl")), lambda part: conflicting.run(ds(part))),
         (new_category, partition_rows(new_category, new_category_partition_values(
-            counts, ref, ["lang"], per_part)),
+            counts, ref, ["lang", "c"], per_part)),
          lambda part: new_category.run(ds(ref), ds(part))),
         (samples_mix, partition_rows(samples_mix, samples_mix_partition_values(
             df, ref, df.columns)), lambda part: samples_mix.run(ds(ref), ds(part))),
@@ -1045,6 +1047,10 @@ def test_partition_sections_sliced_oracle_parity(spark):
             assert [tuple(verdict)] == want, (check.header(), pid)
         # the fixture reaches both verdicts of every section
         assert {r[3] for r in rows} == {"PASS", "FAIL"}, check.header()
+    # partition 2's new category: 2 of its 6 non-null values, as the
+    # check counts them (not 2 of its 10 rows)
+    new_category_rows = {r[0]: r for r in sections[3][1]}
+    assert "'c': '33.33%'" in new_category_rows[2][-1], new_category_rows[2]
     df.unpersist()
 
 
@@ -1102,11 +1108,30 @@ def test_run_job_tags_every_job_and_keeps_the_callers_group(spark, tmp_path, cor
         assert tags, j
         # a section leg's tag never reaches a concurrent leg's jobs
         assert len({t for t in tags if t.startswith("runner.partition_verdicts.")}) <= 1, tags
+        # a shared pass's jobs carry its tag alone, whichever stage
+        # asked for it first
+        shared = {t for t in tags if t.startswith("runner.shared.")}
+        assert not shared or tags == shared and len(shared) == 1, tags
         by_tag.setdefault(max(tags, key=len), []).append(j)
     assert {"runner.input", "runner.global_verdicts", "runner.violations",
-            "runner.partition_verdicts.duplicates"} <= set(by_tag), by_tag
+            "runner.partition_verdicts.duplicates", "runner.shared.per_part",
+            "runner.shared.global", "runner.shared.value_counts"} <= set(by_tag), by_tag
     # a stage's tag does not outlive it on the caller's thread
     assert set(sc.getJobTags()) == set()
+
+    # every warm pass runs the same jobs under each most specific tag
+    def tag_counts():
+        start = _job_ids(sc)
+        run_job(spark, corpus_parquet, str(tmp_path / "out"), cat_features=["lang"],
+                resume=False)
+        counts = {}
+        for j in _job_ids(sc) - start:
+            tag = max((t for t in _job_tags(sc, j) if t.startswith("runner.")), key=len)
+            counts[tag] = counts.get(tag, 0) + 1
+        return counts
+
+    first = tag_counts()
+    assert tag_counts() == first
 
 
 def test_run_job_backticked_label_and_prediction(spark, tmp_path):
