@@ -3,8 +3,8 @@
 
 The reference does set ops with python ``set``; here they are Spark
 semi/anti joins with the small distinct side broadcast, and the drift
-checks read one shared histogram pass per side (``Context.histograms``,
-see drift/spark.py). Reference
+checks of a suite read one shared histogram pass per side
+(``Context.histograms``, see drift/spark.py). Reference
 file:line citations per check.
 """
 
@@ -82,10 +82,10 @@ class FeatureDrift(TrainTestCheck):
     samples per side; value = {col: {'Drift score', 'Method',
     'Importance'}}.
 
-    Spark: the histograms come from the suite's shared drift pass
-    (``Context.histograms``: one categorical and one numeric pass per
-    side, whatever the number of features or drift checks); ``columns``
-    and ``ignore_columns`` only filter what this check reads.
+    Spark: one categorical and one numeric histogram pass per side over
+    the selected columns, whatever their number. Inside a suite the
+    check reads the suite's shared drift pass (``Context.histograms``)
+    instead, whatever the number of drift checks.
     """
 
     DEFAULT_N_SAMPLES = 100_000
@@ -429,9 +429,10 @@ class NewCategoryTrainTest(TrainTestCheck):
 
     Reference: train_test_validation/new_category_train_test.py. value =
     {col: {'n_new_categories', 'ratio_of_new_categories', 'new_categories'}}.
-    Spark: reads the suite's shared categorical histograms
-    (``Context.histograms``: one melted agg per dataset for ALL cat
-    features); the set difference runs on the tiny collected histograms.
+    Spark: one melted categorical-histogram agg per dataset for ALL the
+    selected cat features (inside a suite, the suite's shared pass,
+    ``Context.histograms``); the set difference runs on the tiny
+    collected histograms.
     """
 
     DEFAULT_N_SAMPLES = 10_000_000

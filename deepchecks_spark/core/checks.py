@@ -45,7 +45,7 @@ class BaseCheck:
 
     DEFAULT_N_SAMPLES: int | None = None  # the reference's per-check default cap
 
-    def __init__(self, n_samples=USE_DEFAULT, random_state: int = 42, **params):
+    def __init__(self, n_samples=USE_DEFAULT, random_state: int = 42):
         if isinstance(n_samples, _UseDefault):
             self.n_samples = self.DEFAULT_N_SAMPLES
             self.enforce_n_samples = False
@@ -53,7 +53,6 @@ class BaseCheck:
             self.n_samples = n_samples
             self.enforce_n_samples = n_samples is not None
         self.random_state = random_state
-        self.params = params
         self.conditions: list[Condition] = []
         self._builder_ctx = None  # (builder_name, bound_kwargs) while one runs
 
@@ -185,14 +184,16 @@ class BaseCheck:
         return df, compute_column_stats(df, ds.columns)
 
     def _effective_histograms(self, ctx, cat_cols: list, num_cols: list) -> list:
-        """[train, test] drift histograms: the shared full-data pass
-        (``Context.histograms``), or a one-off pass over the columns when
-        an explicit n_samples cap applies or a column is outside it."""
+        """[train, test] drift histograms: the full-data pass a suite
+        shares (``Context.histograms``, once both sides are persisted), or
+        a one-off pass over the columns for a lone run, under an explicit
+        n_samples cap, or for a column outside the shared pass."""
         from deepchecks_spark.core.context import drift_histograms
 
         kinds = ("train", "test")
         dfs = [self._effective_df(ctx, k) for k in kinds]
-        if (cat_cols or num_cols) and all(df is ctx.data(k).df for df, k in zip(dfs, kinds)):
+        if ((cat_cols or num_cols) and set(kinds) <= ctx.persisted
+                and all(df is ctx.data(k).df for df, k in zip(dfs, kinds))):
             cats, nums = ctx.drift_columns()
             if set(cat_cols) <= set(cats) and set(num_cols) <= set(nums):
                 return [ctx.histograms(k) for k in kinds]

@@ -43,6 +43,9 @@ class Context:
         self.feature_importance = feature_importance
         self.with_display = with_display
         self._cached_dfs: list = []
+        # the sides a suite persisted for its several checks: only then do
+        # the drift checks share one histogram pass (BaseCheck._effective_histograms)
+        self.persisted: set = set()
         # suite checks run concurrently (Suite.run): the shared passes
         # are single-flight per key so concurrent checks wait for ONE
         # computation instead of duplicating the scan
@@ -124,8 +127,9 @@ class Context:
         return cats, nums
 
     def histograms(self, kind: str) -> DriftHistograms:
-        """``kind``'s drift histograms over :meth:`drift_columns`: the
-        first caller submits both sides' passes together."""
+        """``kind``'s drift histograms over :meth:`drift_columns`, shared
+        by a suite's drift checks: the first caller submits both sides'
+        passes together."""
         def compute():
             kinds = ["train"] + (["test"] if self.test is not None else [])
             cats, nums = self.drift_columns()
@@ -164,6 +168,7 @@ class Context:
         repaid the scan + repartition).
         """
         fresh = []
+        self.persisted.update(kinds)
         for kind in kinds:
             ds = self.data(kind)
             if ds.df.is_cached:

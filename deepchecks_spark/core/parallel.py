@@ -90,22 +90,16 @@ def _inheriting(fn):
 
 
 @contextmanager
-def job_tag(sc, tag: str, replacing: str | None = None):
+def job_tag(sc, tag: str):
     """Tag the block's Spark jobs (AQE's stage jobs too) with ``tag``,
     then drop it: run_jobs runs a lone callable in its caller's thread.
-    The caller's tags that start with ``replacing`` are lifted for the
-    block. The caller's job group is left alone, so its
-    ``cancelJobGroup`` still reaches these jobs."""
-    lifted = [t for t in sc.getJobTags() if replacing and t.startswith(replacing)]
-    for t in lifted:
-        sc.removeJobTag(t)
+    The caller's job group is left alone, so its ``cancelJobGroup``
+    still reaches these jobs."""
     sc.addJobTag(tag)
     try:
         yield
     finally:
         sc.removeJobTag(tag)
-        for t in lifted:
-            sc.addJobTag(t)
 
 
 class Once:

@@ -634,11 +634,9 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
     _manifest_lock = threading.Lock()  # serialises the manifest file writes
 
     def shared(name, fn):
-        # an entry's jobs carry runner.shared.<name> in place of the tags
-        # of whichever stage asked first, so each tag counts the same
-        # jobs on every pass
+        # an entry's jobs carry runner.shared.<name> whichever stage asked first
         def tagged():
-            with job_tag(spark.sparkContext, f"runner.shared.{name}", replacing="runner."):
+            with job_tag(spark.sparkContext, f"runner.shared.{name}"):
                 return fn()
 
         return once(name, tagged)

@@ -70,6 +70,20 @@ def test_suite_from_config_raises_on_custom_condition():
         Suite.from_config(conf)
 
 
+def test_suite_from_config_raises_on_an_unknown_parameter():
+    # a removed or misspelled parameter fails loudly instead of being
+    # ignored: numeric_hist_mode is gone (each numeric column takes the
+    # exact or the sketch histogram by its approx distinct count)
+    from deepchecks_spark.checks.traintest import FeatureDrift
+
+    conf = Suite("s", FeatureDrift()).config()
+    conf["checks"][0]["params"]["numeric_hist_mode"] = "exact"
+    with pytest.raises(TypeError, match="numeric_hist_mode"):
+        Suite.from_config(conf)
+    with pytest.raises(TypeError, match="numeric_hist_mode"):
+        FeatureDrift(numeric_hist_mode="sketch")
+
+
 def test_condition_exception_becomes_error(spark):
     check = IsSingleValue().add_condition("boom", lambda v: 1 / 0)
     ds = Dataset(spark.createDataFrame([(1,)], "x int"), infer_categorical=False)

@@ -358,6 +358,31 @@ def test_suite_runs_one_drift_histogram_pass_per_side(spark, monkeypatch):
     assert calls == {"categorical": [["c", "p", "y"]] * 2, "numeric": [["k", "x"]] * 2}
 
 
+def test_lone_drift_check_scans_only_its_own_columns(spark, monkeypatch):
+    # outside a suite nothing shares the histograms: each check's
+    # one-off pass holds only the columns it reads
+    import deepchecks_spark.core.context as ctx_mod
+    from deepchecks_spark.checks.traintest import NewCategoryTrainTest
+
+    calls = []
+
+    def counted(fn):
+        def wrapper(df, cols):
+            calls.append(sorted(cols))
+            return fn(df, cols)
+        return wrapper
+
+    monkeypatch.setattr(ctx_mod, "categorical_counts", counted(ctx_mod.categorical_counts))
+    monkeypatch.setattr(ctx_mod, "numeric_drift_histograms",
+                        counted(ctx_mod.numeric_drift_histograms))
+    train, test = _drift_sides(spark)
+    for check, cols in ((FeatureDrift(columns=["x"]), ["x"]), (LabelDrift(), ["y"]),
+                        (NewCategoryTrainTest(), ["c", "p"])):
+        calls.clear()
+        check.run(train, test)
+        assert [c for c in calls if c] == [cols, cols], (check, calls)
+
+
 def test_prediction_drift_reads_a_numeric_prediction_like_a_label(spark):
     # a numeric prediction that task inference calls categorical is in
     # the shared numeric pass only: its check reads a one-off
