@@ -23,6 +23,7 @@ from deepchecks_spark.core.checks import (
     get_condition_passed_message,
 )
 from deepchecks_spark.core.result import ConditionCategory, ConditionResult
+from deepchecks_spark.dataset import row_draw, sample_rows
 from deepchecks_spark.functions.columns import quote_ident
 from deepchecks_spark.io import local_frame
 from deepchecks_spark.ml.gbm import GradientBoostingBinary
@@ -31,21 +32,25 @@ from deepchecks_spark.ml.outliers import gower_matrix, loop_scores
 from deepchecks_spark.ml.pps import pps_score
 
 
-def sample_to_pandas(df: DataFrame, n: int, seed: int = 42, total: int | None = None) -> pd.DataFrame:
-    """Seeded cap-to-n sample collected via Arrow. No-op when the data is
-    already smaller (test fixtures stay exact, reference dataset.py:443-465).
-    ``total`` lets callers reuse an already-known row count (Context.n_rows)
-    instead of paying an extra count() job per check."""
-    if total is None:
-        total = df.count()
-    if total > n:
-        # Bernoulli sample (deterministic per-row coin flip), truncated
-        # AFTER the single collect — never `.limit()` on the lineage,
-        # which is nondeterministic across jobs (VERDICT r2 §wrong-1).
-        frac = min(1.0, n / total * 1.2)
-        df = df.sample(False, frac, seed)
-        return df.toPandas().iloc[:n].reset_index(drop=True)
-    return df.toPandas()
+def sample_to_pandas(ctx, kind: str, cols: list, n: int, seed: int = 42) -> pd.DataFrame:
+    """``cols`` of ``kind``'s rows, capped at ``n`` and collected via
+    Arrow. No-op when the data is already smaller (test fixtures stay
+    exact, reference dataset.py:443-465); the row count is the
+    context's (Context.n_rows), not an extra count() job per check."""
+    df = ctx.data(kind).df.select(*[quote_ident(c) for c in cols])
+    total = ctx.n_rows(kind)
+    if total <= n:
+        return df.toPandas()
+    # a row-hash sample with headroom, cut to the n smallest draws AFTER
+    # the single collect: the same rows whatever the partition layout
+    # (never `.limit()` on the lineage, which is nondeterministic across
+    # jobs — VERDICT r2 §wrong-1)
+    draw = "__draw"
+    while draw in cols:
+        draw += "_"
+    pdf = df.withColumn(draw, row_draw(df, seed)) \
+        .filter(F.col(draw) < min(1.0, n / total * 1.2)).toPandas()
+    return pdf.sort_values(draw, kind="stable").iloc[:n].drop(columns=draw).reset_index(drop=True)
 
 
 class FeatureLabelCorrelation(SingleDatasetCheck):
@@ -65,8 +70,7 @@ class FeatureLabelCorrelation(SingleDatasetCheck):
         if ds.label_name is None:
             raise ValueError("FeatureLabelCorrelation requires a label")
         cols = list(ds.features) + [ds.label_name]
-        pdf = sample_to_pandas(ds.df.select(*[quote_ident(c) for c in cols]), self.n_samples or 10**9,
-                               self.random_state, total=ctx.n_rows(kind))
+        pdf = sample_to_pandas(ctx, kind, cols, self.n_samples or 10**9, self.random_state)
         value = {
             f: pps_score(pdf, f, ds.label_name, random_seed=self.random_state,
                          **self.ppscore_params)["ppscore"]
@@ -106,10 +110,8 @@ class IdentifierLabelCorrelation(SingleDatasetCheck):
         identifiers = [c for c in (ds.spec.index_name, ds.spec.datetime_name) if c]
         if not identifiers:
             raise ValueError("check requires an index or datetime column")
-        pdf = sample_to_pandas(
-            ds.df.select(*[quote_ident(c) for c in identifiers + [ds.label_name]]),
-            self.n_samples or 10**9, self.random_state, total=ctx.n_rows(kind),
-        )
+        pdf = sample_to_pandas(ctx, kind, identifiers + [ds.label_name],
+                               self.n_samples or 10**9, self.random_state)
         value = {
             c: pps_score(pdf, c, ds.label_name, random_seed=self.random_state,
                          **self.ppscore_params)["ppscore"]
@@ -149,10 +151,9 @@ class FeatureLabelCorrelationChange(TrainTestCheck):
             raise ValueError("FeatureLabelCorrelationChange requires a label")
         features = list(ctx.train.features)
         out = {"train": {}, "test": {}, "train-test difference": {}}
-        for kind, ds in (("train", ctx.train), ("test", ctx.test)):
-            pdf = sample_to_pandas(ds.df.select(*[quote_ident(c) for c in features + [label]]),
-                                   self.n_samples or 10**9, self.random_state,
-                                   total=ctx.n_rows(kind))
+        for kind in ("train", "test"):
+            pdf = sample_to_pandas(ctx, kind, features + [label], self.n_samples or 10**9,
+                                   self.random_state)
             for f in features:
                 out[kind][f] = pps_score(pdf, f, label, random_seed=self.random_state,
                                          **self.ppscore_params)["ppscore"]
@@ -213,9 +214,7 @@ class OutlierSampleDetection(SingleDatasetCheck):
     def compute(self, ctx, kind):
         ds = ctx.data(kind)
         cols = list(ds.features) or ds.columns
-        pdf = sample_to_pandas(ds.df.select(*[quote_ident(c) for c in cols]),
-                               self.n_samples or 5_000, self.random_state,
-                               total=ctx.n_rows(kind))
+        pdf = sample_to_pandas(ctx, kind, cols, self.n_samples or 5_000, self.random_state)
         if len(pdf) < 10:
             raise ValueError("not enough samples for outlier detection")
         dist = gower_matrix(pdf, list(ds.cat_features))
@@ -266,12 +265,8 @@ class MultivariateDrift(TrainTestCheck):
     def compute(self, ctx):
         features = list(ctx.train.features)
         cats = set(ctx.train.cat_features)
-        train_pdf = sample_to_pandas(ctx.train.df.select(*[quote_ident(c) for c in features]),
-                                     self.sample_size, self.random_state,
-                                     total=ctx.n_rows("train"))
-        test_pdf = sample_to_pandas(ctx.test.df.select(*[quote_ident(c) for c in features]),
-                                    self.sample_size, self.random_state + 1,
-                                    total=ctx.n_rows("test"))
+        train_pdf = sample_to_pandas(ctx, "train", features, self.sample_size, self.random_state)
+        test_pdf = sample_to_pandas(ctx, "test", features, self.sample_size, self.random_state + 1)
         combined = pd.concat([train_pdf, test_pdf], ignore_index=True)
         domain = np.concatenate([np.zeros(len(train_pdf)), np.ones(len(test_pdf))])
         X = self._encode(combined, features, cats)
@@ -369,17 +364,14 @@ class FeatureFeatureCorrelation(SingleDatasetCheck):
         # reference feature_feature_correlation.py:95 caps at n_samples
         # (default 100k) before computing — apply the same cap here
         # (VERDICT r1 §wrong-1: the cap was accepted but never applied).
-        # Pure Bernoulli, NO .limit(): this sampled lineage is evaluated
-        # by several separate actions per pair (ndv agg, histogram
-        # collect, final corr) and limit() would hand each action a
-        # different row subset (VERDICT r2 §wrong-1). The Bernoulli coin
-        # flip is deterministic per row, so all actions agree.
+        # The sampled lineage is evaluated by several separate actions
+        # per pair (ndv agg, histogram collect, final corr); sample_rows
+        # hands each the same rows.
         df = ds.df
         if self.n_samples is not None:
             total = ctx.n_rows(kind)
             if total > self.n_samples:
-                frac = min(1.0, self.n_samples / total)
-                df = df.sample(False, frac, self.random_state)
+                df = sample_rows(df, self.n_samples / total, self.random_state)
         cat_ndv = {}
         if cats:
             row = df.agg(*[F.approx_count_distinct(quote_ident(c)).alias(c) for c in cats]).first()

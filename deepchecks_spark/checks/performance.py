@@ -21,6 +21,7 @@ from deepchecks_spark.core.checks import (
     format_number,
 )
 from deepchecks_spark.core.result import ConditionCategory, ConditionResult
+from deepchecks_spark.dataset import sample_rows
 from deepchecks_spark.functions.columns import quote_ident
 
 SUPPORTED_SCORERS = ("accuracy", "f1_weighted", "precision_macro", "recall_macro")
@@ -550,7 +551,12 @@ def quantile_bin_exprs(df, cols: list, n_bins: int,
     probs = [i / n_bins for i in range(1, n_bins)]
     edges_by_col = {}
     if numeric_cols and probs:
-        quantiles = df.approxQuantile(numeric_cols, probs, 0.001)
+        # approxQuantile parses its names as attribute paths: read the
+        # columns under positional aliases
+        aliases = [f"_{i}" for i in range(len(numeric_cols))]
+        quantiles = df.select(*[F.col(quote_ident(c)).alias(a)
+                                for c, a in zip(numeric_cols, aliases)]) \
+            .approxQuantile(aliases, probs, 0.001)
         for c, qs in zip(numeric_cols, quantiles):
             edges_by_col[c] = sorted(set(qs))
 
@@ -932,7 +938,7 @@ class SimpleModelComparison(TrainTestCheck):
     * ``tree`` — a depth-``max_depth`` CART (ml/tree.py, gini,
       deterministic first-best tie-break; sklearn
       DecisionTreeClassifier analogue) fit driver-side on a bounded
-      Bernoulli sample of the train NUMERIC features
+      row-hash sample of the train NUMERIC features
       (``tree_fit_samples`` cap), then COMPILED into a nested
       CASE WHEN column expression so the test-set scoring runs
       JVM-side and fully distributed — no Python in the scoring path,
@@ -962,7 +968,7 @@ class SimpleModelComparison(TrainTestCheck):
         self.tree_fit_samples = tree_fit_samples
         # accepted for reference API parity; every strategy here is
         # deterministic (expectations / deterministic CART), so the
-        # seed only feeds the Bernoulli fit-sample split
+        # seed only feeds the fit sample's row draw
         self.random_state = random_state
 
     def compute(self, ctx):
@@ -1056,7 +1062,7 @@ class SimpleModelComparison(TrainTestCheck):
         }, None
 
     def _fit_tree_expression(self, ctx, train_df, label):
-        """Fit the CART baseline on a bounded Bernoulli sample of the
+        """Fit the CART baseline on a bounded row-hash sample of the
         train NUMERIC features (reference fits
         DecisionTreeClassifier(max_depth) behind a ScaledNumerics
         imputer, simple_model_comparison.py:279-300), then compile the
@@ -1082,10 +1088,7 @@ class SimpleModelComparison(TrainTestCheck):
             y.alias("__y"))
         total = fit_df.count()
         if total > self.tree_fit_samples:
-            # same pure-Bernoulli convention as Dataset.sample: a
-            # deterministic per-row coin flip, stable across actions
-            fit_df = fit_df.sample(False, self.tree_fit_samples / total,
-                                   self.random_state)
+            fit_df = sample_rows(fit_df, self.tree_fit_samples / total, self.random_state)
         pdf = fit_df.toPandas()
         if pdf.empty:
             raise ValueError(

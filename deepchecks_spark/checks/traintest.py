@@ -108,11 +108,16 @@ class FeatureDrift(TrainTestCheck):
         self.ignore_na = ignore_na
         self.min_samples = min_samples
 
-    def compute(self, ctx):
+    def histogram_columns(self, ctx) -> tuple:
+        """The selected cat features and numeric-typed numerical features."""
         train = ctx.train
-        cats = _selected(train.cat_features, self.columns, self.ignore_columns)
-        nums = _selected([c for c in train.numerical_features
-                          if is_numeric_type(train.schema_of(c))], self.columns, self.ignore_columns)
+        return (_selected(train.cat_features, self.columns, self.ignore_columns),
+                _selected([c for c in train.numerical_features
+                           if is_numeric_type(train.schema_of(c))],
+                          self.columns, self.ignore_columns))
+
+    def compute(self, ctx):
+        cats, nums = self.histogram_columns(ctx)
         train_h, test_h = self._effective_histograms(ctx, cats, nums)
         sketched = train_h.sketched | test_h.sketched
         fi = ctx.feature_importance or {}
@@ -177,25 +182,33 @@ class LabelDrift(TrainTestCheck):
         self.ignore_na = ignore_na
         self.min_samples = min_samples
 
-    def compute(self, ctx):
-        label = ctx.train.label_name
-        if label is None:
-            raise ValueError("LabelDrift requires a label column")
-        return self._column_drift(ctx, label), None
+    def drifted_column(self, ctx) -> str | None:
+        return ctx.train.label_name
 
-    def _column_drift(self, ctx, col: str) -> dict:
-        """Drift of one label-like column, categorical or numerical as
-        task inference names it (``Context.target_is_numeric``)."""
-        if ctx.target_is_numeric(col):
-            train_h, test_h = self._effective_histograms(ctx, [], [col])
+    def histogram_columns(self, ctx) -> tuple:
+        """The column, categorical or numerical as task inference names
+        it (``Context.target_is_numeric``); none when it is missing."""
+        col = self.drifted_column(ctx)
+        if col is None or col not in ctx.train.columns:
+            return [], []
+        return ([], [col]) if ctx.target_is_numeric(col) else ([col], [])
+
+    def compute(self, ctx):
+        col = self.drifted_column(ctx)
+        if col is None:
+            raise ValueError(f"{self.name()} requires a label column")
+        cats, nums = self.histogram_columns(ctx)
+        if not cats + nums:
+            raise ValueError(f"{self.name()}: column {col!r} is not in the dataset")
+        train_h, test_h = self._effective_histograms(ctx, cats, nums)
+        if nums:
             score, method = _drift_score(self, "numerical", train_h.numerical[col],
                                         test_h.numerical[col])
         else:
-            train_h, test_h = self._effective_histograms(ctx, [col], [])
             score, method = _drift_score(self, "categorical",
                                         train_h.category_counts(col, self.ignore_na),
                                         test_h.category_counts(col, self.ignore_na))
-        return {"Drift score": score, "Method": method}
+        return {"Drift score": score, "Method": method}, None
 
     def add_condition_drift_score_less_than(self, max_allowed_drift_score: float = 0.15):
         def condition(result):
@@ -223,8 +236,8 @@ class PredictionDrift(LabelDrift):
         super().__init__(**kw)
         self.prediction_column = prediction_column
 
-    def compute(self, ctx):
-        return self._column_drift(ctx, self.prediction_column), None
+    def drifted_column(self, ctx) -> str:
+        return self.prediction_column
 
     def reduce_output(self, check_result) -> dict:
         """reference prediction_drift.py:197-200."""
@@ -233,14 +246,11 @@ class PredictionDrift(LabelDrift):
 
 class DatasetsSizeComparison(TrainTestCheck):
     """len(train) / len(test) (reference train_test_validation/
-    datasets_size_comparison.py). Counts come from the shared stats pass."""
+    datasets_size_comparison.py). One count per side, which a suite
+    takes when it persists the side."""
 
     def compute(self, ctx):
-        value = {
-            "Train": ctx.stats("train", tuple(ctx.train.columns)).n_rows,
-            "Test": ctx.stats("test", tuple(ctx.test.columns)).n_rows,
-        }
-        return value, None
+        return {"Train": ctx.n_rows("train"), "Test": ctx.n_rows("test")}, None
 
     def add_condition_test_train_size_ratio_greater_than(self, ratio: float = 0.01):
         def condition(result):
@@ -442,8 +452,12 @@ class NewCategoryTrainTest(TrainTestCheck):
         self.columns = columns
         self.ignore_columns = ignore_columns
 
+    def histogram_columns(self, ctx) -> tuple:
+        """The selected cat features."""
+        return _selected(ctx.train.cat_features, self.columns, self.ignore_columns), []
+
     def compute(self, ctx):
-        cats = _selected(ctx.train.cat_features, self.columns, self.ignore_columns)
+        cats, _ = self.histogram_columns(ctx)
         train_h, test_h = self._effective_histograms(ctx, cats, [])
         value = {}
         for c in cats:

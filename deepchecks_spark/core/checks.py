@@ -14,6 +14,7 @@ import time
 from typing import Any
 
 from deepchecks_spark.core.result import CheckResult, Condition
+from deepchecks_spark.dataset import sample_rows
 
 
 class _UseDefault:
@@ -36,9 +37,10 @@ class BaseCheck:
     stats on the FULL data — the whole point of the fused Spark passes —
     so the reference default caps are recorded but not enforced. When a
     user passes n_samples EXPLICITLY, ``enforce_n_samples`` is set and
-    the scan-level checks honor the cap with a deterministic Bernoulli
-    sample (fraction = n/total, seeded; count is ~n, not exactly n — the
-    distributed-stable analogue of the reference's pandas .sample).
+    the scan-level checks honor the cap with a seeded row-hash sample
+    (``dataset.sample_rows``, fraction = n/total; count is ~n, not
+    exactly n — the distributed-stable analogue of the reference's
+    pandas .sample).
     ML-kernel checks always apply their cap (they sample to the driver
     by design, like the reference).
     """
@@ -145,17 +147,16 @@ class BaseCheck:
         }
 
     def _effective_df(self, ctx, kind: str):
-        """The dataset's DataFrame, Bernoulli-sampled to ~n_samples when
-        the cap was explicitly set and the data exceeds it. fraction-
-        based (no limit()) so the row set is stable across the multiple
-        jobs a check runs on it."""
+        """The dataset's DataFrame, sampled to ~n_samples when
+        the cap was explicitly set and the data exceeds it: the same rows
+        on every job the check runs, whatever the partition layout."""
         ds = ctx.data(kind)
         if not self.enforce_n_samples or self.n_samples is None:
             return ds.df
         total = ctx.n_rows(kind)
         if total <= self.n_samples:
             return ds.df
-        return ds.df.sample(False, self.n_samples / total, self.random_state)
+        return sample_rows(ds.df, self.n_samples / total, self.random_state)
 
     def greater_is_better(self) -> bool:
         """Direction of this check's reduce_output for monitoring alert
@@ -178,25 +179,26 @@ class BaseCheck:
         ds = ctx.data(kind)
         df = self._effective_df(ctx, kind)
         if df is ds.df:
-            return df, ctx.stats(kind, tuple(ds.columns))
+            return df, ctx.stats(kind)
         from deepchecks_spark.stats import compute_column_stats
 
         return df, compute_column_stats(df, ds.columns)
 
+    def histogram_columns(self, ctx) -> tuple:
+        """The (categorical, numeric) columns whose drift histograms the
+        check reads (``Context.histograms``); a suite builds the union of
+        its checks' columns in one pass per side."""
+        return [], []
+
     def _effective_histograms(self, ctx, cat_cols: list, num_cols: list) -> list:
-        """[train, test] drift histograms: the full-data pass a suite
-        shares (``Context.histograms``, once both sides are persisted), or
-        a one-off pass over the columns for a lone run, under an explicit
-        n_samples cap, or for a column outside the shared pass."""
+        """[train, test] drift histograms over the columns: the full-data
+        passes the context shares, or a one-off pass over the samples
+        under an explicit n_samples cap."""
         from deepchecks_spark.core.context import drift_histograms
 
-        kinds = ("train", "test")
-        dfs = [self._effective_df(ctx, k) for k in kinds]
-        if ((cat_cols or num_cols) and set(kinds) <= ctx.persisted
-                and all(df is ctx.data(k).df for df, k in zip(dfs, kinds))):
-            cats, nums = ctx.drift_columns()
-            if set(cat_cols) <= set(cats) and set(num_cols) <= set(nums):
-                return [ctx.histograms(k) for k in kinds]
+        dfs = [self._effective_df(ctx, k) for k in ("train", "test")]
+        if dfs[0] is ctx.train.df and dfs[1] is ctx.test.df:
+            return ctx.histograms(cat_cols, num_cols)
         return drift_histograms(dfs, cat_cols, num_cols)
 
     def _finalize(self, ctx, value, violations=None, t0: float | None = None) -> CheckResult:

@@ -10,7 +10,8 @@ one single-flight memo.
   each carries its caller's job tags (``job_tag``) and job group.
 * ``Once`` computes a shared pass (fused stats, the runner's
   per-partition stats and flagged-string table) once per key, however
-  many concurrent jobs ask for it.
+  many concurrent jobs ask for it, and tags that pass's jobs with the
+  key.
 """
 
 from __future__ import annotations
@@ -106,9 +107,14 @@ class Once:
     """Keyed single-flight memo: ``once(key, fn)`` returns the value
     computed by the first caller of ``key``; concurrent callers of the
     same key wait for that result. A failure is not cached — the next
-    call retries."""
+    call retries.
 
-    def __init__(self):
+    The jobs ``fn`` runs carry the tag ``<tag>.<key>`` (a tuple key's
+    parts joined by dots) as well as the first caller's own tags, so a
+    shared pass is named after its key whichever reader built it."""
+
+    def __init__(self, tag: str | None = None):
+        self.tag = tag
         self._guard = threading.Lock()
         self._locks: dict = {}
         self._values: dict = {}
@@ -122,10 +128,20 @@ class Once:
             with self._guard:
                 if key in self._values:
                     return self._values[key]
-            value = fn()
+            value = self._tagged(key, fn)
             with self._guard:
                 self._values[key] = value
             return value
+
+    def _tagged(self, key, fn):
+        sc = SparkContext._active_spark_context
+        if self.tag is None or sc is None:
+            return fn()
+        parts = key if isinstance(key, tuple) else (key,)
+        # a job tag may not hold a comma
+        name = ".".join(str(p) for p in parts).replace(",", "_")
+        with job_tag(sc, f"{self.tag}.{name}"):
+            return fn()
 
     def done(self) -> dict:
         """Snapshot of the completed entries, taken under the guard."""

@@ -23,7 +23,7 @@ from dataclasses import dataclass, field
 
 from deepchecks_spark.core.checks import SingleDatasetCheck, TrainTestCheck
 from deepchecks_spark.core.context import Context
-from deepchecks_spark.core.parallel import run_jobs
+from deepchecks_spark.core.parallel import job_tag, run_jobs
 from deepchecks_spark.core.result import CheckFailure, CheckResult
 
 
@@ -146,13 +146,20 @@ class Suite:
         loop. Each side is persisted and materialised before the checks
         start, and the shared passes (fused stats, drift histograms) are
         single-flight inside Context, so N concurrent checks reading one
-        of them still cost one scan. A SingleDataset check's train/test
-        legs stay sequential within its task (same instance).
+        of them still cost one scan; the drift histograms hold the union
+        of the columns the checks declare (``histogram_columns``). Each
+        check's jobs carry the tag ``suite.<CheckName>``. A
+        SingleDataset check's train/test legs stay sequential within its
+        task (same instance).
 
         ``train`` and ``test`` are Datasets or bare DataFrames (see
         :class:`Context`); the suite builds its own Context over them."""
         ctx = Context(train=train, test=test, feature_importance=feature_importance)
         ctx.persist("train", *(["test"] if ctx.test is not None else []))
+        if ctx.test is not None:
+            declared = [c.histogram_columns(ctx) for c in self.checks]
+            ctx.record_histogram_columns([c for cats, _ in declared for c in cats],
+                                         [c for _, nums in declared for c in nums])
 
         def _task(check):
             if isinstance(check, TrainTestCheck):
@@ -184,10 +191,11 @@ class Suite:
     def _run_one(check, ctx: Context, kind: str | None):
         t0 = time.time()
         try:
-            if kind is None:
-                value, violations = check.compute(ctx)
-            else:
-                value, violations = check.compute(ctx, kind)
+            with job_tag(ctx.train.df.sparkSession.sparkContext, f"suite.{check.name()}"):
+                if kind is None:
+                    value, violations = check.compute(ctx)
+                else:
+                    value, violations = check.compute(ctx, kind)
             return check._finalize(ctx, value, violations, t0)
         except Exception as exc:  # noqa: BLE001 — isolation per reference
             return CheckFailure(check, exc, check.header())

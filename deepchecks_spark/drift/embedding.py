@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from deepchecks_spark.core.parallel import spread_input
 from deepchecks_spark.functions.arrays import double_array_lit
+from deepchecks_spark.functions.columns import quote_ident
 
 
 def rff_params(dim: int, n_features: int, gamma: float, seed: int = 42):
@@ -95,7 +96,8 @@ def _corpus_means(df: DataFrame, vec_col: str, w: list, b: list,
     aggs = [F.expr(f"count(1) AS n_{tag}")]
     aggs += [F.expr(f"avg(element_at(__z, {j + 1})) AS z{j}_{tag}")
              for j in range(len(b))]
-    aggs += [F.expr(f"avg(CAST(element_at(`{vec_col}`, {k + 1}) AS DOUBLE)) AS c{k}_{tag}")
+    vec = quote_ident(vec_col)
+    aggs += [F.expr(f"avg(CAST(element_at({vec}, {k + 1}) AS DOUBLE)) AS c{k}_{tag}")
              for k in range(dim)]
     return rows.agg(*aggs)
 

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from deepchecks_spark.functions.columns import quote_ident
+
 # Baseforms the reference treats as null representations
 # (reference mixed_nulls.py:32 DEFAULT_NULL_VALUES = {'none','null','nan','na',''}).
 NULL_BASEFORMS = ("none", "null", "nan", "na", "")
@@ -53,7 +55,7 @@ def is_string_column(df, col: str) -> bool:
 
     if not isinstance(df.schema[col].dataType, T.StringType):
         return False
-    qc = F.col(f"`{col}`")
+    qc = F.col(quote_ident(col))
     hit = df.filter(qc.isNotNull() & qc.try_cast("double").isNull()).limit(1).take(1)
     return len(hit) > 0
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 import hashlib
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -33,12 +34,15 @@ def iceberg_available(spark: SparkSession) -> bool:
     """True iff the Iceberg runtime jars are on the session's classpath.
     Must use Class.forName — a bare py4j package access (``spark._jvm.
     org.apache.iceberg.Table``) returns a lazy JavaPackage and never
-    raises, reporting jars that aren't there."""
+    raises, reporting jars that aren't there. Only the class-not-found
+    error means "no jars"; any other failure propagates."""
     try:
         spark._jvm.java.lang.Class.forName("org.apache.iceberg.Table")
-        return True
-    except Exception:  # noqa: BLE001
+    except Py4JJavaError as exc:
+        if exc.java_exception.getClass().getName() != "java.lang.ClassNotFoundException":
+            raise
         return False
+    return True
 
 
 def read_table(spark: SparkSession, source: str, fmt: str = "parquet",

@@ -141,7 +141,7 @@ def train_quality_classifier(
     max_train_rows: int = MAX_TRAIN_ROWS,
 ) -> dict:
     """Fit the logistic quality model on a labeled frame and return a
-    plain-dict model ``{"features", "weights", "intercept"}``.
+    plain-dict model with keys ``features``, ``weights`` and ``intercept``.
 
     Default path: the labeled frame is collected (features only — d+1
     doubles per row) behind a ``limit(cap + 1)`` gate that raises a
@@ -205,7 +205,7 @@ def score_quality(df: DataFrame, text_col: str, model: dict,
                   threshold: float | None = None) -> DataFrame:
     """Score every document with the trained model: one map-only
     projection (features + linear + sigmoid, all codegen'd). With
-    ``threshold`` set, also appends ``{out_col}_pred`` (int 0/1) — the
+    ``threshold`` set, also appends ``<out_col>_pred`` (int 0/1) — the
     keep/drop decision of the pipeline's filter stage."""
     exprs = _feature_exprs(text_col)
     margin = F.lit(float(model["intercept"]))

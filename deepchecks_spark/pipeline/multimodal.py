@@ -18,6 +18,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from deepchecks_spark.functions.columns import quote_ident
 
 IMAGE_META_DDL = "width int, height int, channels int, format string"
 IMAGE_FEATURES_DIM = 8
@@ -28,7 +31,7 @@ def with_media_metadata(df: DataFrame, binary_col: str, meta_col: str = "media_m
     parsing (PNG/JPEG dimensions etc.) would go in the same expression
     slot; here: size + a deterministic pseudo-format from the first
     bytes, all JVM-side."""
-    b = F.col(binary_col)
+    b = F.col(quote_ident(binary_col))
     return df.withColumn(
         meta_col,
         F.struct(
@@ -90,20 +93,28 @@ def parse_media_header(payload) -> tuple | None:
     return None
 
 
+def _map_batches(df: DataFrame, fn, new_fields: list) -> DataFrame:
+    """``df.mapInPandas(fn)`` appending ``new_fields``: ``fn`` reads and
+    returns pandas batches under the real column names. The plan runs
+    under positional names, because PySpark resolves mapInPandas' input
+    columns by name, which fails on a name holding a dot or a backtick."""
+    cols = df.columns
+    names = cols + [f.name for f in new_fields]
+    safe = [f"_{i}" for i in range(len(names))]
+    schema = T.StructType([T.StructField(s, f.dataType)
+                           for s, f in zip(safe, df.schema.fields + new_fields)])
+
+    def run(it):
+        for pdf in fn(p.set_axis(cols, axis=1) for p in it):
+            yield pdf.set_axis(safe, axis=1)
+
+    return df.toDF(*safe[:len(cols)]).mapInPandas(run, schema=schema).toDF(*names)
+
+
 def with_media_dimensions(df: DataFrame, binary_col: str) -> DataFrame:
     """(media_width, media_height, media_format) parsed from the payload
     HEADER bytes via mapInPandas (Arrow batches) — genuinely useful
     metadata with no codec dependency; unknown formats yield nulls."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField("media_width", T.IntegerType()),
-           T.StructField("media_height", T.IntegerType()),
-           T.StructField("media_format", T.StringType())]
-    )
-    ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-
     def _batches(it):
         for pdf in it:
             parsed = pdf[binary_col].map(parse_media_header)
@@ -112,7 +123,9 @@ def with_media_dimensions(df: DataFrame, binary_col: str) -> DataFrame:
             pdf["media_format"] = parsed.map(lambda p: p[2] if p else None)
             yield pdf
 
-    return df.mapInPandas(_batches, schema=ddl)
+    return _map_batches(df, _batches, [T.StructField("media_width", T.IntegerType()),
+                                       T.StructField("media_height", T.IntegerType()),
+                                       T.StructField("media_format", T.StringType())])
 
 
 def _fake_decode_features(payload: bytes, dim: int = IMAGE_FEATURES_DIM) -> list:
@@ -132,11 +145,6 @@ def decode_features(df: DataFrame, binary_col: str, out_col: str = "features",
     PIL/torchvision path and raises — the libs aren't in this container."""
     if decoder not in ("fake", "real"):
         raise ValueError("decoder must be 'fake' or 'real'")
-    from pyspark.sql import types as T
-    # build a NEW StructType — StructType.add mutates the df's schema object
-    schema = T.StructType(list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.DoubleType()))])
-    ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-
     def _batches(it):
         for pdf in it:
             if decoder == "real":
@@ -148,16 +156,13 @@ def decode_features(df: DataFrame, binary_col: str, out_col: str = "features",
             pdf[out_col] = pdf[binary_col].map(lambda b: _fake_decode_features(b, dim))
             yield pdf
 
-    return df.mapInPandas(_batches, schema=ddl)
+    return _map_batches(df, _batches, [T.StructField(out_col, T.ArrayType(T.DoubleType()))])
 
 
 def resize_stub(df: DataFrame, binary_col: str, width: int, height: int,
                 out_col: str = "resized", decoder: str = "fake") -> DataFrame:
     """Resize plumbing: same mapInPandas shape; fake path passes payload
     through with a deterministic truncation so size invariants are testable."""
-    from pyspark.sql import types as T
-    schema = T.StructType(list(df.schema.fields) + [T.StructField(out_col, T.BinaryType())])
-    ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
     cap = width * height
 
     def _batches(it):
@@ -167,17 +172,13 @@ def resize_stub(df: DataFrame, binary_col: str, width: int, height: int,
             pdf[out_col] = pdf[binary_col].map(lambda b: None if b is None else bytes(b)[:cap])
             yield pdf
 
-    return df.mapInPandas(_batches, schema=ddl)
+    return _map_batches(df, _batches, [T.StructField(out_col, T.BinaryType())])
 
 
 def frame_sample_stub(df: DataFrame, binary_col: str, every_n: int = 10,
                       out_col: str = "frames", decoder: str = "fake") -> DataFrame:
     """Video frame sampling plumbing: one row in → array of frame payloads
     out. Fake path: deterministic byte-strided chunks."""
-    from pyspark.sql import types as T
-    schema = T.StructType(list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.BinaryType()))])
-    ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-
     def _batches(it):
         for pdf in it:
             if decoder == "real":
@@ -187,4 +188,4 @@ def frame_sample_stub(df: DataFrame, binary_col: str, every_n: int = 10,
             )
             yield pdf
 
-    return df.mapInPandas(_batches, schema=ddl)
+    return _map_batches(df, _batches, [T.StructField(out_col, T.ArrayType(T.BinaryType()))])

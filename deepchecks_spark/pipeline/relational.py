@@ -88,7 +88,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: list, ts_col: str,
     left-outer (unmatched left rows keep NULL payloads).
 
     Output: every left column, then for each right payload column (and
-    the right timestamp, aliased ``{right_ts_col}{suffix}``) a column
+    the right timestamp, aliased ``right_ts_col + suffix``) a column
     suffixed with ``suffix`` whenever the name collides with a left
     column. ``tolerance_seconds`` (timestamp inputs) voids matches
     farther than the tolerance.

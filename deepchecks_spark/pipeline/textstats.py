@@ -646,7 +646,7 @@ def document_fingerprint(df: DataFrame, text_col: str, out_col: str = "fingerpri
                          ngram: int = 4) -> DataFrame:
     """Winnowing-style fingerprint: min over rolling word-ngram hashes
     (robust to small edits), plus the full-text xxhash64 as tiebreaker
-    column ``{out}_exact``. The rolling-hash transform is the heavy map
+    column ``<out_col>_exact``. The rolling-hash transform is the heavy map
     work — an under-partitioned scan is spread first (no-op at scale)."""
     df = spread_input(df)
     toks = _tokens(text_col)

@@ -62,7 +62,8 @@ def c4_clean(
     contain the word "javascript" (case-insensitive);
 
     page level — the page is dropped when the ORIGINAL text contains
-    "lorem ipsum" (case-insensitive) or a ``{`` (code marker), or when
+    "lorem ipsum" (case-insensitive) or an opening curly brace (code
+    marker), or when
     fewer than ``min_sentences`` sentences survive line filtering
     (sentences counted as terminal-punctuation runs in the kept text).
 
@@ -887,7 +888,7 @@ def extract_page_metadata(df: DataFrame, html_col: str,
     projection — zero shuffle, zero Python; at 100 TB the html column
     is read once and only the (small) metadata columns survive.
     """
-    h = F.col(f"`{html_col}`").cast("string")
+    h = F.col(quote_ident(html_col)).cast("string")
 
     def _first(pattern: str):
         return F.nullif(F.regexp_extract(h, pattern, 1), F.lit(""))
@@ -907,7 +908,7 @@ def extract_page_metadata(df: DataFrame, html_col: str,
         _first(r'(?is)<link\s[^>]*href="([^"]*)"[^>]*rel="canonical"'),
     )
     n_anchors = F.size(F.regexp_extract_all(h, F.lit(r"(?i)<a[\s>]"), F.lit(0)))
-    keep = [F.col(f"`{c}`") for c in (keep_cols or df.columns)]
+    keep = [F.col(quote_ident(c)) for c in (keep_cols or df.columns)]
     return df.select(
         *keep,
         F.trim(title).alias("title"),

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from deepchecks_spark.functions.columns import quote_ident
 from deepchecks_spark.io import local_frame
 
 
@@ -295,7 +296,7 @@ def extract_links(df: DataFrame, html_col: str, base_url_col: str,
     Python; the HTML column is pruned away immediately after the
     extraction, so nothing page-sized survives past the scan stage.
     """
-    base = F.col(f"`{base_url_col}`")
+    base = F.col(quote_ident(base_url_col))
     scheme = F.regexp_extract(base, r"^([a-zA-Z][a-zA-Z0-9+.-]*):", 1)
     origin = F.regexp_extract(base, r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+)", 1)
     # base directory: origin + path up to (and including) the last '/';
@@ -306,13 +307,13 @@ def extract_links(df: DataFrame, html_col: str, base_url_col: str,
         path.contains("/"), F.regexp_replace(path, r"[^/]*$", "")
     ).otherwise(F.lit("/")))
 
-    keep = [F.col(f"`{c}`") for c in (keep_cols or [])]
+    keep = [F.col(quote_ident(c)) for c in (keep_cols or [])]
     links = df.select(
         *keep, scheme.alias("__scheme"), origin.alias("__origin"),
         bdir.alias("__bdir"),
         F.explode(
             F.regexp_extract_all(
-                F.col(f"`{html_col}`").cast("string"),
+                F.col(quote_ident(html_col)).cast("string"),
                 F.lit(r'href="([^"]*)"'), F.lit(1))
         ).alias("__raw"),
     )
@@ -332,7 +333,7 @@ def extract_links(df: DataFrame, html_col: str, base_url_col: str,
             & (F.length(F.col("__origin")) > 0)
             & (~has_scheme | ~link_scheme.isin(*_NON_HTTP_SCHEMES))
         )
-        .select(*[F.col(f"`{c}`") for c in (keep_cols or [])],
+        .select(*[F.col(quote_ident(c)) for c in (keep_cols or [])],
                 F.regexp_replace(resolved, r"#.*$", "").alias(out_col))
     )
 
@@ -353,8 +354,8 @@ def host_edges(links: DataFrame, src_url_col: str,
     """
     from deepchecks_spark.pipeline.webclean import URL_HOST_RE
 
-    s = F.lower(F.regexp_extract(F.col(f"`{src_url_col}`"), URL_HOST_RE, 1))
-    d = F.lower(F.regexp_extract(F.col(f"`{dst_url_col}`"), URL_HOST_RE, 1))
+    s = F.lower(F.regexp_extract(F.col(quote_ident(src_url_col)), URL_HOST_RE, 1))
+    d = F.lower(F.regexp_extract(F.col(quote_ident(dst_url_col)), URL_HOST_RE, 1))
     return (
         links.select(s.alias("src"), d.alias("dst"))
         .filter((F.length("src") > 0) & (F.length("dst") > 0)

@@ -629,22 +629,15 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
     samples_mix = TrainTestSamplesMix().add_condition_duplicates_ratio_less_or_equal(0.05)
     performance = performance_check(prediction_column, task_type)
 
-    # shared passes, single-flight across the concurrent stages
-    once = Once()
+    # shared passes, single-flight across the concurrent stages; an
+    # entry's jobs carry runner.shared.<name> whichever stage asked first
+    once = Once("runner.shared")
     _manifest_lock = threading.Lock()  # serialises the manifest file writes
-
-    def shared(name, fn):
-        # an entry's jobs carry runner.shared.<name> whichever stage asked first
-        def tagged():
-            with job_tag(spark.sparkContext, f"runner.shared.{name}"):
-                return fn()
-
-        return once(name, tagged)
 
     def _per_part():
         # one grouped stats pass shared by partition_verdicts, metrics
         # and the global stats
-        return shared("per_part", lambda: compute_column_stats_by_partition(
+        return once("per_part", lambda: compute_column_stats_by_partition(
             ds.df, ds.columns))
 
     def _global_stats():
@@ -655,7 +648,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
             parts, distinct = run_jobs([_per_part, lambda: distinct_counts(ds.df, ds.columns)])
             return merge_column_stats(parts, ds.columns, distinct, ds.df.schema)
 
-        return shared("global", merged)
+        return once("global", merged)
 
     def _value_counts():
         # (table, per-partition MixedNulls values) of the one melted
@@ -670,7 +663,7 @@ def run_job(spark, input_path: str, output_dir: str, fmt: str = "parquet",
                 string_cols).persist()
             return counts, mixed_nulls_partition_values(_per_part(), counts)
 
-        return shared("value_counts", build)
+        return once("value_counts", build)
 
     def stage(name, fn):
         if manifest["stages"].get(name) == "done":

@@ -165,7 +165,11 @@ def test_stats_sql_for_plain_names_matches_raw_backticks(spark):
 
 @pytest.mark.parametrize("module", ["runner.py", "stats.py", "checks/integrity.py", "dataset.py",
                                     "checks/traintest.py", "drift/spark.py", "streaming.py",
-                                    "checks/performance.py", "checks/ml.py"])
+                                    "checks/performance.py", "checks/ml.py",
+                                    "pipeline/webgraph.py", "pipeline/multimodal.py",
+                                    "pipeline/webclean.py", "pipeline/textstats.py",
+                                    "pipeline/relational.py", "pipeline/classifier.py",
+                                    "drift/embedding.py", "functions/strings.py"])
 def test_no_raw_backtick_interpolation(module):
     # identifiers in SQL text go through quote_ident; a raw `{name}`
     # breaks on a name that holds a backtick
@@ -174,3 +178,34 @@ def test_no_raw_backtick_interpolation(module):
     src = open(path, encoding="utf-8").read()
     raw = [src.count("\n", 0, m.start()) + 1 for m in re.finditer(r"`\{", src)]
     assert not raw, raw
+
+
+@pytest.mark.parametrize("name", ADVERSARIAL_NAMES)
+def test_webgraph_operators_round_trip_adversarial_column_names(spark, name):
+    from deepchecks_spark.pipeline.webgraph import extract_links, host_edges
+
+    url, html, keep = name, name + "_html", name + "_id"
+    df = spark.createDataFrame(
+        [(1, "https://s1.example/d/p", '<a href="/x">a</a><a href="https://s2.example/y">b</a>')],
+        f"{quote_ident(keep)} int, {quote_ident(url)} string, {quote_ident(html)} string")
+    links = extract_links(df, html, url, keep_cols=[keep, url])
+    assert links.columns == [keep, url, "link_url"]
+    assert sorted(r["link_url"] for r in links.collect()) == [
+        "https://s1.example/x", "https://s2.example/y"]
+    assert [tuple(r) for r in host_edges(links, url, "link_url").collect()] == [
+        ("s1.example", "s2.example")]
+
+
+@pytest.mark.parametrize("name", ADVERSARIAL_NAMES)
+def test_multimodal_operators_round_trip_adversarial_column_names(spark, name):
+    from deepchecks_spark.pipeline.multimodal import decode_features, resize_stub
+
+    df = spark.createDataFrame([(1, b"\x89PNG payload"), (2, None)],
+                               f"{quote_ident(name)} long, payload binary")
+    out = decode_features(df, "payload", out_col=name + "_f")
+    assert out.columns == [name, "payload", name + "_f"]
+    got = {r[name]: r[name + "_f"] for r in out.collect()}
+    assert len(got[1]) == 8 and got[2] is None
+    resized = resize_stub(df.withColumnRenamed("payload", name + "_b").drop(name),
+                          name + "_b", 2, 2, out_col=name)
+    assert sorted((r[name] or b"") for r in resized.collect()) == [b"", b"\x89PNG"]

@@ -290,13 +290,14 @@ def _four_drift_checks(**kw):
             PredictionDrift("p", **kw)]
 
 
-def _drift_sides(spark):
+def _drift_sides(spark, partitions=None):
     """Train and test holding a categorical column with nulls (and a
     category new in test), a many-valued and a few-valued numeric
     column, a string label with nulls and a prediction column. Each
-    side has as many partitions as the session has slots, so the copy a
-    suite persists samples the same rows as a lone check.run."""
-    slots = spark.sparkContext.defaultParallelism
+    side has ``partitions`` partitions (default: as many as the session
+    has slots, which a suite's persisted copy keeps; fewer, and the
+    suite respreads its copy)."""
+    slots = partitions or spark.sparkContext.defaultParallelism
 
     def side(s):
         rows = [(None if i % 7 == 0 else ("z" if s and i % 11 == 0 else "abcd"[i * (1 + s) % 4]),
@@ -311,17 +312,20 @@ def _drift_sides(spark):
     return side(0), side(1)
 
 
-@pytest.mark.parametrize("kw", [{}, {"ignore_na": False}, {"n_samples": 1000}],
-                         ids=["default", "keep_nulls", "n_samples"])
-def test_suite_drift_checks_match_their_own_runs(spark, monkeypatch, kw):
+@pytest.mark.parametrize("kw, partitions",
+                         [({}, None), ({"ignore_na": False}, None), ({"n_samples": 1000}, None),
+                          ({"n_samples": 1000}, 1)],
+                         ids=["default", "keep_nulls", "n_samples", "n_samples_one_partition"])
+def test_suite_drift_checks_match_their_own_runs(spark, monkeypatch, kw, partitions):
     # inside one suite the four histogram checks read one shared pass
-    # (an explicit n_samples cap reads a one-off pass over the sample);
-    # each gives the value of its own check.run
+    # (an explicit n_samples cap reads a one-off pass over the sample,
+    # the same rows whether or not the suite respread its input); each
+    # gives the value of its own check.run
     import deepchecks_spark.drift.spark as dspark
     from deepchecks_spark.core.suite import Suite
 
     monkeypatch.setattr(dspark, "EXACT_HIST_MAX_DISTINCT", 100)  # x sketched, k exact
-    train, test = _drift_sides(spark)
+    train, test = _drift_sides(spark, partitions)
     solo = [check.run(train, test).value for check in _four_drift_checks(**kw)]
     suite = [r.value for r in Suite("drift", *_four_drift_checks(**kw)).run(train, test).results]
     assert suite == solo
@@ -358,11 +362,73 @@ def test_suite_runs_one_drift_histogram_pass_per_side(spark, monkeypatch):
     assert calls == {"categorical": [["c", "p", "y"]] * 2, "numeric": [["k", "x"]] * 2}
 
 
+def test_suite_histograms_only_the_columns_its_checks_declare(spark, monkeypatch):
+    import deepchecks_spark.core.context as ctx_mod
+    from deepchecks_spark.core.suite import Suite
+
+    calls = {"categorical": [], "numeric": []}
+
+    def counted(name, fn):
+        def wrapper(df, cols):
+            calls[name].append(sorted(cols))
+            return fn(df, cols)
+        return wrapper
+
+    monkeypatch.setattr(ctx_mod, "categorical_counts",
+                        counted("categorical", ctx_mod.categorical_counts))
+    monkeypatch.setattr(ctx_mod, "numeric_drift_histograms",
+                        counted("numeric", ctx_mod.numeric_drift_histograms))
+    train, test = _drift_sides(spark)
+    Suite("drift", FeatureDrift(columns=["x"]), LabelDrift()).run(train, test)
+    assert calls == {"categorical": [["y"]] * 2, "numeric": [["x"]] * 2}
+
+
+def test_suite_tags_every_job_with_its_check_or_shared_state(spark):
+    # every job of a suite pass carries suite.<CheckName>; a shared
+    # pass's jobs also carry suite.state.<key>, whichever check asked
+    # first. Counted under the state tag when there is one, each tag's
+    # job count is the same on every warm pass
+    from deepchecks_spark.checks.integrity import PercentOfNulls
+    from deepchecks_spark.checks.traintest import DatasetsSizeComparison
+    from deepchecks_spark.core.suite import Suite
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return {j.jobId() for j in conv(store.jobsList(None))}
+
+    train, test = _drift_sides(spark)
+    suite = Suite("tagged", *_four_drift_checks(), DatasetsSizeComparison(), PercentOfNulls())
+
+    def tag_counts():
+        before = job_ids()
+        suite.run(train, test)
+        counts = {}
+        for j in job_ids() - before:
+            tags = {t for t in conv(store.job(j).jobTags()) if t.startswith("suite.")}
+            assert tags, j
+            state = {t for t in tags if t.startswith("suite.state.")}
+            assert len(state) <= 1, tags
+            tag = min(state) if state else max(tags)
+            counts[tag] = counts.get(tag, 0) + 1
+        return counts
+
+    tag_counts()  # warm-up
+    first = tag_counts()
+    assert {"suite.state.histograms.0", "suite.state.stats.train", "suite.state.stats.test",
+            "suite.state.n_rows.train", "suite.state.n_rows.test"} <= set(first), first
+    assert tag_counts() == first
+    assert set(sc.getJobTags()) == set()
+
+
 def test_lone_drift_check_scans_only_its_own_columns(spark, monkeypatch):
     # outside a suite nothing shares the histograms: each check's
     # one-off pass holds only the columns it reads
     import deepchecks_spark.core.context as ctx_mod
-    from deepchecks_spark.checks.traintest import NewCategoryTrainTest
+    from deepchecks_spark.checks.traintest import NewCategoryTrainTest, PredictionDrift
 
     calls = []
 
@@ -377,16 +443,16 @@ def test_lone_drift_check_scans_only_its_own_columns(spark, monkeypatch):
                         counted(ctx_mod.numeric_drift_histograms))
     train, test = _drift_sides(spark)
     for check, cols in ((FeatureDrift(columns=["x"]), ["x"]), (LabelDrift(), ["y"]),
-                        (NewCategoryTrainTest(), ["c", "p"])):
+                        (PredictionDrift("p"), ["p"]), (NewCategoryTrainTest(), ["c", "p"])):
         calls.clear()
         check.run(train, test)
         assert [c for c in calls if c] == [cols, cols], (check, calls)
 
 
 def test_prediction_drift_reads_a_numeric_prediction_like_a_label(spark):
-    # a numeric prediction that task inference calls categorical is in
-    # the shared numeric pass only: its check reads a one-off
-    # categorical pass, and gives the label-drift value of that column
+    # a numeric prediction that task inference calls categorical is
+    # histogrammed as a category, and gives the label-drift value of
+    # that column
     from deepchecks_spark.checks.traintest import PredictionDrift
 
     def side(s):

@@ -43,3 +43,22 @@ def test_parquet_fingerprint_resume_semantics(spark, tmp_path):
     time.sleep(1.1)  # mtime granularity
     spark.range(60).write.mode("overwrite").parquet(p)
     assert snapshot_fingerprint(p) != fp1
+
+
+def test_iceberg_available_propagates_errors_other_than_a_missing_class(spark):
+    from types import SimpleNamespace
+
+    def session(for_name):
+        lang = SimpleNamespace(Class=SimpleNamespace(forName=for_name))
+        return SimpleNamespace(_jvm=SimpleNamespace(java=SimpleNamespace(lang=lang)))
+
+    # a class-not-found reads as "no jars"
+    assert iceberg_available(session(spark._jvm.java.lang.Class.forName)) is (
+        iceberg_available(spark))
+    assert not iceberg_available(session(
+        lambda _: spark._jvm.java.lang.Class.forName("no.such.Klass")))
+    # any other Java or Python failure is not swallowed
+    with pytest.raises(Exception, match="For input string"):
+        iceberg_available(session(lambda _: spark._jvm.java.lang.Integer.parseInt("x")))
+    with pytest.raises(RuntimeError):
+        iceberg_available(session(lambda _: (_ for _ in ()).throw(RuntimeError("boom"))))
