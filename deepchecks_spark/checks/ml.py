@@ -13,7 +13,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from deepchecks_spark.core.checks import (
     USE_DEFAULT,
@@ -23,7 +22,7 @@ from deepchecks_spark.core.checks import (
     get_condition_passed_message,
 )
 from deepchecks_spark.core.result import ConditionCategory, ConditionResult
-from deepchecks_spark.dataset import row_draw, sample_rows
+from deepchecks_spark.dataset import is_numeric_type, with_row_draw
 from deepchecks_spark.functions.columns import quote_ident
 from deepchecks_spark.io import local_frame
 from deepchecks_spark.ml.gbm import GradientBoostingBinary
@@ -45,11 +44,8 @@ def sample_to_pandas(ctx, kind: str, cols: list, n: int, seed: int = 42) -> pd.D
     # the single collect: the same rows whatever the partition layout
     # (never `.limit()` on the lineage, which is nondeterministic across
     # jobs — VERDICT r2 §wrong-1)
-    draw = "__draw"
-    while draw in cols:
-        draw += "_"
-    pdf = df.withColumn(draw, row_draw(df, seed)) \
-        .filter(F.col(draw) < min(1.0, n / total * 1.2)).toPandas()
+    drawn, draw = with_row_draw(df, seed)
+    pdf = drawn.filter(F.col(draw) < min(1.0, n / total * 1.2)).toPandas()
     return pdf.sort_values(draw, kind="stable").iloc[:n].drop(columns=draw).reset_index(drop=True)
 
 
@@ -353,25 +349,18 @@ class FeatureFeatureCorrelation(SingleDatasetCheck):
 
     def compute(self, ctx, kind):
         ds = ctx.data(kind)
-        cats = [c for c in ds.cat_features]
-        nums = [
-            c for c in ds.numerical_features
-            if isinstance(ds.schema_of(c), (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                                            T.FloatType, T.DoubleType, T.DecimalType))
-        ]
+        cats = ds.cat_features
+        nums = [c for c in ds.numerical_features if is_numeric_type(ds.schema_of(c))]
         all_feats = nums + cats
         value = {c: {} for c in all_feats}
         # reference feature_feature_correlation.py:95 caps at n_samples
         # (default 100k) before computing — apply the same cap here
         # (VERDICT r1 §wrong-1: the cap was accepted but never applied).
         # The sampled lineage is evaluated by several separate actions
-        # per pair (ndv agg, histogram collect, final corr); sample_rows
-        # hands each the same rows.
-        df = ds.df
-        if self.n_samples is not None:
-            total = ctx.n_rows(kind)
-            if total > self.n_samples:
-                df = sample_rows(df, self.n_samples / total, self.random_state)
+        # per pair (ndv agg, histogram collect, final corr); Context.sample
+        # materialises the sample once, so each reads the same few rows.
+        df = ds.df if self.n_samples is None else ctx.sample(kind, self.n_samples,
+                                                             self.random_state)
         cat_ndv = {}
         if cats:
             row = df.agg(*[F.approx_count_distinct(quote_ident(c)).alias(c) for c in cats]).first()

@@ -551,12 +551,10 @@ def quantile_bin_exprs(df, cols: list, n_bins: int,
     probs = [i / n_bins for i in range(1, n_bins)]
     edges_by_col = {}
     if numeric_cols and probs:
-        # approxQuantile parses its names as attribute paths: read the
-        # columns under positional aliases
-        aliases = [f"_{i}" for i in range(len(numeric_cols))]
-        quantiles = df.select(*[F.col(quote_ident(c)).alias(a)
-                                for c, a in zip(numeric_cols, aliases)]) \
-            .approxQuantile(aliases, probs, 0.001)
+        # approxQuantile parses names as attribute paths: read positional aliases
+        aliased = [F.col(quote_ident(c)).alias(f"_{i}") for i, c in enumerate(numeric_cols)]
+        quantiles = df.select(*aliased).approxQuantile([f"_{i}" for i in range(len(aliased))],
+                                                       probs, 0.001)
         for c, qs in zip(numeric_cols, quantiles):
             edges_by_col[c] = sorted(set(qs))
 

@@ -187,19 +187,17 @@ class LabelDrift(TrainTestCheck):
 
     def histogram_columns(self, ctx) -> tuple:
         """The column, categorical or numerical as task inference names
-        it (``Context.target_is_numeric``); none when it is missing."""
+        it (``Context.target_is_numeric``)."""
         col = self.drifted_column(ctx)
-        if col is None or col not in ctx.train.columns:
-            return [], []
+        if col is None:
+            raise ValueError(f"{self.name()} requires a label column")
+        if col not in ctx.train.columns:
+            raise ValueError(f"{self.name()}: column {col!r} is not in the dataset")
         return ([], [col]) if ctx.target_is_numeric(col) else ([col], [])
 
     def compute(self, ctx):
         col = self.drifted_column(ctx)
-        if col is None:
-            raise ValueError(f"{self.name()} requires a label column")
         cats, nums = self.histogram_columns(ctx)
-        if not cats + nums:
-            raise ValueError(f"{self.name()}: column {col!r} is not in the dataset")
         train_h, test_h = self._effective_histograms(ctx, cats, nums)
         if nums:
             score, method = _drift_score(self, "numerical", train_h.numerical[col],

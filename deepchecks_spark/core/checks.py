@@ -13,8 +13,9 @@ import re
 import time
 from typing import Any
 
+from deepchecks_spark.core.context import Context, drift_histograms
 from deepchecks_spark.core.result import CheckResult, Condition
-from deepchecks_spark.dataset import sample_rows
+from deepchecks_spark.stats import compute_column_stats
 
 
 class _UseDefault:
@@ -38,7 +39,7 @@ class BaseCheck:
     so the reference default caps are recorded but not enforced. When a
     user passes n_samples EXPLICITLY, ``enforce_n_samples`` is set and
     the scan-level checks honor the cap with a seeded row-hash sample
-    (``dataset.sample_rows``, fraction = n/total; count is ~n, not
+    (``Context.sample``, fraction = n/total; count is ~n, not
     exactly n — the distributed-stable analogue of the reference's
     pandas .sample).
     ML-kernel checks always apply their cap (they sample to the driver
@@ -106,10 +107,6 @@ class BaseCheck:
                                          builder=builder, builder_kwargs=builder_kwargs))
         return self
 
-    def clean_conditions(self) -> "BaseCheck":
-        self.conditions = []
-        return self
-
     def name(self) -> str:
         return type(self).__name__
 
@@ -150,13 +147,9 @@ class BaseCheck:
         """The dataset's DataFrame, sampled to ~n_samples when
         the cap was explicitly set and the data exceeds it: the same rows
         on every job the check runs, whatever the partition layout."""
-        ds = ctx.data(kind)
         if not self.enforce_n_samples or self.n_samples is None:
-            return ds.df
-        total = ctx.n_rows(kind)
-        if total <= self.n_samples:
-            return ds.df
-        return sample_rows(ds.df, self.n_samples / total, self.random_state)
+            return ctx.data(kind).df
+        return ctx.sample(kind, self.n_samples, self.random_state)
 
     def greater_is_better(self) -> bool:
         """Direction of this check's reduce_output for monitoring alert
@@ -180,8 +173,6 @@ class BaseCheck:
         df = self._effective_df(ctx, kind)
         if df is ds.df:
             return df, ctx.stats(kind)
-        from deepchecks_spark.stats import compute_column_stats
-
         return df, compute_column_stats(df, ds.columns)
 
     def histogram_columns(self, ctx) -> tuple:
@@ -194,8 +185,6 @@ class BaseCheck:
         """[train, test] drift histograms over the columns: the full-data
         passes the context shares, or a one-off pass over the samples
         under an explicit n_samples cap."""
-        from deepchecks_spark.core.context import drift_histograms
-
         dfs = [self._effective_df(ctx, k) for k in ("train", "test")]
         if dfs[0] is ctx.train.df and dfs[1] is ctx.test.df:
             return ctx.histograms(cat_cols, num_cols)
@@ -213,8 +202,6 @@ class SingleDatasetCheck(BaseCheck):
     """Runs on one dataset (reference tabular/base_checks.py:44-104)."""
 
     def run(self, dataset, context=None) -> CheckResult:
-        from deepchecks_spark.core.context import Context
-
         t0 = time.time()
         ctx = context if context is not None else Context(train=dataset)
         value, violations = self.compute(ctx, "train")
@@ -246,8 +233,6 @@ class TrainTestCheck(BaseCheck):
     """Runs on a (train, test) pair (reference tabular/base_checks.py:121-165)."""
 
     def run(self, train, test, context=None) -> CheckResult:
-        from deepchecks_spark.core.context import Context
-
         t0 = time.time()
         ctx = context if context is not None else Context(train=train, test=test)
         value, violations = self.compute(ctx)

@@ -11,13 +11,11 @@ pandas traversals.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from deepchecks_spark.core.parallel import Once, run_jobs, spread_input
-from deepchecks_spark.dataset import Dataset, is_numeric_type
+from deepchecks_spark.dataset import Dataset, is_numeric_type, sample_rows
 from deepchecks_spark.drift.spark import DriftHistograms, categorical_counts, numeric_drift_histograms
 from deepchecks_spark.stats import ColumnStats, column_counts, compute_column_stats
 
@@ -50,13 +48,9 @@ class Context:
         # computation instead of duplicating the scan; each pass's jobs
         # carry suite.state.<key>
         self._once = Once("suite.state")
-        # drift histograms: the columns a suite's checks declared, the
-        # (categorical, numeric) columns of each pass so far, and the
-        # pass that holds each column
-        self._hist_declared: tuple = ((), ())
-        self._hist_guard = threading.Lock()
-        self._hist_passes: list = []
-        self._hist_pass: dict = {}
+        # the (categorical, numeric) drift columns of a suite's checks
+        # (BaseCheck.histogram_columns): the first histograms read builds them
+        self.declared_histograms: tuple = ((), ())
         if self.test is not None and require_same_schema:
             self._validate_compat()
 
@@ -118,43 +112,32 @@ class Context:
 
         return self._once(("target_is_numeric", column), infer)
 
-    def record_histogram_columns(self, cats: list, nums: list) -> None:
-        """Record the (categorical, numeric) columns a suite's checks
-        declared (``BaseCheck.histogram_columns``): the first
-        :meth:`histograms` read builds all of them."""
-        self._hist_declared = (tuple(dict.fromkeys(cats)), tuple(dict.fromkeys(nums)))
-
     def histograms(self, cats: list, nums: list) -> list:
         """[train, test] drift histograms holding ``cats`` and ``nums``.
 
-        The first read builds the recorded columns and the asked ones
-        (only the asked ones when nothing was recorded, as for a lone
-        ``check.run``); a later read that asks for a column no pass
-        holds builds one pass over just the missing columns. A pass
-        submits both sides' categorical and numeric legs together, and
-        concurrent readers of one pass wait for it."""
-        want = [("cat", c) for c in cats] + [("num", c) for c in nums]
-        with self._hist_guard:
-            missing = [w for w in want if w not in self._hist_pass]
-            if missing:
-                if not self._hist_passes:
-                    declared = ([("cat", c) for c in self._hist_declared[0]]
-                                + [("num", c) for c in self._hist_declared[1]])
-                    missing = list(dict.fromkeys(declared + missing))
-                self._hist_pass.update((w, len(self._hist_passes)) for w in missing)
-                self._hist_passes.append(([c for t, c in missing if t == "cat"],
-                                          [c for t, c in missing if t == "num"]))
-            todo = {i: self._hist_passes[i] for i in (self._hist_pass[w] for w in want)}
+        The first read builds the recorded columns (the asked ones when
+        nothing was recorded, as for a lone ``check.run``) in one pass
+        that submits both sides' categorical and numeric legs together;
+        concurrent readers wait for it. A read asking for a column that
+        pass does not hold gets a one-off pass over its own columns."""
         dfs = [self.train.df, self.data("test").df]
-        passes = [self._once(("histograms", i),
-                             lambda cols=cols: drift_histograms(dfs, *cols))
-                  for i, cols in todo.items()]
-        if len(passes) == 1:
-            return passes[0]
-        return [DriftHistograms({k: v for h in side for k, v in h.categorical.items()},
-                                {k: v for h in side for k, v in h.numerical.items()},
-                                frozenset().union(*(h.sketched for h in side)))
-                for side in zip(*passes)]
+        cols = self.declared_histograms if any(self.declared_histograms) else (cats, nums)
+        held, hists = self._once(("histograms",), lambda: (cols, drift_histograms(dfs, *cols)))
+        if set(cats) <= set(held[0]) and set(nums) <= set(held[1]):
+            return hists
+        return drift_histograms(dfs, cats, nums)
+
+    def sample(self, kind: str, n: int, seed: int) -> DataFrame:
+        """``kind``'s rows capped at about ``n`` (``dataset.sample_rows``),
+        the whole frame when it holds no more. A capped sample is drawn
+        and materialised once (``localCheckpoint``), so every job a check
+        runs over it reads the same few rows."""
+        df = self.data(kind).df
+        total = self.n_rows(kind)
+        if total <= n:
+            return df
+        return self._once(("sample", kind, n, seed),
+                          lambda: sample_rows(df, n / total, seed).localCheckpoint())
 
     def n_rows(self, kind: str) -> int:
         """Row count: the fused stats pass's when it already ran (no

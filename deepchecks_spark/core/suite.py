@@ -155,11 +155,6 @@ class Suite:
         ``train`` and ``test`` are Datasets or bare DataFrames (see
         :class:`Context`); the suite builds its own Context over them."""
         ctx = Context(train=train, test=test, feature_importance=feature_importance)
-        ctx.persist("train", *(["test"] if ctx.test is not None else []))
-        if ctx.test is not None:
-            declared = [c.histogram_columns(ctx) for c in self.checks]
-            ctx.record_histogram_columns([c for cats, _ in declared for c in cats],
-                                         [c for _, nums in declared for c in nums])
 
         def _task(check):
             if isinstance(check, TrainTestCheck):
@@ -181,6 +176,16 @@ class Suite:
                                  str(check))]
 
         try:
+            ctx.persist("train", *(["test"] if ctx.test is not None else []))
+            cats, nums = [], []
+            for c in (self.checks if ctx.test is not None else []):
+                try:
+                    c_cats, c_nums = c.histogram_columns(ctx)
+                except Exception:  # noqa: BLE001 — the check's own run reports it
+                    continue
+                cats += c_cats
+                nums += c_nums
+            ctx.declared_histograms = (list(dict.fromkeys(cats)), list(dict.fromkeys(nums)))
             tasks = [functools.partial(_task, c) for c in self.checks]
             results = [r for rs in run_jobs(tasks) for r in rs]
         finally:

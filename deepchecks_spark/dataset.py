@@ -18,11 +18,12 @@ whole numbers, type_inference.py:141-143), 5 for float/datetime.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from deepchecks_spark.functions.columns import quote_ident
 
@@ -42,24 +43,35 @@ def is_numeric_type(dt: T.DataType) -> bool:
     return isinstance(dt, _NUMERIC_TYPES)
 
 
-def row_draw(df: DataFrame, seed: int):
-    """A [0, 1) draw per row of ``df`` from a ``seed``-ed hash of the
-    row's values. A sample that keeps the rows drawing under its
-    fraction is the same row set whatever the frame's partition layout,
-    and every action over it sees that set (a Bernoulli ``sample``
+def with_row_draw(df: DataFrame, seed: int) -> tuple:
+    """(``df`` plus a [0, 1) draw per row, the draw column's name).
+
+    Each row draws from a ``seed``-ed hash of its values and of its copy
+    number among the rows identical to it, so every row (each copy of a
+    repeated row too) draws independently, and the draws are the same
+    whatever the frame's partition layout (a Bernoulli ``sample``
     follows the layout: a repartitioned copy keeps other rows; a
-    ``limit`` takes whichever partitions answer first). Identical rows
-    draw the same value. Spark's hashes reject maps, so a column holding
-    one is hashed through its JSON text."""
+    ``limit`` takes whichever partitions answer first). Numbering the
+    copies costs one shuffle of the frame. Spark's hashes reject maps,
+    so a column holding one is hashed through its JSON text."""
     cols = [F.to_json(F.col(quote_ident(f.name))) if "map<" in f.dataType.simpleString()
             else F.col(quote_ident(f.name)) for f in df.schema.fields]
-    return F.shiftrightunsigned(F.xxhash64(F.lit(seed), *cols), 11) / float(1 << 53)
+    taken = {c.lower() for c in df.columns}
+    name = "__draw"
+    while name in taken:
+        name += "_"
+    h = F.xxhash64(F.lit(seed), *cols)
+    copy = F.row_number().over(Window.partitionBy(h).orderBy(h, *cols))
+    return df.withColumn(name, F.shiftrightunsigned(F.xxhash64(h, copy), 11)
+                         / float(1 << 53)), name
 
 
 def sample_rows(df: DataFrame, fraction: float, seed: int) -> DataFrame:
-    """The rows of ``df`` whose :func:`row_draw` falls under ``fraction``:
-    about ``fraction`` of them, the same ones on every read."""
-    return df.filter(row_draw(df, seed) < fraction)
+    """The rows of ``df`` whose :func:`with_row_draw` draw falls under
+    ``fraction``: about ``fraction`` of them, the same ones on every
+    read."""
+    drawn, name = with_row_draw(df, seed)
+    return drawn.filter(F.col(name) < fraction).drop(name)
 
 
 @dataclass(frozen=True)
@@ -177,46 +189,9 @@ class Dataset:
         no-op when the data is already smaller (tests stay exact). The
         sample is :func:`sample_rows`, so the cap is approximate
         (±O(√n)), matching the statistical intent of the reference's."""
-        if n_samples is None:
-            return self
-        total = self.df.count()
-        if total <= n_samples:
+        if n_samples is None or (total := self.df.count()) <= n_samples:
             return self
         return self._with_df(sample_rows(self.df, n_samples / total, seed))
-
-    def drop_na_labels(self) -> "Dataset":
-        if self._spec.label is None:
-            return self
-        return self._with_df(self.df.filter(F.col(self._spec.label).isNotNull()))
-
-    def select_columns(self, columns=None, ignore_columns=None) -> "Dataset":
-        """reference utils/dataframes.py:167 select_from_dataframe."""
-        if columns is not None and ignore_columns is not None:
-            raise ValueError("pass columns or ignore_columns, not both")
-        if columns is not None:
-            missing = set(columns) - set(self.df.columns)
-            if missing:
-                raise ValueError(f"columns not found: {sorted(missing)}")
-            new_df = self.df.select(*columns)
-        elif ignore_columns is not None:
-            missing = set(ignore_columns) - set(self.df.columns)
-            if missing:
-                raise ValueError(f"columns not found: {sorted(missing)}")
-            new_df = self.df.drop(*ignore_columns)
-        else:
-            return self
-        keep = set(new_df.columns)
-        spec = self._spec
-        return Dataset(
-            new_df,
-            label=spec.label if spec.label in keep else None,
-            features=[f for f in spec.features if f in keep],
-            cat_features=[f for f in spec.cat_features if f in keep],
-            index_name=spec.index_name if spec.index_name in keep else None,
-            datetime_name=spec.datetime_name if spec.datetime_name in keep else None,
-            infer_categorical=False,
-            name=self.name,
-        )
 
     def train_test_split(self, train_fraction: float = 0.8, seed: int = 42):
         """Random split preserving metadata (reference dataset.py:496-537
@@ -231,9 +206,6 @@ class Dataset:
         new._spec = self._spec
         new.name = self.name
         return new
-
-    def n_samples(self) -> int:
-        return self.df.count()
 
 
 def infer_categorical_features(df: DataFrame, columns: list) -> list:

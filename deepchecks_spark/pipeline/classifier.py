@@ -31,8 +31,6 @@ because every reduction is a commutative sum.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

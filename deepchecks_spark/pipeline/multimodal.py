@@ -15,7 +15,6 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T

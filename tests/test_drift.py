@@ -418,7 +418,7 @@ def test_suite_tags_every_job_with_its_check_or_shared_state(spark):
 
     tag_counts()  # warm-up
     first = tag_counts()
-    assert {"suite.state.histograms.0", "suite.state.stats.train", "suite.state.stats.test",
+    assert {"suite.state.histograms", "suite.state.stats.train", "suite.state.stats.test",
             "suite.state.n_rows.train", "suite.state.n_rows.test"} <= set(first), first
     assert tag_counts() == first
     assert set(sc.getJobTags()) == set()
@@ -447,6 +447,52 @@ def test_lone_drift_check_scans_only_its_own_columns(spark, monkeypatch):
         calls.clear()
         check.run(train, test)
         assert [c for c in calls if c] == [cols, cols], (check, calls)
+
+
+def test_shared_context_histograms_a_column_its_first_pass_lacks(spark, monkeypatch):
+    # outside a suite nothing is declared: the first reader's columns
+    # are the shared pass; a later reader asking for others gets a
+    # one-off pass over its own columns and the value of its own run
+    import deepchecks_spark.core.context as ctx_mod
+    from deepchecks_spark.core.context import Context
+
+    calls = []
+
+    def counted(fn):
+        def wrapper(df, cols):
+            calls.append(sorted(cols))
+            return fn(df, cols)
+        return wrapper
+
+    monkeypatch.setattr(ctx_mod, "numeric_drift_histograms",
+                        counted(ctx_mod.numeric_drift_histograms))
+    train, test = _drift_sides(spark)
+    ctx = Context(train, test)
+    shared = [FeatureDrift(columns=[c]).run(train, test, context=ctx).value
+              for c in ("x", "k", "x")]
+    assert [c for c in calls if c] == [["x"], ["x"], ["k"], ["k"]]
+    assert shared == [FeatureDrift(columns=[c]).run(train, test).value for c in ("x", "k", "x")]
+
+
+def test_suite_isolates_a_failing_declaration_and_a_non_check(spark):
+    # a declaration that raises, and an object that is not a check, each
+    # become that entry's CheckFailure; the other checks still run and
+    # the suite's caches are released
+    from deepchecks_spark.checks.traintest import DatasetsSizeComparison
+    from deepchecks_spark.core.result import CheckFailure, CheckResult
+    from deepchecks_spark.core.suite import Suite
+
+    class BrokenDeclaration(LabelDrift):
+        def histogram_columns(self, ctx):
+            raise RuntimeError("declaration failed")
+
+    train, test = _drift_sides(spark)
+    results = Suite("isolated", object(), BrokenDeclaration(), FeatureDrift(columns=["x"]),
+                    DatasetsSizeComparison()).run(train, test).results
+    assert [type(r) for r in results] == [CheckFailure, CheckFailure, CheckResult, CheckResult]
+    assert "declaration failed" in str(results[1].exception)
+    assert results[2].value == FeatureDrift(columns=["x"]).run(train, test).value
+    assert not train.df.is_cached and not test.df.is_cached
 
 
 def test_prediction_drift_reads_a_numeric_prediction_like_a_label(spark):

@@ -298,6 +298,39 @@ def test_theil_u_degenerate_single_category(spark):
     assert got == pytest.approx(1.0 * 0.0 / 1.0 + 1.0, abs=1e-9) or 0.0 <= got <= 1.0
 
 
+def test_row_sample_draws_each_copy_of_a_repeated_row(spark):
+    # 50k rows holding 6 distinct tuples, far above every cap: each copy
+    # of a tuple draws on its own, so a sample holds about its target
+    # share of every tuple, the same share whatever the partition layout
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from deepchecks_spark.checks.ml import sample_to_pandas
+    from deepchecks_spark.core.context import Context
+    from deepchecks_spark.dataset import sample_rows
+
+    def side(shift):
+        df = spark.range(50_000).select(
+            ((F.col("id") + shift) % 3).cast("string").alias("a"),
+            (F.col("id") % 2).cast("string").alias("b"))
+        return Dataset(df, cat_features=["a", "b"], infer_categorical=False)
+
+    train, test = side(0), side(1)
+    drawn = [Counter(map(tuple, sample_rows(train.df.repartition(p), 0.02, 7).collect()))
+             for p in (1, 5)]
+    assert drawn[0] == drawn[1]
+    assert len(drawn[0]) == 6 and all(1000 / 6 * 0.6 < k < 1000 / 6 * 1.4
+                                      for k in drawn[0].values()), drawn[0]
+    ctx = Context(train, test)
+    for kind in ("train", "test"):
+        pdf = sample_to_pandas(ctx, kind, ["a", "b"], 1000, seed=3)
+        assert len(pdf) == 1000
+        assert len(set(map(tuple, pdf.to_numpy()))) == 6
+    value = MultivariateDrift(sample_size=1000).run(train, test).value
+    assert value["domain_classifier_drift_score"] < 0.2
+
+
 def test_feature_feature_correlation_deterministic_when_sampled(spark):
     # VERDICT r2 §wrong-1: with n_samples < data the check runs several
     # actions over the sampled lineage; Bernoulli-only sampling must give
